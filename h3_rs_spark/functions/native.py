@@ -49,7 +49,7 @@ def h3_to_parent_sql(cell_expr: str, parent_res: int) -> str:
     """SQL-text twin of h3_to_parent_col (r7 driver-latency work): the
     same bit math as one string, for call sites that build plans in
     selectExpr/expr form to avoid py4j round-trips. Parity pinned by
-    tests/test_functions.py::test_h3_to_parent_sql_parity."""
+    tests/test_infra.py::test_h3_to_parent_sql_parity."""
     fill = (1 << (3 * (15 - parent_res))) - 1
     return (
         f"((({cell_expr} & {~(0xF << 52)}) | {parent_res << 52})"

@@ -270,8 +270,9 @@ def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
     through the per-pair cube-lerp (cheap, ~2 ms), and all
     greedy-fallback pairs advance TOGETHER — one batched neighbors()
     kernel call per walk step for the whole batch instead of one per
-    step per pair (q38's 46 fallback pairs: 475 single-cell kernel
-    calls -> ~15 batched ones, 4.3 s -> ~0.2 s). Paths are identical
+    step per pair (the 46 fallback pairs of the metro-pairs fixture in
+    tests/test_h3_surface.py: 475 single-cell kernel calls -> ~15
+    batched ones, 4.3 s -> ~0.2 s). Paths are identical
     to per-pair h3_line: neighbors() orders each owner's candidates by
     cell value in both the single and batched form (np.unique), so the
     greedy argmax tie-breaks the same way — pinned by

@@ -9,7 +9,7 @@ number of *parents*, so a 10^12-cell relation compacts in <= 15 rounds
 of shrinking shuffles. The in-memory kernel variant (h3core.hierarchy)
 is the per-polygon fast path; this is the table-scale path.
 
-uncompact_cells_df is the inverse: children-UDF explode to uniform res.
+uncompact_cells_df is the inverse: a JVM children explode to uniform res.
 """
 
 from __future__ import annotations
@@ -78,7 +78,8 @@ def compact_cells_df(
     of spatially clustered cells to ~n/6 rows), one checkpoint of the
     complete set (<= n/6 rows), two anti-joins. A constant number of
     shuffles instead of O(res) sequential rounds; output pinned by the
-    reference's own 1253 -> 209 golden (q36) and
+    reference's own 1253 -> 209 golden
+    (tests/test_h3_surface.py::test_compact_distributed_sf_golden) and
     tests/test_operators.py round-trip/idempotence tests.
 
     res: optional caller-known uniform resolution — skips the one
@@ -209,7 +210,12 @@ def children_one_level_col(cell_col):
 _PENT_IN_SQL = ", ".join(str(b) for b in _PENT_BCS)
 
 
-def children_one_level_sql(x: str) -> str:
+def _quote(cell_col: str) -> str:
+    """Backtick-quoted SQL identifier for a column name."""
+    return "`" + cell_col.replace("`", "``") + "`"
+
+
+def children_one_level_sql(cell_col: str) -> str:
     """SQL-text twin of children_one_level_col (r7): the Column form
     costs ~120 py4j round-trips per call (~0.1-0.2 s of pure driver
     latency on a slow gateway), paid once per explode LEVEL in the
@@ -217,7 +223,9 @@ def children_one_level_sql(x: str) -> str:
     in one call, producing the identical expression tree (literal
     subexpression duplication matches what Catalyst sees after the
     Column tree expands). Parity pinned by
-    tests/test_operators.py::test_children_one_level_sql_parity."""
+    tests/test_operators.py::test_children_one_level_sql_parity.
+    cell_col is a column name; it is quoted here."""
+    x = _quote(cell_col)
     r1 = f"((shiftright({x}, 52) & 15) + 1)"
     off = f"CAST(pow(2.0D, CAST((15 - {r1}) * 3 AS DOUBLE)) AS BIGINT)"
     base = f"({x} + 4503599627370496 - 7 * {off})"
@@ -269,14 +277,12 @@ def uncompact_cells_df(
     res (a uniformly-coarse relation, e.g. a polygon cover), the
     already-at-res pass-through branch is provably empty and is
     skipped entirely — one fewer scan subtree, which on an un-reusable
-    source (local relation, RDD scan) is a whole stage (r7). Unlike
-    min_res this hint must be CORRECT: overstating it would route
-    at-res rows into the explode (harmless) but understating it would
-    drop finer-than-max_res rows from the pass-through."""
+    source (local relation, RDD scan) is a whole stage (r7). Rows finer
+    than `res` are dropped on both branches, as without the hint."""
     spark = cells.sparkSession
     if max_res is not None and max_res < res:
         out = None
-        todo = cells.select(cell_col)
+        todo = cells.where(h3_resolution(cell_col) <= res).select(cell_col)
     else:
         out = cells.where(h3_resolution(cell_col) == res).select(cell_col)
         todo = cells.where(h3_resolution(cell_col) < res).select(cell_col)
@@ -291,10 +297,11 @@ def uncompact_cells_df(
     # levels that was ~0.5-0.7 s of pure driver latency per call on a
     # slow gateway; the SQL text parses JVM-side in one call per level
     # and yields the identical plan
+    q = _quote(cell_col)
     level_expr = (
-        f"explode(CASE WHEN (shiftright({cell_col}, 52) & 15) < {res}"
+        f"explode(CASE WHEN (shiftright({q}, 52) & 15) < {res}"
         f" THEN {children_one_level_sql(cell_col)}"
-        f" ELSE array({cell_col}) END) AS {cell_col}"
+        f" ELSE array({q}) END) AS {q}"
     )
     for i in range(levels):
         todo = todo.selectExpr(level_expr)

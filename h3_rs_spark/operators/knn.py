@@ -13,8 +13,6 @@ re-join — each round touches only the remaining queries' cells.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -204,7 +202,7 @@ def seed_state(
     # structs x parent bit math) plus the count/ring arithmetic below
     # cost ~0.3 s of pure py4j round-trips per call; the strings parse
     # JVM-side in one call each and yield identical plans (pinned by
-    # TestSeedingParity and the q29/q39 shared oracle).
+    # TestSeedingParity and test_knn_sql_parity).
     cq = f"`{cell_col}`"
     pre_items = ", ".join(
         "named_struct('stage', {si}, 'pre_cell', {p})".format(
@@ -705,14 +703,6 @@ def knn_join_distributed(
         # (skipped entirely on the final round) re-evaluates only the
         # cheap anti-join over the cached topk.
         n_remaining = state.count()
-        if os.environ.get("KNN_DEBUG"):
-            import time as _time
-
-            print(
-                f"[knn] round levels={levels} n_remaining={n_remaining}"
-                f" t={_time.time():.1f}",
-                flush=True,
-            )
         if n_remaining == 0:
             break
         state = _escalate(

@@ -1,15 +1,10 @@
-"""Multimodal (image/audio/video) column operators for training-data
-pipelines: opaque binary payloads + typed metadata, processed in Arrow
-batches via mapInPandas.
+"""Image column operators for training-data pipelines: opaque binary
+payloads + typed metadata, processed in Arrow batches via mapInPandas.
 
-Real (no external libs needed):
-  - rgb24 decode (raw frames), nearest-neighbor + box-mean resize,
-    channel-histogram feature extraction, video frame sampling over
-    concatenated rgb24 frames, pcm16 audio stats.
-Stubbed behind NotImplementedError (container has no codec libs;
-the Spark-side plumbing — schema, batching, dispatch — is identical
-and tested through the real rgb24/pcm16 paths):
-  - png/jpeg image decode, mp3/aac audio decode, h264 video decode.
+rgb24 decode (raw frames, via tiling.decode_image), nearest-neighbor +
+box-mean resize and channel-histogram feature extraction. png/jpeg
+decode is stubbed behind NotImplementedError in decode_image (no codec
+library is bundled).
 """
 
 from __future__ import annotations
@@ -120,95 +115,3 @@ def image_features(images: DataFrame, bins: int = 8) -> DataFrame:
         run, schema=FEATURES_SCHEMA
     )
 
-
-# --- video: concatenated rgb24 frames ---------------------------------------
-
-FRAMES_SCHEMA = StructType(
-    [
-        StructField("video_id", StringType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("mean_lum", DoubleType(), False),
-    ]
-)
-
-
-def decode_video(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
-    """bytes -> (n_frames, h, w, 3). Only 'rawvideo-rgb24' decodable here."""
-    if fmt == "rawvideo-rgb24":
-        frame = w * h * 3
-        n = len(payload) // frame
-        return np.frombuffer(payload[: n * frame], dtype=np.uint8).reshape(
-            n, h, w, 3
-        )
-    raise NotImplementedError(
-        f"video decode for fmt={fmt!r} needs a codec library not present in "
-        "this environment (plumbing is fmt-dispatched; add a decoder here)"
-    )
-
-
-def sample_frames(
-    videos: DataFrame, every_n: int = 4, fmt_col: str = "fmt"
-) -> DataFrame:
-    """Frame sampling: emit every n-th frame's luminance stats.
-    Input: (video_id, bytes, w, h, fmt)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames = decode_video(r.bytes, r.w, r.h, getattr(r, fmt_col))
-                for idx in range(0, frames.shape[0], every_n):
-                    f = frames[idx].astype(np.float64)
-                    lum = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
-                    rows.append((r.video_id, idx, float(lum.mean())))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["video_id", "frame_idx", "mean_lum"]
-                )
-
-    return videos.mapInPandas(run, schema=FRAMES_SCHEMA)
-
-
-# --- audio: pcm16 ------------------------------------------------------------
-
-AUDIO_SCHEMA = StructType(
-    [
-        StructField("audio_id", StringType(), False),
-        StructField("n_samples", IntegerType(), False),
-        StructField("rms", DoubleType(), False),
-        StructField("peak", DoubleType(), False),
-    ]
-)
-
-
-def decode_audio(payload: bytes, fmt: str) -> np.ndarray:
-    if fmt == "pcm16":
-        return np.frombuffer(payload, dtype=np.int16).astype(np.float64) / 32768.0
-    raise NotImplementedError(
-        f"audio decode for fmt={fmt!r} needs a codec library not present in "
-        "this environment"
-    )
-
-
-def audio_stats(audio: DataFrame) -> DataFrame:
-    """Input: (audio_id, bytes, fmt) -> per-clip sample stats."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                x = decode_audio(r.bytes, r.fmt)
-                rows.append(
-                    (
-                        r.audio_id,
-                        int(x.size),
-                        float(np.sqrt(np.mean(x**2))) if x.size else 0.0,
-                        float(np.abs(x).max()) if x.size else 0.0,
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["audio_id", "n_samples", "rms", "peak"]
-                )
-
-    return audio.mapInPandas(run, schema=AUDIO_SCHEMA)

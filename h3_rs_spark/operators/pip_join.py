@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-from ..functions.native import h3_base_cell, h3_resolution, h3_to_parent_col
+from ..functions.native import h3_to_parent_col
 from ..h3core import indexing as ix
 from ..h3core import regions
 
@@ -100,22 +100,12 @@ def pip_join(
     cell_col: str = "cell",
     compacted: bool = True,
     refine: bool = True,
-    prune_partitions: bool = True,
-    prebuilt_cells: pd.DataFrame | None = None,
-    split_refine: bool = False,
 ) -> DataFrame:
     """Join images (with a `cell_col` at each polygon's res and lat/lng
     columns) against polygons; returns matched rows + polygon_id.
 
-    prebuilt_cells: pass the build_polygon_cells() output to reuse the
-    driver-side polyfill across repeated joins (benchmark steady state).
-
-    split_refine: persist the matched rows and route ONLY boundary
-    matches through the Python refine. Measured tradeoff on the 16M-row
-    bench: the inline path wins (5.5s vs 10.6s) because matched rows
-    carry wide payload columns that make the persist expensive, while
-    the inline Arrow pass is masked to boundary rows anyway; split wins
-    only for narrow probes with huge interior/boundary ratios."""
+    When `images` carries the `bc0` partition column, the build side's
+    distinct base cells are pushed as a partition filter."""
     # cost-based build strategy: a compacted build keeps the broadcast
     # tiny but makes the PROBE side explode one parent key per distinct
     # build resolution — at 10^8+ probe rows that multiplies the join
@@ -124,15 +114,11 @@ def pip_join(
     # native-res key is strictly cheaper (measured ~25% on the 64M-row
     # flagship). Compaction remains the scale path for continental
     # polygons at fine res, where expansion would be millions of cells.
-    if prebuilt_cells is not None:
-        build_pdf = _maybe_expand_build(prebuilt_cells, polygons)
-    else:
-        # memoized on the polygon GEOMETRY (pure driver-side derivation
-        # of a constant dimension table — nothing from the fact inputs;
-        # same pattern as dedup._minhash_params): re-deriving the
-        # polyfill+compact+expand per call measured ~0.15 s, ~20% of
-        # the whole flagship query at bench scale (r7)
-        build_pdf = _build_cells_cached(polygons, compacted)
+    # memoized on the polygon GEOMETRY (pure driver-side derivation of
+    # a constant dimension table — nothing from the fact inputs):
+    # re-deriving the polyfill+compact+expand per call measured ~0.15 s,
+    # ~20% of the whole flagship query at bench scale (r7)
+    build_pdf = _build_cells_cached(polygons, compacted)
     build_res = sorted(
         int(r) for r in np.unique(ix.get_resolution(build_pdf["cell"].to_numpy()))
     )
@@ -141,7 +127,7 @@ def pip_join(
     )
 
     probe = images
-    if prune_partitions and "bc0" in images.columns:
+    if "bc0" in images.columns:
         bc0s = sorted(
             int(b)
             for b in np.unique(
@@ -165,14 +151,7 @@ def pip_join(
 
     joined = probe.join(build, probe["probe_key"] == build["poly_cell"], "inner")
 
-    if refine and split_refine:
-        from pyspark.storagelevel import StorageLevel
-
-        joined = joined.persist(StorageLevel.MEMORY_AND_DISK)
-        interior = joined.where(~F.col("is_boundary"))
-        boundary = _refine_boundary(joined.where(F.col("is_boundary")), polygons)
-        joined = interior.unionByName(boundary)
-    elif refine:
+    if refine:
         joined = _refine_boundary(joined, polygons)
     return joined.drop("probe_key", "poly_cell", "is_boundary")
 

@@ -22,7 +22,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -55,14 +54,6 @@ def decode_image(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
         f"decode for fmt={fmt!r} requires an imaging library not present "
         "in this environment (plumbing is fmt-dispatched; add a decoder here)"
     )
-
-
-def tile_stats(px: np.ndarray, tile_px: int) -> np.ndarray:
-    """(h, w, 3) -> (ty, tx, 3) per-tile channel means (vectorized)."""
-    h, w, _ = px.shape
-    ny, nx = h // tile_px, w // tile_px
-    trimmed = px[: ny * tile_px, : nx * tile_px, :].astype(np.float64)
-    return trimmed.reshape(ny, tile_px, nx, tile_px, 3).mean(axis=(1, 3))
 
 
 def tile_assign(

@@ -80,7 +80,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+        if hasattr(os, "sched_getaffinity")
+        else os.cpu_count() or 1
+    )
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
         "SPARK_SHUFFLE_PARTITIONS", str(min(64, 2 * int(cpus)))
@@ -99,16 +103,13 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's 1 MB minimum post-shuffle partition size assumes work is
-        # byte-proportional; the engine's verify stages (pair scoring
-        # over 64-element arrays) run ~us-per-ROW, so 1 MB-granularity
-        # coalescing starves them to 2-3 tasks. 64 KB lets
-        # parallelismFirst actually use the cluster on CPU-dense tails;
-        # at scale advisory = max(bytes/parallelism, this) >> 1 MB and
-        # the floor never binds (r7, measured ~25% on the q14 tail).
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_AQE_MIN_PARTITION_SIZE", "64KB"),
-        )
+        # byte-proportional; CPU-dense per-row stages coalesced at 1 MB
+        # granularity starve to 2-3 tasks, and 64 KB lets
+        # parallelismFirst use the cluster. At scale advisory =
+        # max(bytes/parallelism, this) >> 1 MB and the floor never
+        # binds. The floor is unmeasured on the PIP, kNN and tiling
+        # workloads; extra_conf overrides it.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Shuffle I/O layout (r7, guide §2.1/§2.2): keep shuffle files on
         # the fastest local storage — measured on this sandbox: 4.2 s of
@@ -123,27 +124,12 @@ def get_spark(
         # slower than the serialized sort writer here. At production
         # reducer counts (>200) bypass never fires anyway, so this also
         # makes local-mode shuffle behave like the cluster shape.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_BYPASS_MERGE_THRESHOLD", "1"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )
-    if os.environ.get("SPARK_GRAFT_ADVERSE") == "1":
-        # adverse-config sweep (VERDICT r5 #2): kill every automatic
-        # rescue — no auto-broadcast, no AQE replanning/skew-split — so
-        # a gate run proves the engine's EXPLICIT F.broadcast hints and
-        # salting carry the plans, not optimizer luck
-        builder = (
-            builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-            .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-            .config("spark.sql.adaptive.enabled", "false")
-            .config("spark.sql.adaptive.skewJoin.enabled", "false")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))
     spark = builder.getOrCreate()

@@ -1,6 +1,6 @@
 """Deterministic synthetic data (FIXTURES.md): the `images` fact table in
-exactly the BASELINE.json input_hint shape, plus `polygons` and
-`knn_queries` dimension tables.
+exactly the BASELINE.json input_hint shape, the test `POLYGONS` and
+the `knn_queries` dimension table.
 
 Generation is distributed (spark.range -> mapInPandas) and *ordinal-
 derived*: every value is a pure function of the row id via splitmix64
@@ -24,9 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -227,33 +225,6 @@ POLYGONS = {
     "sydney": (SYDNEY_EXTERIOR, [], 9),
     "null_island_box": (NULL_ISLAND_BOX, [], 4),
 }
-
-_POINT = StructType(
-    [StructField("lng", DoubleType()), StructField("lat", DoubleType())]
-)
-POLYGONS_SCHEMA = StructType(
-    [
-        StructField("polygon_id", StringType(), False),
-        StructField("exterior", ArrayType(_POINT), False),
-        StructField("holes", ArrayType(ArrayType(_POINT)), False),
-        StructField("res", IntegerType(), False),
-    ]
-)
-
-
-def generate_polygons(spark: SparkSession) -> DataFrame:
-    rows = []
-    for pid, (ext, holes, res) in POLYGONS.items():
-        rows.append(
-            (
-                pid,
-                [{"lng": x, "lat": y} for x, y in ext],
-                [[{"lng": x, "lat": y} for x, y in hole] for hole in holes],
-                res,
-            )
-        )
-    return spark.createDataFrame(rows, POLYGONS_SCHEMA)
-
 
 def generate_knn_queries(spark: SparkSession, n: int = 64, k: int = 5) -> DataFrame:
     """Query points: metro mixture + a few isolated points that force

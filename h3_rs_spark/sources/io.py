@@ -1,16 +1,13 @@
-"""Warehouse IO: Iceberg-first with transparent parquet fallback.
+"""Warehouse IO: the `images` fact table as hive-partitioned parquet.
 
-At design scale the `images` fact table is an Iceberg table partitioned
-by the coarse cell (base cell of the res-0 ancestor), so polygon queries
-prune partitions from the compacted polyfill's coarse prefix
-(SURVEY.md §4.2). This sandbox's pyspark has no Iceberg runtime jar, so
-the same layout is written as hive-partitioned parquet — identical
-partition pruning behavior through the DataSource V1 path.
+The table is partitioned by the coarse cell (base cell of the res-0
+ancestor), so polygon queries prune partitions from the compacted
+polyfill's coarse prefix (SURVEY.md §4.2). At design scale the same
+layout is an Iceberg partition spec; this pyspark bundles no Iceberg
+runtime jar, so the engine writes parquet.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,14 +16,6 @@ from ..functions.native import h3_base_cell, h3_to_parent_col
 from ..functions.udfs import geo_to_h3_udf
 
 CAPTION_RE = r"at (-?\d+\.\d+),(-?\d+\.\d+)$"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.spark.SparkCatalog  # noqa: SLF001
-        return True
-    except Exception:
-        return False
 
 
 def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
@@ -65,7 +54,3 @@ def write_images(df: DataFrame, path: str, res: int = 9) -> None:
 def read_images(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
-
-def warehouse_path(name: str) -> str:
-    root = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/h3_rs_spark_warehouse")
-    return os.path.join(root, name)

@@ -2,7 +2,7 @@
 installed on first import of this package inside a worker (the package
 import happens while the first task's UDF is unpickled).
 
-Why this exists (measured; see BENCH/BASELINE.md round 3): on Python
+Why this exists (measured in round 3): on Python
 3.11 a REUSED pyspark worker pays ~150-500 ms of python CPU for EVERY
 task before the UDF even runs. cProfile of the worker loop (custom
 daemon module) attributes ~98% of that to zipimport._read_directory:

@@ -304,76 +304,6 @@ class TestSimhashVectorized:
             assert got.tolist() == [int(h)], t
 
 
-class TestStreamDedup:
-    def test_stream_matches_batch_exact_dedup(self, spark, tmp_path):
-        """Streaming first-seen-wins dedup must agree with the batch
-        exact_dedup groupBy on the same (dup-injected) corpus."""
-        import shutil
-
-        from h3_rs_spark.operators.dedup import exact_dedup
-        from h3_rs_spark.streaming.dedup_stream import (
-            run_dedup_available_now,
-        )
-
-        src = tmp_path / "docs_src"
-        src.mkdir()
-        shutil.copy(
-            "/root/testdata/sf0.001/documents.parquet",
-            src / "part-0.parquet",
-        )
-        got = run_dedup_available_now(
-            spark, str(src), inject_dups=True, name="t_stream_dedup"
-        ).toPandas()
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        corpus = docs.unionByName(
-            docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-        )
-        exp = exact_dedup(corpus).toPandas()
-
-        g = got.sort_values("content_hash", ignore_index=True)
-        x = exp.rename(columns={"dup_count": "dup_count"}).sort_values(
-            "content_hash", ignore_index=True
-        )
-        assert g["content_hash"].tolist() == x["content_hash"].tolist()
-        assert g["keep_id"].tolist() == x["keep_id"].tolist()
-        assert g["dup_count"].tolist() == x["dup_count"].tolist()
-        # first-seen-wins: every kept id is the pre-injection original
-        assert (g["keep_id"] < 1_000_000).all()
-
-    def test_to_path_matches_batch_exact_dedup(self, spark, tmp_path):
-        """The distributed parquet sink (foreachBatch append + final
-        last-update-wins aggregation) must reproduce the batch
-        exact_dedup result — the 100 TB shape of q40 where per-hash
-        rows never funnel through a driver memory sink."""
-        import shutil
-
-        from h3_rs_spark.operators.dedup import exact_dedup
-        from h3_rs_spark.streaming.dedup_stream import run_dedup_to_path
-
-        src = tmp_path / "docs_src2"
-        src.mkdir()
-        shutil.copy(
-            "/root/testdata/sf0.001/documents.parquet",
-            src / "part-0.parquet",
-        )
-        got = run_dedup_to_path(
-            spark,
-            str(src),
-            str(tmp_path / "dedup_out"),
-            str(tmp_path / "dedup_ckpt"),
-        ).toPandas()
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        exp = exact_dedup(docs).toPandas()
-
-        g = got.sort_values("content_hash", ignore_index=True)
-        x = exp.sort_values("content_hash", ignore_index=True)
-        assert g["content_hash"].tolist() == x["content_hash"].tolist()
-        assert g["keep_id"].tolist() == x["keep_id"].tolist()
-        assert g["dup_count"].tolist() == x["dup_count"].tolist()
-
-
 class TestShingleEdgeCases:
     def test_zero_byte_encoding_survives(self):
         """A non-empty str that UTF-8-encodes to zero bytes (lone
@@ -383,44 +313,6 @@ class TestShingleEdgeCases:
         assert dedup._shingle_hashes("\ud800", 3).tolist() == [0]
         assert dedup._shingle_hashes("\udfff\ud800", 5).tolist() == [0]
         assert dedup._shingle_hashes("", 3).tolist() == [0]
-
-
-class TestStreamDedupRocksDB:
-    def test_rocksdb_state_store(self, spark, tmp_path):
-        """The bounded-state claim names RocksDB-backed state stores as
-        the at-scale sharding mechanism — run the same availableNow
-        drain with the RocksDB provider to prove the operator works on
-        it (HDFS-backed default elsewhere)."""
-        import shutil
-
-        from h3_rs_spark.streaming.dedup_stream import (
-            run_dedup_available_now,
-        )
-
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        src = tmp_path / "rocks_src"
-        src.mkdir()
-        shutil.copy(
-            "/root/testdata/sf0.001/documents.parquet",
-            src / "part-0.parquet",
-        )
-        try:
-            spark.conf.set(
-                key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            got = run_dedup_available_now(
-                spark, str(src), inject_dups=True, name="t_rocks_dedup"
-            ).toPandas()
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        assert len(got) == 500
-        assert (got["dup_count"] == 2).all()
 
 
 class TestConnectedComponents:

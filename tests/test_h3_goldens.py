@@ -416,7 +416,7 @@ class TestExtendedParity:
         boundary seamlessly: a lone pentagon gives one 5-vertex ring,
         its k=1 disk (pentagon + 5 neighbors) one closed outer ring of
         5*... = 15 single-occurrence edges, and every member centroid
-        lies inside (r5 edge-case coverage for q44's operator)."""
+        lies inside (r5 edge-case coverage for the dissolve operator)."""
         from h3_rs_spark.h3core import indexing
         from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
         from h3_rs_spark.h3core.regions import cells_to_multipolygon
@@ -620,7 +620,8 @@ class TestLocalFrame:
         """h3_line_batch (r7: greedy-fallback pairs walk together, one
         batched neighbors() call per step) must return bit-identical
         paths to the scalar h3_line — including pentagon-neighborhood
-        pairs that force the greedy fallback (the q38 fixture shape)."""
+        pairs that force the greedy fallback (the
+        test_h3_surface.py::test_line_and_distance_metro_pairs fixture shape)."""
         from h3_rs_spark.h3core import indexing as ix
         from h3_rs_spark.h3core import traversal as tv
         from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS

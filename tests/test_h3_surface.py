@@ -1,0 +1,461 @@
+"""H3-surface gates over fixed, scale-independent fixtures.
+
+Each test computes one summary through the same public functions a
+caller would use (the Spark UDFs and JVM columns where the surface is a
+Spark one, the kernel where it is a driver one) and pins the whole
+value tuple. The values were re-derived from the kernel and are
+corroborated by H3 laws noted per test; a regression that conserves
+counts but moves cells shifts at least one pinned value.
+"""
+
+from __future__ import annotations
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from h3_rs_spark.functions.native import (
+    edge_number_col,
+    edge_origin_col,
+    h3_resolution,
+    h3_to_parent_col,
+    haversine_m_col,
+)
+from h3_rs_spark.functions.udfs import (
+    edge_destination_udf,
+    edges_from_cell_udf,
+    geo_to_h3_udf,
+    h3_boundary_udf,
+    h3_distance_udf,
+    h3_line_udf,
+    h3_local_frame_ok_udf,
+    h3_to_geo_udf,
+    hex_ranges_udf,
+    k_ring_udf,
+)
+from h3_rs_spark.h3core import edge_length_m, hex_area_m2, hex_ring
+from h3_rs_spark.h3core import edges as ed
+from h3_rs_spark.h3core import faceijk as fk
+from h3_rs_spark.h3core import hierarchy, indexing, regions, traversal
+from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
+from h3_rs_spark.h3core.hierarchy import compact
+from h3_rs_spark.operators.hierarchy_ops import (
+    antichain_violations,
+    compact_cells_df,
+    uncompact_cells_df,
+)
+from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
+from h3_rs_spark.sources.datagen import POLYGONS, SF_EXTERIOR
+
+
+def _fixture_points_res7():
+    """Deterministic point set for the kernel-surface gates: a fixed
+    global lat/lng lattice (pentagon-free bulk, some cells crossing
+    icosahedron edges) plus the centroids of the full k=2 disks of all
+    12 res-7 pentagons (pentagon + distortion coverage). Returns
+    (lat, lng) float64 arrays."""
+    lats = np.linspace(-78.0, 78.0, 27)
+    lngs = np.linspace(-180.0, 175.0, 72)
+    glat = np.repeat(lats, len(lngs))
+    glng = np.tile(lngs, len(lats))
+    pb = PENTAGON_BASE_CELLS.astype(np.int64)
+    digits = np.full((len(pb), 15), 7, dtype=np.int64)
+    digits[:, :7] = 0
+    pents = indexing.from_components(pb, 7, digits)
+    _, disk = traversal.k_ring(pents, 2)
+    dlat, dlng = fk.h3_to_geo(disk)
+    return np.concatenate([glat, dlat]), np.concatenate([glng, dlng])
+
+
+def _first_pentagon(res):
+    digits = np.full((1, 15), 7, dtype=np.int64)
+    digits[:, :res] = 0
+    return indexing.from_components(
+        PENTAGON_BASE_CELLS[:1].astype(np.int64), res, digits
+    )
+
+
+@pytest.fixture(scope="module")
+def fixture_points(spark):
+    lat, lng = _fixture_points_res7()
+    return spark.createDataFrame(pd.DataFrame({"lat": lat, "lng": lng}))
+
+
+@pytest.fixture(scope="module")
+def fixture_cells(fixture_points):
+    return (
+        fixture_points.withColumn("cell", geo_to_h3_udf(7)("lat", "lng"))
+        .select("cell")
+        .distinct()
+    )
+
+
+def test_kring_disk_histogram(fixture_cells):
+    """1944 lattice cells + 192 pentagon-disk cells = 2136. The split
+    follows the pentagon deficit law disk(d) = 19 - (3,1,0)[d] for
+    origin distance d from a pentagon: the 12 pentagons give 16, their
+    60 direct neighbours 18, everything else 19."""
+    disks = (
+        fixture_cells.withColumn("ring_cell", F.explode(k_ring_udf(2)("cell")))
+        .groupBy("cell")
+        .agg(F.count("*").alias("disk_size"))
+    )
+    row = disks.agg(
+        F.count("*").alias("n_cells"),
+        F.sum((F.col("disk_size") == 19).cast("long")).alias("n_19"),
+        F.sum((F.col("disk_size") == 18).cast("long")).alias("n_18"),
+        F.sum((F.col("disk_size") == 17).cast("long")).alias("n_17"),
+        F.sum((F.col("disk_size") == 16).cast("long")).alias("n_16"),
+    ).first()
+    assert tuple(row) == (2136, 2064, 60, 0, 12)
+
+
+def test_parent_rollup_structure(fixture_points):
+    """All 2136 fixture points land in distinct res-9 cells, rolling up
+    into 1956 distinct res-5 parents, every one carrying res field 5."""
+    rollup = (
+        fixture_points.withColumn("cell", geo_to_h3_udf(9)("lat", "lng"))
+        .withColumn("cell_r5", h3_to_parent_col("cell", 5))
+        .groupBy("cell_r5")
+        .agg(F.count("*").alias("n"), F.countDistinct("cell").alias("n_cells"))
+    )
+    row = rollup.agg(
+        F.sum("n").alias("pts"),
+        F.sum("n_cells").alias("cells"),
+        F.count("*").alias("groups"),
+        F.sum((h3_resolution("cell_r5") == 5).cast("long")).alias("res5"),
+    ).first()
+    assert tuple(row) == (2136, 2136, 1956, 1956)
+
+
+def test_polygon_cover_per_polygon():
+    """Interior/boundary split, compacted interior and centroid polyfill
+    per test polygon. sf_hexagon polyfill@9 == 1253 is the reference's
+    own region golden; interior and boundary must be disjoint."""
+    rows = []
+    for pid, (ext, holes, res) in sorted(POLYGONS.items()):
+        interior, boundary = regions.polygon_cover(ext, holes, res)
+        pf = regions.polyfill(ext, holes, res)
+        comp = compact(interior) if len(interior) else interior
+        disjoint = not (set(interior.tolist()) & set(boundary.tolist()))
+        rows.append(
+            (pid, len(interior), len(comp), len(boundary), len(pf), int(disjoint))
+        )
+    assert rows == [
+        ("null_island_box", 310, 100, 257, 440, 1),
+        ("sf_hexagon", 1039, 157, 444, 1253, 1),
+        ("sf_hexagon_2holes", 842, 236, 631, 1172, 1),
+        ("sf_hexagon_hole", 945, 207, 533, 1214, 1),
+        ("sydney", 40, 28, 126, 92, 1),
+    ]
+
+
+def test_boundary_vertex_classes(fixture_cells):
+    """The 12 res-7 (Class III) pentagons carry the 5+5 distortion-vertex
+    form (n_v10), 122 lattice cells crossing an icosahedron edge pick up
+    one distortion vertex (n_v7), the rest are plain hexagons; the
+    farthest vertex lands in the 1.2-1.3x edge-length decile."""
+    verts = fixture_cells.withColumn(
+        "vert", F.explode(h3_boundary_udf("cell"))
+    ).withColumn("c", h3_to_geo_udf("cell"))
+    verts = verts.withColumn(
+        "vdist_m",
+        haversine_m_col(
+            F.col("c.lat"), F.col("c.lng"), F.col("vert.lat"), F.col("vert.lng")
+        ),
+    )
+    per_cell = verts.groupBy("cell").agg(
+        F.count("*").alias("nv"), F.max("vdist_m").alias("max_d")
+    )
+    row = per_cell.agg(
+        F.count("*").alias("n_cells"),
+        *[
+            F.sum((F.col("nv") == n).cast("long")).alias(f"n_v{n}")
+            for n in (6, 7, 8, 9, 10)
+        ],
+        F.floor(F.max("max_d") / F.lit(edge_length_m(7)) * 10.0)
+        .cast("long")
+        .alias("max_dist_decile"),
+    ).first()
+    assert tuple(row) == (2136, 2002, 122, 0, 0, 12, 12)
+
+
+def test_ring_sizes_hexagon_and_pentagon():
+    """Hollow rings hold exactly 6k cells around a hexagon and 5k around
+    a pentagon."""
+    hex_origin = np.array([0x8928308280FFFFF], dtype=np.int64)
+    for origin, per_k in ((hex_origin, 6), (_first_pentagon(9), 5)):
+        for k in (1, 2, 3):
+            assert hex_ring(origin, k)[1].shape[0] == per_k * k
+
+
+def test_compact_distributed_sf_golden(spark):
+    """Distributed compact of the SF polyfill@9 relation against the
+    reference golden (1253 cells compact to 209), with an exact
+    uncompact round trip and an antichain output."""
+    cells_np = regions.polyfill(SF_EXTERIOR, [], 9)
+    cells = spark.createDataFrame([(int(c),) for c in cells_np], "cell long")
+    comp = compact_cells_df(cells, res=9, assume_distinct=True).persist()
+    try:
+        n_comp = comp.count()
+        back = [r[0] for r in uncompact_cells_df(comp, 9).distinct().collect()]
+        n_viol = antichain_violations(comp).count()
+    finally:
+        comp.unpersist()
+    n_sym = len(set(back) ^ set(cells_np.tolist()))
+    assert (len(cells_np), n_comp, len(back), n_sym, n_viol) == (
+        1253, 209, 1253, 0, 0
+    )
+
+
+def test_polyfill_distributed_over_driver_cap(spark):
+    """An octagon (centre 30N 20E, r=8 deg, hole r=1.5 deg) at res 8
+    exceeds the driver polyfill cap, so the driver refuses and the
+    distributed fill runs. The fine count is pinned together with the
+    x7-per-level law against a coarse driver fill (x1000) and the
+    fine-count x mean-hex-area vs spherical area ratio (x100)."""
+    res, coarse = 8, 5
+    ang = np.linspace(0.0, 2.0 * np.pi, 9)[:-1]
+    ext = tuple((30.0 + 8.0 * np.cos(a), 20.0 + 8.0 * np.sin(a)) for a in ang)
+    hole = tuple((30.0 + 1.5 * np.cos(a), 20.0 + 1.5 * np.sin(a)) for a in ang)
+    try:
+        regions.polyfill(ext, [hole], res)
+        driver_refuses = 0
+    except ValueError:
+        driver_refuses = 1
+    n_coarse = int(regions.polyfill(ext, [hole], coarse).shape[0])
+    area = regions.ring_area_m2(ext) - regions.ring_area_m2(hole)
+
+    n = polyfill_distributed(spark, ext, [hole], res).count()
+
+    scale_x1000 = round(n / (n_coarse * 7 ** (res - coarse)) * 1000.0)
+    area_x100 = round(n * hex_area_m2(res) / area * 100.0)
+    assert (driver_refuses, n, n_coarse, scale_x1000, area_x100) == (
+        1, 2424845, 7078, 999, 88
+    )
+
+
+def test_line_and_distance_metro_pairs(spark):
+    """Grid distance and line over consecutive jittered points around six
+    metros plus one res-7 pentagon (which forces the BFS fallback the
+    local frame refuses). Local-frame lines hold exactly distance+1
+    cells; every line keeps its endpoints."""
+    from pyspark.sql import Window
+
+    pent = _first_pentagon(7)
+    plat, plng = fk.h3_to_geo(pent)
+    metros = [
+        (37.76, -122.44),
+        (40.71, -74.01),
+        (-33.87, 151.21),
+        (51.5, -0.12),
+        (35.68, 139.69),
+        (0.1, 0.1),
+        (float(plat[0]), float(plng[0])),
+    ]
+    rows = []
+    pid = 0
+    for m, (mlat, mlng) in enumerate(metros):
+        for i in range(24):
+            rows.append(
+                (
+                    pid,
+                    m,
+                    mlat + 0.11 * np.sin(2.7 * i + m),
+                    mlng + 0.11 * np.cos(1.9 * i + 3.0 * m),
+                )
+            )
+            pid += 1
+    pts = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["point_id", "metro", "lat", "lng"])
+    )
+    cells = pts.withColumn("cell", geo_to_h3_udf(7)("lat", "lng"))
+    w = Window.partitionBy("metro").orderBy("point_id")
+    pairs = (
+        cells.withColumn("cell_b", F.lag("cell").over(w))
+        .where(F.col("cell_b").isNotNull() & (F.col("cell") != F.col("cell_b")))
+        .select("point_id", "cell", "cell_b")
+    )
+    checked = (
+        pairs.withColumn("d", h3_distance_udf("cell", "cell_b"))
+        .withColumn("line", h3_line_udf("cell", "cell_b"))
+        .withColumn("local_ok", h3_local_frame_ok_udf("cell", "cell_b"))
+        .withColumn(
+            "line_ok",
+            F.when(
+                F.col("local_ok"), F.size("line") == F.col("d") + 1
+            ).otherwise(F.size("line") >= F.col("d") + 1)
+            & (F.element_at("line", 1) == F.col("cell"))
+            & (F.element_at("line", -1) == F.col("cell_b")),
+        )
+    )
+    row = checked.agg(
+        F.count("*").alias("n_pairs"),
+        F.sum(
+            (F.col("local_ok") & (F.size("line") == F.col("d") + 1)).cast("long")
+        ).alias("n_minimal"),
+        F.sum((~F.col("local_ok")).cast("long")).alias("n_fallback"),
+        F.sum(F.col("line_ok").cast("long")).alias("n_line_ok"),
+        F.sum("d").cast("long").alias("sum_dist"),
+    ).first()
+    assert tuple(row) == (161, 115, 46, 161, 1447)
+
+
+def test_polar_polyfill_matches_enumeration():
+    """Pole-containing polyfills at res 3 equal the full res-3 cell
+    enumeration filtered by centroid latitude, cell for cell. A hole
+    wound opposite to the exterior (RFC 7946) fills identically."""
+
+    def ring(lat, eastward=True, n=12):
+        lngs = np.linspace(-180.0, 180.0, n, endpoint=False)
+        if not eastward:
+            lngs = lngs[::-1]
+        return [(float(x), float(lat)) for x in lngs]
+
+    res0 = indexing.from_components(
+        np.arange(122, dtype=np.int64), 0, np.full((122, 15), 7)
+    )
+    allc = hierarchy.uncompact(res0, 3)
+    lat, _ = fk.h3_to_geo(allc)
+    fixtures = [
+        ("annulus75_85", ring(75.0), [ring(85.0)], (lat > 75) & ~(lat > 85)),
+        (
+            "annulus75_85_rfc",
+            ring(75.0),
+            [ring(85.0, eastward=False)],
+            (lat > 75) & ~(lat > 85),
+        ),
+        ("north80", ring(80.0), [], lat > 80),
+        ("south80", ring(-80.0, eastward=False), [], lat < -80),
+    ]
+    rows = []
+    for name, ext, holes, pred in fixtures:
+        got = regions.polyfill(ext, holes, 3)
+        n_wrong = len(set(got.tolist()) ^ set(allc[pred].tolist()))
+        rows.append((name, int(got.shape[0]), n_wrong))
+    assert rows == [
+        ("annulus75_85", 591, 0),
+        ("annulus75_85_rfc", 591, 0),
+        ("north80", 293, 0),
+        ("south80", 294, 0),
+    ]
+
+
+def test_unidirectional_edges_over_fixture(fixture_cells):
+    """Every edge of the 2136 fixture cells: 2124 hexagons x 6 + 12
+    pentagons x 5 = 12804. Origins come back through JVM bit math,
+    destinations through the UDF, and origin+destination rebuild the
+    edge through the kernel."""
+
+    @F.pandas_udf("long")
+    def _rebuild(origin: pd.Series, dest: pd.Series) -> pd.Series:
+        return pd.Series(
+            ed.edge_from_cells(
+                origin.to_numpy(dtype=np.int64), dest.to_numpy(dtype=np.int64)
+            )
+        )
+
+    edges = (
+        fixture_cells.withColumn(
+            "edge", F.explode(edges_from_cell_udf()("cell"))
+        )
+        .withColumn("origin", edge_origin_col("edge"))
+        .withColumn("num", edge_number_col("edge"))
+        .withColumn("dest", edge_destination_udf()("edge"))
+        .withColumn("rebuilt", _rebuild("origin", "dest"))
+    )
+    row = edges.agg(
+        F.countDistinct("cell").alias("n_cells"),
+        F.count("*").alias("n_edges"),
+        F.sum((F.col("origin") == F.col("cell")).cast("long")),
+        F.sum(
+            ((F.col("dest") != 0) & (F.col("dest") != F.col("cell"))).cast("long")
+        ),
+        F.sum((F.col("rebuilt") == F.col("edge")).cast("long")),
+        F.sum(((F.col("num") >= 1) & (F.col("num") <= 6)).cast("long")),
+    ).first()
+    assert tuple(row) == (2136, 12804, 12804, 12804, 12804, 12804)
+
+
+def test_hex_ranges_pentagon_contract(spark):
+    """k=2 disks: a hexagon pair gives 19 + 19 cells; a batch touching a
+    pentagon fails as a whole (ok=0) and the pentagon disk holds 16."""
+    hex_a, hex_b = 0x8928308280FFFFF, 0x89283082803FFFF
+    pent = int(_first_pentagon(9)[0])
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "batch": ["hex_pair", "with_pentagon"],
+                "origins": [[hex_a, hex_b], [hex_a, pent]],
+            }
+        )
+    )
+    rows = (
+        df.withColumn("r", hex_ranges_udf(2)("origins"))
+        .select(
+            "batch",
+            F.col("r.ok").cast("long").alias("ok"),
+            F.aggregate(
+                F.transform(F.col("r.disks"), lambda d: F.size(d)),
+                F.lit(0),
+                lambda a, x: a + x,
+            ).alias("n_disk_cells"),
+        )
+        .orderBy("batch")
+        .collect()
+    )
+    assert [tuple(r) for r in rows] == [
+        ("hex_pair", 1, 38),
+        ("with_pentagon", 0, 35),
+    ]
+
+
+def test_dissolve_ring_structure():
+    """Cells -> multipolygon over the SF polyfill@9 set and a two-island
+    set with one hole (k<=3 annulus around a hexagon plus a far k<=2
+    disk). Outer rings wind CCW, holes opposite. The islands row obeys
+    the disk-boundary vertex law 6(2k+1): 42 + 18 + 30 = 90 vertices,
+    and 30 + 12 = 42 perimeter cells."""
+
+    def summarize(cells):
+        cells = np.unique(np.asarray(cells, dtype=np.int64))
+        rings = regions.cells_to_multipolygon(cells)
+        n_outer = n_holes = n_verts = 0
+        for ring in rings:
+            pts = np.asarray(ring, dtype=np.float64)
+            x, y = pts[:, 0], pts[:, 1]
+            area2 = float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y))
+            n_verts += len(ring)
+            if area2 > 0:
+                n_outer += 1
+            else:
+                n_holes += 1
+        owner, nb = traversal.neighbors(cells)
+        inset = np.isin(nb, cells)
+        nv_in = np.bincount(
+            owner, weights=inset.astype(np.float64), minlength=cells.size
+        )
+        nv_tot = np.bincount(owner, minlength=cells.size)
+        n_perim = int((nv_in < nv_tot).sum())
+        return n_outer, n_holes, n_verts, n_perim
+
+    base = np.array([0x8928308280FFFFF], dtype=np.int64)
+    _, d3 = traversal.k_ring(base, 3)
+    _, d1 = traversal.k_ring(base, 1)
+    annulus = np.setdiff1d(d3, d1)
+    far = fk.geo_to_h3(np.array([-33.87]), np.array([151.21]), 9)
+    _, island = traversal.k_ring(far, 2)
+
+    rows = sorted(
+        (name, int(cells.shape[0])) + summarize(cells)
+        for name, cells in (
+            ("sf_polyfill", regions.polyfill(SF_EXTERIOR, [], 9)),
+            ("islands_hole", np.concatenate([annulus, island])),
+        )
+    )
+    assert rows == [
+        ("islands_hole", 49, 2, 1, 90, 42),
+        ("sf_polyfill", 1253, 1, 0, 284, 139),
+    ]
+

@@ -1,8 +1,6 @@
-"""Multimodal operator tests (real rgb24/pcm16 paths; codec stubs gated)."""
+"""Image operator tests (real rgb24 path) and the h3util CLI."""
 
 import numpy as np
-import pandas as pd
-import pytest
 
 from h3_rs_spark.operators import multimodal as mm
 
@@ -33,12 +31,6 @@ class TestKernels:
         assert f.shape == (24,)
         assert abs(f[:8].sum() - 1.0) < 1e-9
 
-    def test_stub_formats_raise(self):
-        with pytest.raises(NotImplementedError):
-            mm.decode_video(b"", 2, 2, "h264")
-        with pytest.raises(NotImplementedError):
-            mm.decode_audio(b"", "mp3")
-
 
 class TestSparkOps:
     def test_resize_and_features(self, spark):
@@ -58,71 +50,6 @@ class TestSparkOps:
         exp = mm.channel_histogram(px, 8)
         got = feats.sort_values("image_id")["features"].iloc[0]
         assert np.allclose(got, exp)
-
-    def test_video_frame_sampling(self, spark):
-        rng = np.random.default_rng(2)
-        frames = rng.integers(0, 256, size=(9, 4, 4, 3), dtype=np.uint8)
-        pdf = pd.DataFrame(
-            {
-                "video_id": ["v0"],
-                "bytes": [frames.tobytes()],
-                "w": [4],
-                "h": [4],
-                "fmt": ["rawvideo-rgb24"],
-            }
-        )
-        out = mm.sample_frames(spark.createDataFrame(pdf), every_n=4).toPandas()
-        assert out["frame_idx"].tolist() == [0, 4, 8]
-        f0 = frames[0].astype(np.float64)
-        lum = 0.299 * f0[:, :, 0] + 0.587 * f0[:, :, 1] + 0.114 * f0[:, :, 2]
-        assert abs(out["mean_lum"][0] - lum.mean()) < 1e-9
-
-    def test_audio_stats(self, spark):
-        t = np.arange(8000)
-        x = (np.sin(2 * np.pi * 440 * t / 8000) * 20000).astype(np.int16)
-        pdf = pd.DataFrame(
-            {"audio_id": ["a0"], "bytes": [x.tobytes()], "fmt": ["pcm16"]}
-        )
-        out = mm.audio_stats(spark.createDataFrame(pdf)).toPandas()
-        assert out["n_samples"][0] == 8000
-        assert abs(out["rms"][0] - (20000 / 32768) / np.sqrt(2)) < 1e-3
-
-
-class TestStatefulStreaming:
-    def test_running_cell_stats(self, spark, tmp_path):
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        from h3_rs_spark.streaming.cells import with_synthetic_geo
-        from h3_rs_spark.streaming.stateful import run_stateful_available_now
-        from h3_rs_spark.functions.udfs import geo_to_h3_udf
-
-        src = tmp_path / "events_src"
-        src.mkdir()
-        shutil.copy(
-            "/root/testdata/sf0.001/events.parquet", src / "part-0.parquet"
-        )
-        out = run_stateful_available_now(spark, str(src), res=4).toPandas()
-        # final state per cell equals the batch aggregation
-        batch = spark.read.parquet(str(src / "part-0.parquet"))
-        exp = (
-            with_synthetic_geo(batch)
-            .withColumn("cell", geo_to_h3_udf(4)("lat", "lng"))
-            .groupBy("cell")
-            .agg(F.count("*").alias("n_total"), F.max("value").alias("value_max"))
-            .toPandas()
-        )
-        final = (
-            out.sort_values("n_total")
-            .groupby("cell", as_index=False)
-            .last()
-            .sort_values("cell", ignore_index=True)
-        )
-        exp = exp.sort_values("cell", ignore_index=True)
-        assert final["cell"].tolist() == exp["cell"].tolist()
-        assert final["n_total"].tolist() == exp["n_total"].tolist()
-        assert np.allclose(final["value_max"], exp["value_max"])
 
 
 class TestCli:

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from h3_rs_spark.h3core import faceijk, regions
-from h3_rs_spark.operators import dedup, simsearch, skew
+from h3_rs_spark.operators import dedup, skew
 from h3_rs_spark.operators.knn import knn_join, knn_oracle
 from h3_rs_spark.operators.pip_join import pip_join
 from h3_rs_spark.operators.tiling import decode_image, psnr_db, tile_assign
@@ -111,7 +111,7 @@ class TestPipJoin:
     def test_partition_pruning_filter(self, spark, images):
         polys = {"sf_hexagon": datagen.POLYGONS["sf_hexagon"]}
         plan = pip_join(
-            spark, images, polys, prune_partitions=True
+            spark, images, polys
         )._jdf.queryExecution().executedPlan().toString()
         assert "bc0" in plan  # coarse-cell prefilter present
 
@@ -294,75 +294,6 @@ class TestDedupOps:
         assert j[(0, 4)] == 0.0  # disjoint docs
 
 
-class TestSimsearch:
-    def test_ivf_recall(self, spark):
-        rng = np.random.default_rng(0)
-        base = rng.standard_normal((400, 16)).astype(np.float32)
-        vecs = spark.createDataFrame(
-            pd.DataFrame(
-                {"vec_id": range(400), "embedding": [v.tolist() for v in base]}
-            )
-        )
-        q_pdf = pd.DataFrame(
-            {
-                "query_id": [f"q{i}" for i in range(8)],
-                "q_vec": [base[i].tolist() for i in range(8)],
-            }
-        )
-        exact = simsearch.cosine_topk(
-            vecs,
-            spark.createDataFrame(q_pdf),
-            k=5,
-        ).toPandas()
-        approx = simsearch.ivf_topk(
-            spark, vecs, q_pdf, k=5, nlist=8, nprobe=4
-        ).toPandas()
-        exact_sets = exact.groupby("query_id")["neighbor_id"].apply(set)
-        approx_sets = approx.groupby("query_id")["neighbor_id"].apply(set)
-        recall = np.mean(
-            [
-                len(exact_sets[q] & approx_sets.get(q, set())) / 5
-                for q in exact_sets.index
-            ]
-        )
-        assert recall >= 0.7, recall
-
-    def test_ivf_indexed_layout_prunes_partitions(self, spark, tmp_path):
-        """The materialized IVF layout must (a) return the same top-k as
-        the inline ivf_topk and (b) prune the scan to the probed bucket
-        directories (partition filter on ivf_bucket in the plan)."""
-        rng = np.random.default_rng(0)
-        base = rng.standard_normal((400, 16)).astype(np.float32)
-        vecs = spark.createDataFrame(
-            pd.DataFrame(
-                {"vec_id": range(400), "embedding": [v.tolist() for v in base]}
-            )
-        )
-        q_pdf = pd.DataFrame(
-            {
-                "query_id": [f"q{i}" for i in range(8)],
-                "q_vec": [base[i].tolist() for i in range(8)],
-            }
-        )
-        path = str(tmp_path / "ivf")
-        simsearch.write_ivf_index(vecs, path, nlist=8)
-        out = simsearch.ivf_topk_indexed(spark, path, q_pdf, k=5, nprobe=4)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "ivf_bucket" in plan and "PartitionFilters: [" in plan
-        # the partition filter must actually name the isin predicate
-        assert "dynamicpruning" in plan or "ivf_bucket" in plan.split(
-            "PartitionFilters"
-        )[1][:400]
-        inline = simsearch.ivf_topk(
-            spark, vecs, q_pdf, k=5, nlist=8, nprobe=4
-        ).toPandas()
-        indexed = out.toPandas()
-        key = ["query_id", "neighbor_id", "rank"]
-        assert sorted(map(tuple, indexed[key].values.tolist())) == sorted(
-            map(tuple, inline[key].values.tolist())
-        )
-
-
 class TestDistributedHierarchy:
     def test_compact_df_matches_kernel(self, spark, images):
         from h3_rs_spark.h3core import compact as kernel_compact
@@ -399,23 +330,6 @@ class TestDistributedHierarchy:
         df = spark.createDataFrame(pd.DataFrame({"cell": ch}))
         out = [r[0] for r in compact_cells_df(df).collect()]
         assert out == [parent]
-
-
-def test_split_refine_equals_inline(spark, images):
-    from h3_rs_spark.sources import datagen
-
-    polys = {"sf_hexagon": datagen.POLYGONS["sf_hexagon"]}
-    a = sorted(
-        r[0]
-        for r in pip_join(spark, images, polys, split_refine=False)
-        .select("image_id").collect()
-    )
-    b = sorted(
-        r[0]
-        for r in pip_join(spark, images, polys, split_refine=True)
-        .select("image_id").collect()
-    )
-    assert a == b
 
 
 class TestDedupScale:
@@ -558,6 +472,30 @@ def test_uncompact_staged_multilevel(spark):
         np.concatenate([ix.to_children(c, 6) for c in cells]).tolist()
     )
     assert got == want
+
+
+def test_uncompact_quoted_column_drops_finer_rows(spark):
+    """A column name that needs quoting expands the same way, and a row
+    finer than `res` is dropped whether or not `max_res` is given."""
+    from h3_rs_spark.h3core import indexing as ix
+    from h3_rs_spark.operators.hierarchy_ops import uncompact_cells_df
+
+    coarse = [0x824887FFFFFFFFF, 0x81083FFFFFFFFFF]
+    finer = int(ix.to_children(coarse[0], 7)[0])
+    df = spark.createDataFrame(
+        pd.DataFrame({"my cell": coarse + [finer]})
+    )
+    want = sorted(
+        np.concatenate([ix.to_children(c, 5) for c in coarse]).tolist()
+    )
+    for max_res in (None, 2):
+        got = sorted(
+            r[0]
+            for r in uncompact_cells_df(
+                df, 5, cell_col="my cell", max_res=max_res
+            ).collect()
+        )
+        assert got == want, max_res
 
 
 def test_polyfill_distributed_plan_shape(spark):
