@@ -1,26 +1,18 @@
-"""Deduplication operators for training-data pipelines.
+"""Deduplication operators for training-data pipelines (off the
+BASELINE north-star path; the module is scheduled for deletion).
 
 - exact_dedup: content-hash groupBy (md5, JVM-side) — shuffle on the
   hash, partial-agg'd, scales linearly.
-- minhash_lsh_dedup: shingle -> minhash signature -> banded LSH buckets
-  -> candidate pairs within buckets -> exact Jaccard verify. The classic
-  near-dup pipeline: the only shuffle is on (band, bucket) keys, and
-  candidate verification touches only same-bucket pairs, never the cross
-  product.
-- simhash_dedup: 64-bit simhash + hamming-distance candidate pairing via
-  band buckets (4x16-bit chunks, exact-match banding).
-- ngram_jaccard_pairs: exact n-gram Jaccard on candidate pairs.
-- embedding_near_dup: cosine > threshold pairs via LSH over random
-  hyperplane signs (embedding column), brute-force verify per bucket.
-
-All signature computation is Arrow-batched numpy (no per-row Python in
-the heavy path); pair generation is a self-join on bucket keys.
-
-r6: the three LSH operators default to distinct_content=True — buckets
-see ONE representative per distinct content and member pairs expand
-afterward, so duplicate-heavy corpora (the r6 sf10 proof run: 100-member
-exact-dup groups → C(100,2)·groups·bands candidate rows → 77 GB of
-shuffle spill) cost LSH work proportional to distinct content only.
+- minhash_lsh_dedup: shingle -> minhash signature (Arrow-batched numpy)
+  -> banded LSH buckets -> candidate pairs within buckets -> estimated
+  Jaccard verify. The only shuffle is on (band, bucket) keys, and
+  candidate verification touches only same-bucket pairs, never the
+  cross product. Buckets see ONE representative per distinct signature
+  and member pairs expand afterward, so duplicate-heavy corpora (100-
+  member exact-dup groups -> C(100,2)·groups·bands candidate rows ->
+  77 GB of shuffle spill at 500k docs) cost LSH work proportional to
+  distinct content only.
+- ngram_jaccard_pairs: exact word-n-gram Jaccard on candidate pairs.
 """
 
 from __future__ import annotations
@@ -33,8 +25,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
-
-from .textstats import fingerprint_udf
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
@@ -322,15 +312,13 @@ def _expand_member_pairs(
     return cross.unionByName(within).unionByName(star)
 
 
-def _bucket_pairs(
-    banded: DataFrame, keys: list, cap: int, window_form: bool = True
-) -> DataFrame:
+def _bucket_pairs(banded: DataFrame, keys: list, cap: int) -> DataFrame:
     """Candidate pairs (id_a < id_b) from LSH buckets.
 
     Buckets with <= cap members pair all-vs-all within the bucket. A
-    HOT bucket (boilerplate docs, an all-zeros vector) would generate
-    O(members^2) pairs inside one task — the quadratic blow-up that
-    kills banded LSH at scale — so over-cap buckets STAR-pair instead:
+    HOT bucket (boilerplate docs) would generate O(members^2) pairs
+    inside one task — the quadratic blow-up that kills banded LSH at
+    scale — so over-cap buckets STAR-pair instead:
     every member pairs with the bucket's min-id representative. Linear
     in the hot-bucket size, and exact duplicates (which share EVERY
     band's bucket, so no other band rescues them) still reach the
@@ -347,24 +335,17 @@ def _bucket_pairs(
     are dropped) are pinned by tests/test_dedup.py. Exact duplicates
     are never lost: connectivity through the anchor survives.
 
-    Plan shape (r7, guide §2.4, window_form=True): bucket size and
-    min-id anchor come from ONE window over the banded relation — a
-    single Exchange on the bucket keys that the self-join then reuses —
-    instead of the r6 groupBy-count + join-back + anchors-groupBy +
-    join chain (4 exchanges + 2 joins). The window buffers one bucket
-    per task (narrow (keys, id) rows, spills via
-    UnsafeExternalSorter). The r5 refutation of this same rewrite was
-    RE-MEASURED this round and survives only on the path it was
-    measured on: with banding over raw corpus rows
-    (distinct_content=False) the window's full sort of the 16x-corpus
-    banded relation loses big (13.5 s vs 8.5 s at 50k docs), because
-    AQE broadcasts the small count relation back for free — so the
-    legacy callers pass window_form=False and keep the groupBy+join
-    chain. On the r6+ distinct-content default the banded relation is
-    bounded by DISTINCT signatures and the window form measured equal
-    or better at sf0.1 AND sf1 (same-session A/B: 1.58–1.79 vs
-    1.79–1.84 s, 1.96–2.19 vs 2.22 s). last_bucket_stats() keeps its
-    own partial-agg'd count relation, unchanged either way."""
+    Plan shape (r7, guide §2.4): bucket size and min-id anchor come
+    from ONE window over the banded relation — a single Exchange on the
+    bucket keys that the self-join then reuses — instead of a
+    groupBy-count + join-back + anchors-groupBy + join chain (4
+    exchanges + 2 joins). The window buffers one bucket per task (narrow
+    (keys, id) rows, spills via UnsafeExternalSorter). The banded
+    relation is bounded by DISTINCT signatures (minhash_lsh_dedup bands
+    representatives only), where the window form measured equal or
+    better at sf0.1 AND sf1 (same-session A/B: 1.58–1.79 vs 1.79–1.84 s,
+    1.96–2.19 vs 2.22 s). last_bucket_stats() keeps its own
+    partial-agg'd count relation."""
     global _LAST_BUCKET_STATS
     if not cap:
         a, b = banded.alias("a"), banded.alias("b")
@@ -396,30 +377,19 @@ def _bucket_pairs(
             " AS BIGINT) AS skipped_pairs"
         ),
     )
-    if window_form:
-        # one selectExpr with SQL text (r7): same plan as the
-        # Window/withColumns form, one JVM parse instead of ~10 py4j
-        # expression round-trips per call
-        part = ", ".join(keys)
-        counted = banded.selectExpr(
-            "*",
-            f"count(*) OVER (PARTITION BY {part}) AS _bc",
-            f"min(id) OVER (PARTITION BY {part}) AS _anchor",
-        )
-        normal = counted.where(f"_bc <= {cap}").drop("_bc", "_anchor")
-        star = counted.where(
-            f"_bc > {cap} AND id != _anchor"
-        ).selectExpr("_anchor AS id_a", "id AS id_b")
-    else:
-        counted = banded.join(counts, keys)
-        normal = counted.where(f"_bc <= {cap}").drop("_bc")
-        hot = counted.where(f"_bc > {cap}").drop("_bc")
-        anchors = hot.groupBy(*keys).agg(F.expr("min(id) AS _anchor"))
-        star = (
-            hot.join(anchors, keys)
-            .where("id != _anchor")
-            .selectExpr("_anchor AS id_a", "id AS id_b")
-        )
+    # one selectExpr with SQL text (r7): same plan as the
+    # Window/withColumns form, one JVM parse instead of ~10 py4j
+    # expression round-trips per call
+    part = ", ".join(keys)
+    counted = banded.selectExpr(
+        "*",
+        f"count(*) OVER (PARTITION BY {part}) AS _bc",
+        f"min(id) OVER (PARTITION BY {part}) AS _anchor",
+    )
+    normal = counted.where(f"_bc <= {cap}").drop("_bc", "_anchor")
+    star = counted.where(
+        f"_bc > {cap} AND id != _anchor"
+    ).selectExpr("_anchor AS id_a", "id AS id_b")
     a, b = normal.alias("a"), normal.alias("b")
     cond = F.expr(
         " AND ".join(f"a.{k} = b.{k}" for k in keys) + " AND a.id < b.id"
@@ -469,55 +439,6 @@ def minhash_signature_udf(num_hashes: int = 64, shingle: int = 5):
     return _f
 
 
-def minhash_signature_jvm(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle: int = 5,
-) -> DataFrame:
-    """All-JVM minhash signatures (VERDICT r4 #6 experiment): character
-    shingles via transform(sequence(...)) -> substring, hashed with
-    built-in xxhash64 where the per-function seed literal makes
-    num_hashes independent hash functions, min via array_min — the
-    whole signature stays inside whole-stage codegen with zero Arrow
-    transfer and zero shuffle.
-
-    NOTE: a DIFFERENT hash family than minhash_signature_udf (the
-    polynomial-shingle + (a*h+b) mod 2^61-1 Arrow path), so signature
-    VALUES differ; est_jaccard is statistically equivalent (classic
-    k-hash-function minhash under any fixed total order) and the
-    exact-duplicate contract — identical text => identical signature
-    => est 1.0, all bands collide — is identical. A/B numbers in
-    BENCH/BASELINE.md round 5."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    sh = F.transform(
-        F.sequence(
-            F.lit(1), F.greatest(F.char_length(txt) - (shingle - 1), F.lit(1))
-        ),
-        lambda i: F.substring(txt, i, shingle),
-    )
-
-    def hash_with_seed(seed: int):
-        # MUST be a single-parameter lambda: a two-parameter lambda
-        # (e.g. `lambda s, j=j: ...`) makes pyspark pass transform's
-        # optional INDEX as the second argument, silently shadowing the
-        # captured seed — every band then hashes (index, shingle) and
-        # all signature components collapse to one value (found r5 via
-        # the parsed plan: `xxhash64(lambda y_3, lambda x_2)`)
-        return lambda s: F.xxhash64(F.lit(seed), s)
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform(F.col("_sh"), hash_with_seed(j)))
-            for j in range(num_hashes)
-        ]
-    )
-    return df.withColumn("_sh", sh).select(
-        F.col(id_col).alias("id"), sig.alias("sig")
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -527,70 +448,45 @@ def minhash_lsh_dedup(
     shingle: int = 5,
     jaccard_threshold: float = 0.7,
     bucket_cap: int = 10_000,
-    impl: str = "arrow",
-    distinct_content: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, est_jaccard >= threshold).
 
-    distinct_content=True (default, r6): banding/pairing runs on ONE
-    representative per distinct SIGNATURE and member pairs are expanded
-    afterward (_expand_member_pairs) — exact duplicates never enter a
-    bucket, their recall is structurally 100% regardless of bucket_cap,
-    and LSH join work scales with distinct content, not raw rows (the
-    r6 sf10 run measured 77 GB of spill from 100-member duplicate
-    groups without this). Bit-identical output to the legacy path
-    (est_jaccard is a pure function of the signatures). False preserves
-    the legacy every-row-through-buckets path.
+    Banding/pairing runs on ONE representative per distinct SIGNATURE
+    and member pairs are expanded afterward (_expand_member_pairs) —
+    exact duplicates never enter a bucket, their recall is structurally
+    100% regardless of bucket_cap, and LSH join work scales with
+    distinct content, not raw rows (the r6 sf10 run measured 77 GB of
+    spill from 100-member duplicate groups without this).
 
-    Recall contract for NEAR (non-identical) dups: unchanged — a bucket
-    exceeding bucket_cap pairs only through its min-id anchor (see
-    _bucket_pairs); check last_bucket_stats() (now counted over
-    distinct-content rows) after an action and raise bucket_cap if its
-    counters are nonzero.
-
-    impl: "arrow" (pandas-UDF signatures, default) or "jvm"
-    (xxhash64/transform signatures, minhash_signature_jvm) — identical
-    pipeline shape and exact-dup contract, different hash family."""
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(
-            f"minhash_lsh_dedup: impl must be 'arrow' or 'jvm', got {impl!r}"
-        )
+    Recall contract for NEAR (non-identical) dups: a bucket exceeding
+    bucket_cap pairs only through its min-id anchor (see _bucket_pairs);
+    check last_bucket_stats() (counted over distinct-content rows) after
+    an action and raise bucket_cap if its counters are nonzero."""
     rows_per_band = num_hashes // bands
     df = _ensure_parallelism(df)
     # persist signatures: they feed both self-join branches and the
-    # verification re-attach — without this the signature stage runs 3x
-    if impl == "jvm":
-        sig = _persist_tracked(
-            minhash_signature_jvm(df, text_col, id_col, num_hashes, shingle)
+    # verification re-attach — without this the signature stage runs 3x.
+    # No eager count here (r7): _tag_representatives' own eager count
+    # runs a LINEAR plan (UDF -> sig cache -> groupBy -> agg cache) that
+    # populates both caches in one job with no parallel AQE stages to
+    # race the cache.
+    sig = _persist_tracked(
+        df.select(
+            F.col(id_col).alias("id"),
+            minhash_signature_udf(num_hashes, shingle)(
+                F.col(text_col)
+            ).alias("sig"),
         )
-    else:
-        sig = _persist_tracked(
-            df.select(
-                F.col(id_col).alias("id"),
-                minhash_signature_udf(num_hashes, shingle)(
-                    F.col(text_col)
-                ).alias("sig"),
-            )
-        )
-    members = None
-    if not distinct_content:
-        sig.count()  # materialize eagerly: parallel AQE query stages
-        # would otherwise race the cache and run the Arrow UDF 2-4x
-        # concurrently. On the distinct_content path this action is
-        # redundant (r7): _tag_representatives' own eager count runs a
-        # LINEAR plan (UDF -> sig cache -> groupBy -> agg cache) that
-        # populates both caches in one job with no parallel stages to
-        # race — one driver round-trip instead of two.
-    if distinct_content:
-        # collapse on the SIGNATURE (not the raw text): est_jaccard is a
-        # pure function of the two signatures, so banding one row per
-        # distinct signature and expanding afterward reproduces the
-        # legacy output bit-for-bit (identical-sig pairs score est 1.0
-        # on both paths). Signatures still compute for every row
-        # (linear, Arrow-fast); the collapse costs one partial-agg'd
-        # groupBy plus a membership join-back over the cached sig
-        # relation (_tag_representatives).
-        members, sig = _tag_representatives(sig, "sig")
+    )
+    # collapse on the SIGNATURE (not the raw text): est_jaccard is a
+    # pure function of the two signatures, so banding one row per
+    # distinct signature and expanding afterward gives every member the
+    # pairs and metrics it would get from its own row (identical-sig
+    # pairs score est 1.0). Signatures still compute for every row
+    # (linear, Arrow-fast); the collapse costs one partial-agg'd
+    # groupBy plus a membership join-back over the cached sig
+    # relation (_tag_representatives).
+    members, sig = _tag_representatives(sig, "sig")
     # narrow (id, band, bucket) rows through the self-join + dedup; the
     # wide signature arrays re-attach afterwards via shuffle join on id.
     # Built as ONE selectExpr SQL string (r7): the Column-object form
@@ -610,10 +506,7 @@ def minhash_lsh_dedup(
     banded = sig.selectExpr(
         "id", f"explode(array({band_items})) AS bb"
     ).selectExpr("id", "bb.band AS band", "bb.bucket AS bucket")
-    pairs = _bucket_pairs(
-        banded, ["band", "bucket"], bucket_cap,
-        window_form=distinct_content,
-    )
+    pairs = _bucket_pairs(banded, ["band", "bucket"], bucket_cap)
     # re-attach the wide signature arrays with plain shuffle joins on id:
     # never F.broadcast(sig) — the signature relation is proportional to
     # the FULL corpus and a forced broadcast OOMs at scale. AQE still
@@ -637,119 +530,9 @@ def minhash_lsh_dedup(
         .where(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    if distinct_content:
-        out = _expand_member_pairs(
-            members, out, "est_jaccard", 1.0, bucket_cap
-        )
-    return out
-
-
-@functools.lru_cache(maxsize=16)
-def simhash_udf(shingle: int = 3):
-    """64-bit simhash, batched across the Arrow batch: shingle hashes of
-    all docs concatenate into one array, per-doc bit votes fold with a
-    segmented np.add.reduceat, and the sign bits pack via a matmul
-    against 1<<arange(64) — no per-document Python loop (same batching
-    pattern as minhash_signature_udf / textstats._fp_batch). Chunks are
-    sized by a total-shingle budget so peak memory is bounded regardless
-    of document length mix."""
-    budget = 1 << 18  # shingles per processed chunk (~67 MB of int32 bits)
-
-    @F.pandas_udf(LongType())
-    def _f(text: pd.Series) -> pd.Series:
-        out = np.zeros(len(text), dtype=np.int64)
-        weights = np.uint64(1) << np.arange(64, dtype=np.uint64)
-        shifts = np.arange(64, dtype=np.uint64)
-        texts = text.tolist()
-        with np.errstate(over="ignore"):
-            i = 0
-            while i < len(texts):
-                docs, total, j = [], 0, i
-                while j < len(texts) and (not docs or total < budget):
-                    d = _shingle_hashes(texts[j] or "", shingle)
-                    docs.append(d)
-                    total += len(d)
-                    j += 1
-                lens = np.array([len(d) for d in docs])
-                offsets = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                sh = np.concatenate(docs)
-                sh = (sh * np.uint64(0x9E3779B97F4A7C15)) ^ (
-                    sh >> np.uint64(17)
-                )
-                bits = ((sh[:, None] >> shifts) & np.uint64(1)).astype(
-                    np.int32
-                )
-                votes = np.add.reduceat(2 * bits - 1, offsets, axis=0)
-                vals = (votes > 0).astype(np.uint64) @ weights
-                out[i:j] = (
-                    vals & np.uint64(0x7FFFFFFFFFFFFFFF)
-                ).astype(np.int64)
-                i = j
-        return pd.Series(out)
-
-    return _f
-
-
-def simhash_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 8,
-    bucket_cap: int = 10_000,
-    distinct_content: bool = True,
-) -> DataFrame:
-    """Near-dup pairs by simhash hamming distance, banded on 4x16-bit
-    chunks (a pair within hamming<=3 shares at least one exact chunk;
-    wider distances may need more bands — standard recall/cost tradeoff,
-    verified exactly afterwards). Over-cap buckets star-pair: recall
-    contract + last_bucket_stats() telemetry in _bucket_pairs.
-    distinct_content=True (default): buckets see one representative per
-    distinct 64-bit simhash VALUE (hamming is a pure function of the
-    two values, so the collapse+expansion reproduces the legacy output
-    exactly); member pairs expand afterward with hamming 0 within
-    groups — see minhash_lsh_dedup."""
-    df = _ensure_parallelism(df)
-    sim = _persist_tracked(
-        df.select(
-            F.col(id_col).alias("id"),
-            simhash_udf()(F.col(text_col)).alias("sh"),
-        )
+    return _expand_member_pairs(
+        members, out, "est_jaccard", 1.0, bucket_cap
     )
-    members = None
-    if not distinct_content:
-        sim.count()  # eager: see minhash_lsh_dedup (redundant on the
-        # distinct path — _tag_representatives materializes both caches)
-    if distinct_content:
-        members, sim = _tag_representatives(sim, "sh")
-    chunks = [
-        F.struct(
-            F.lit(i).alias("band"),
-            F.shiftright("sh", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
-        )
-        for i in range(4)
-    ]
-    banded = sim.select("id", F.explode(F.array(*chunks)).alias("bb")).select(
-        "id", "bb.band", "bb.bucket"
-    )
-    pairs = (
-        _bucket_pairs(
-            banded, ["band", "bucket"], bucket_cap,
-            window_form=distinct_content,
-        )
-        # shuffle-join re-attach (see minhash_lsh_dedup): no forced
-        # broadcast of the corpus-sized simhash relation
-        .join(sim.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sim.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    out = (
-        pairs.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    if distinct_content:
-        out = _expand_member_pairs(members, out, "hamming", 0, bucket_cap)
-    return out
 
 
 def ngram_jaccard_pairs(
@@ -791,316 +574,3 @@ def ngram_jaccard_pairs(
         )
     )
     return out.select("id_a", "id_b", "jaccard")
-
-
-def embedding_near_dup(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    bands: int = 16,
-    planes_per_band: int | None = None,
-    cos_threshold: float = 0.25,
-    bucket_cap: int = 10_000,
-    target_bucket_size: int = 64,
-    distinct_content: bool = True,
-) -> DataFrame:
-    """Cosine near-dup pairs via *banded* random-hyperplane LSH + exact
-    verify: a pair is a candidate if any band's sign pattern matches
-    exactly.
-
-    planes_per_band=None (default) sizes the band's bucket space to the
-    CORPUS: ceil(log2(n / target_bucket_size)) planes, clamped to
-    [4, 24], so expected bucket occupancy stays ~target_bucket_size and
-    per-band candidate work stays ~n * target_bucket_size/2 instead of
-    growing quadratically. (Found at the r5 sf1 proof run: the old
-    fixed 4 planes = 16 buckets/band put ~1250 of 20k vectors in every
-    bucket — ~200M candidate pairs, 153 s for a 20k-vector corpus, and
-    a true scale-killer shape at 10^7 rows. Auto-sized: ~6M candidates,
-    ~8x faster, identical exact-duplicate recall.)
-
-    Recall dials: EXACT duplicates (cos 1.0) collide in every band at
-    any plane count — their recall is structurally 100%. NEAR-dup
-    recall at cos 0.9 is 1-(1-0.857^p)^bands: ~99% at p=9/16 bands,
-    falling at extreme corpus sizes (p=18 -> ~64%) — raise `bands`
-    there; the dials are the standard LSH trade. Over-cap buckets
-    star-pair: recall contract + last_bucket_stats() telemetry in
-    _bucket_pairs.
-
-    distinct_content=True (default): LSH runs on one representative per
-    distinct vector (grouped on the exact array — at extreme scale
-    substitute a 128-bit content digest) and member pairs expand with
-    cos_sim 1.0 within groups; see minhash_lsh_dedup. The auto plane
-    sizing then counts DISTINCT vectors, the correct occupancy basis.
-    Equivalence to the legacy path is after the 6-decimal rounding both
-    paths apply, with ONE deliberate divergence (round-6 review):
-    bit-identical ALL-ZERO vectors. Legacy computes cos via try_divide
-    -> NULL -> drops the pair (before round 6 a plain `/` CRASHED the
-    whole query under Spark 4's default ANSI mode whenever a zero-norm
-    vector hit any candidate pair); the collapse emits it at cos_sim
-    1.0, because two byte-identical embeddings ARE exact duplicates
-    regardless of their norm — the dedup answer, not the cosine edge
-    case. Pinned by
-    tests/test_dedup.py::test_zero_vector_pairs_divergence."""
-    # cache the (id, vector) projection FIRST, then derive the corpus
-    # count for auto plane sizing from the cache — sizing must not cost
-    # a second full scan of a possibly-expensive input plan (r5 review)
-    df = _ensure_parallelism(df)
-    vecs0 = _persist_tracked(
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-    )
-    members = None
-    if not distinct_content:
-        vecs0.count()  # eager cache: see minhash_lsh_dedup (redundant
-        # on the distinct path — _tag_representatives materializes it)
-    if distinct_content:
-        # collapse on the raw vector array (exact equality; at extreme
-        # scale substitute a 128-bit content digest) — one window
-        # shuffle over the cached projection, see minhash_lsh_dedup
-        members, vecs0 = _tag_representatives(vecs0, "v")
-    n = vecs0.count()  # distinct-vector count: the occupancy basis
-    if planes_per_band is None:
-        planes_per_band = int(
-            min(24, max(4, np.ceil(np.log2(max(n, 1) / target_bucket_size))))
-        )
-    rng = np.random.default_rng(99)
-    planes = rng.standard_normal((bands * planes_per_band, dim))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _buckets(vec: pd.Series) -> pd.Series:
-        m = np.stack(vec.to_numpy())
-        signs = (m @ planes.T) > 0  # (n, bands*planes)
-        signs = signs.reshape(len(m), bands, planes_per_band)
-        vals = (signs * (1 << np.arange(planes_per_band))).sum(axis=2)
-        # disambiguate bands by offsetting the bucket id
-        vals = vals + (np.arange(bands) << planes_per_band)
-        return pd.Series([row.astype(np.int64).tolist() for row in vals])
-
-    # narrow bucket relation: the wide vectors stay cached once in
-    # vecs0; caching v a second time alongside buckets would double
-    # the storage footprint of the widest column
-    base = _persist_tracked(
-        vecs0.select("id", _buckets("v").alias("buckets"))
-    )
-    base.count()  # eager: the bucket UDF feeds the pair join below
-    banded = base.select("id", F.explode("buckets").alias("bucket"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    vecs = vecs0
-    pairs = (
-        _bucket_pairs(
-            banded, ["bucket"], bucket_cap, window_form=distinct_content
-        )
-        # shuffle-join re-attach (see minhash_lsh_dedup): no forced
-        # broadcast of the corpus-sized vector relation
-        .join(vecs.withColumnsRenamed({"id": "id_a", "v": "va"}), "id_a")
-        .join(vecs.withColumnsRenamed({"id": "id_b", "v": "vb"}), "id_b")
-        .withColumn(
-            "cos_sim",
-            # try_divide, not `/`: a zero-NORM vector (padding rows,
-            # failed encoders — routine in scraped corpora) in ANY
-            # candidate pair is a 0 divisor, which under Spark 4's
-            # default ANSI mode would crash the whole query with
-            # DIVIDE_BY_ZERO (found by the round-6 zero-vector test).
-            # NULL cosine fails the threshold filter and the pair is
-            # dropped — identical zero vectors still pair at 1.0
-            # through the distinct-content within-group path, which
-            # never divides.
-            F.round(
-                F.try_divide(dot, norm(F.col("va")) * norm(F.col("vb"))), 6
-            ),
-        )
-        .where(F.col("cos_sim") >= cos_threshold)
-    )
-    out = pairs.select("id_a", "id_b", "cos_sim")
-    if distinct_content:
-        out = _expand_member_pairs(members, out, "cos_sim", 1.0, bucket_cap)
-    return out
-
-
-def _release_ckpt(df: DataFrame | None) -> None:
-    """Free a no-longer-referenced localCheckpoint's storage blocks
-    (ADVICE r6: the CC round loop otherwise accumulates one
-    checkpointed relation per round until GC + ContextCleaner happen
-    to reclaim them). The checkpointed RDD is reachable through the
-    LogicalRDD plan node; unpersisting it destroys the DataFrame's
-    data (lineage was truncated), so callers only release relations
-    nothing will read again. Best-effort: internals drift across Spark
-    versions, and a failed release just reverts to GC-based cleanup."""
-    if df is None:
-        return
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-_LAST_CC_STATS: dict = {}
-
-
-def last_cc_stats() -> dict:
-    """Telemetry for the most recent connected_components call:
-    {"rounds": n, "converged": bool}. Same pattern as
-    last_bucket_stats — observable evidence that convergence happened
-    in the O(log diameter) budget the docstring promises."""
-    return dict(_LAST_CC_STATS)
-
-
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """(id, component) for every node, where component is the MINIMUM
-    id reachable through the edge relation — the decision layer the
-    pair-enumerating dedup operators feed: a near-dup KEEP list keeps
-    exactly the rows where id == component.
-
-    Min-label propagation with per-round POINTER JUMPING, so
-    convergence is O(log diameter) rounds, not O(diameter): each round
-    updates l(v) <- min(l(v), min over neighbors u of l(u), l(l(v))).
-    The label of v is always the id of some node in v's component
-    (initially v itself; the neighbor term imports a connected node's
-    label; the jump term follows a label to that node's own label), so
-    labels are monotone non-increasing within the component and the
-    fixed point is the component minimum: a full round with zero
-    changes means l(u) == l(v) across every edge and l(l(v)) == l(v),
-    i.e. labels are per-component constants, and the component's min
-    node still holds its own id. A 100-member duplicate CHAIN
-    (diameter 99) converges in ~8 rounds; the star/clique shapes
-    _bucket_pairs and _expand_member_pairs emit converge in 1-2.
-
-    Scale shape: every round is two long-keyed shuffle joins plus one
-    partial-aggregated change count over relations bounded by |nodes| +
-    |edges|; the per-round relation is localCheckpoint'ed (eager) so
-    round k never re-runs rounds 1..k-1 — the same lineage-cutting
-    contract as hierarchy_ops.compact_cells_df. No driver-side
-    collection at any point; raises RuntimeError if max_rounds passes
-    without convergence (pointer jumping makes the default 50 ~ a
-    diameter of 2^48 — hitting it means a bug, not a big graph).
-
-    `edges`: first two columns are the endpoints (any names — the
-    *_dedup pair relations' (id_a, id_b, metric) shape works as-is;
-    extra columns are ignored). `nodes`: optional single-column
-    relation of node ids (so singleton docs appear in the output with
-    component == their own id); endpoints are unioned in regardless,
-    so an edge can never reference an unknown node.
-    """
-    global _LAST_CC_STATS
-    ea, eb = edges.columns[0], edges.columns[1]
-    # materialize the edge projection ONCE: sym/ids feed an action every
-    # round, and without this cut the caller's full edge plan (often an
-    # entire LSH pair pipeline) would re-execute per round — the
-    # per-round cost contract above only holds against a materialized
-    # edge list (round-6 review finding)
-    pair = edges.select(
-        F.col(ea).alias("src"), F.col(eb).alias("dst")
-    ).localCheckpoint(eager=True)
-    sym = pair.unionByName(
-        pair.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    ids = pair.select(F.col("src").alias("id")).unionByName(
-        pair.select(F.col("dst").alias("id"))
-    )
-    if nodes is not None:
-        ids = ids.unionByName(
-            nodes.select(F.col(nodes.columns[0]).alias("id"))
-        )
-    labels = (
-        ids.distinct()
-        .select("id", F.col("id").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    rounds = 0
-    prev_ckpt = labels  # released once the next round's checkpoint exists
-    for rounds in range(1, max_rounds + 1):
-        nmin = (
-            sym.join(labels.withColumnsRenamed({"id": "dst", "lbl": "_dl"}), "dst")
-            .groupBy("src")
-            .agg(F.min("_dl").alias("_nm"))
-            .withColumnRenamed("src", "id")
-        )
-        stepped = labels.join(nmin, "id", "left").withColumn(
-            "_l1", F.least("lbl", F.coalesce("_nm", "lbl"))
-        )
-        jumped = (
-            stepped.join(
-                labels.withColumnsRenamed({"id": "_l1", "lbl": "_jl"}),
-                "_l1",
-                "left",
-            )
-            .select(
-                "id",
-                "lbl",
-                F.least("_l1", F.coalesce("_jl", "_l1")).alias("_l2"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # the eager checkpoint above fully materialized this round, so
-        # the previous round's checkpointed blocks are dead — release
-        # them now instead of waiting for GC (ADVICE r6: a long bench
-        # session accumulated one checkpointed relation per round)
-        _release_ckpt(prev_ckpt)
-        prev_ckpt = jumped
-        changed = jumped.where(F.col("lbl") != F.col("_l2")).limit(1).count()
-        labels = jumped.select("id", F.col("_l2").alias("lbl"))
-        if changed == 0:
-            converged = True
-            break
-    _LAST_CC_STATS = {"rounds": rounds, "converged": converged}
-    # the result reads only the FINAL round's checkpoint; the edge-list
-    # checkpoint is dead once the loop exits
-    _release_ckpt(pair)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
-        )
-    return labels.withColumnRenamed("lbl", "component")
-
-
-def near_dup_keep_list(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The dedup DECISION over any pair relation the *_dedup operators
-    emit: df plus (component, keep) where keep=1 marks the one row per
-    connected near-dup component that survives (the min id — matching
-    exact_dedup's keep_id = MIN convention). Rows in no pair keep
-    themselves.
-
-    keep is the component minimum WITHIN df, not the component label
-    itself (round-6 review): if df is a subset of the corpus the pairs
-    were computed over (rows filtered between dedup and decision), a
-    component whose min-id row is absent still keeps exactly one
-    surviving row instead of vanishing entirely. When df covers every
-    endpoint the two definitions coincide.
-
-    RESERVED OUTPUT COLUMNS (ADVICE r6): the result adds `component`
-    and `keep`; a df already carrying either name would collide, so
-    this fails fast instead of shadowing silently."""
-    if {"component", "keep"} & set(df.columns):
-        raise ValueError(
-            "near_dup_keep_list reserves output columns 'component' and "
-            f"'keep'; rename them in the input (columns: {df.columns})"
-        )
-    from pyspark.sql import Window
-
-    comp = connected_components(pairs, df.select(id_col))
-    joined = df.join(comp.withColumnRenamed("id", id_col), id_col)
-    w = Window.partitionBy("component")
-    return joined.withColumn(
-        "keep", (F.col(id_col) == F.min(id_col).over(w)).cast("long")
-    )

@@ -31,18 +31,20 @@ from pyspark.sql.types import BooleanType
 from ..functions.native import h3_to_parent_col
 from ..h3core import indexing as ix
 from ..h3core import regions
+from ..h3core.hierarchy import compact, uncompact
 
 
-def build_polygon_cells(polygons: dict, compacted: bool = True) -> pd.DataFrame:
-    """Driver-side polyfill -> (polygon_id, cell, is_boundary) build table.
+def build_polygon_cells(polygons: dict) -> pd.DataFrame:
+    """Driver-side polyfill -> (polygon_id, cell, is_boundary) build table,
+    interior cells compacted to a multi-res antichain.
 
     polygons: {polygon_id: (exterior, holes, res)}.
     """
     rows = []
     for pid, (ext, holes, res) in polygons.items():
         interior, boundary = regions.polygon_cover(ext, holes, res)
-        if compacted and len(interior):
-            interior = np.asarray(regions_compact(interior))
+        if len(interior):
+            interior = np.asarray(compact(interior))
         for c in interior:
             rows.append((pid, int(c), False))
         for c in boundary:
@@ -50,56 +52,11 @@ def build_polygon_cells(polygons: dict, compacted: bool = True) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["polygon_id", "cell", "is_boundary"])
 
 
-def regions_compact(cells):
-    from ..h3core.hierarchy import compact
-
-    return compact(cells)
-
-
-_BUILD_CACHE: dict = {}
-
-
-def _polygons_key(polygons: dict, compacted: bool):
-    return (
-        compacted,
-        tuple(
-            (
-                pid,
-                int(res),
-                np.asarray(ext, dtype=np.float64).tobytes(),
-                tuple(
-                    np.asarray(h, dtype=np.float64).tobytes()
-                    for h in (holes or [])
-                ),
-            )
-            for pid, (ext, holes, res) in sorted(polygons.items())
-        ),
-    )
-
-
-def _build_cells_cached(polygons: dict, compacted: bool) -> pd.DataFrame:
-    """build_polygon_cells + _maybe_expand_build, memoized on polygon
-    geometry content. Pure function of constants (no fact-table input
-    touches this); bounded so pathological callers can't grow it."""
-    key = _polygons_key(polygons, compacted)
-    hit = _BUILD_CACHE.get(key)
-    if hit is None:
-        hit = _maybe_expand_build(
-            build_polygon_cells(polygons, compacted=compacted), polygons
-        )
-        if len(_BUILD_CACHE) >= 16:
-            _BUILD_CACHE.pop(next(iter(_BUILD_CACHE)))
-        _BUILD_CACHE[key] = hit
-    return hit
-
-
 def pip_join(
     spark: SparkSession,
     images: DataFrame,
     polygons: dict,
     cell_col: str = "cell",
-    compacted: bool = True,
-    refine: bool = True,
 ) -> DataFrame:
     """Join images (with a `cell_col` at each polygon's res and lat/lng
     columns) against polygons; returns matched rows + polygon_id.
@@ -114,11 +71,7 @@ def pip_join(
     # native-res key is strictly cheaper (measured ~25% on the 64M-row
     # flagship). Compaction remains the scale path for continental
     # polygons at fine res, where expansion would be millions of cells.
-    # memoized on the polygon GEOMETRY (pure driver-side derivation of
-    # a constant dimension table — nothing from the fact inputs):
-    # re-deriving the polyfill+compact+expand per call measured ~0.15 s,
-    # ~20% of the whole flagship query at bench scale (r7)
-    build_pdf = _build_cells_cached(polygons, compacted)
+    build_pdf = _maybe_expand_build(build_polygon_cells(polygons), polygons)
     build_res = sorted(
         int(r) for r in np.unique(ix.get_resolution(build_pdf["cell"].to_numpy()))
     )
@@ -151,9 +104,7 @@ def pip_join(
 
     joined = probe.join(build, probe["probe_key"] == build["poly_cell"], "inner")
 
-    if refine:
-        joined = _refine_boundary(joined, polygons)
-    return joined.drop("probe_key", "poly_cell", "is_boundary")
+    return _refine_boundary(joined, polygons).drop("probe_key", "poly_cell", "is_boundary")
 
 
 _EXPAND_BUILD_MAX = 200_000  # uncompacted build cells worth broadcasting
@@ -171,8 +122,6 @@ def _maybe_expand_build(build_pdf: pd.DataFrame, polygons: dict) -> pd.DataFrame
     already_flat = bool(np.all(res_of[interior] == target[interior]))
     if already_flat or est > _EXPAND_BUILD_MAX:
         return build_pdf
-    from ..h3core.hierarchy import uncompact
-
     frames = [build_pdf[~interior]]
     for pid, grp in build_pdf[interior].groupby("polygon_id"):
         exp = uncompact(grp["cell"].to_numpy(dtype=np.int64), res_by_pid[pid])
@@ -186,35 +135,6 @@ def _maybe_expand_build(build_pdf: pd.DataFrame, polygons: dict) -> pd.DataFrame
             )
         )
     return pd.concat(frames, ignore_index=True)
-
-
-_REFINE_UDF_CACHE: dict = {}
-
-
-def _refine_udf_cached(polygons: dict):
-    """The boundary-refine pandas UDF, memoized on polygon geometry
-    content (r7): each call otherwise re-cloudpickles the closure and
-    re-registers it via py4j. Session-independent (the UDF object
-    carries only the geometry arrays), same pattern as the
-    functions/udfs.py factory lru_caches; bounded."""
-    key = tuple(
-        (
-            pid,
-            np.asarray(ext, dtype=np.float64).tobytes(),
-            tuple(
-                np.asarray(h, dtype=np.float64).tobytes()
-                for h in (holes or [])
-            ),
-        )
-        for pid, (ext, holes, _res) in sorted(polygons.items())
-    )
-    hit = _REFINE_UDF_CACHE.get(key)
-    if hit is None:
-        hit = _build_refine_udf(polygons)
-        if len(_REFINE_UDF_CACHE) >= 16:
-            _REFINE_UDF_CACHE.pop(next(iter(_REFINE_UDF_CACHE)))
-        _REFINE_UDF_CACHE[key] = hit
-    return hit
 
 
 def _build_refine_udf(polygons: dict):
@@ -254,7 +174,7 @@ def _refine_boundary(joined: DataFrame, polygons: dict) -> DataFrame:
     to True inside the batch), so the plan keeps one probe scan and the
     Python cost is proportional to boundary matches, not all matches.
     """
-    pip_udf = _refine_udf_cached(polygons)
+    pip_udf = _build_refine_udf(polygons)
     return joined.where(pip_udf("polygon_id", "lat", "lng", "is_boundary"))
 
 

@@ -40,36 +40,6 @@ from .hierarchy_ops import uncompact_cells_df
 _COARSE_CAP = 60_000
 
 
-_COVER_CACHE: dict = {}
-
-
-def _cover_cached(ext_bytes, holes_bytes, coarse_res, exterior, holes):
-    """Driver-side coarse cover (polygon_cover + safety dilation),
-    memoized on polygon geometry content + coarse res — a pure
-    derivation of constants, same pattern as pip_join's
-    _build_cells_cached (r7): nothing from the fact inputs enters the
-    memo, and re-deriving the cover cost ~0.2 s per call. Bounded."""
-    key = (coarse_res, ext_bytes, holes_bytes)
-    hit = _COVER_CACHE.get(key)
-    if hit is None:
-        interior, boundary = regions.polygon_cover(
-            exterior, holes, coarse_res
-        )
-        hit = np.union1d(interior, boundary)
-        if boundary.size:
-            # one extra safety ring beyond polygon_cover's own
-            # dilation: a sliver can clip the corner of a cell already
-            # in the dilation ring, and fine-res descendants' centroids
-            # can drift across a coarse edge — over-inclusion only
-            # costs filtered candidates
-            _, dil = _neighbors(boundary)
-            hit = np.union1d(hit, dil)
-        if len(_COVER_CACHE) >= 16:
-            _COVER_CACHE.pop(next(iter(_COVER_CACHE)))
-        _COVER_CACHE[key] = hit
-    return hit
-
-
 def pick_coarse_res(exterior, res: int, cap: int = _COARSE_CAP) -> int:
     """Finest res whose bbox scan fits the driver cap (shares the exact
     scan-estimate formula with regions._bbox_scan_cells)."""
@@ -110,16 +80,15 @@ def polyfill_distributed(
     if coarse_res > res:
         raise ValueError(f"coarse_res {coarse_res} finer than target {res}")
 
-    cover = _cover_cached(
-        np.asarray(exterior, dtype=np.float64).tobytes(),
-        tuple(
-            np.asarray(h, dtype=np.float64).tobytes()
-            for h in (holes or [])
-        ),
-        int(coarse_res),
-        exterior,
-        holes,
-    )
+    # driver-side coarse cover: polygon_cover interior + boundary, plus
+    # one extra safety ring beyond polygon_cover's own dilation: a
+    # sliver can clip the corner of a cell already in the dilation ring,
+    # and fine-res descendants' centroids can drift across a coarse edge
+    # — over-inclusion only costs filtered candidates
+    interior, boundary = regions.polygon_cover(exterior, holes, coarse_res)
+    cover = np.union1d(interior, boundary)
+    if boundary.size:
+        cover = np.union1d(cover, _neighbors(boundary)[1])
 
     # ship the cover PRE-SPLIT via parallelize slices instead of
     # createDataFrame + repartition (r7, guide §2.1): the repartition

@@ -10,62 +10,78 @@ the table layout (partition spec, schema) is identical.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import zipfile
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 _REPO = Path(__file__).resolve().parents[1]
+PACKAGE_ZIP = _REPO / "dist" / "h3_rs_spark.zip"
 
 
-def ship_package(spark: SparkSession) -> None:
-    """Ship the package zip to executor python workers (their sys.path
-    does not include the driver's repo checkout when launched from
-    another cwd). Rebuilds the zip when the source CONTENT hash differs
-    from the one stored in the zip comment — mtime comparison would
-    silently ship stale worker code after a fresh clone or cherry-pick
-    that preserves timestamps."""
-    import hashlib
-    import zipfile
-
-    zip_path = _REPO / "dist" / "h3_rs_spark.zip"
+def write_package_zip(zip_path: Path) -> bool:
+    """Write the package zip with the source CONTENT hash as its zip
+    comment, unless the zip already carries that hash — mtime comparison
+    would silently ship stale worker code after a fresh clone or
+    cherry-pick that preserves timestamps. Returns True when written."""
     sources = sorted((_REPO / "h3_rs_spark").rglob("*.py"))
     digest = hashlib.sha256()
     for py in sources:
         digest.update(str(py.relative_to(_REPO)).encode())
         digest.update(py.read_bytes())
     want = digest.hexdigest().encode()
-    stale = True
     if zip_path.exists():
         try:
             with zipfile.ZipFile(zip_path) as zf:
-                stale = zf.comment != want
-        except Exception:
-            stale = True
-    if stale:
-        zip_path.parent.mkdir(exist_ok=True)
-        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-            zf.comment = want
-            for py in sources:
-                zf.write(py, py.relative_to(_REPO))
+                if zf.comment == want:
+                    return False
+        except (OSError, zipfile.BadZipFile):
+            pass
+    zip_path.parent.mkdir(exist_ok=True)
+    with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+        zf.comment = want
+        for py in sources:
+            zf.write(py, py.relative_to(_REPO))
+    return True
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Ship the package zip to executor python workers (their sys.path
+    does not include the driver's repo checkout when launched from
+    another cwd), rebuilding it first when the sources changed."""
+    write_package_zip(PACKAGE_ZIP)
     marker = "_h3_rs_spark_pyfile_added"
     if not getattr(spark.sparkContext, marker, False):
-        spark.sparkContext.addPyFile(str(zip_path))
+        spark.sparkContext.addPyFile(str(PACKAGE_ZIP))
         setattr(spark.sparkContext, marker, True)
+
+
+# below this much free tmpfs the shuffle dir goes to disk: a spill into
+# /dev/shm is RAM, and a full tmpfs fails the job mid-shuffle. A
+# container's default 64 MB /dev/shm falls back; a host's RAM-sized one
+# does not
+_SHM = Path("/dev/shm")
+_SHM_MIN_FREE = 2 << 30
 
 
 def _default_local_dir() -> str:
     """Fastest available scratch for shuffle files. Honors Spark's own
     SPARK_LOCAL_DIRS env (which overrides spark.local.dir anyway); else
-    tmpfs when mounted (this sandbox: ext4 /tmp costs ~2 ms of shuffle
-    write time per tiny shuffle file, tmpfs halves exchange latency);
-    else the java.io.tmpdir default."""
+    tmpfs when mounted with at least _SHM_MIN_FREE bytes free (ext4 /tmp
+    measured ~2 ms of shuffle write time per tiny shuffle file, tmpfs
+    halves exchange latency); else TMPDIR, else /tmp."""
     env = os.environ.get("SPARK_LOCAL_DIRS")
     if env:
         return env
-    shm = Path("/dev/shm")
-    if shm.is_dir() and os.access(shm, os.W_OK):
-        d = shm / "spark-local"
+    if (
+        _SHM.is_dir()
+        and os.access(_SHM, os.W_OK)
+        and shutil.disk_usage(_SHM).free >= _SHM_MIN_FREE
+    ):
+        d = _SHM / "spark-local"
         try:
             d.mkdir(exist_ok=True)
             return str(d)

@@ -1,6 +1,6 @@
 """Dedup pipeline contracts: star-pairing semantics at the bucket cap
 (which pairs survive a hot bucket, which are dropped), the
-last_bucket_stats() telemetry, and simhash signature stability.
+last_bucket_stats() telemetry, and shingle-hash edge cases.
 
 The cap boundary is the one place the LSH pipelines trade recall for
 bounded work (VERDICT r2 #5 / ADVICE r2): these tests pin the trade
@@ -10,7 +10,6 @@ instead of leaving it asserted in a comment.
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from h3_rs_spark.operators import dedup
 
@@ -55,36 +54,8 @@ class TestBucketCapSemantics:
             "skipped_pairs": 0,
         }
 
-    def test_exact_dups_survive_cap_connected(self, spark):
-        """End-to-end on the LEGACY every-row-through-buckets path
-        (distinct_content=False): 4 identical docs with bucket_cap=2
-        (every band's bucket is hot). All-pairs would be 6 pairs; the
-        contract only guarantees CONNECTIVITY through the min-id anchor
-        — and exact dups must never vanish entirely."""
-        docs = [(i, "the exact same document text repeated verbatim")
-                for i in (10, 11, 12, 13)]
-        docs += [(20 + i, f"unique filler document number {i} "
-                          f"with distinct content {i * 17}")
-                 for i in range(6)]
-        df = spark.createDataFrame(
-            pd.DataFrame(docs, columns=["doc_id", "text"])
-        )
-        pairs = dedup.minhash_lsh_dedup(
-            df, jaccard_threshold=0.9, bucket_cap=2, distinct_content=False
-        )
-        got = _pairs_set(pairs)
-        star = {(10, 11), (10, 12), (10, 13)}
-        assert star <= got
-        # connectivity: every dup id reachable from the anchor
-        ids = {10} | {b for a, b in got if a == 10}
-        assert ids == {10, 11, 12, 13}
-        stats = dedup.last_bucket_stats()
-        assert stats["hot_buckets"] > 0
-        assert stats["skipped_pairs"] > 0
-
     def test_distinct_content_exact_recall_under_cap(self, spark):
-        """r6 default path: the same 4-identical-doc corpus under the
-        same hostile bucket_cap=2. DETECTION recall is structurally
+        """4 identical docs under a hostile bucket_cap=2. DETECTION recall is structurally
         immune to the cap — duplicates never enter a bucket (one
         representative per distinct text does), so every dup member
         surfaces in a pair with its min-id representative at
@@ -127,51 +98,6 @@ class TestBucketCapSemantics:
             .loc[list(allp), "est_jaccard"] == 1.0
         ).all()
         dedup.release_cached()
-
-    def test_distinct_content_matches_legacy_on_natural_corpus(self, spark):
-        """On a corpus with duplicates AND near-dups, the default
-        representative path must return the SAME pair set and metrics
-        as the legacy path (signatures are content functions — the
-        collapse is semantics-preserving)."""
-        base = [
-            (i, f"document body shared prefix tokens {i % 3} and some "
-                f"more filler text common to the family variant {i % 3}")
-            for i in range(12)
-        ]
-        df = spark.createDataFrame(
-            pd.DataFrame(base, columns=["doc_id", "text"])
-        )
-        kw = dict(jaccard_threshold=0.3, num_hashes=32, bands=8)
-        legacy = dedup.minhash_lsh_dedup(
-            df, distinct_content=False, **kw
-        ).toPandas()
-        new = dedup.minhash_lsh_dedup(df, **kw).toPandas()
-        dedup.release_cached()
-        key = ["id_a", "id_b"]
-        lg = legacy.sort_values(key, ignore_index=True)
-        nw = new.sort_values(key, ignore_index=True)
-        pd.testing.assert_frame_equal(lg, nw, check_dtype=False)
-
-    def test_distinct_content_embedding_matches_legacy(self, spark):
-        """Same equivalence for the hyperplane-LSH embedding operator,
-        grouping on the raw vector array."""
-        rng = np.random.default_rng(5)
-        base = rng.standard_normal((8, 64))
-        vecs = np.vstack([base, base[:4]])  # 4 exact duplicate vectors
-        rows = [(i, vecs[i].tolist()) for i in range(len(vecs))]
-        df = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["vec_id", "embedding"])
-        )
-        kw = dict(cos_threshold=0.9)
-        legacy = dedup.embedding_near_dup(
-            df, distinct_content=False, **kw
-        ).toPandas()
-        new = dedup.embedding_near_dup(df, **kw).toPandas()
-        dedup.release_cached()
-        key = ["id_a", "id_b"]
-        lg = legacy.sort_values(key, ignore_index=True)
-        nw = new.sort_values(key, ignore_index=True)
-        pd.testing.assert_frame_equal(lg, nw, check_dtype=False)
 
     def test_recall_at_cap_measured(self, spark):
         """The star-pairing recall trade, MEASURED (VERDICT r3 #6): an
@@ -220,77 +146,15 @@ class TestBucketCapSemantics:
         assert recall3 == 1.0
 
 
-class TestMinhashJvmImpl:
-    def test_bands_vary_and_identical_docs_collide(self, spark):
-        """Two contracts of the all-JVM signature (r5): (a) distinct
-        seeds produce distinct per-band hash functions — guards the
-        transform-INDEX-shadowing regression where a two-parameter
-        lambda let Spark bind the seed to the array index and every
-        component collapsed to one value; (b) identical text gives an
-        identical signature (est 1.0), the exact-dup contract."""
-        pdf = pd.DataFrame(
-            {
-                "doc_id": [1, 2],
-                "text": ["the quick brown fox jumps over the lazy dog"] * 2,
-            }
-        )
-        sig = dedup.minhash_signature_jvm(
-            spark.createDataFrame(pdf), num_hashes=16
-        )
-        rows = {r["id"]: r["sig"] for r in sig.collect()}
-        assert rows[1] == rows[2]  # identical docs collide per-component
-        assert len(set(rows[1])) > 8  # bands genuinely vary
-
-    def test_jvm_impl_recovers_exact_dups(self, spark):
-        corpus = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_id": [1, 2, 3, 4],
-                    "text": [
-                        "alpha beta gamma delta epsilon zeta",
-                        "alpha beta gamma delta epsilon zeta",
-                        "completely different content here now",
-                        "unrelated text about something else",
-                    ],
-                }
-            )
-        )
-        pairs = dedup.minhash_lsh_dedup(
-            corpus, jaccard_threshold=0.5, impl="jvm"
-        )
-        got = {(r["id_a"], r["id_b"], r["est_jaccard"]) for r in pairs.collect()}
-        assert (1, 2, 1.0) in got
-
-
-class TestSimhashVectorized:
-    def test_matches_scalar_reference(self, spark):
-        """The batched reduceat/matmul simhash must be bit-identical to
-        the per-document scalar formulation (the r2 implementation)."""
-
-        def scalar_simhash(t, shingle=3):
-            sh = dedup._shingle_hashes(t or "", shingle)
-            sh = (sh * np.uint64(0x9E3779B97F4A7C15)) ^ (
-                sh >> np.uint64(17)
-            )
-            bits = (
-                sh[:, None] >> np.arange(64, dtype=np.uint64)
-            ) & np.uint64(1)
-            votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-            val = np.uint64(0)
-            for bpos in np.flatnonzero(votes > 0):
-                val |= np.uint64(1) << np.uint64(bpos)
-            return np.int64(val & np.uint64(0x7FFFFFFFFFFFFFFF))
-
-        rng = np.random.default_rng(42)
-        texts = ["", "a", "ab", "xyz", "word " * 50] + [
-            "".join(
-                chr(97 + c) for c in rng.integers(0, 26, rng.integers(0, 120))
-            )
-            for _ in range(40)
-        ]
-        batched = dedup.simhash_udf(3).func(pd.Series(texts)).to_numpy()
-        expected = np.array([scalar_simhash(t) for t in texts])
-        assert np.array_equal(batched, expected)
+class TestShingleEdgeCases:
+    def test_zero_byte_encoding_survives(self):
+        """A non-empty str that UTF-8-encodes to zero bytes (lone
+        surrogate under errors='ignore', seen in scraped corpora) must
+        hash to 0 like the empty string, not crash the Horner fold
+        (ADVICE r3)."""
+        assert dedup._shingle_hashes("\ud800", 3).tolist() == [0]
+        assert dedup._shingle_hashes("\udfff\ud800", 5).tolist() == [0]
+        assert dedup._shingle_hashes("", 3).tolist() == [0]
 
     def test_short_text_fallback_vectorized_identity(self):
         """Horner-fold vectorization of sub-shingle docs must equal the
@@ -302,151 +166,3 @@ class TestSimhashVectorized:
                 for byte in t.encode("utf-8"):
                     h = h * np.uint64(1_000_003) + np.uint64(byte)
             assert got.tolist() == [int(h)], t
-
-
-class TestShingleEdgeCases:
-    def test_zero_byte_encoding_survives(self):
-        """A non-empty str that UTF-8-encodes to zero bytes (lone
-        surrogate under errors='ignore', seen in scraped corpora) must
-        hash to 0 like the empty string, not crash the Horner fold
-        (ADVICE r3)."""
-        assert dedup._shingle_hashes("\ud800", 3).tolist() == [0]
-        assert dedup._shingle_hashes("\udfff\ud800", 5).tolist() == [0]
-        assert dedup._shingle_hashes("", 3).tolist() == [0]
-
-
-class TestConnectedComponents:
-    """connected_components: the dedup decision layer (round 6). The
-    algorithmic contract is min-label propagation WITH pointer jumping
-    — convergence must be logarithmic in the graph diameter, asserted
-    via last_cc_stats, not just eventual."""
-
-    def test_chain_log_rounds(self, spark):
-        """A 64-node path (diameter 63) must resolve to one component
-        in <= log2(63)+2 = 8 rounds — losing the pointer-jump term
-        would take ~63 and fail this bound."""
-        e = spark.createDataFrame(
-            [(i, i + 1) for i in range(63)], "id_a long, id_b long"
-        )
-        out = dedup.connected_components(e).collect()
-        assert {r["component"] for r in out} == {0}
-        assert len(out) == 64
-        st = dedup.last_cc_stats()
-        assert st["converged"] and st["rounds"] <= 8, st
-
-    def test_random_graph_vs_union_find(self, spark):
-        """300 nodes, 260 random edges (many small components), checked
-        against a driver-side union-find ground truth."""
-        rng = np.random.default_rng(42)
-        edges = [
-            (int(a), int(b))
-            for a, b in rng.integers(0, 300, size=(260, 2))
-            if a != b
-        ]
-        parent = list(range(300))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        truth = {}
-        for v in range(300):
-            truth.setdefault(find(v), []).append(v)
-        expect = {v: min(m) for m in truth.values() for v in m}
-
-        e = spark.createDataFrame(edges, "id_a long, id_b long")
-        n = spark.createDataFrame([(i,) for i in range(300)], "id long")
-        got = {
-            r["id"]: r["component"]
-            for r in dedup.connected_components(e, n).collect()
-        }
-        assert got == expect
-
-    def test_singletons_and_empty_edges(self, spark):
-        e = spark.createDataFrame([], "id_a long, id_b long")
-        n = spark.createDataFrame([(7,), (9,)], "id long")
-        got = {
-            r["id"]: r["component"]
-            for r in dedup.connected_components(e, n).collect()
-        }
-        assert got == {7: 7, 9: 9}
-
-    def test_nonconvergence_raises(self, spark):
-        e = spark.createDataFrame(
-            [(i, i + 1) for i in range(20)], "id_a long, id_b long"
-        )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            dedup.connected_components(e, max_rounds=1)
-        assert dedup.last_cc_stats()["converged"] is False
-
-    def test_extra_edge_columns_and_unlisted_endpoints(self, spark):
-        """Pair-relation shape (id_a, id_b, metric) works as-is, and
-        endpoints missing from `nodes` are unioned in."""
-        e = spark.createDataFrame(
-            [(1, 2, 0.9), (2, 3, 0.8)], "id_a long, id_b long, sim double"
-        )
-        n = spark.createDataFrame([(1,), (4,)], "id long")
-        got = {
-            r["id"]: r["component"]
-            for r in dedup.connected_components(e, n).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 4: 4}
-
-    def test_keep_list_over_minhash_pairs(self, spark):
-        """End-to-end: minhash pair relation -> keep list keeps exactly
-        one min-id row per duplicate group and every unique row."""
-        rows = [(i, f"unique text number {i} " * 5) for i in range(10)]
-        rows += [(100 + i, "duplicated boilerplate " * 8) for i in range(4)]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        pairs = dedup.minhash_lsh_dedup(df, jaccard_threshold=0.9)
-        out = dedup.near_dup_keep_list(df, pairs)
-        kept = sorted(r["doc_id"] for r in out.where("keep = 1").collect())
-        assert kept == list(range(10)) + [100]
-        assert out.count() == 14
-        dedup.release_cached()
-
-    def test_keep_list_subset_df_still_keeps_one_per_component(self, spark):
-        """Round-6 review: when df is a SUBSET of the corpus the pairs
-        came from (the component's min id filtered out between dedup
-        and decision), the surviving min-within-df row keeps itself
-        instead of the whole group vanishing."""
-        docs = spark.createDataFrame(
-            [(2, "b"), (3, "c"), (9, "z")], "doc_id long, text string"
-        )
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3)], "id_a long, id_b long"
-        )  # component min (1) is NOT in docs
-        out = dedup.near_dup_keep_list(docs, pairs).orderBy("doc_id").collect()
-        assert [(r["doc_id"], r["keep"]) for r in out] == [
-            (2, 1), (3, 0), (9, 1),
-        ]
-
-
-class TestEmbeddingZeroVectors:
-    def test_zero_vector_pairs_divergence(self, spark):
-        """Documented divergence (round-6 review): bit-identical
-        all-zero embeddings pair at cos_sim 1.0 under the default
-        distinct-content collapse (they ARE exact duplicates), while
-        the legacy path's 0/0 cosine is NaN/NULL and drops the pair."""
-        rows = [(1, [0.0] * 8), (2, [0.0] * 8), (3, [1.0] + [0.0] * 7)]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-        out = {
-            (r["id_a"], r["id_b"], r["cos_sim"])
-            for r in dedup.embedding_near_dup(df, dim=8).collect()
-        }
-        dedup.release_cached()
-        assert (1, 2, 1.0) in out
-        legacy = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.embedding_near_dup(
-                df, dim=8, distinct_content=False
-            ).collect()
-        }
-        dedup.release_cached()
-        assert (1, 2) not in legacy

@@ -414,3 +414,54 @@ def test_every_engine_module_imports():
     assert "h3_rs_spark.operators.pip_join" in names
     for name in names:
         importlib.import_module(name)
+
+
+def test_local_dir_falls_back_when_tmpfs_is_small(monkeypatch, tmp_path):
+    """The shuffle dir takes tmpfs only with enough free space there;
+    below the bound it goes to TMPDIR on disk."""
+    import collections
+    import shutil
+
+    from h3_rs_spark import session
+
+    shm = tmp_path / "shm"
+    shm.mkdir()
+    monkeypatch.setattr(session, "_SHM", shm)
+    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
+    monkeypatch.setenv("TMPDIR", str(tmp_path / "disk"))
+    usage = collections.namedtuple("usage", "total used free")
+    seen = []
+
+    def disk_usage_with(free):
+        def fake(path):
+            seen.append(str(path))
+            return usage(free, 0, free)
+        return fake
+
+    monkeypatch.setattr(
+        shutil, "disk_usage", disk_usage_with(session._SHM_MIN_FREE - 1)
+    )
+    assert session._default_local_dir() == str(tmp_path / "disk")
+    monkeypatch.setattr(
+        shutil, "disk_usage", disk_usage_with(session._SHM_MIN_FREE)
+    )
+    assert session._default_local_dir() == str(shm / "spark-local")
+    assert seen == [str(shm)] * 2
+
+
+def test_package_zip_written_once_per_source_state(tmp_path):
+    """The one zip writer stamps the source hash into the zip comment and
+    leaves a current zip alone; a zip without the stamp (as a plain
+    zipfile writer leaves it) is rewritten."""
+    import zipfile
+
+    from h3_rs_spark.session import write_package_zip
+
+    path = tmp_path / "pkg.zip"
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("h3_rs_spark/__init__.py", "")
+    assert write_package_zip(path) is True
+    assert write_package_zip(path) is False
+    with zipfile.ZipFile(path) as zf:
+        assert len(zf.comment) == 64
+        assert "h3_rs_spark/session.py" in zf.namelist()

@@ -1,20 +1,23 @@
-"""Build dist/h3_rs_spark.zip for spark-submit --py-files."""
+"""Build dist/h3_rs_spark.zip for spark-submit --py-files.
+
+Writes the same zip, content-hash comment included, that
+session.get_spark ships, so the next session start finds it current.
+"""
 
 from __future__ import annotations
 
-import zipfile
+import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+
+from h3_rs_spark.session import PACKAGE_ZIP, write_package_zip  # noqa: E402
 
 
 def main():
-    out = ROOT / "dist" / "h3_rs_spark.zip"
-    out.parent.mkdir(exist_ok=True)
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
-        for py in sorted((ROOT / "h3_rs_spark").rglob("*.py")):
-            zf.write(py, py.relative_to(ROOT))
-    print(f"wrote {out}")
+    state = "wrote" if write_package_zip(PACKAGE_ZIP) else "up to date:"
+    print(f"{state} {PACKAGE_ZIP}")
 
 
 if __name__ == "__main__":
