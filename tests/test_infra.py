@@ -1,5 +1,5 @@
 """Stage runner (resumability + lineage/metrics), native column
-functions, hex codec, plan-shape and bucketing tests."""
+functions, hex codec and plan-shape tests."""
 
 import numpy as np
 import pandas as pd
@@ -266,56 +266,6 @@ class TestAdversePlans:
             assert j.count() > 0
         finally:
             self._restore(spark, saved)
-
-    def test_lsh_joins_stay_shuffle_without_aqe(self, spark):
-        from h3_rs_spark.operators import dedup
-
-        saved = self._with_adverse(spark)
-        try:
-            docs = spark.read.parquet(
-                "/root/testdata/sf0.001/documents.parquet"
-            ).limit(300)
-            pairs = dedup.minhash_lsh_dedup(
-                docs, jaccard_threshold=0.0, num_hashes=16, bands=4
-            )
-            plan = pairs._jdf.queryExecution().executedPlan().toString()
-            # no broadcast anywhere in the pair pipeline: the signature
-            # relation scales with the corpus, so under adverse config
-            # every join must be a shuffle join (SortMerge or
-            # ShuffledHash) — a BroadcastHashJoin here would mean a
-            # hidden forced broadcast of an unbounded relation
-            assert "BroadcastHashJoin" not in plan, plan
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-            pairs.count()
-        finally:
-            self._restore(spark, saved)
-            dedup.release_cached()
-
-
-class TestBucketing:
-    def test_colocated_join_no_shuffle(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from h3_rs_spark.sources import bucketing, datagen, io
-
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        try:
-            images = io.with_geo(
-                datagen.generate_images(spark, 2000, w=8, h=8), res=7
-            ).select("image_id", "cell")
-            stats = images.groupBy("cell").agg(F.count("*").alias("n"))
-            bucketing.write_bucketed(images, "bt_images", buckets=8)
-            bucketing.write_bucketed(stats, "bt_stats", buckets=8)
-            j = bucketing.colocated_join(spark, "bt_images", "bt_stats")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert j.count() == 2000
-        finally:
-            spark.sql("DROP TABLE IF EXISTS bt_images")
-            spark.sql("DROP TABLE IF EXISTS bt_stats")
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
 def test_resume_reruns_after_output_deleted(spark, tmp_path):

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from h3_rs_spark.h3core import faceijk, regions
-from h3_rs_spark.operators import dedup, skew
+from h3_rs_spark.operators import skew
 from h3_rs_spark.operators.knn import knn_join, knn_oracle
 from h3_rs_spark.operators.pip_join import pip_join
 from h3_rs_spark.operators.tiling import decode_image, psnr_db, tile_assign
@@ -103,76 +103,37 @@ class TestPipJoin:
 
 
 class TestKnn:
-    def test_exact_vs_oracle(self, spark, images, oracle_geo):
-        queries = datagen.generate_knn_queries(spark, n=24, k=5)
+    @pytest.mark.parametrize("n,k", [(24, 5), (8, 3)])
+    def test_exact_vs_oracle(self, spark, images, oracle_geo, n, k):
+        queries = datagen.generate_knn_queries(spark, n=n, k=k)
         q_pdf = queries.toPandas()
-        got = knn_join(spark, images, queries, k=5, res=9).toPandas()
-        exp = knn_oracle(oracle_geo, q_pdf, k=5)
+        got = knn_join(spark, images, queries, k=k, res=9).toPandas()
+        exp = knn_oracle(oracle_geo, q_pdf, k=k)
         g = got.sort_values(["query_id", "rank"], ignore_index=True)
         x = exp.sort_values(["query_id", "rank"], ignore_index=True)
         assert g["image_id"].tolist() == x["image_id"].tolist()
         assert np.allclose(g["dist_m"], x["dist_m"], rtol=1e-9, atol=1e-6)
 
-    def test_distributed_queries_variant_matches(self, spark, images,
-                                                 oracle_geo):
-        """knn_join_distributed (query set stays a DataFrame, only
-        per-round stats reach the driver) must return knn_join's exact
-        rows — including sparse ocean queries that force ring expansion
-        and resolution escalation."""
-        from h3_rs_spark.operators.knn import knn_join_distributed
-
-        queries = datagen.generate_knn_queries(spark, n=24, k=5)
-        q_pdf = queries.toPandas()
-        got = knn_join_distributed(
-            spark, images, queries, k=5, res=9
-        ).toPandas()
-        exp = knn_oracle(oracle_geo, q_pdf, k=5)
-        g = got.sort_values(["query_id", "rank"], ignore_index=True)
-        x = exp.sort_values(["query_id", "rank"], ignore_index=True)
-        assert g["image_id"].tolist() == x["image_id"].tolist()
-        assert np.allclose(g["dist_m"], x["dist_m"], rtol=1e-9, atol=1e-6)
-
-    def test_blind_sequence_matches_precheck(self, spark, images,
-                                             oracle_geo):
-        """density_precheck=False (small-batch fast path, ADVICE r2)
-        must not change results — completion is proven by the
-        guaranteed-radius test either way."""
-        queries = datagen.generate_knn_queries(spark, n=8, k=3)
-        q_pdf = queries.toPandas()
-        got = knn_join(
-            spark, images, queries, k=3, res=9, density_precheck=False
-        ).toPandas()
-        exp = knn_oracle(oracle_geo, q_pdf, k=3)
-        g = got.sort_values(["query_id", "rank"], ignore_index=True)
-        x = exp.sort_values(["query_id", "rank"], ignore_index=True)
-        assert g["image_id"].tolist() == x["image_id"].tolist()
-
-    def test_oversized_batch_routes_distributed(self, spark, images,
-                                                oracle_geo):
-        """VERDICT r4 #3: the convenience wrapper's driver-side
-        toPandas is guarded — a batch above max_driver_queries must
-        route to the all-Spark distributed path (the probe is
-        limit(N+1).toPandas() — a bounded N+1-row driver
-        materialization reused as the small-batch input, never an
-        unbounded scan) and still return the exact rows. Exercised with a lowered guard so the
-        identical code path a 10^7-query caller would hit runs in
-        test time."""
+    def test_oversized_batch_raises(self, spark, images, oracle_geo,
+                                    monkeypatch):
+        """A batch above _MAX_QUERIES raises instead of pulling an
+        unbounded relation to the driver; a batch at the limit still
+        returns the exact rows. Exercised with a lowered limit so the
+        same code path a 10^7-query caller would hit runs in test time."""
         from h3_rs_spark.operators import knn as knn_mod
 
-        queries = datagen.generate_knn_queries(spark, n=24, k=3)
+        monkeypatch.setattr(knn_mod, "_MAX_QUERIES", 8)
+        big = datagen.generate_knn_queries(spark, n=24, k=3)
+        with pytest.raises(ValueError, match="at most 8 queries"):
+            knn_join(spark, images, big, k=3, res=9)
+        queries = datagen.generate_knn_queries(spark, n=8, k=3)
         q_pdf = queries.toPandas()
-        got = knn_join(
-            spark, images, queries, k=3, res=9, max_driver_queries=8
-        ).toPandas()
-        assert knn_mod._LAST_ROUTE[0] == "distributed"
+        got = knn_join(spark, images, queries, k=3, res=9).toPandas()
         exp = knn_oracle(oracle_geo, q_pdf, k=3)
         g = got.sort_values(["query_id", "rank"], ignore_index=True)
         x = exp.sort_values(["query_id", "rank"], ignore_index=True)
         assert g["image_id"].tolist() == x["image_id"].tolist()
-        # small batches keep the driver-seeded fast path
-        small = datagen.generate_knn_queries(spark, n=4, k=3)
-        knn_join(spark, images, small, k=3, res=9).count()
-        assert knn_mod._LAST_ROUTE[0] == "driver_seeded"
+        assert np.allclose(g["dist_m"], x["dist_m"], rtol=1e-9, atol=1e-6)
 
 
 class TestTiling:
@@ -231,50 +192,6 @@ class TestSkew:
         assert len(hot) >= 1  # SF base cell is ~30% of data
 
 
-class TestDedupOps:
-    @pytest.fixture(scope="class")
-    def docs(self, spark):
-        rng = np.random.default_rng(8)
-        vocab = [f"w{c}" for c in range(200)]
-        texts = (
-            ["the quick brown fox jumps over the lazy dog"] * 3
-            + ["the quick brown fox jumps over a lazy dog"]
-            + ["completely different text about spark engines"]
-            + [
-                " ".join(rng.choice(vocab, size=12, replace=False))
-                for _ in range(10)
-            ]
-        )
-        return spark.createDataFrame(
-            pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        )
-
-    def test_exact_dedup(self, spark, docs):
-        out = dedup.exact_dedup(docs).toPandas()
-        assert out["dup_count"].max() == 3
-        assert out["dup_count"].sum() == 15
-
-    def test_minhash_finds_near_dup(self, spark, docs):
-        pairs = dedup.minhash_lsh_dedup(
-            docs, jaccard_threshold=0.3, shingle=4
-        ).toPandas()
-        got = {tuple(sorted((a, b))) for a, b in zip(pairs.id_a, pairs.id_b)}
-        # the three exact copies and the 1-word variant must pair up
-        assert (0, 1) in got and (0, 2) in got and (1, 2) in got
-        assert (0, 3) in got or (1, 3) in got or (2, 3) in got
-        # unrelated docs must not pair
-        assert not any(a >= 5 or b >= 5 for a, b in got)
-
-    def test_ngram_jaccard_exact(self, spark, docs):
-        cand = spark.createDataFrame(
-            pd.DataFrame({"id_a": [0, 0], "id_b": [1, 4]})
-        )
-        out = dedup.ngram_jaccard_pairs(docs, cand, n=3).toPandas()
-        j = dict(zip(zip(out.id_a, out.id_b), out.jaccard))
-        assert j[(0, 1)] == 1.0  # identical docs
-        assert j[(0, 4)] == 0.0  # disjoint docs
-
-
 class TestDistributedHierarchy:
     def test_compact_df_matches_kernel(self, spark, images):
         from h3_rs_spark.h3core import compact as kernel_compact
@@ -311,69 +228,6 @@ class TestDistributedHierarchy:
         df = spark.createDataFrame(pd.DataFrame({"cell": ch}))
         out = [r[0] for r in compact_cells_df(df).collect()]
         assert out == [parent]
-
-
-class TestDedupScale:
-    """Scale-safety contracts: no forced broadcast of corpus-sized
-    relations, hot-bucket capping, deterministic short-text hashing."""
-
-    def _physical_plan(self, df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    def test_no_forced_broadcast_reattach(self, spark):
-        """The signature re-attach joins must not carry an explicit
-        broadcast hint: with auto-broadcast disabled, the initial physical
-        plan contains no BroadcastExchange (a hint would force one
-        regardless of size — OOM at 100 TB)."""
-        import pandas as pd
-
-        pdf = pd.DataFrame({
-            "doc_id": range(40),
-            "text": [f"some words repeated here {i % 7} tail" for i in range(40)],
-        })
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            docs = spark.createDataFrame(pdf)
-            df = dedup.minhash_lsh_dedup(docs, jaccard_threshold=0.1)
-            plan = self._physical_plan(df)
-            assert "BroadcastExchange" not in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    def test_bucket_cap_star_pairs_hot_bucket(self, spark):
-        """A hot bucket (identical docs) above the cap star-pairs to its
-        min-id representative — linear pairs instead of quadratic, and
-        the exact duplicates still reach verification; distinct docs in
-        small buckets are unaffected."""
-        import pandas as pd
-
-        texts = ["the exact same boilerplate text again and again"] * 30 + [
-            "unique document alpha beta gamma delta",
-            "unique document alpha beta gamma epsilon",
-        ]
-        docs = spark.createDataFrame(
-            pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        )
-        capped = dedup.minhash_lsh_dedup(
-            docs, jaccard_threshold=0.3, bucket_cap=10
-        ).toPandas()
-        got = {tuple(sorted((a, b))) for a, b in zip(capped.id_a, capped.id_b)}
-        # every hot-bucket member pairs with the representative (id 0)...
-        assert {(0, j) for j in range(1, 30)} <= got
-        # ...quadratic non-anchor pairs are NOT generated...
-        assert not ((capped.id_a > 0) & (capped.id_a < 30) & (capped.id_b < 30)).any()
-        # ...and the small-bucket near-dup pair survives
-        assert (30, 31) in got
-
-    def test_short_text_hash_deterministic(self):
-        """Short-text shingle fallback must not use salted hash()."""
-        h1 = dedup._shingle_hashes("ab", 5)
-        h2 = dedup._shingle_hashes("ab", 5)
-        assert (h1 == h2).all()
-        # polynomial over the utf-8 bytes of "ab"
-        assert int(h1[0]) == (ord("a") * 1_000_003 + ord("b")) % (1 << 64)
-        assert int(dedup._shingle_hashes("", 5)[0]) == 0
 
 
 class TestPolyfillDistributed:
@@ -590,26 +444,6 @@ class TestPipBuildStrategy:
         assert compacted == expanded and len(expanded) > 0
 
 
-class TestKnnShufflePath:
-    def test_distributed_no_broadcast_matches(self, spark, images,
-                                              oracle_geo):
-        """broadcast_candidates=False (the huge-query-set shuffle-join
-        path) must return identical rows."""
-        from h3_rs_spark.operators.knn import (
-            knn_join_distributed, knn_oracle,
-        )
-
-        queries = datagen.generate_knn_queries(spark, n=12, k=3)
-        q_pdf = queries.toPandas()
-        got = knn_join_distributed(
-            spark, images, queries, k=3, res=9, broadcast_candidates=False
-        ).toPandas()
-        exp = knn_oracle(oracle_geo, q_pdf, k=3)
-        g = got.sort_values(["query_id", "rank"], ignore_index=True)
-        x = exp.sort_values(["query_id", "rank"], ignore_index=True)
-        assert g["image_id"].tolist() == x["image_id"].tolist()
-
-
 class TestHexRanges:
     def test_multi_origin_disks_and_pentagon_contract(self, spark):
         """hexRanges (the reference's only multi-origin traversal,
@@ -661,35 +495,41 @@ class TestHexRanges:
         assert len(out[1]["disks"][1]) == 16  # pentagon disk 1+5+10
 
 
-class TestSeedingParity:
-    def test_driver_and_distributed_seeders_agree(self, spark, images):
-        """knn_join's driver-dialect seeder (_initial_plans_driver) and
-        the all-Spark seed_state evaluate the SAME two-scale density
-        formula; this pins them equal so the dialects cannot drift
-        (the distributed seeder's raw base-res ring folds through
-        _escalate_state to the driver seeder's pre-escalated plan)."""
-        from h3_rs_spark.operators.knn import (
-            _escalate_state,
-            _initial_plans_driver,
-            seed_state,
-        )
+class TestKnnSeedFold:
+    def test_fold_matches_escalate_state(self, spark):
+        """The seeder's Python fold of a base-res ring to (res_eff, ring)
+        equals the round loop's _escalate_state on the same seed, at its
+        (res + 1) // 2 unroll depth, for every res and ring size from
+        in-range to the coarsest ocean start."""
+        from h3_rs_spark.operators.knn import _escalate_state, _fold_seed
 
-        queries = datagen.generate_knn_queries(spark, n=24, k=5)
-        q_pdf = queries.select("query_id", "lat", "lng").toPandas()
-        plans = _initial_plans_driver(
-            spark, images, q_pdf, 5, 9, "cell", 2
-        )
-        seeded = _escalate_state(
-            seed_state(
-                images, queries, 5, 9, cell_col="cell", initial_ring=2,
-                prefilter_broadcast=True,
+        rings = [1, 2, 16, 17, 112, 10**4, 16 * 7**7]
+        parts = [
+            _escalate_state(
+                spark.createDataFrame(
+                    pd.DataFrame(
+                        {"res": res, "base_ring": rings,
+                         "res_eff": res, "ring": rings}
+                    ),
+                    "res int, base_ring long, res_eff int, ring long",
+                ),
+                res,
             )
-        ).toPandas()
+            for res in range(16)
+        ]
+        folded = parts[0]
+        for p in parts[1:]:
+            folded = folded.unionByName(p)
         got = {
-            r["query_id"]: (int(r["res_eff"]), int(r["ring"]))
-            for _, r in seeded.iterrows()
+            (r["res"], r["base_ring"]): (r["res_eff"], r["ring"])
+            for r in folded.collect()
         }
-        assert got == plans
+        want = {
+            (res, ring): _fold_seed(res, ring)
+            for res in range(16)
+            for ring in rings
+        }
+        assert got == want
 
 
 class TestKnnEdgeCases:
@@ -704,6 +544,30 @@ class TestKnnEdgeCases:
         out = knn_join(spark, images, empty_q, k=3, res=9)
         assert out.count() == 0
         assert set(out.columns) >= {"query_id", "image_id", "dist_m", "rank"}
+
+    @pytest.mark.parametrize(
+        "rows,message",
+        [
+            (
+                [("a", 37.77, -122.42), ("a", -33.87, 151.21)],
+                r"duplicate query_id, first: \['a'\]",
+            ),
+            (
+                [("ok", 37.77, -122.42), ("no_lat", None, -122.4)],
+                r"null or NaN lat/lng for query_id, first: \['no_lat'\]",
+            ),
+        ],
+        ids=["duplicate_id", "null_lat"],
+    )
+    def test_bad_query_rows_raise(self, spark, images, rows, message):
+        """A duplicate query_id (its answers would share one window
+        partition, silently dropping one) or a null lat (NaN distances,
+        arbitrary images) raises and names the offending id."""
+        queries = spark.createDataFrame(
+            rows, "query_id string, lat double, lng double"
+        )
+        with pytest.raises(ValueError, match=message):
+            knn_join(spark, images, queries, k=3, res=9)
 
     def test_empty_images_terminates(self, spark):
         """An empty fact relation must terminate via the exhaustion
