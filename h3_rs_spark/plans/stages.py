@@ -1,91 +1,82 @@
 """Resumable stage runner with per-partition lineage + metrics
-(BASELINE.json north_rule: "resumable from checkpoint with per-partition
-lineage + metrics").
+(BASELINE.json north_rule).
 
-Each named stage materializes to the warehouse with a fingerprint
-manifest; a rerun whose input fingerprint matches skips straight to the
-materialized output, so any stage of a multi-stage job is a resume
-point. Metrics (per-partition row counts + stage wall time) and lineage
-(stage -> input fingerprint + upstream stages) append to dedicated
-tables; at design scale these live in Iceberg, here parquet
-(sources/io.py rationale).
+Each named stage materializes to `<root>/<stage>` with one record,
+`<root>/<stage>.manifest.json`; a rerun whose fingerprint matches skips
+straight to the output, so any stage is a resume point. The record is
+the stage's lineage and metrics: `stage`, `run_id`, `fingerprint`
+(effective), `logical` (the caller's string), `inputs` (paths read),
+`output` (digest of the written files), `wall_s`, `rows_total` and
+`partition_rows` ([partition_id, rows] pairs). Metrics are per write
+task: the id is the task number in each part file's name (`part-NNNNN-`)
+and the rows come from the parquet footers, so no Spark job re-reads the
+output. A rerun replaces the record together with the output.
 
-Stale-input protection (VERDICT r5 "What's missing #4"): a
-caller-supplied fingerprint string alone cannot see an upstream parquet
-that was mutated in place without the caller updating the string — a
-valid manifest + `_SUCCESS` would resume WRONG by design. `stage(...,
-inputs=[paths])` closes that hole: the effective fingerprint appends a
-digest of every input file's (relpath, size, mtime_ns), so any in-place
-mutation of the physical inputs forces a rerun (recorded as
-`stale_rerun` in history, distinguishable from a first `ran`). The scan
-is metadata-only — O(#files) stat calls, no data read — which is the
-100-TB-polite form; at design scale the same information comes from the
-Iceberg snapshot id.
+Stale inputs (VERDICT r5 #4): `inputs=` appends a digest of every input
+file's (relpath, size, mtime_ns), stat calls only, so an upstream parquet
+mutated in place re-runs the stage as `stale_rerun`, not `resumed`.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
 import time
-from collections.abc import Callable
+from collections import Counter
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+def _walk(root: str) -> Iterator[tuple[str, os.stat_result]]:
+    """(relpath, stat) of every file under root, hidden files (leading
+    '.') skipped — Spark's .crc shadows would double every entry."""
+    for dirpath, _dirs, files in os.walk(root):
+        for fname in files:
+            if not fname.startswith("."):
+                fp = os.path.join(dirpath, fname)
+                yield os.path.relpath(fp, root), os.stat(fp)
+
+
+def _digest(entries: list) -> str:
+    blob = json.dumps(sorted(entries), separators=(",", ":")).encode()
+    return hashlib.sha256(blob).hexdigest()[:16]
 
 
 def input_fingerprint(*paths: str) -> str:
-    """Digest of the physical state of input files/dirs: sorted
-    (relpath, size, mtime_ns) triples, metadata-only (no data read).
-    Missing paths fingerprint as (path, -1, -1) instead of raising, so
-    a stage whose input disappears re-runs (and fails inside fn() with
-    the real error) rather than resuming against nothing. Hidden files
-    (leading '.') are skipped — Spark's .crc shadows would double every
-    entry; `_SUCCESS`/part files are included."""
+    """Digest of the physical state of input files/dirs: (relpath, size,
+    mtime_ns) triples, metadata-only. A missing path fingerprints as
+    (path, -1, -1) instead of raising, so its stage re-runs (and fails
+    inside fn() with the real error) rather than resuming on nothing."""
     entries = []
-    for p in paths:
-        p = str(p)
+    for p in map(str, paths):
         if os.path.isdir(p):
-            for dirpath, _dirs, files in os.walk(p):
-                for fname in files:
-                    if fname.startswith("."):
-                        continue
-                    fp = os.path.join(dirpath, fname)
-                    st = os.stat(fp)
-                    entries.append(
-                        (os.path.relpath(fp, p), st.st_size, st.st_mtime_ns)
-                    )
+            entries += [(rel, st.st_size, st.st_mtime_ns) for rel, st in _walk(p)]
         elif os.path.exists(p):
             st = os.stat(p)
             entries.append((os.path.basename(p), st.st_size, st.st_mtime_ns))
         else:
             entries.append((p, -1, -1))
-    entries.sort()
-    return hashlib.sha256(
-        json.dumps(entries, separators=(",", ":")).encode()
-    ).hexdigest()[:16]
+    return _digest(entries)
 
 
-def _output_digest(path: str) -> str:
-    """Integrity digest of a stage's materialized output: sorted
-    (relpath, size) of non-hidden files. Name+size only — mtimes are
-    excluded so a faithful copy/restore of the warehouse still resumes
-    — which catches the damage _SUCCESS alone cannot: a part file
-    deleted or truncated while _SUCCESS and the manifest survive
-    (round-6 review). Metadata-only, no data read."""
-    entries = []
-    for dirpath, _dirs, files in os.walk(path):
-        for fname in files:
-            if fname.startswith("."):
-                continue
-            fp = os.path.join(dirpath, fname)
-            entries.append((os.path.relpath(fp, path), os.stat(fp).st_size))
-    entries.sort()
-    return hashlib.sha256(
-        json.dumps(entries, separators=(",", ":")).encode()
-    ).hexdigest()[:16]
+def _output_digest(files) -> str:
+    """(relpath, size) digest: a copied warehouse still resumes, a part
+    file lost or truncated under a surviving _SUCCESS does not."""
+    return _digest([(rel, st.st_size) for rel, st in files])
+
+
+def _read_manifest(path: str) -> dict | None:
+    """The record, or None when a torn or empty write left it unparseable."""
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except ValueError:
+        return None
 
 
 @dataclass
@@ -95,16 +86,11 @@ class StageRunner:
     run_id: str = "default"
     _ran: list = field(default_factory=list)
 
-    def _paths(self, name: str):
-        base = os.path.join(self.root, name)
-        return base, base + ".manifest.json"
-
     def stage(
         self,
         name: str,
         fingerprint: str,
         fn: Callable[[], DataFrame],
-        upstream: list[str] | None = None,
         inputs: list[str] | None = None,
     ) -> DataFrame:
         """Run (or resume) a named stage.
@@ -113,106 +99,90 @@ class StageRunner:
         (parameters + logical input identity); a matching manifest means
         the materialized parquet is current and the stage is skipped.
 
-        inputs: physical paths (files or parquet dirs) the stage reads.
-        When given, their input_fingerprint() is appended to the
-        effective fingerprint, so an upstream mutated in place (same
-        caller string, different bytes on disk) is detected and the
-        stage RE-RUNS — history records it as `stale_rerun`. Pass the
-        upstream stage's output dir here to chain staleness through a
-        pipeline.
+        inputs: paths (files or parquet dirs) the stage reads, recorded as
+        its lineage; their input_fingerprint() joins the effective
+        fingerprint, so an upstream output mutated in place re-runs the
+        stage as `stale_rerun`.
         """
         eff = fingerprint
         if inputs:
             eff = f"{fingerprint}|inputs={input_fingerprint(*inputs)}"
-        out_path, manifest_path = self._paths(name)
-        manifest = None
+        out_path = os.path.join(self.root, name)
+        manifest_path = out_path + ".manifest.json"
+        # a new logical fingerprint is a plain `ran`, a moved inputs digest
+        # `stale_rerun`; a full match that cannot resume, or a record that
+        # cannot be parsed, is warehouse damage: `damaged_rerun`
+        status = "ran"
         if os.path.exists(manifest_path):
-            with open(manifest_path) as fh:
-                manifest = json.load(fh)
-            # resume needs a matching fingerprint AND an intact
-            # materialization: _SUCCESS present and the output-file
-            # inventory (names+sizes) unchanged since the write — a
-            # part file lost or truncated under a surviving _SUCCESS
-            # must re-run, not silently resume partial data. Manifests
-            # written before the output digest existed (no "output"
-            # key) keep the _SUCCESS-only check.
-            if (
-                manifest.get("fingerprint") == eff
-                and os.path.exists(os.path.join(out_path, "_SUCCESS"))
-                and manifest.get("output")
-                in (None, _output_digest(out_path))
-            ):
-                self._ran.append((name, "resumed"))
-                return self.spark.read.parquet(out_path)
-        # status telemetry: a DELIBERATE change (caller passed a new
-        # logical fingerprint) is an ordinary `ran`; a manifest whose
-        # logical part still matches but whose inputs digest moved means
-        # the physical upstream changed behind the caller's back —
-        # surfaced distinctly as `stale_rerun`; a manifest that still
-        # matches the FULL effective fingerprint (inputs unchanged) can
-        # only reach here because the materialization itself was lost
-        # (_SUCCESS/output dir deleted or truncated) — that is
-        # `damaged_rerun`, not staleness: an operator diagnosing a rerun
-        # storm must be pointed at output-dir damage, not upstream
-        # mutation (round-6 review)
-        if manifest is not None and manifest.get("fingerprint") == eff:
-            status = "damaged_rerun"
-        elif manifest is not None and manifest.get("logical") == fingerprint:
-            status = "stale_rerun"
-        else:
-            status = "ran"
+            manifest = _read_manifest(manifest_path)
+            if manifest is None:
+                status = "damaged_rerun"
+            elif manifest.get("fingerprint") == eff:
+                # a pre-digest record (no "output" key) resumes on _SUCCESS
+                digest = _output_digest(_walk(out_path))
+                intact = manifest.get("output") in (None, digest)
+                if intact and os.path.exists(os.path.join(out_path, "_SUCCESS")):
+                    self._ran.append((name, "resumed"))
+                    return self.spark.read.parquet(out_path)
+                status = "damaged_rerun"
+            elif manifest.get("logical") == fingerprint:
+                status = "stale_rerun"
 
         t0 = time.time()
-        df = fn()
-        df.write.mode("overwrite").parquet(out_path)
+        fn().write.mode("overwrite").parquet(out_path)
         wall_s = time.time() - t0
-        result = self.spark.read.parquet(out_path)
 
-        metrics = (
-            result.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows_out"))
-            .withColumn("stage", F.lit(name))
-            .withColumn("run_id", F.lit(self.run_id))
-            .withColumn("wall_s", F.lit(float(wall_s)))
-            .withColumn("fingerprint", F.lit(eff))
-        )
-        metrics.write.mode("append").parquet(os.path.join(self.root, "_metrics"))
-
-        lineage = self.spark.createDataFrame(
-            [
-                (
-                    name,
-                    self.run_id,
-                    eff,
-                    ",".join(upstream or []),
-                    float(wall_s),
-                    int(result.count()),
-                )
-            ],
-            "stage string, run_id string, fingerprint string, upstream string,"
-            " wall_s double, rows_total long",
-        )
-        lineage.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
-
-        with open(manifest_path, "w") as fh:
-            json.dump(
-                {
-                    "fingerprint": eff,
-                    "logical": fingerprint,
-                    "output": _output_digest(out_path),
-                    "wall_s": wall_s,
-                    "stage": name,
-                },
-                fh,
-            )
+        files = list(_walk(out_path))
+        rows = Counter()  # unpartitioned write: part files are top-level
+        for rel, _st in files:
+            if rel.startswith("part-"):
+                footer = pq.read_metadata(os.path.join(out_path, rel))
+                rows[int(rel.split("-")[1])] += footer.num_rows
+        record = {
+            "fingerprint": eff,
+            "logical": fingerprint,
+            "output": _output_digest(files),
+            "wall_s": wall_s,
+            "stage": name,
+            "run_id": self.run_id,
+            "inputs": [str(p) for p in inputs or []],
+            "rows_total": sum(rows.values()),
+            "partition_rows": sorted(rows.items()),
+        }
+        # write-then-rename: a crash leaves the old record or the new one
+        tmp = os.path.join(self.root, f".{name}.manifest.json.tmp")
+        with open(tmp, "w") as fh:
+            json.dump(record, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, manifest_path)
         self._ran.append((name, status))
-        return result
+        return self.spark.read.parquet(out_path)
 
     def history(self):
         return list(self._ran)
 
+    def _records(self) -> list[dict]:
+        paths = sorted(glob.glob(os.path.join(self.root, "*.manifest.json")))
+        return [m for m in map(_read_manifest, paths) if m is not None]
+
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_metrics"))
+        """One row per write task of every recorded stage (local, no job)."""
+        return self.spark.createDataFrame(
+            [
+                (m["stage"], m.get("run_id"), m["fingerprint"], m["wall_s"], p, n)
+                for m in self._records()
+                for p, n in m.get("partition_rows", [])
+            ],
+            "stage string, run_id string, fingerprint string, wall_s double,"
+            " partition_id int, rows_out long",
+        )
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "_lineage"))
+        """One row per recorded stage (local, no job)."""
+        keys = ("stage", "run_id", "fingerprint", "inputs", "wall_s", "rows_total")
+        return self.spark.createDataFrame(
+            [tuple(m.get(k) for k in keys) for m in self._records()],
+            "stage string, run_id string, fingerprint string,"
+            " inputs array<string>, wall_s double, rows_total long",
+        )

@@ -17,6 +17,7 @@ Stages (each a resume point keyed by an input fingerprint):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 from pathlib import Path
 
@@ -64,15 +65,12 @@ def main():
     # is ever rewritten in place (manual backfill, partial restore),
     # pip_matches re-runs from the file metadata digest even though the
     # logical fingerprint string is unchanged (stages.py stale-input
-    # protection)
-    import os as _os
-
+    # protection); the record lists it as the stage's lineage
     matches = runner.stage(
         "pip_matches",
         pip_fp,
         build_matches,
-        ["images"],
-        inputs=[_os.path.join(args.warehouse, "images")],
+        inputs=[os.path.join(args.warehouse, "images")],
     )
 
     def build_counts():
@@ -82,17 +80,16 @@ def main():
             .agg(F.count("*").alias("n_images"))
         )
 
-    counts = runner.stage(
+    runner.stage(
         "cell_counts",
         pip_fp + "|rollup=r5",
         build_counts,
-        ["pip_matches"],
-        inputs=[_os.path.join(args.warehouse, "pip_matches")],
+        inputs=[os.path.join(args.warehouse, "pip_matches")],
     )
 
     print("stage history:", runner.history())
-    print("rows:", {"images": images.count(), "matches": matches.count(),
-                    "counts": counts.count()})
+    lineage = runner.lineage().toPandas()
+    print("rows:", dict(zip(lineage["stage"], lineage["rows_total"].tolist())))
     spark.stop()
 
 

@@ -219,6 +219,65 @@ class TestStageRunner:
         lineage = runner.lineage().toPandas()
         assert lineage.iloc[0]["rows_total"] == 10
 
+    def test_metrics_count_write_tasks(self, spark, tmp_path):
+        """Per-partition metrics are per write task: one row per part
+        file, keyed by the task number in its name, not by the splits a
+        re-read happens to plan."""
+        import glob
+
+        runner = StageRunner(spark, str(tmp_path), run_id="t5")
+        runner.stage("s", "f", lambda: spark.range(1000).repartition(16))
+        parts = glob.glob(str(tmp_path / "s" / "part-*.parquet"))
+        m = runner.metrics().toPandas()
+        assert len(m) == len(parts) == 16
+        assert sorted(m["partition_id"]) == list(range(16))
+        assert m["rows_out"].sum() == 1000
+
+    def test_torn_manifest_reruns(self, spark, tmp_path):
+        """A manifest left truncated or empty by a crash must not wedge
+        its stage: the call re-runs as `damaged_rerun` and rewrites the
+        record, so the next call resumes."""
+        runner = StageRunner(spark, str(tmp_path), run_id="t6")
+        mpath = tmp_path / "s.manifest.json"
+        runner.stage("s", "fp", lambda: spark.range(10))
+        for torn in (mpath.read_text()[:20], ""):
+            mpath.write_text(torn)
+            out = runner.stage("s", "fp", lambda: spark.range(10))
+            assert out.count() == 10
+            assert runner.history()[-1] == ("s", "damaged_rerun")
+            runner.stage("s", "fp", lambda: spark.range(10))
+            assert runner.history()[-1] == ("s", "resumed")
+
+    def test_stage_runs_no_bookkeeping_jobs(self, spark, tmp_path):
+        """A stage call runs no more Spark jobs than a plain write plus
+        read of the same DataFrame, and a resume at most one."""
+        sc = spark.sparkContext
+
+        def jobs(group, call):
+            sc.setJobGroup(group, group)
+            try:
+                call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        def make():
+            return spark.range(1000).repartition(4)
+
+        runner = StageRunner(spark, str(tmp_path / "wh"), run_id="t7")
+        plain = str(tmp_path / "plain")
+        n_plain = jobs(
+            "plain",
+            lambda: (
+                make().write.mode("overwrite").parquet(plain),
+                spark.read.parquet(plain),
+            ),
+        )
+        assert jobs("stage", lambda: runner.stage("s", "fp", make)) <= n_plain
+        assert jobs("resume", lambda: runner.stage("s", "fp", make)) <= 1
+        assert runner.history() == [("s", "ran"), ("s", "resumed")]
+
 
 class TestAdversePlans:
     """VERDICT r5 #2: prove the hand-shaped plans are FORCED by the
