@@ -5,16 +5,11 @@ from .native import (  # noqa: F401
     h3_to_parent_col,
     haversine_m_col,
     hex_str_to_cell,
-    is_res_class3_col,
 )
 from .udfs import (  # noqa: F401
     geo_to_h3_udf,
     h3_boundary_udf,
     h3_distance_udf,
-    h3_is_valid_udf,
-    h3_is_pentagon_udf,
-    h3_to_children_udf,
     h3_to_geo_udf,
-    k_ring_distances_udf,
     k_ring_udf,
 )

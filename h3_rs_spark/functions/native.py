@@ -27,11 +27,6 @@ def h3_base_cell(cell: Column | str) -> Column:
     )
 
 
-def is_res_class3_col(cell: Column | str) -> Column:
-    """Odd resolution — parity: src/inspection.rs:42-44."""
-    return h3_resolution(cell) % 2 == 1
-
-
 def h3_to_parent_col(cell: Column | str, parent_res: int) -> Column:
     """Ancestor at `parent_res` as pure bit math (src/hierarchy.rs:30-32).
 
@@ -43,18 +38,6 @@ def h3_to_parent_col(cell: Column | str, parent_res: int) -> Column:
     fill = (1 << (3 * (15 - parent_res))) - 1
     res_cleared = c.bitwiseAND(F.lit(~(0xF << 52)))
     return res_cleared.bitwiseOR(F.lit(parent_res << 52)).bitwiseOR(F.lit(fill))
-
-
-def h3_to_parent_sql(cell_expr: str, parent_res: int) -> str:
-    """SQL-text twin of h3_to_parent_col (r7 driver-latency work): the
-    same bit math as one string, for call sites that build plans in
-    selectExpr/expr form to avoid py4j round-trips. Parity pinned by
-    tests/test_infra.py::test_h3_to_parent_sql_parity."""
-    fill = (1 << (3 * (15 - parent_res))) - 1
-    return (
-        f"((({cell_expr} & {~(0xF << 52)}) | {parent_res << 52})"
-        f" | {fill})"
-    )
 
 
 def edge_origin_col(edge: Column | str) -> Column:

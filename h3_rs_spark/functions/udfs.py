@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..h3core import faceijk, indexing, traversal
+from ..h3core import faceijk, traversal
 
 
 @functools.lru_cache(maxsize=64)
@@ -93,16 +93,6 @@ def h3_boundary_udf(cell: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(BooleanType())
-def h3_is_valid_udf(cell: pd.Series) -> pd.Series:
-    return pd.Series(indexing.is_valid(cell.to_numpy(dtype=np.int64)))
-
-
-@F.pandas_udf(BooleanType())
-def h3_is_pentagon_udf(cell: pd.Series) -> pd.Series:
-    return pd.Series(indexing.is_pentagon(cell.to_numpy(dtype=np.int64)))
-
-
 @functools.lru_cache(maxsize=64)
 def k_ring_udf(k: int):
     """cell -> array<long> of all cells within grid distance k."""
@@ -114,52 +104,6 @@ def k_ring_udf(k: int):
         out = [[] for _ in range(len(c))]
         for o, cc in zip(owner.tolist(), cells.tolist()):
             out[o].append(cc)
-        return pd.Series(out)
-
-    return _f
-
-
-_RING_TYPE = ArrayType(
-    StructType([StructField("cell", LongType()), StructField("k", IntegerType())])
-)
-
-
-@functools.lru_cache(maxsize=64)
-def k_ring_distances_udf(k: int):
-    """cell -> array<struct<cell, k>> grouped by grid distance 0..k."""
-
-    @F.pandas_udf(_RING_TYPE)
-    def _f(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64)
-        owner, cells, dist = traversal.k_ring_distances(c, k)
-        out = [[] for _ in range(len(c))]
-        for o, cc, d in zip(owner.tolist(), cells.tolist(), dist.tolist()):
-            out[o].append({"cell": cc, "k": int(d)})
-        return pd.Series(out)
-
-    return _f
-
-
-@functools.lru_cache(maxsize=64)
-def k_ring_dyn_udf():
-    """(cell, ring) -> array<long>: per-ROW ring radius, for operators
-    that keep per-key ring state in a column (distributed kNN). Each
-    Arrow batch groups by distinct radius so every radius is one
-    vectorized traversal call, not a per-row loop."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(cell: pd.Series, ring: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64)
-        r = ring.to_numpy(dtype=np.int64)
-        out = [None] * len(c)
-        for rv in np.unique(r):
-            idx = np.flatnonzero(r == rv)
-            owner, cells = traversal.k_ring(c[idx], int(rv))
-            lists = [[] for _ in range(len(idx))]
-            for o, cc in zip(owner.tolist(), cells.tolist()):
-                lists[o].append(cc)
-            for i, lst in zip(idx.tolist(), lists):
-                out[i] = lst
         return pd.Series(out)
 
     return _f
@@ -193,36 +137,6 @@ def edge_destination_udf():
         from ..h3core import edges as ed
 
         return pd.Series(ed.edge_destination(edge.to_numpy(dtype=np.int64)))
-
-    return _f
-
-
-_EDGE_BOUNDARY_TYPE = ArrayType(
-    StructType([StructField("lat", DoubleType()), StructField("lng", DoubleType())])
-)
-
-
-@functools.lru_cache(maxsize=64)
-def edge_boundary_udf():
-    """edge -> the shared boundary segment's (lat, lng) vertex list:
-    both true endpoints plus any Class III distortion vertices between
-    them (full H3 edge-boundary semantics since r5)."""
-
-    @F.pandas_udf(_EDGE_BOUNDARY_TYPE)
-    def _f(edge: pd.Series) -> pd.Series:
-        from ..h3core import edges as ed
-
-        lat, lng = ed.edge_boundary(edge.to_numpy(dtype=np.int64))
-        return pd.Series(
-            [
-                [
-                    {"lat": float(la), "lng": float(lg)}
-                    for la, lg in zip(lat[i], lng[i])
-                    if not np.isnan(la)
-                ]
-                for i in range(lat.shape[0])
-            ]
-        )
 
     return _f
 
@@ -305,22 +219,6 @@ def geo_disk_dyn_udf():
 
     # same optimizer-barrier rationale as geo_to_h3_udf
     return _f.asNondeterministic()
-
-
-@functools.lru_cache(maxsize=64)
-def h3_to_children_udf(child_res: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64)
-        owner, kids = indexing.to_children_batch(c, child_res)
-        ord_ = np.argsort(owner, kind="stable")  # group rows contiguously
-        owner, kids = owner[ord_], kids[ord_]
-        counts = np.bincount(owner, minlength=len(c))
-        return pd.Series(
-            [a.tolist() for a in np.split(kids, np.cumsum(counts)[:-1])]
-        )
-
-    return _f
 
 
 @F.pandas_udf(ArrayType(LongType()))

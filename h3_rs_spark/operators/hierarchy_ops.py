@@ -17,30 +17,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.native import h3_base_cell, h3_resolution, h3_to_parent_col
+from ..functions.native import h3_resolution, h3_to_parent_col
 from ..h3core.constants import PENTAGON_BASE_CELLS
 
-_PENT_BCS = [int(b) for b in PENTAGON_BASE_CELLS]
+_PENT_IN_SQL = ", ".join(str(int(b)) for b in PENTAGON_BASE_CELLS)
 
 
-def _is_pentagon_col(cell):
-    """Pentagon test as a pure JVM expression: pentagon base cell and all
-    digits are 0 (each 3-bit digit up to the cell res equals 0; digits
-    beyond res are 7). Equivalent: the cell equals its own base-cell
-    'center child' pattern."""
-    res = h3_resolution(cell)
-    # compare against the base cell's center-child pattern at this res
-    # (2^k is exact in doubles for k <= 45, so pow-cast is lossless)
-    fill = F.pow(F.lit(2.0), ((F.lit(15) - res) * 3).cast("double")).cast(
-        "long"
-    ) - 1
-    center_pattern = (
-        F.lit(1 << 59)
-        .bitwiseOR((res.cast("long") * F.lit(1 << 52)))
-        .bitwiseOR((h3_base_cell(cell).cast("long") * F.lit(1 << 45)))
-        .bitwiseOR(fill)
+def _quote(cell_col: str) -> str:
+    """Backtick-quoted SQL identifier for a column name."""
+    return "`" + cell_col.replace("`", "``") + "`"
+
+
+def _is_pentagon_sql(cell_col: str) -> str:
+    """Pentagon test as one SQL expression: a pentagon base cell and all
+    digits 0 (each 3-bit digit up to the cell res equals 0; digits
+    beyond res are 7), i.e. the cell equals its own base cell's
+    'center child' pattern at its res (2^k is exact in doubles for
+    k <= 45, so pow-cast is lossless)."""
+    x = _quote(cell_col)
+    res = f"(shiftright({x}, 52) & 15)"
+    fill = (
+        f"(CAST(pow(2.0D, CAST((15 - {res}) * 3 AS DOUBLE)) AS BIGINT)"
+        " - 1)"
     )
-    return h3_base_cell(cell).isin(_PENT_BCS) & (cell == center_pattern)
+    center = (
+        f"(576460752303423488 | (CAST({res} AS BIGINT) *"
+        f" 4503599627370496) | (CAST((shiftright({x}, 45) & 127) AS"
+        f" BIGINT) * 35184372088832) | {fill})"
+    )
+    return (
+        f"((shiftright({x}, 45) & 127) IN ({_PENT_IN_SQL})"
+        f" AND {x} = {center})"
+    )
 
 
 # descendants of one cell, `d` levels down: hexagons fan out 7^d; a
@@ -106,7 +114,7 @@ def compact_cells_df(
     counts = anc.groupBy("_anc").agg(F.count("*").alias("_n"))
     depth = (F.lit(res) - h3_resolution(F.col("_anc")) + F.lit(1)).cast("int")
     expected = F.when(
-        _is_pentagon_col(F.col("_anc")),
+        F.expr(_is_pentagon_sql("_anc")),
         F.element_at(F.array(*[F.lit(v) for v in _PENT_DESC]), depth),
     ).otherwise(F.element_at(F.array(*[F.lit(v) for v in _HEX_DESC]), depth))
     # lazy checkpoint: `complete` feeds two anti-joins below; the
@@ -186,65 +194,24 @@ def antichain_violations(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
 _MAX_EXPLODE_LEVELS = 4  # resolution levels between redistributions
 
 
-def children_one_level_col(cell_col):
-    """array<long> of a cell's DIRECT children (res+1) as one codegen'd
-    expression — the JVM twin of the kernel's to_children_batch level
-    step (r7; retires the Arrow children UDF from the uncompact path):
-    child = cell + 2^52 (res nibble bump) - 7*2^off + d*2^off, d in
-    0..6, with pentagons (pentagon base cell + all-center digits, the
-    same test as _is_pentagon_col) skipping the K digit d=1. 2^off via
-    pow-cast is exact (off <= 42)."""
-    c = F.col(cell_col) if isinstance(cell_col, str) else cell_col
-    r1 = h3_resolution(c) + 1
-    off = F.pow(F.lit(2.0), ((F.lit(15) - r1) * 3).cast("double")).cast(
-        "long"
-    )
-    base = c + F.lit(1 << 52) - F.lit(7) * off
-    digits = F.when(
-        _is_pentagon_col(c),
-        F.array(*[F.lit(d) for d in (0, 2, 3, 4, 5, 6)]),
-    ).otherwise(F.array(*[F.lit(d) for d in range(7)]))
-    return F.transform(digits, lambda d: base + d.cast("long") * off)
-
-
-_PENT_IN_SQL = ", ".join(str(b) for b in _PENT_BCS)
-
-
-def _quote(cell_col: str) -> str:
-    """Backtick-quoted SQL identifier for a column name."""
-    return "`" + cell_col.replace("`", "``") + "`"
-
-
 def children_one_level_sql(cell_col: str) -> str:
-    """SQL-text twin of children_one_level_col (r7): the Column form
-    costs ~120 py4j round-trips per call (~0.1-0.2 s of pure driver
-    latency on a slow gateway), paid once per explode LEVEL in the
-    uncompact loop; this string builds in Python and parses JVM-side
-    in one call, producing the identical expression tree (literal
-    subexpression duplication matches what Catalyst sees after the
-    Column tree expands). Parity pinned by
+    """array<long> of a cell's DIRECT children (res+1) as one SQL
+    expression, the JVM form of the kernel's to_children_batch level
+    step: child = cell + 2^52 (res nibble bump) - 7*2^off + d*2^off, d
+    in 0..6, with pentagons (_is_pentagon_sql) skipping the K digit
+    d=1. 2^off via pow-cast is exact (off <= 42). SQL text rather than
+    a Column tree: the Column form cost ~120 py4j round-trips per
+    explode level.
+    Pinned against the kernel by
     tests/test_operators.py::test_children_one_level_sql_parity.
     cell_col is a column name; it is quoted here."""
     x = _quote(cell_col)
     r1 = f"((shiftright({x}, 52) & 15) + 1)"
     off = f"CAST(pow(2.0D, CAST((15 - {r1}) * 3 AS DOUBLE)) AS BIGINT)"
     base = f"({x} + 4503599627370496 - 7 * {off})"
-    res = f"(shiftright({x}, 52) & 15)"
-    fill = (
-        f"(CAST(pow(2.0D, CAST((15 - {res}) * 3 AS DOUBLE)) AS BIGINT)"
-        " - 1)"
-    )
-    center = (
-        f"(576460752303423488 | (CAST({res} AS BIGINT) *"
-        f" 4503599627370496) | (CAST((shiftright({x}, 45) & 127) AS"
-        f" BIGINT) * 35184372088832) | {fill})"
-    )
-    pent = (
-        f"((shiftright({x}, 45) & 127) IN ({_PENT_IN_SQL})"
-        f" AND {x} = {center})"
-    )
     digits = (
-        f"(CASE WHEN {pent} THEN array(0, 2, 3, 4, 5, 6)"
+        f"(CASE WHEN {_is_pentagon_sql(cell_col)}"
+        " THEN array(0, 2, 3, 4, 5, 6)"
         " ELSE array(0, 1, 2, 3, 4, 5, 6) END)"
     )
     return f"transform({digits}, d -> {base} + CAST(d AS BIGINT) * {off})"
@@ -260,7 +227,7 @@ def uncompact_cells_df(
     """Expand a mixed-res cell relation to uniform `res` (children
     explode; cells already at `res` pass through).
 
-    One pure-JVM Generate per resolution level (children_one_level_col
+    One pure-JVM Generate per resolution level (children_one_level_sql
     — rows already at `res` pass through as single-element arrays), so
     the whole expansion stays inside WholeStageCodegen with no
     JVM->Python Arrow transfer (r7; previously an Arrow children UDF
@@ -292,11 +259,8 @@ def uncompact_cells_df(
         # todo is empty (nothing coarser than res); out covers the input
         return out if out is not None else todo
     levels = res - int(min_res)
-    # one selectExpr SQL string per level (r7): the Column form of the
-    # children expression cost ~120 py4j round-trips per LEVEL — at 4
-    # levels that was ~0.5-0.7 s of pure driver latency per call on a
-    # slow gateway; the SQL text parses JVM-side in one call per level
-    # and yields the identical plan
+    # one selectExpr SQL string per level: it parses JVM-side in one
+    # call per level
     q = _quote(cell_col)
     level_expr = (
         f"explode(CASE WHEN (shiftright({q}, 52) & 15) < {res}"

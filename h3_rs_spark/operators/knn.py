@@ -2,24 +2,25 @@
 
 One entry, `knn_join`, for a dimension-sized query batch (at most
 _MAX_QUERIES rows) against the 10^12-row image fact table
-(SURVEY.md §7.3). Per call:
+(SURVEY.md §7.3). The batch and its round state live on the driver;
+Spark runs only the probe, the haversine and the top-k window. Per call:
 
 1. One bounded action, limit(N+1).toPandas(), checks the batch size and
    brings the batch to the driver, where bad rows raise ValueError.
 2. The driver seeds each query: numpy pre-cells at two coarse scales,
-   one broadcast-join count over the fact table, and a Python fold of
-   the implied base-res ring to a bounded (res_eff, ring) pair. The
-   seeded state is a local relation whose levels the driver knows.
-3. Rounds: candidate cells = the query's geo disk at (res_eff, ring),
-   exploded to (query_id, cell) and *broadcast*; the probe is a single
+   one broadcast-join count over the fact table, and a numpy fold of
+   the implied base-res ring to a bounded (res_eff, ring) pair.
+3. Rounds: the remaining queries' state is a local relation whose geo
+   disks at (res_eff, ring) explode on the executors to
+   (query_id, cand_cell) and are *broadcast*; the probe is a single
    BroadcastHashJoin on one parent key of the fact cell per distinct
    level (no shuffle of the fact table). The haversine re-rank is JVM
-   SQL; top-k is a window over the (small) matched candidate set.
-   Queries finish when they hold k candidates whose k-th distance is
-   provably inside the ring's guaranteed coverage radius, or when their
-   ring is exhausted; the rest widen the ring x4, escalate to a coarser
-   res when it grows past _COARSEN_AT, and re-join — each round touches
-   only the remaining queries' cells.
+   SQL, and a ROW_NUMBER window keeps at most k rows per query, which
+   one toPandas() brings back. The driver then decides in numpy: a
+   query is done when it holds k rows whose k-th distance is inside
+   the ring's guaranteed coverage radius, or when its ring is
+   exhausted; the rest widen the ring x4, fold to a coarser res when
+   it grows past _COARSEN_AT, and go round again.
 """
 
 from __future__ import annotations
@@ -67,10 +68,12 @@ def knn_join(
 
     Raises ValueError for a batch above _MAX_QUERIES rows (split it),
     a duplicate query_id, or a null/NaN lat or lng. The checks read the
-    rows the one bounded limit(N+1).toPandas() brought to the driver;
-    the rounds then run on a local relation built from those rows under
-    the caller's schema, so the queries plan never re-executes. An empty
-    batch returns the typed empty result without further Spark jobs.
+    rows the one bounded limit(N+1).toPandas() brought to the driver.
+    Each round then ships the remaining queries as a local relation
+    under the caller's schema, so the queries plan never re-executes,
+    and collects at most k rows per remaining query. The result is a
+    local relation of the collected rows; an empty batch returns it
+    typed and empty without further Spark jobs.
     """
     from ..functions.udfs import geo_disk_dyn_udf
 
@@ -82,47 +85,38 @@ def knn_join(
             " split the batch"
         )
     _check_query_rows(q_pdf)
-    if q_pdf.empty:
-        schema = StructType(
-            [
-                queries.schema["query_id"],
-                images.schema["image_id"],
-                StructField("dist_m", DoubleType()),
-                StructField("rank", IntegerType()),
-            ]
-        )
-        return spark.createDataFrame([], schema)
-
-    plans = _seed_plans(spark, images, q_pdf, k, res, cell_col)
-    seeded = q_pdf.assign(
-        res_eff=[p[0] for p in plans], ring=[p[1] for p in plans]
+    out_schema = StructType(
+        [
+            queries.schema["query_id"],
+            images.schema["image_id"],
+            StructField("dist_m", DoubleType()),
+            StructField("rank", IntegerType()),
+        ]
     )
+    if q_pdf.empty:
+        return spark.createDataFrame([], out_schema)
+
+    res_eff, ring = _seed_plans(spark, images, q_pdf, k, res, cell_col)
+    state = q_pdf.assign(res_eff=res_eff, ring=ring)
     # the caller's dtypes, not pandas inference: an int32 query_id must
     # round-trip to the exact input schema (ADVICE r5)
-    state = spark.createDataFrame(
-        seeded,
-        schema=StructType(
-            list(q_cols.schema.fields)
-            + [
-                StructField("res_eff", IntegerType()),
-                StructField("ring", LongType()),
-            ]
-        ),
+    state_schema = StructType(
+        list(q_cols.schema.fields)
+        + [
+            StructField("res_eff", IntegerType()),
+            StructField("ring", LongType()),
+        ]
     )
-    levels = sorted({p[0] for p in plans})
 
-    # a ring at res_eff covers ring * 7^((res - res_eff) / 2) base-res
-    # rings; a query is exhausted at max_ring base rings or at a big
-    # ring at res 0. The same SQL text flags its topk rows done and
-    # retires it from the state when it matched nothing.
-    exhausted = (
-        f"((ring * CAST(POW(7.0D, FLOOR(({int(res)} - res_eff) / 2))"
-        f" AS BIGINT)) >= {int(max_ring)})"
-        " OR ((res_eff = 0) AND (ring >= 32))"
-    )
-    results = None
-    to_unpersist = []
-    while True:
+    def _key_at(level):
+        return (
+            images[cell_col]
+            if level == res
+            else h3_to_parent_col(images[cell_col], level)
+        )
+
+    done_rows = []
+    while len(state):
         # ONE candidate relation for all levels: the fused dynamic-res
         # disk UDF builds every query's candidates in a single Arrow
         # stage and a single broadcast. The probe side derives one
@@ -131,25 +125,17 @@ def knn_join(
         # cross-level collisions, and the single-level case keeps the
         # direct key.
         cand = F.broadcast(
-            state.select(
+            spark.createDataFrame(state, state_schema).select(
                 "query_id",
                 F.col("lat").alias("q_lat"),
                 F.col("lng").alias("q_lng"),
-                "ring",
-                "res_eff",
                 F.explode(
                     geo_disk_dyn_udf()("lat", "lng", "res_eff", "ring")
                 ).alias("cand_cell"),
             )
         )
 
-        def _key_at(level):
-            return (
-                images[cell_col]
-                if level == res
-                else h3_to_parent_col(images[cell_col], level)
-            )
-
+        levels = np.unique(state["res_eff"]).tolist()
         if len(levels) == 1:
             probe = images.withColumn("probe_key", _key_at(levels[0]))
         else:
@@ -157,92 +143,41 @@ def knn_join(
                 "probe_key",
                 F.explode(F.array(*[_key_at(L) for L in levels])),
             )
-        matched = probe.join(
-            cand, F.col("probe_key") == cand["cand_cell"], "inner"
-        ).select(
-            "image_id", "lat", "lng", "query_id", "q_lat", "q_lng",
-            "ring", "res_eff",
-        )
-        # per-query stats (_n, _mx over the kept top-k rows) ride the
-        # SAME window partition key as the ranking, so the round needs
-        # exactly ONE shuffle: no stats groupBy and no state-x-stats
-        # join. ring/res_eff travel with the candidate rows, so the
-        # completion proof evaluates in-plan, per row. Built as SQL
-        # text (r7): the Column form of this chain cost ~250 py4j
-        # round-trips per round of pure driver latency; the strings
-        # produce the SAME expression trees (pinned by the oracle tests
-        # and test_knn_sql_parity).
-        kept = (
-            matched.selectExpr("*", f"{_HAVERSINE_SQL} AS dist_m")
+        topk = (
+            probe.join(cand, F.col("probe_key") == cand["cand_cell"])
+            .selectExpr(
+                "query_id", "image_id", f"{_HAVERSINE_SQL} AS dist_m"
+            )
             .selectExpr(
                 "*",
                 "ROW_NUMBER() OVER (PARTITION BY query_id"
                 " ORDER BY dist_m, image_id) AS rank",
             )
             .where(f"rank <= {int(k)}")
+            .toPandas()
         )
-        topk = (
-            kept.selectExpr(
-                "query_id", "image_id", "dist_m", "rank", "ring",
-                "res_eff",
-                "COUNT(*) OVER (PARTITION BY query_id) AS _n",
-                "MAX(dist_m) OVER (PARTITION BY query_id) AS _mx",
-            )
-            .selectExpr(
-                "query_id", "image_id", "dist_m", "rank",
-                f"(((_n >= {int(k)}) AND (_mx <= {_safe_radius_sql()}))"
-                f" OR {exhausted}) AS _done",
-            )
-            .persist()
+
+        # a ring at res_eff covers ring * 7^((res - res_eff) // 2)
+        # base-res rings; a query is exhausted at max_ring base rings or
+        # at a big ring at res 0. A query with no matched rows stays in
+        # flight until it is exhausted, and then finishes empty.
+        res_eff = state["res_eff"].to_numpy(dtype=np.int64)
+        ring = state["ring"].to_numpy(dtype=np.int64)
+        per_q = topk.groupby("query_id")["dist_m"]
+        n = state["query_id"].map(per_q.size()).fillna(0).to_numpy()
+        mx = state["query_id"].map(per_q.max()).to_numpy(dtype=np.float64)
+        exhausted = (ring * 7 ** ((res - res_eff) // 2) >= max_ring) | (
+            (res_eff == 0) & (ring >= 32)
         )
-        to_unpersist.append(topk)
-        round_res = topk.where(F.col("_done")).select(
-            "query_id", "image_id", "dist_m", "rank"
+        done = ((n >= k) & (mx <= _safe_radius(ring, res_eff))) | exhausted
+        done_rows.append(
+            topk[topk["query_id"].isin(state["query_id"][done])]
         )
-        results = (
-            round_res if results is None else results.unionByName(round_res)
-        )
-        # queries finish only via their topk rows' _done flag; queries
-        # with NO matched rows this round are absent from topk and stay
-        # in flight via the anti-join
-        done_q = F.broadcast(
-            topk.where(F.col("_done")).select("query_id").distinct()
-        )
-        state = state.join(done_q, "query_id", "left_anti")
-        # a query that matched ZERO rows at an exhausted ring has no
-        # topk row to carry _done — retire it here (nothing to emit)
-        # instead of looping forever on an empty region
-        state = state.where(f"NOT ({exhausted})")
-        # the remaining-query count materializes the round's
-        # probe+window into the persisted topk, so the escalation below
-        # (skipped entirely on the final round) re-evaluates only the
-        # cheap anti-join over the cached topk
-        if state.count() == 0:
-            break
-        # lazy checkpoint (r7): the levels distinct-collect right after
-        # it folds the checkpoint materialization into its own action.
-        # Lineage still truncates at materialization, which is what
-        # keeps the unrolled CASE-WHEN plan from growing across rounds.
-        state = _escalate_state(
-            state.select(
-                "query_id",
-                "lat",
-                "lng",
-                "res_eff",
-                (F.col("ring") * 4).cast("long").alias("ring"),
-            ),
-            res,
-        ).localCheckpoint(eager=False)
-        levels = [
-            int(r[0]) for r in state.select("res_eff").distinct().collect()
-        ]
-    # materialize the final relation so the per-round topk caches can
-    # drop without forcing a recompute at consumption time
-    results = results.persist()
-    results.count()
-    for df in to_unpersist:
-        df.unpersist()
-    return results
+        res_eff, ring = _fold(res_eff[~done], ring[~done] * 4)
+        state = state[~done].assign(res_eff=res_eff, ring=ring)
+    return spark.createDataFrame(
+        pd.concat(done_rows, ignore_index=True), out_schema
+    )
 
 
 def _check_query_rows(q_pdf: pd.DataFrame) -> None:
@@ -264,17 +199,17 @@ def _check_query_rows(q_pdf: pd.DataFrame) -> None:
 
 
 def _seed_plans(spark, images, q_pdf, k, res, cell_col):
-    """Per-query starting (res_eff, ring), in q_pdf's row order, from a
-    two-scale density estimate.
+    """Per-query starting (res_eff, ring) arrays, in q_pdf's row order,
+    from a two-scale density estimate.
 
     Pre-cells are the k=1 disks of each query at res-4 and res-8 (numpy,
     on the driver); one broadcast-join count job tallies the fact rows
     under each. A query whose fine disk holds >= k rows plans from the
     fine density; the rest (sparse/ocean) use the coarse count, so they
     start at the level that actually holds their neighbors instead of
-    cascading through expand-escalate rounds — each avoided round is a
+    cascading through widen-and-fold rounds — each avoided round is a
     full fact-relation probe pass. The implied base-res ring folds to a
-    bounded pair through _fold_seed."""
+    bounded pair through _fold."""
     from ..h3core import traversal
 
     stages = [max(0, res - 4)]
@@ -329,118 +264,66 @@ def _seed_plans(spark, images, q_pdf, k, res, cell_col):
         .set_index(["query_id", "stage"])["n"]
     )
 
-    plans = []
-    for qid in q_pdf["query_id"]:
-        rp, n = stages[0], float(cnt.get((qid, 0), 0))
-        if n < k and len(stages) > 1:
-            # fewer than k rows in the whole fine disk: the answer
-            # extends beyond it, so the coarse-disk density is the
-            # better estimator (n==0 is the ocean case)
-            rp, n = stages[1], float(cnt.get((qid, 1), 0))
-        # disk of 7 pre-cells covers ~7^(res-rp+1) base-res cells
-        cover = 7.0 ** (res - rp + 1)
-        density = n / cover  # fact rows per base-res cell
-        if density > 0:
-            # ring holding ~3k expected rows (cells(r) ~= 3r^2)
-            r = int(np.ceil(1.3 * np.sqrt(k / density))) + 1
-        else:
-            # nothing even in the coarsest disk: start there
-            r = _COARSEN_AT * 7 ** ((res - rp) // 2)
-        plans.append(_fold_seed(res, max(r, _INITIAL_RING)))
-    return plans
+    def _count(si):
+        key = pd.MultiIndex.from_arrays([q_pdf["query_id"], [si] * len(q_pdf)])
+        return cnt.reindex(key).fillna(0).to_numpy(dtype=np.float64)
+
+    rp, n = np.full(len(q_pdf), stages[0]), _count(0)
+    if len(stages) > 1:
+        # fewer than k rows in the whole fine disk: the answer extends
+        # beyond it, so the coarse-disk density is the better estimator
+        # (n==0 is the ocean case)
+        coarse = n < k
+        rp, n = np.where(coarse, stages[1], rp), np.where(coarse, _count(1), n)
+    # disk of 7 pre-cells covers ~7^(res-rp+1) base-res cells
+    density = n / 7.0 ** (res - rp + 1)  # fact rows per base-res cell
+    with np.errstate(divide="ignore", invalid="ignore"):
+        # ring holding ~3k expected rows (cells(r) ~= 3r^2); nothing even
+        # in the coarsest disk: start there
+        r = np.where(
+            density > 0,
+            np.ceil(1.3 * np.sqrt(k / density)).astype(np.int64) + 1,
+            _COARSEN_AT * 7 ** ((res - rp) // 2),
+        )
+    return _fold(np.full(len(q_pdf), res), np.maximum(r, _INITIAL_RING))
 
 
-def _fold_seed(res: int, ring: int) -> tuple[int, int]:
-    """Fold a base-res ring to a bounded (res_eff, ring) pair: the
-    Python twin of _escalate_state for one seed (pinned equal by
-    tests/test_operators.py::TestKnnSeedFold)."""
-    res_eff = res
-    while ring > _COARSEN_AT and res_eff > 0:
-        res_eff = max(0, res_eff - 2)
-        ring = max(1, ring // 7)
-    if res_eff < res:
-        ring = min(ring + 2, _COARSEN_AT)
-    return res_eff, ring
-
-
-def _escalate_state(df: DataFrame, res: int) -> DataFrame:
-    """Statically-unrolled per-query resolution escalation: res_eff
-    drops by 2 per firing step and stops at 0, and every state starts
-    at res_eff <= res, so (res + 1) // 2 steps always reach the fixed
-    point (extra steps would be no-ops).
-
-    Inside the round loop this MUST be followed by a localCheckpoint:
-    the unrolled CASE-WHEN rewrites res_eff/ring through nested
-    expressions each round, so the logical plan grows exponentially
-    otherwise; localCheckpoint keeps the state distributed while
-    resetting the plan to a leaf. Catalyst's projection collapse nests
-    each step's CASE-WHEN inside the next TWICE, so analysis cost grows
-    ~2^steps — the reason the depth follows `res` instead of a fixed 8.
-
-    Each step is ONE selectExpr with SQL text (r7): the Column-object
-    form cost ~0.28 s of pure py4j expression-building per call."""
-    others = [c for c in df.columns if c not in ("res_eff", "ring")]
-    df = df.selectExpr(*df.columns, "res_eff AS _res0")
-    m = f"(ring > {_COARSEN_AT} AND res_eff > 0)"
-    step = [*others, "_res0",
-            f"CASE WHEN {m} THEN greatest(res_eff - 2, 0) "
-            "ELSE res_eff END AS res_eff",
-            f"CAST(CASE WHEN {m} THEN greatest(floor(ring / 7), 1) "
-            "ELSE ring END AS BIGINT) AS ring"]
-    for _ in range((int(res) + 1) // 2):
-        df = df.selectExpr(*step)
-    # coarse escalations lose margin to the integer //7 steps; +2
-    # rings at a coarse res is cheap (cells ~ 3r^2 of FEW coarse
-    # cells) and usually saves a whole extra probe round
-    return df.selectExpr(
-        *others, "res_eff",
-        "CAST(CASE WHEN res_eff < _res0 THEN least(ring + 2, "
-        f"{_COARSEN_AT}) ELSE ring END AS BIGINT) AS ring",
+def _fold(res_eff, ring):
+    """Fold (res_eff, ring) arrays to bounded pairs: while a ring is
+    above _COARSEN_AT and res_eff > 0, res_eff drops by 2 (floor 0) and
+    the ring by //7 (floor 1). A folded ring then gains 2 rings, capped
+    at _COARSEN_AT: the integer //7 steps lose margin, and 2 more rings
+    at a coarse res are cheap and usually save a probe round."""
+    res0 = np.asarray(res_eff, dtype=np.int64)
+    res_eff, ring = res0, np.asarray(ring, dtype=np.int64)
+    while (m := (ring > _COARSEN_AT) & (res_eff > 0)).any():
+        res_eff = np.where(m, np.maximum(res_eff - 2, 0), res_eff)
+        ring = np.where(m, np.maximum(ring // 7, 1), ring)
+    return res_eff, np.where(
+        res_eff < res0, np.minimum(ring + 2, _COARSEN_AT), ring
     )
 
 
-def _edge_len_col(res_col):
-    """EDGE_LENGTH_M[res] as a codegen'd array lookup (res 0..15)."""
-    return F.element_at(
-        F.array(*[F.lit(float(e)) for e in EDGE_LENGTH_M]), res_col + 1
-    )
-
-
-def _guaranteed_radius_col(ring_col, res_col):
+def _safe_radius(ring, res_eff):
     """Every point within this geo distance of a query point is inside
     some cell at grid distance <= ring (planar hex lattice bound with a
-    distortion safety factor). Column reference form of
-    _safe_radius_sql."""
-    s = F.lit(_MIN_SPACING_FACTOR) * _edge_len_col(res_col)
-    return F.greatest(
-        F.lit(0.0), ((ring_col + 1) * F.lit(0.866) - F.lit(1.16)) * s
+    distortion safety factor)."""
+    edge = np.asarray(EDGE_LENGTH_M, dtype=np.float64)[res_eff]
+    return np.maximum(
+        0.0, ((ring + 1) * 0.866 - 1.16) * (_MIN_SPACING_FACTOR * edge)
     )
 
 
-# SQL-text twins for the round-loop hot path (r7 driver-latency work):
-# operation-for-operation mirrors of haversine_m_col(q_lat, q_lng, lat,
-# lng) and _guaranteed_radius_col(ring, res_eff), so the expression
-# trees — and therefore every double — are identical to the Column
-# forms (repr() round-trips literals; the D suffix keeps them DOUBLE,
-# not DECIMAL). Pinned by tests/test_operators.py::test_knn_sql_parity.
+# operation-for-operation mirror of haversine_m_col(q_lat, q_lng, lat,
+# lng) as one SQL string (repr() round-trips literals; the D suffix
+# keeps them DOUBLE, not DECIMAL), so every double is identical to the
+# Column form. Pinned by tests/test_operators.py::test_knn_sql_parity.
 _HAVERSINE_SQL = (
     f"({2.0 * EARTH_RADIUS_M!r}D * ASIN(SQRT("
     "POWER(SIN(RADIANS(lat - q_lat) / 2), 2)"
     " + COS(RADIANS(q_lat)) * COS(RADIANS(lat))"
     " * POWER(SIN(RADIANS(lng - q_lng) / 2), 2))))"
 )
-
-_EDGE_ARR_SQL = "ARRAY(" + ", ".join(
-    f"{float(e)!r}D" for e in EDGE_LENGTH_M
-) + ")"
-
-
-def _safe_radius_sql() -> str:
-    return (
-        "GREATEST(0.0D, (((ring + 1) * 0.866D) - 1.16D)"
-        f" * ({_MIN_SPACING_FACTOR!r}D"
-        f" * ELEMENT_AT({_EDGE_ARR_SQL}, res_eff + 1)))"
-    )
 
 
 def knn_oracle(images_pdf: pd.DataFrame, queries_pdf: pd.DataFrame, k: int):

@@ -63,7 +63,9 @@ def tile_assign(
     deg_per_px: float = 1e-6,
 ) -> DataFrame:
     """Decode + tile + cell-assign. Input needs (image_id, bytes, w, h,
-    fmt, lat, lng); Catalyst prunes everything else from the scan."""
+    fmt, lat, lng); Catalyst prunes everything else from the scan. A row
+    with NULL lat has no location (sources/io.with_geo) and gets no
+    tiles."""
     cols = ["image_id", "bytes", "w", "h", "fmt", "lat", "lng"]
     # bound the stacked-pixel working set per task: a full 20k-row Arrow
     # batch of large images stacked at once would dwarf executor memory
@@ -130,7 +132,11 @@ def tile_assign(
             ]
             yield pd.concat(outs, ignore_index=True)
 
-    return images.select(*cols).mapInPandas(run, schema=TILES_SCHEMA)
+    return (
+        images.select(*cols)
+        .where("lat IS NOT NULL")
+        .mapInPandas(run, schema=TILES_SCHEMA)
+    )
 
 
 def psnr_db(a: np.ndarray, b: np.ndarray) -> float:

@@ -15,28 +15,30 @@ from pyspark.sql import functions as F
 from ..functions.native import h3_base_cell, h3_to_parent_col
 from ..functions.udfs import geo_to_h3_udf
 
-CAPTION_RE = r"at (-?\d+\.\d+),(-?\d+\.\d+)$"
-
 
 def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
     """Derive lat/lng from the caption (the lat/lng-bearing metadata of
     the input_hint schema) plus the res-`res` cell and its coarse prefix.
 
-    regexp_extract runs JVM-side; only (lat, lng) cross into the Python
-    worker for the encode UDF.
+    NULL means "no location": a row whose caption is null, lacks
+    " at <lat>,<lng>", holds a non-numeric coordinate, a latitude off
+    [-90, 90] or a non-finite longitude gets NULL lat, lng, cell and
+    bc0, never cell 0. The split and the try_cast run JVM-side; only
+    (lat, lng) cross into the Python worker for the encode UDF.
     """
     # substring ops are ~3x cheaper than Java regex in the scan hot path;
-    # the caption format is "... at <lat>,<lng>" (CAPTION_RE kept for
-    # validation paths)
+    # the caption format is "... at <lat>,<lng>"
     ll = F.split(F.substring_index("caption", " at ", -1), ",")
-    df = df.withColumn("lat", ll.getItem(0).cast("double")).withColumn(
-        "lng", ll.getItem(1).cast("double")
-    )
+    lat, lng = (F.get(ll, i).try_cast("double") for i in (0, 1))
+    ok = (F.abs(lat) <= 90) & (F.abs(lng) < float("inf"))
+    df = df.withColumns({"lat": F.when(ok, lat), "lng": F.when(ok, lng)})
     # geo_to_h3_udf is nondeterministic-marked at the source (optimizer
     # barrier against join-constraint pushdown duplicating the Arrow
     # eval — see functions/udfs.py); bc0 partition pruning reads the
-    # on-disk partition column, not this expression.
+    # on-disk partition column, not this expression. The NULL mask is a
+    # second projection so the encode still runs once per row.
     df = df.withColumn("cell", geo_to_h3_udf(res)("lat", "lng"))
+    df = df.withColumn("cell", F.when(F.col("lat").isNotNull(), F.col("cell")))
     return df.withColumn("bc0", h3_base_cell(h3_to_parent_col("cell", 0)))
 
 

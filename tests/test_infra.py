@@ -32,25 +32,6 @@ class TestNativeColumns:
         ).all()
         assert got["hexs"].tolist() == ix.h3_to_hex_str(cells)
 
-    def test_h3_to_parent_sql_parity(self, spark):
-        """The SQL-text twin of h3_to_parent_col (r7 driver-latency
-        work) must produce bit-identical parents at every res."""
-        rng = np.random.default_rng(2)
-        lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 200)))
-        lng = rng.uniform(-180, 180, 200)
-        from h3_rs_spark.h3core import faceijk
-
-        cells = faceijk.geo_to_h3(lat, lng, 9)
-        df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-        for rp in (0, 3, 5, 8):
-            got = df.selectExpr(
-                f"{native.h3_to_parent_sql('cell', rp)} AS p"
-            ).toPandas()["p"]
-            want = df.select(
-                native.h3_to_parent_col("cell", rp).alias("p")
-            ).toPandas()["p"]
-            assert (got.to_numpy() == want.to_numpy()).all()
-
     def test_hex_codec_roundtrip(self, spark):
         df = spark.createDataFrame([(0x85283473FFFFFFF,)], "cell long")
         out = df.select(

@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from h3_rs_spark.h3core import faceijk, regions
 from h3_rs_spark.operators import skew
@@ -134,6 +135,136 @@ class TestKnn:
         x = exp.sort_values(["query_id", "rank"], ignore_index=True)
         assert g["image_id"].tolist() == x["image_id"].tolist()
         assert np.allclose(g["dist_m"], x["dist_m"], rtol=1e-9, atol=1e-6)
+
+    def test_unseeded_rounds_match_oracle(self, spark, images, oracle_geo,
+                                          monkeypatch):
+        """Every query starts at (res, _INITIAL_RING), so the metro,
+        South Pacific and polar queries widen and fold through several
+        driver rounds, and still match the oracle row for row."""
+        from h3_rs_spark.operators import knn as knn_mod
+
+        monkeypatch.setattr(
+            knn_mod, "_seed_plans",
+            lambda spark, images, q_pdf, k, res, cell_col: (
+                np.full(len(q_pdf), res),
+                np.full(len(q_pdf), knn_mod._INITIAL_RING),
+            ),
+        )
+        folds = []
+        fold = knn_mod._fold
+        monkeypatch.setattr(
+            knn_mod, "_fold", lambda r, g: folds.append(len(r)) or fold(r, g)
+        )
+        q_pdf = pd.DataFrame(
+            {
+                "query_id": ["sf", "sydney", "pacific", "arctic", "antarctic"],
+                "lat": [37.77, -33.87, -30.0, 85.0, -88.0],
+                "lng": [-122.42, 151.21, -140.0, 10.0, 45.0],
+            }
+        )
+        got = knn_join(
+            spark, images, spark.createDataFrame(q_pdf), k=5, res=9
+        ).toPandas()
+        assert len(folds) >= 3  # one fold per round
+        exp = knn_oracle(oracle_geo, q_pdf, k=5)
+        g = got.sort_values(["query_id", "rank"], ignore_index=True)
+        x = exp.sort_values(["query_id", "rank"], ignore_index=True)
+        assert g["image_id"].tolist() == x["image_id"].tolist()
+        assert np.allclose(g["dist_m"], x["dist_m"], rtol=1e-9, atol=1e-6)
+
+    def test_call_runs_bounded_jobs(self, spark, images):
+        """A 24-query call plus its collect runs at most 8 Spark jobs:
+        the batch collect, the seeding count and one probe per round."""
+        sc = spark.sparkContext
+        queries = datagen.generate_knn_queries(spark, n=24, k=5)
+        sc.setJobGroup("knn", "knn")
+        try:
+            knn_join(spark, images, queries, k=5, res=9).toPandas()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("knn")) <= 8
+
+
+class TestRowsWithoutLocation:
+    """A caption without a usable location gives NULL lat, lng, cell and
+    bc0, never cell 0, and every operator answers over the valid rows."""
+
+    BAD = [None, "a photo", "x at abc,1.0", "x at 95.0,200.0"]
+    PARENT_OF_0 = 40532396646596607  # h3_to_parent_col(0, 9): not a cell
+
+    @pytest.mark.parametrize("n_valid", [40, 0], ids=["bad_rows", "empty"])
+    def test_operators_answer_over_valid_rows(self, spark, oracle_geo,
+                                              tmp_path, n_valid):
+        from h3_rs_spark.functions.native import h3_to_parent_col
+        from h3_rs_spark.h3core import indexing
+        from h3_rs_spark.operators.pip_join import pip_count
+
+        raw = datagen.images_oracle_pdf(n_valid + 4, 16, 16)
+        raw.loc[n_valid:, "caption"] = self.BAD
+        if not n_valid:
+            raw = raw.iloc[:0]
+        # every field nullable: a null caption is one of the bad kinds
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in datagen.IMAGES_SCHEMA]
+        )
+        df, path = spark.createDataFrame(raw, schema), str(tmp_path / "img")
+        if n_valid:
+            io.write_images(df, path)
+        # an empty write leaves no part file to read a schema back from
+        images = io.read_images(spark, path) if n_valid else io.with_geo(df)
+        valid = oracle_geo.iloc[:n_valid]
+        lat, lng = valid["lat"].to_numpy(), valid["lng"].to_numpy()
+
+        # collect, not toPandas: a nullable cell column would go float
+        got = sorted(
+            images.select("image_id", "lat", "lng", "cell", "bc0").collect()
+        )
+        assert [tuple(r)[1:] for r in got[n_valid:]] == [(None,) * 4] * (
+            len(raw) - n_valid
+        )
+        assert [tuple(r)[1:4] for r in got[:n_valid]] == list(
+            zip(lat, lng, faceijk.geo_to_h3(lat, lng, 9).tolist())
+        )
+
+        polys = {k: p for k, p in datagen.POLYGONS.items() if p[2] == 9}
+        pip = {
+            r["polygon_id"]: r["n_images"]
+            for r in pip_count(spark, images, polys).collect()
+        }
+        want = {
+            pid: int(regions.points_in_polygon(lng, lat, ext, holes).sum())
+            for pid, (ext, holes, _res) in polys.items()
+        }
+        assert pip == {p: n for p, n in want.items() if n}
+
+        queries = datagen.generate_knn_queries(spark, n=4, k=3)
+        knn = knn_join(spark, images, queries, k=3, res=9).toPandas()
+        exp = knn_oracle(valid, queries.toPandas(), k=3)
+        assert knn.sort_values(["query_id", "rank"])["image_id"].tolist() == (
+            exp.sort_values(["query_id", "rank"])["image_id"].tolist()
+        )
+
+        tiles = tile_assign(images, tile_px=8, res=15).withColumn(
+            "parent", h3_to_parent_col("cell", 9)
+        )
+        roll = {
+            r["parent"]: r["n_tiles"]
+            for r in skew.salted_aggregate(
+                tiles, "parent", [("n_tiles", "count")], salt_buckets=4,
+                salt_source="image_id",
+            ).collect()
+        }
+        # 16x16 images, 8 px tiles: centres at +-4 px, 1e-6 deg per px
+        dy, dx = (d.ravel() for d in np.meshgrid([-4e-6, 4e-6], [-4e-6, 4e-6]))
+        cells = faceijk.geo_to_h3(
+            (lat[:, None] - dy).ravel(), (lng[:, None] + dx).ravel(), 15
+        )
+        parents, counts = np.unique(
+            indexing.to_parent(cells, 9), return_counts=True
+        )
+        assert roll == dict(zip(parents.tolist(), counts.tolist()))
+        assert not {0, self.PARENT_OF_0} & ({r["cell"] for r in got} | set(roll))
 
 
 class TestTiling:
@@ -333,16 +464,11 @@ def test_polyfill_distributed_plan_shape(spark):
 
 
 def test_knn_sql_parity(spark):
-    """The kNN round loop's SQL-text haversine and guaranteed-radius
-    expressions (r7 driver-latency fix) must be BIT-identical to the
-    Column forms — rank ties and the completion proof depend on exact
-    doubles."""
+    """The kNN round loop's SQL-text haversine (r7 driver-latency fix)
+    must be BIT-identical to the Column form — rank ties and the
+    completion proof depend on exact doubles."""
     from h3_rs_spark.functions.native import haversine_m_col
-    from h3_rs_spark.operators.knn import (
-        _HAVERSINE_SQL,
-        _guaranteed_radius_col,
-        _safe_radius_sql,
-    )
+    from h3_rs_spark.operators.knn import _HAVERSINE_SQL
 
     rng = np.random.default_rng(7)
     n = 500
@@ -352,40 +478,27 @@ def test_knn_sql_parity(spark):
             "lng": rng.uniform(-180, 180, n),
             "q_lat": np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
             "q_lng": rng.uniform(-180, 180, n),
-            "ring": rng.integers(1, 10_000, n).astype(np.int64),
-            # the loop state carries res_eff as INT (state select casts)
-            "res_eff": rng.integers(0, 16, n).astype(np.int32),
         }
     )
     df = spark.createDataFrame(pdf)
     want = df.select(
         haversine_m_col(
             F.col("q_lat"), F.col("q_lng"), F.col("lat"), F.col("lng")
-        ).alias("h"),
-        _guaranteed_radius_col(F.col("ring"), F.col("res_eff")).alias(
-            "s"
-        ),
+        ).alias("h")
     ).toPandas()
-    got = df.selectExpr(
-        f"{_HAVERSINE_SQL} AS h", f"{_safe_radius_sql()} AS s"
-    ).toPandas()
+    got = df.selectExpr(f"{_HAVERSINE_SQL} AS h").toPandas()
     # bitwise equality, not approx: the trees must be identical
     assert (
         want["h"].to_numpy().tobytes() == got["h"].to_numpy().tobytes()
     )
-    assert (
-        want["s"].to_numpy().tobytes() == got["s"].to_numpy().tobytes()
-    )
 
 
 def test_children_one_level_sql_parity(spark):
-    """The SQL-text twin of children_one_level_col (r7 driver-latency
-    fix) must produce the exact same children arrays, including the
-    pentagon digit skip and across resolutions."""
-    from h3_rs_spark.operators.hierarchy_ops import (
-        children_one_level_col,
-        children_one_level_sql,
-    )
+    """The JVM children expression must produce the kernel's
+    to_children_batch children, including the pentagon digit skip and
+    across resolutions."""
+    from h3_rs_spark.h3core import indexing
+    from h3_rs_spark.operators.hierarchy_ops import children_one_level_sql
 
     # res-0 pentagon, a res-2 hexagon, a res-8 hexagon, res-1 pentagon
     cells = [
@@ -395,19 +508,22 @@ def test_children_one_level_sql_parity(spark):
         0x81083FFFFFFFFFF,
     ]
     df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-    col_form = {
-        r["cell"]: sorted(r["kids"])
-        for r in df.select(
-            "cell", children_one_level_col("cell").alias("kids")
-        ).collect()
-    }
     sql_form = {
         r["cell"]: sorted(r["kids"])
         for r in df.selectExpr(
             "cell", f"{children_one_level_sql('cell')} AS kids"
         ).collect()
     }
-    assert col_form == sql_form
+    kernel = {
+        c: sorted(
+            indexing.to_children_batch(
+                np.array([c], dtype=np.int64),
+                int(indexing.get_resolution(np.array([c]))[0]) + 1,
+            )[1].tolist()
+        )
+        for c in cells
+    }
+    assert sql_form == kernel
     # pentagons skip the K digit: 6 children, hexagons 7
     assert len(sql_form[0x8031FFFFFFFFFFF]) == 6
     assert len(sql_form[0x824887FFFFFFFFF]) == 7
@@ -496,40 +612,61 @@ class TestHexRanges:
 
 
 class TestKnnSeedFold:
-    def test_fold_matches_escalate_state(self, spark):
-        """The seeder's Python fold of a base-res ring to (res_eff, ring)
-        equals the round loop's _escalate_state on the same seed, at its
-        (res + 1) // 2 unroll depth, for every res and ring size from
-        in-range to the coarsest ocean start."""
-        from h3_rs_spark.operators.knn import _escalate_state, _fold_seed
+    # (res_eff, ring) -> folded (res_eff, ring), captured from the
+    # round loop's former Spark-side escalation: seeds at res_eff = res
+    # for res 0..15 over RINGS, and widened starts below a res-15 base
+    # over WIDE. Row i of each table is res_eff i.
+    RINGS = [1, 2, 16, 17, 112, 10**4, 16 * 7**7]
+    SEEDS = [
+        [(0, 1), (0, 2), (0, 16), (0, 17),
+         (0, 112), (0, 10000), (0, 13176688)],
+        [(1, 1), (1, 2), (1, 16), (0, 4), (0, 16), (0, 16), (0, 16)],
+        [(2, 1), (2, 2), (2, 16), (0, 4), (0, 16), (0, 16), (0, 16)],
+        [(3, 1), (3, 2), (3, 16), (1, 4), (1, 16), (0, 16), (0, 16)],
+        [(4, 1), (4, 2), (4, 16), (2, 4), (2, 16), (0, 16), (0, 16)],
+        [(5, 1), (5, 2), (5, 16), (3, 4), (3, 16), (0, 16), (0, 16)],
+        [(6, 1), (6, 2), (6, 16), (4, 4), (4, 16), (0, 16), (0, 16)],
+        [(7, 1), (7, 2), (7, 16), (5, 4), (5, 16), (0, 6), (0, 16)],
+        [(8, 1), (8, 2), (8, 16), (6, 4), (6, 16), (0, 6), (0, 16)],
+        [(9, 1), (9, 2), (9, 16), (7, 4), (7, 16), (1, 6), (0, 16)],
+        [(10, 1), (10, 2), (10, 16), (8, 4), (8, 16), (2, 6), (0, 16)],
+        [(11, 1), (11, 2), (11, 16), (9, 4), (9, 16), (3, 6), (0, 16)],
+        [(12, 1), (12, 2), (12, 16), (10, 4), (10, 16), (4, 6), (0, 16)],
+        [(13, 1), (13, 2), (13, 16), (11, 4), (11, 16), (5, 6), (0, 16)],
+        [(14, 1), (14, 2), (14, 16), (12, 4), (12, 16), (6, 6), (0, 16)],
+        [(15, 1), (15, 2), (15, 16), (13, 4), (13, 16), (7, 6), (1, 16)],
+    ]
+    WIDE = [4, 8, 20, 64]
+    WIDENED = [
+        [(0, 4), (0, 8), (0, 20), (0, 64)],
+        [(1, 4), (1, 8), (0, 4), (0, 11)],
+        [(2, 4), (2, 8), (0, 4), (0, 11)],
+        [(3, 4), (3, 8), (1, 4), (1, 11)],
+        [(4, 4), (4, 8), (2, 4), (2, 11)],
+        [(5, 4), (5, 8), (3, 4), (3, 11)],
+        [(6, 4), (6, 8), (4, 4), (4, 11)],
+        [(7, 4), (7, 8), (5, 4), (5, 11)],
+        [(8, 4), (8, 8), (6, 4), (6, 11)],
+        [(9, 4), (9, 8), (7, 4), (7, 11)],
+        [(10, 4), (10, 8), (8, 4), (8, 11)],
+        [(11, 4), (11, 8), (9, 4), (9, 11)],
+        [(12, 4), (12, 8), (10, 4), (10, 11)],
+        [(13, 4), (13, 8), (11, 4), (11, 11)],
+        [(14, 4), (14, 8), (12, 4), (12, 11)],
+    ]
 
-        rings = [1, 2, 16, 17, 112, 10**4, 16 * 7**7]
-        parts = [
-            _escalate_state(
-                spark.createDataFrame(
-                    pd.DataFrame(
-                        {"res": res, "base_ring": rings,
-                         "res_eff": res, "ring": rings}
-                    ),
-                    "res int, base_ring long, res_eff int, ring long",
-                ),
-                res,
-            )
-            for res in range(16)
-        ]
-        folded = parts[0]
-        for p in parts[1:]:
-            folded = folded.unionByName(p)
-        got = {
-            (r["res"], r["base_ring"]): (r["res_eff"], r["ring"])
-            for r in folded.collect()
-        }
-        want = {
-            (res, ring): _fold_seed(res, ring)
-            for res in range(16)
-            for ring in rings
-        }
-        assert got == want
+    def test_fold_matches_parent_table(self):
+        """The one vectorized fold reproduces the former Spark fold on
+        every seed and widened start, in one call per table."""
+        from h3_rs_spark.operators.knn import _fold
+
+        for rings, table in ((self.RINGS, self.SEEDS),
+                             (self.WIDE, self.WIDENED)):
+            res_eff = np.repeat(np.arange(len(table)), len(rings))
+            got = _fold(res_eff, np.tile(rings, len(table)))
+            assert list(zip(*(a.tolist() for a in got))) == [
+                pair for row in table for pair in row
+            ]
 
 
 class TestKnnEdgeCases:
