@@ -103,6 +103,122 @@ class TestPipJoin:
         assert "bc0" in plan  # coarse-cell prefilter present
 
 
+def _box(lng0, lat0, lng1, lat1):
+    return [(lng0, lat0), (lng1, lat0), (lng1, lat1), (lng0, lat1)]
+
+
+def _lat_ring(lat, eastward=True, n=12):
+    lngs = np.linspace(-180.0, 180.0, n, endpoint=False)
+    return [(float(x), lat) for x in (lngs if eastward else lngs[::-1])]
+
+
+def _pentagon_centre():
+    from h3_rs_spark.h3core import indexing
+    from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
+
+    cell = indexing.from_components(
+        PENTAGON_BASE_CELLS[:1].astype(np.int64), 0, np.full((1, 15), 7)
+    )
+    lat, lng = faceijk.h3_to_geo(cell)
+    return float(lat[0]), float(lng[0])
+
+
+_PENT_LAT, _PENT_LNG = _pentagon_centre()
+
+# polygon_id -> ((exterior, holes, res), sampling box (lat0, lat1, lng0,
+# lng1) with lng1 > 180 wrapping); the open-ocean box gets no points
+ADVERSARIAL = {
+    "antimeridian_box": (
+        (_box(179.0, -1.0, -179.0, 1.0), [], 6), (-1.5, 1.5, 178.5, 181.5)
+    ),
+    "north_cap_res3": ((_lat_ring(80.0), [], 3), (77.0, 90.0, -180.0, 180.0)),
+    "south_cap_westward": (
+        (_lat_ring(-80.0, eastward=False), [], 3), (-90.0, -77.0, -180.0, 180.0)
+    ),
+    "pentagon_centred": (
+        (_box(_PENT_LNG - 3.0, _PENT_LAT - 1.5, _PENT_LNG + 3.0,
+              _PENT_LAT + 1.5), [], 5),
+        (_PENT_LAT - 2.0, _PENT_LAT + 2.0, _PENT_LNG - 4.0, _PENT_LNG + 4.0),
+    ),
+    "sf_two_holes": (
+        datagen.POLYGONS["sf_hexagon_2holes"], (37.70, 37.82, -122.53, -122.35)
+    ),
+    "sub_cell_triangle": (
+        ([(-73.9900, 40.7500), (-73.9896, 40.7500), (-73.9898, 40.7503)], [], 9),
+        (40.7495, 40.7508, -73.9905, -73.9891),
+    ),
+    "open_ocean": ((_box(-140.0, -50.0, -139.0, -49.0), [], 7), None),
+}
+
+
+@pytest.fixture(scope="module")
+def adversarial_table(spark):
+    """Points placed in and around each adversarial polygon: uniform in
+    a padded box plus jittered copies of every ring vertex."""
+    rng = np.random.default_rng(11)
+    lat, lng = [], []
+    for (ext, holes, _res), box in ADVERSARIAL.values():
+        if box is None:
+            continue
+        lat0, lat1, lng0, lng1 = box
+        lat.append(rng.uniform(lat0, lat1, 300))
+        lng.append(rng.uniform(lng0, lng1, 300))
+        verts = np.concatenate([np.asarray(r, dtype=np.float64)
+                                for r in [ext, *holes]])
+        for scale in (1e-4, 1e-2):
+            lng.append(verts[:, 0] + rng.normal(0.0, scale, len(verts)))
+            lat.append(verts[:, 1] + rng.normal(0.0, scale, len(verts)))
+    lat = np.clip(np.concatenate(lat), -89.999999, 89.999999)
+    lng = (np.concatenate(lng) + 180.0) % 360.0 - 180.0
+    captions = [f"p at {a:.6f},{b:.6f}" for a, b in zip(lat, lng)]
+    raw = spark.createDataFrame(
+        pd.DataFrame({"image_id": [f"a{i:05d}" for i in range(len(lat))],
+                      "caption": captions})
+    )
+    df = io.with_geo(raw).cache()
+    df.count()
+    return df
+
+
+class TestAdversarialPip:
+    """pip_count on hard geometry against the even-odd ray-cast oracle
+    over the table's own rows: the antimeridian, both poles (opposite
+    windings), a pentagon, holes, a polygon smaller than its cells, an
+    empty result and an empty table."""
+
+    @pytest.mark.parametrize("pid", sorted(ADVERSARIAL))
+    def test_matches_ray_cast_oracle(self, spark, adversarial_table, pid):
+        from h3_rs_spark.operators.pip_join import pip_count
+
+        polys = {pid: ADVERSARIAL[pid][0]}
+        ext, holes, _res = polys[pid]
+        rows = adversarial_table.select("image_id", "lat", "lng").toPandas()
+        inside = regions.points_in_polygon(
+            rows["lng"].to_numpy(), rows["lat"].to_numpy(), ext, holes
+        )
+        want = set(rows.loc[inside, "image_id"])
+        got = {
+            r["image_id"]
+            for r in pip_join(spark, adversarial_table, polys).collect()
+        }
+        counts = {
+            r["polygon_id"]: r["n_images"]
+            for r in pip_count(spark, adversarial_table, polys).collect()
+        }
+        assert got == want, (len(got), len(want), sorted(got ^ want)[:5])
+        assert counts == ({pid: len(want)} if want else {})
+        # every case but the ocean holds points on both sides
+        assert (len(want) > 0) == (pid != "open_ocean")
+        assert len(want) < len(rows)
+
+    def test_empty_table(self, spark, adversarial_table):
+        from h3_rs_spark.operators.pip_join import pip_count
+
+        empty = adversarial_table.limit(0)
+        polys = {"sf_two_holes": ADVERSARIAL["sf_two_holes"][0]}
+        assert pip_count(spark, empty, polys).collect() == []
+
+
 class TestKnn:
     @pytest.mark.parametrize("n,k", [(24, 5), (8, 3)])
     def test_exact_vs_oracle(self, spark, images, oracle_geo, n, k):
