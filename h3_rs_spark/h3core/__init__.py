@@ -19,7 +19,6 @@ from .indexing import (  # noqa: F401
     max_children,
 )
 from .regions import (  # noqa: F401
-    cells_to_boundary_split,
     points_in_polygon,
     polyfill,
     polyfill_compact,

@@ -29,13 +29,9 @@ def to_children(h, child_res: int) -> np.ndarray:
 def uncompact(cells: np.ndarray, res: int) -> np.ndarray:
     """Expand a multi-resolution set to uniform resolution `res`."""
     cells = np.atleast_1d(np.asarray(cells, dtype=np.int64))
-    rs = ix.get_resolution(cells)
-    if (rs > res).any():
+    if (ix.get_resolution(cells) > res).any():
         raise ValueError("uncompact: input cell finer than target res")
-    out = [cells[rs == res]]
-    for c in cells[rs < res]:
-        out.append(ix.to_children(int(c), res))
-    return np.concatenate(out) if out else np.empty(0, dtype=np.int64)
+    return ix.to_children_batch(cells, res)[1]
 
 
 def compact(cells: np.ndarray) -> np.ndarray:

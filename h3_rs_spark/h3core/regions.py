@@ -1,31 +1,31 @@
-"""Polygon <-> cell regions: polyfill, point-in-polygon, boundary split.
+"""Polygon <-> cell regions: polyfill, polygon cover, point-in-polygon,
+dissolve.
 
 polyfill matches H3 v3.6 semantics: all cells at `res` whose *centroid*
-lies inside the polygon (exterior minus holes). Candidate generation is a
-vectorized lat/lng lattice scan of the (padded) bounding box at sub-cell
-spacing — every cell whose center is in the box is guaranteed to be
-sampled — followed by exact vectorized ray-casting on the centroids.
+lies inside the polygon (exterior minus holes). It is built on
+polygon_cover, one coarse-to-fine walk from the 122 res-0 cells that
+decides a cell from the distance between its centre and the polygon
+outline, so its cost grows with the perimeter, not the bounding box.
+The PIP join and the distributed polyfill use the same cover.
 
-Parity targets: /root/reference/src/region.rs polyfill tests (SF hexagon
-@Z9 == 1253 cells — the count implied by the reference's own
+Parity targets: the reference's src/region.rs polyfill tests (SF
+hexagon @Z9 == 1253 cells — the count implied by the reference's own
 compact/uncompact golden, src/hierarchy.rs:145-148 — Sydney @Z9 > 10,
 null-island box @Z4 > 10); the empty-hole-ring rule (src/raw.rs:122-125)
 and implicit ring auto-closing (src/raw.rs:178-179) are honored.
+Longitudes are degrees in [-180, 180].
 
 Antimeridian-crossing polygons are supported (detected by a >180 deg
-longitude jump; scan and ray cast shift into the [0,360) domain).
+longitude jump; the ray cast shifts into the [0,360) domain).
 Pole-CONTAINING polygons are supported beyond the reference (H3 v3.6
 itself cannot fill them): a ring whose longitudes wind a full +-360 deg
 encircles a pole — for the EXTERIOR, interior is the side left of
 travel (net eastward winding encloses the north side); a polar HOLE's
-winding is ignored (RFC 7946 holes wind opposite to the exterior, so it
-cannot be trusted) and the hole excludes the exterior pole's cap — and
-both
-the candidate scan (polar-cap lattice, per-row longitude stepping) and
-the containment test (meridian ray toward the contained pole, even
-crossing parity) switch to polar forms. Exactness is pinned by
-constant-latitude cap/annulus fixtures whose truth is enumerable
-(tests/test_h3_goldens.py::TestPolarPolyfill).
+winding is ignored and the hole excludes the exterior pole's cap. Their
+containment test is the meridian ray toward the contained pole (even
+crossing parity), and the walk never decides a cell whose reach touches
+a pole. Exactness is pinned by constant-latitude cap/annulus fixtures
+whose truth is enumerable (tests/test_h3_goldens.py::TestPolarPolyfill).
 """
 
 from __future__ import annotations
@@ -33,7 +33,9 @@ from __future__ import annotations
 import numpy as np
 
 from . import faceijk as fk
+from . import indexing as ix
 from .constants import EDGE_LENGTH_M, EARTH_RADIUS_KM
+from .hierarchy import compact, uncompact
 
 
 def _close_ring(ring: np.ndarray) -> np.ndarray:
@@ -118,51 +120,48 @@ def _shift_lng(lng: np.ndarray) -> np.ndarray:
     return np.where(lng < 0.0, lng + 360.0, lng)
 
 
-def _ring_contains(lng: np.ndarray, lat: np.ndarray, ring: np.ndarray):
-    pole = _polar_pole(ring)
-    if pole is not None:
-        return _points_in_polar_ring(lng, lat, ring, pole)
-    if _is_transmeridian(ring):
-        ring = ring.copy()
-        ring[:, 0] = _shift_lng(ring[:, 0])
-        lng = _shift_lng(np.asarray(lng, dtype=np.float64))
-    return points_in_ring(lng, lat, ring)
+def _framed_rings(exterior, holes) -> list:
+    """The polygon's rings in the frame containment is tested in, as
+    (ring, pole, shifted) triples, exterior first.
+
+    pole is +1/-1 for a pole-encircling ring (tested by the meridian ray
+    toward that pole, with short-way wrapped edge deltas), else None. A
+    polar HOLE's own winding is ignored: RFC 7946 holes wind opposite to
+    the exterior, so trusting it would pick the wrong pole and invert
+    containment. A polar hole inside a polar exterior can only exclude
+    the cap of the SAME pole the exterior contains, so it takes that
+    pole. shifted marks a planar ring moved into the [0, 360) longitude
+    domain so the planar ray cast never sees the +-180 seam: each
+    transmeridian ring on its own when any ring is polar, else every
+    ring by the exterior's test."""
+    ext = _close_ring(exterior)
+    rings = [ext] + _clean_holes(holes)
+    poles = [_polar_pole(r) for r in rings]
+    polar = any(p is not None for p in poles)
+    out = []
+    for i, (ring, pole) in enumerate(zip(rings, poles)):
+        if pole is not None and i and poles[0] is not None:
+            pole = poles[0]
+        shifted = pole is None and _is_transmeridian(ring if polar else ext)
+        if shifted:
+            ring = np.column_stack([_shift_lng(ring[:, 0]), ring[:, 1]])
+        out.append((ring, pole, shifted))
+    return out
 
 
 def points_in_polygon(
     lng: np.ndarray, lat: np.ndarray, exterior: np.ndarray, holes=None
 ) -> np.ndarray:
-    ext = _close_ring(exterior)
-    hls = _clean_holes(holes)
-    if _polar_pole(ext) is not None or any(
-        _polar_pole(h) is not None for h in hls
-    ):
-        # polar rings: per-ring containment (each ring may be polar or
-        # planar independently — an annulus's hole is itself polar).
-        # A polar HOLE's own winding is ignored: RFC 7946 holes wind
-        # opposite to the exterior, so trusting the hole's winding would
-        # pick the wrong pole and invert containment. Geometrically a
-        # polar hole inside a polar exterior can only exclude the cap of
-        # the SAME pole the exterior contains — use that pole directly.
-        ext_pole = _polar_pole(ext)
-        inside = _ring_contains(lng, lat, ext)
-        for hole in hls:
-            hole_pole = _polar_pole(hole)
-            if hole_pole is not None and ext_pole is not None:
-                inside &= ~_points_in_polar_ring(lng, lat, hole, ext_pole)
-            else:
-                inside &= ~_ring_contains(lng, lat, hole)
-        return inside
-    if _is_transmeridian(ext):
-        # shift polygon and points into the [0, 360) longitude domain so
-        # the planar ray cast never sees the +-180 seam
-        ext = ext.copy()
-        ext[:, 0] = _shift_lng(ext[:, 0])
-        hls = [np.column_stack([_shift_lng(h[:, 0]), h[:, 1]]) for h in hls]
-        lng = _shift_lng(np.asarray(lng, dtype=np.float64))
-    inside = points_in_ring(lng, lat, ext)
-    for hole in hls:
-        inside &= ~points_in_ring(lng, lat, hole)
+    """Even-odd containment (exterior minus holes) in the frame of
+    _framed_rings."""
+    lng = np.asarray(lng, dtype=np.float64)
+    inside = None
+    for ring, pole, shifted in _framed_rings(exterior, holes):
+        if pole is not None:
+            hit = _points_in_polar_ring(lng, lat, ring, pole)
+        else:
+            hit = points_in_ring(_shift_lng(lng) if shifted else lng, lat, ring)
+        inside = hit if inside is None else inside & ~hit
     return inside
 
 
@@ -180,185 +179,141 @@ def ring_area_m2(ring, radius_m: float = EARTH_RADIUS_KM * 1000.0) -> float:
     return float(abs(s) * radius_m * radius_m / 2.0)
 
 
-MAX_POLYFILL_CELLS = 5_000_000
+# driver cap on one level's candidate cells and on a polyfill's output
+MAX_POLYFILL_CELLS = 2_000_000
+
+# Bound on how far a cell's descendants at any finer res reach from its
+# centre, in edge lengths of the cell's res (EDGE_LENGTH_M). Aperture-7
+# children overhang their parent, so the cell's own outline is no
+# bound. The farthest descendant vertex measured 1.32 edge lengths out
+# (every res-0 and res-1 cell and sampled res 2-10 cells, 1-4 levels
+# down; 0.94 for the pentagons); pinned by
+# tests/test_h3_goldens.py::TestRegions::test_descendant_reach.
+REACH = 1.5
+
+# cells x segments per block of one walk level (2 MB per float64 array)
+_BLOCK = 1 << 18
+
+_RES0_CELLS = ix.from_components(
+    np.arange(122, dtype=np.int64), 0, np.full((122, 15), 7)
+)
 
 
-def _polar_band(ext: np.ndarray, res: int, pole: int):
-    """(band_lo, band_hi) latitudes the polar-cap scan must cover."""
-    edge_deg = np.degrees(EDGE_LENGTH_M[res] / (EARTH_RADIUS_KM * 1000.0))
-    pad = 2.5 * edge_deg
-    if pole > 0:
-        return float(ext[:, 1].min() - pad), 90.0
-    return -90.0, float(ext[:, 1].max() + pad)
+def _outline_segments(exterior, holes) -> np.ndarray:
+    """(M, 4) rows (lng0, lat0, dlng, dlat): every ring edge as a
+    straight segment of the frame points_in_polygon tests containment
+    in, so containment changes only across these segments. A planar
+    edge can span up to 360 deg of frame longitude; those are halved so
+    every segment spans at most 180 (see _outline_distance)."""
+    parts = []
+    for ring, pole, _shifted in _framed_rings(exterior, holes):
+        d = np.diff(ring[:, 0])
+        if pole is not None:
+            d = (d + 180.0) % 360.0 - 180.0
+        parts.append(np.column_stack([ring[:-1], d, np.diff(ring[:, 1])]))
+    seg = np.concatenate(parts)
+    wide = np.abs(seg[:, 2]) > 180.0
+    half = seg[wide] * [1.0, 1.0, 0.5, 0.5]
+    second = half + np.column_stack([half[:, 2:], np.zeros((len(half), 2))])
+    return np.concatenate([seg[~wide], half, second])
 
 
-def bbox_cell_estimate(ext: np.ndarray, res: int) -> float:
-    """Estimated lattice-scan candidate count for a ring's bbox at
-    `res` — the ONE formula both the driver-side scan guard and the
-    distributed-polyfill coarse-res picker use (operators/polyfill_dist),
-    so "fits the driver" always means the same thing."""
-    pole = _polar_pole(ext)
-    if pole is not None:
-        # spherical-zone area of the cap the scan covers / cell area
-        from .constants import HEX_AREA_M2
-
-        lo, hi = _polar_band(ext, res, pole)
-        r_m = EARTH_RADIUS_KM * 1000.0
-        area = (
-            2.0
-            * np.pi
-            * r_m
-            * r_m
-            * abs(np.sin(np.radians(hi)) - np.sin(np.radians(lo)))
-        )
-        return float(2.0 * area / HEX_AREA_M2[res])
-    if _is_transmeridian(ext):
-        ext = ext.copy()
-        ext[:, 0] = _shift_lng(ext[:, 0])
-    lng_min, lat_min = ext.min(axis=0)
-    lng_max, lat_max = ext.max(axis=0)
-    edge_deg = np.degrees(EDGE_LENGTH_M[res] / (EARTH_RADIUS_KM * 1000.0))
-    return float(
-        (lat_max - lat_min + 5 * edge_deg)
-        * (lng_max - lng_min + 5 * edge_deg)
-        / (0.7 * edge_deg) ** 2
-    )
+def _outline_distance(lat, lng, kx, seg) -> np.ndarray:
+    """Distance from each point to the nearest segment, in a local degree
+    frame: longitudes wrapped relative to the point and scaled by kx
+    (per point), latitudes as they are. Each segment is placed by its
+    wrapped midpoint, which puts every segment point within 90 deg of
+    longitude of the point at its true offset."""
+    k = kx[:, None]
+    mid = seg[:, 0] + 0.5 * seg[:, 2]
+    ax = ((mid - lng[:, None] + 180.0) % 360.0 - 180.0 - 0.5 * seg[:, 2]) * k
+    ay = seg[:, 1] - lat[:, None]
+    dx, dy = seg[:, 2] * k, seg[:, 3]
+    t = -(ax * dx + ay * dy) / np.maximum(dx * dx + dy * dy, 1e-300)
+    t = np.clip(t, 0.0, 1.0)
+    return np.sqrt(((ax + t * dx) ** 2 + (ay + t * dy) ** 2).min(axis=1))
 
 
-def _bbox_scan_cells(ext: np.ndarray, res: int) -> np.ndarray:
-    """All cells whose centroid can lie in the (padded) bbox: lat/lng
-    lattice scan at sub-inradius spacing, encoded and deduped. Raises
-    when the scan would exceed MAX_POLYFILL_CELLS candidates.
-    Transmeridian rings scan in the [0, 360) longitude domain (the
-    lattice longitudes may exceed 180; geo_to_h3 wraps them exactly —
-    test_world_wrapping). Polar rings scan the full-longitude cap with
-    PER-ROW longitude stepping (one global step sized for the extreme
-    latitude would undersample the low-latitude rows)."""
-    pole = _polar_pole(ext)
-    if pole is not None:
-        est = bbox_cell_estimate(ext, res)
-        if est > MAX_POLYFILL_CELLS * 4:
-            raise ValueError(
-                f"polyfill: polar cap at res {res} implies ~{est:.2e} "
-                f"candidate cells (> {MAX_POLYFILL_CELLS}); fill coarser "
-                "and uncompact distributively (operators.hierarchy_ops)"
-            )
-        edge_deg = np.degrees(EDGE_LENGTH_M[res] / (EARTH_RADIUS_KM * 1000.0))
-        step_lat = 0.7 * edge_deg
-        lo, hi = _polar_band(ext, res, pole)
-        lats = np.clip(np.arange(lo, hi + step_lat, step_lat), -89.9999, 89.9999)
-        rows_lat, rows_lng = [], []
-        for la in lats:
-            step_lng = step_lat / max(np.cos(np.radians(la)), 1e-4)
-            lngs = np.arange(-180.0, 180.0, step_lng)
-            rows_lng.append(lngs)
-            rows_lat.append(np.full(lngs.shape, la))
-        # the pole cell itself (the lattice rows stop short of ±90)
-        rows_lat.append(np.array([89.9999 if pole > 0 else -89.9999]))
-        rows_lng.append(np.array([0.0]))
-        cells = np.unique(
-            fk.geo_to_h3(np.concatenate(rows_lat), np.concatenate(rows_lng), res)
-        )
-        return cells[cells != 0]
-    if _is_transmeridian(ext):
-        ext = ext.copy()
-        ext[:, 0] = _shift_lng(ext[:, 0])
-    lng_min, lat_min = ext.min(axis=0)
-    lng_max, lat_max = ext.max(axis=0)
+def _split_level(cells, r: int, seg, exterior, holes):
+    """(interior, undecided) among res-r cells; see polygon_cover."""
+    rho = np.degrees(REACH * EDGE_LENGTH_M[r] / (EARTH_RADIUS_KM * 1000.0))
+    lat, lng = fk.h3_to_geo(cells)
+    top = np.abs(lat) + rho
+    far = top < 90.0
+    far[far] = _outline_distance(
+        lat[far], lng[far], np.cos(np.radians(top[far])), seg
+    ) > np.sqrt(2.0) * rho
+    inside = far.copy()
+    inside[far] = points_in_polygon(lng[far], lat[far], exterior, holes)
+    return cells[inside], cells[~far]
 
-    edge_deg = np.degrees(EDGE_LENGTH_M[res] / (EARTH_RADIUS_KM * 1000.0))
-    est = bbox_cell_estimate(ext, res)
-    if est > MAX_POLYFILL_CELLS * 4:
-        raise ValueError(
-            f"polyfill: bbox at res {res} implies ~{est:.2e} candidate "
-            f"cells (> {MAX_POLYFILL_CELLS}); fill at a coarser res and "
-            "uncompact distributively (operators.hierarchy_ops)"
-        )
 
-    pad = 2.5 * edge_deg
-    step_lat = 0.7 * edge_deg
-    cos_lat = max(
-        0.05, np.cos(np.radians(max(abs(lat_min - pad), abs(lat_max + pad))))
-    )
-    step_lng = step_lat / cos_lat
-    lats = np.arange(lat_min - pad, lat_max + pad, step_lat)
-    lngs = np.arange(lng_min - pad, lng_max + pad, step_lng)
-    glng, glat = np.meshgrid(lngs, lats)
-    cells = np.unique(fk.geo_to_h3(glat.ravel(), glng.ravel(), res))
-    return cells[cells != 0]
+def polygon_cover(exterior, holes, res: int):
+    """The PIP-join build set as (interior, boundary) cells.
+
+    interior: a mixed-resolution antichain; every res-`res` descendant
+    of an interior cell lies entirely inside the polygon, so points
+    there match with no refinement. boundary: res-`res` cells, disjoint
+    from the interior's descendants, holding every other cell that can
+    contain an inside point. Boundary matches are refined by exact ray
+    casting, so an undecided cell here only costs a broadcast row.
+
+    The walk runs coarse to fine from the 122 res-0 cells. At level r a
+    cell's descendants lie within rho = REACH * EDGE_LENGTH_M[r] of its
+    centre. In a frame whose longitudes are scaled by the cosine of the
+    highest latitude that reach touches, every such point is within
+    sqrt(2) * rho (in degrees) of the centre. So a cell whose reach
+    misses both poles and whose centre is farther than that from every
+    outline segment holds no outline point: it is interior when its
+    centre is inside, else dropped. Undecided cells split into their
+    children; at `res` they are the boundary. The work grows with the
+    perimeter, not the area."""
+    seg = _outline_segments(exterior, holes)
+    step = max(1, _BLOCK // seg.shape[0])
+    cells, interior = _RES0_CELLS, []
+    for r in range(res + 1):
+        if r:
+            if 7 * cells.shape[0] > MAX_POLYFILL_CELLS:
+                raise ValueError(
+                    f"polygon_cover: ~{7 * cells.shape[0]:.2e} outline "
+                    f"cells at res {r} (> {MAX_POLYFILL_CELLS}); fill at a "
+                    "coarser res"
+                )
+            cells = ix.to_children_batch(cells, r)[1]
+        if not cells.size:
+            break
+        # blocks keep the cells x segments arrays under _BLOCK elements
+        parts = [
+            _split_level(cells[s : s + step], r, seg, exterior, holes)
+            for s in range(0, cells.shape[0], step)
+        ]
+        interior += [inner for inner, _ in parts]
+        cells = np.concatenate([undecided for _, undecided in parts])
+    return np.concatenate(interior), cells
 
 
 def polyfill(exterior, holes, res: int) -> np.ndarray:
-    """All cells at `res` whose centroid is inside the polygon.
-
-    Driver-side kernel for dimension-table polygons (SURVEY.md §2.6). A
-    bbox whose estimated cell count exceeds MAX_POLYFILL_CELLS raises —
-    at that scale fill coarse then `uncompact`/distribute via
-    operators.hierarchy_ops instead of materializing on the driver."""
-    ext = _close_ring(np.asarray(exterior, dtype=np.float64))
-    cells = _bbox_scan_cells(ext, res)
-
-    clat, clng = fk.h3_to_geo(cells)
-    inside = points_in_polygon(clng, clat, exterior, holes)
-    return cells[inside]
+    """All cells at `res` whose centroid is inside the polygon: the
+    polygon_cover interior expanded to `res`, plus the boundary cells
+    whose centroid is inside. Raises when that is more than
+    MAX_POLYFILL_CELLS cells; fill those with
+    operators.polyfill_dist.polyfill_distributed instead."""
+    interior, boundary = polygon_cover(exterior, holes, res)
+    n = int(np.sum(7 ** (res - ix.get_resolution(interior)))) + len(boundary)
+    if n > MAX_POLYFILL_CELLS:
+        raise ValueError(
+            f"polyfill: ~{n:.2e} cells at res {res} (> "
+            f"{MAX_POLYFILL_CELLS}); use polyfill_distributed"
+        )
+    lat, lng = fk.h3_to_geo(boundary)
+    inside = boundary[points_in_polygon(lng, lat, exterior, holes)]
+    return np.sort(np.concatenate([uncompact(interior, res), inside]))
 
 
 def polyfill_compact(exterior, holes, res: int) -> np.ndarray:
     """polyfill then compact (reference hardcodes Z9 at
     src/hierarchy.rs:112; here res is a real parameter)."""
-    from .hierarchy import compact
-
     return compact(polyfill(exterior, holes, res))
-
-
-def polygon_cover(exterior, holes, res: int):
-    """Exact PIP-join build set: (interior_cells, boundary_cells).
-
-    interior: cells entirely inside the polygon (centroid + all vertices)
-    — points there match with no refinement.
-    boundary: every other cell that could contain a point inside the
-    polygon: cells with mixed vertex containment, cells containing a
-    polygon ring vertex, and a one-ring dilation to catch corner slivers
-    clipped by a polygon edge without flipping any hex vertex. Boundary
-    matches are refined by exact ray casting, so over-inclusion here only
-    costs a few extra broadcast rows, never correctness (exactness vs the
-    brute-force oracle is asserted in tests/test_operators.py).
-    """
-    from .traversal import neighbors as _neighbors
-
-    ext = _close_ring(np.asarray(exterior, dtype=np.float64))
-    cells = _bbox_scan_cells(ext, res)
-
-    # classify by centroid + vertex containment
-    clat, clng = fk.h3_to_geo(cells)
-    c_in = points_in_polygon(clng, clat, exterior, holes)
-    blat, blng = fk.h3_to_geo_boundary(cells)
-    flat_lat, flat_lng = blat.ravel(), blng.ravel()
-    ok = ~np.isnan(flat_lat)
-    v_in = np.zeros(flat_lat.shape, dtype=bool)
-    v_in[ok] = points_in_polygon(flat_lng[ok], flat_lat[ok], exterior, holes)
-    v_in_m = v_in.reshape(blat.shape)
-    n_verts = (~np.isnan(blat)).sum(axis=1)
-    n_in = np.where(~np.isnan(blat), v_in_m, False).sum(axis=1)
-
-    all_in = c_in & (n_in == n_verts)
-    none_in = (~c_in) & (n_in == 0)
-    mixed = ~(all_in | none_in)
-
-    # cells containing polygon ring vertices
-    rings = [ext] + _clean_holes(holes)
-    rv_lng = np.concatenate([r[:, 0] for r in rings])
-    rv_lat = np.concatenate([r[:, 1] for r in rings])
-    rv_cells = np.unique(fk.geo_to_h3(rv_lat, rv_lng, res))
-
-    b0 = np.unique(np.concatenate([cells[mixed], rv_cells]))
-    if b0.size:
-        _, dil = _neighbors(b0)
-        boundary = np.unique(np.concatenate([b0, dil]))
-    else:
-        boundary = b0
-    interior = np.setdiff1d(cells[all_in], boundary, assume_unique=False)
-    return interior, boundary
 
 
 def cells_to_multipolygon(cells: np.ndarray):
@@ -453,20 +408,3 @@ def cells_to_multipolygon(cells: np.ndarray):
             )
         rings.append([(lng, lat) for lat, lng in ring])
     return rings
-
-
-def cells_to_boundary_split(cells: np.ndarray, exterior, holes=None):
-    """Split a polyfill cell set into (interior, boundary) by whether the
-    cell's boundary polygon crosses the polygon outline — boundary cells
-    need exact per-point PIP refinement in the join, interior cells don't.
-    A cell is interior iff all its vertices are inside the polygon."""
-    cells = np.asarray(cells, dtype=np.int64)
-    blat, blng = fk.h3_to_geo_boundary(cells)  # (N, 6), NaN-padded
-    flat_lat = blat.ravel()
-    flat_lng = blng.ravel()
-    ok = ~np.isnan(flat_lat)
-    inside = np.zeros(flat_lat.shape, dtype=bool)
-    inside[ok] = points_in_polygon(flat_lng[ok], flat_lat[ok], exterior, holes)
-    inside |= ~ok  # NaN padding doesn't disqualify
-    all_in = inside.reshape(blat.shape).all(axis=1)
-    return cells[all_in], cells[~all_in]

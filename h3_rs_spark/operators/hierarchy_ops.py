@@ -222,42 +222,27 @@ def uncompact_cells_df(
     res: int,
     cell_col: str = "cell",
     min_res: int | None = None,
-    max_res: int | None = None,
 ) -> DataFrame:
     """Expand a mixed-res cell relation to uniform `res` (children
-    explode; cells already at `res` pass through).
+    explode; cells already at `res` pass through, finer rows are
+    dropped).
 
     One pure-JVM Generate per resolution level (children_one_level_sql
     — rows already at `res` pass through as single-element arrays), so
     the whole expansion stays inside WholeStageCodegen with no
-    JVM->Python Arrow transfer (r7; previously an Arrow children UDF
-    shipped up to 7^4-element arrays per row across the boundary).
-    Every _MAX_EXPLODE_LEVELS levels the relation is redistributed so
-    a deep fan-out (7^4 per stage) spreads across the cluster instead
-    of amplifying within one task.
+    JVM->Python Arrow transfer. Every _MAX_EXPLODE_LEVELS levels the
+    relation is redistributed so a deep fan-out (7^4 per stage) spreads
+    across the cluster instead of amplifying within one task.
 
     min_res: optional caller-known coarsest input res — skips the one
     derivation job. Understating it only adds pass-through explode
-    levels (each row wraps in a 1-element array), never wrongness.
-
-    max_res: optional caller-known FINEST input res. When max_res <
-    res (a uniformly-coarse relation, e.g. a polygon cover), the
-    already-at-res pass-through branch is provably empty and is
-    skipped entirely — one fewer scan subtree, which on an un-reusable
-    source (local relation, RDD scan) is a whole stage (r7). Rows finer
-    than `res` are dropped on both branches, as without the hint."""
+    levels (each row wraps in a 1-element array), never wrongness."""
     spark = cells.sparkSession
-    if max_res is not None and max_res < res:
-        out = None
-        todo = cells.where(h3_resolution(cell_col) <= res).select(cell_col)
-    else:
-        out = cells.where(h3_resolution(cell_col) == res).select(cell_col)
-        todo = cells.where(h3_resolution(cell_col) < res).select(cell_col)
+    todo = cells.where(h3_resolution(cell_col) <= res).select(cell_col)
     if min_res is None:
         min_res = todo.agg(F.min(h3_resolution(cell_col))).first()[0]
     if min_res is None:
-        # todo is empty (nothing coarser than res); out covers the input
-        return out if out is not None else todo
+        return todo
     levels = res - int(min_res)
     # one selectExpr SQL string per level: it parses JVM-side in one
     # call per level
@@ -273,4 +258,4 @@ def uncompact_cells_df(
             todo = todo.repartition(
                 max(spark.sparkContext.defaultParallelism, 1)
             )
-    return todo if out is None else out.unionByName(todo)
+    return todo

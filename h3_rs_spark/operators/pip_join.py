@@ -2,14 +2,17 @@
 
 Plan shape (SURVEY.md §2.9/§4.2, designed for 10^12-row probe tables):
 
-  1. Driver-side polyfill of each polygon at its target res (polygons are
-     a small dimension; cells <= ~1e5 each), split into interior cells
-     and boundary cells (cells whose hexagon crosses the outline).
-  2. Interior cells are *compacted* to a multi-res antichain, shrinking
-     the broadcast build side ~6x (SF hexagon: 1253 -> 209).
+  1. Driver-side cover of each polygon at its target res
+     (regions.polygon_cover, a coarse-to-fine walk whose cost grows
+     with the perimeter): interior cells, whose every target-res
+     descendant lies inside the polygon, and boundary cells at the
+     target res.
+  2. The interior comes out as a multi-res antichain, so the broadcast
+     build side is already compact (SF hexagon: 295 interior rows stand
+     for 1253 res-9 cells) with no compact pass.
   3. The probe side derives one parent key per distinct build res with
      pure JVM bit math (functions/native.h3_to_parent_col) and explodes —
-     a BroadcastHashJoin with no probe-side shuffle. Because the compacted
+     a BroadcastHashJoin with no probe-side shuffle. Because the build
      set is an antichain, each probe row matches at most one build row
      (no double counting; asserted in tests).
   4. Only rows matched to *boundary* cells pay the exact ray-casting PIP
@@ -31,20 +34,18 @@ from pyspark.sql.types import BooleanType
 from ..functions.native import h3_to_parent_col
 from ..h3core import indexing as ix
 from ..h3core import regions
-from ..h3core.hierarchy import compact, uncompact
+from ..h3core.hierarchy import uncompact
 
 
 def build_polygon_cells(polygons: dict) -> pd.DataFrame:
-    """Driver-side polyfill -> (polygon_id, cell, is_boundary) build table,
-    interior cells compacted to a multi-res antichain.
+    """Driver-side cover -> (polygon_id, cell, is_boundary) build table;
+    the interior cells are a multi-res antichain.
 
     polygons: {polygon_id: (exterior, holes, res)}.
     """
     rows = []
     for pid, (ext, holes, res) in polygons.items():
         interior, boundary = regions.polygon_cover(ext, holes, res)
-        if len(interior):
-            interior = np.asarray(compact(interior))
         for c in interior:
             rows.append((pid, int(c), False))
         for c in boundary:

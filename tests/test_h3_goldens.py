@@ -323,11 +323,38 @@ class TestRegions:
         cells = h3.polyfill(box, [], 4)
         assert len(cells) > 10
 
-    def test_boundary_split(self):
-        cells = h3.polyfill(SF_POLYGON, [], 9)
-        interior, boundary = h3.cells_to_boundary_split(cells, SF_POLYGON)
-        assert len(interior) + len(boundary) == len(cells)
-        assert len(interior) > 0 and len(boundary) > 0
+    def test_descendant_reach(self):
+        """polygon_cover decides a res-r cell by its reach: every
+        boundary vertex of the cell and of its descendants 1-4 levels
+        down lies within REACH * EDGE_LENGTH_M[r] of its centre. Sampled
+        cells plus all 12 pentagons at each res 0-10."""
+        from h3_rs_spark.h3core import indexing as ix
+        from h3_rs_spark.h3core.constants import (
+            EARTH_RADIUS_KM, PENTAGON_BASE_CELLS,
+        )
+        from h3_rs_spark.h3core.regions import REACH
+
+        rng = np.random.default_rng(0)
+        worst = {}
+        for r in range(11):
+            lat = np.degrees(np.arcsin(rng.uniform(-1.0, 1.0, 6)))
+            digits = np.full((12, 15), 7)
+            digits[:, :r] = 0
+            cells = np.concatenate([
+                h3.geo_to_h3(lat, rng.uniform(-180.0, 180.0, 6), r),
+                ix.from_components(PENTAGON_BASE_CELLS, r, digits),
+            ])
+            clat, clng = np.radians(h3.h3_to_geo(cells))
+            for d in range(5):
+                own, kids = ix.to_children_batch(cells, r + d)
+                blat, blng = np.radians(h3.h3_to_geo_boundary(kids))
+                la, lo = clat[own, None], clng[own, None]
+                hav = np.sin((blat - la) / 2) ** 2 + np.cos(la) * np.cos(
+                    blat
+                ) * np.sin((blng - lo) / 2) ** 2
+                dist = 2e3 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(hav))
+                worst[r, d] = np.nanmax(dist) / h3.edge_length_m(r)
+        assert max(worst.values()) < REACH, max(worst, key=worst.get)
 
 
 class TestKernelProperties:
@@ -844,7 +871,8 @@ class TestPolarPolyfill:
         interior, boundary = regions.polygon_cover(ring, [], 3)
         assert not (set(interior.tolist()) & set(boundary.tolist()))
         filled = set(regions.polyfill(ring, [], 3).tolist())
-        assert filled <= (set(interior.tolist()) | set(boundary.tolist()))
+        fine = h3.uncompact(interior, 3)
+        assert filled <= (set(fine.tolist()) | set(boundary.tolist()))
         # interior cells must be fully inside: all vertices above 82
         blat, _ = fk.h3_to_geo_boundary(interior)
         assert np.nanmin(blat) > 82.0

@@ -39,7 +39,6 @@ from h3_rs_spark.h3core import edges as ed
 from h3_rs_spark.h3core import faceijk as fk
 from h3_rs_spark.h3core import hierarchy, indexing, regions, traversal
 from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-from h3_rs_spark.h3core.hierarchy import compact
 from h3_rs_spark.operators.hierarchy_ops import (
     antichain_violations,
     compact_cells_df,
@@ -130,24 +129,25 @@ def test_parent_rollup_structure(fixture_points):
 
 
 def test_polygon_cover_per_polygon():
-    """Interior/boundary split, compacted interior and centroid polyfill
-    per test polygon. sf_hexagon polyfill@9 == 1253 is the reference's
-    own region golden; interior and boundary must be disjoint."""
+    """Interior/boundary split, the interior's res-`res` expansion and
+    centroid polyfill per test polygon. sf_hexagon polyfill@9 == 1253 is
+    the reference's own region golden; interior and boundary must be
+    disjoint."""
     rows = []
     for pid, (ext, holes, res) in sorted(POLYGONS.items()):
         interior, boundary = regions.polygon_cover(ext, holes, res)
         pf = regions.polyfill(ext, holes, res)
-        comp = compact(interior) if len(interior) else interior
+        n_fine = len(hierarchy.uncompact(interior, res))
         disjoint = not (set(interior.tolist()) & set(boundary.tolist()))
         rows.append(
-            (pid, len(interior), len(comp), len(boundary), len(pf), int(disjoint))
+            (pid, len(interior), n_fine, len(boundary), len(pf), int(disjoint))
         )
     assert rows == [
-        ("null_island_box", 310, 100, 257, 440, 1),
-        ("sf_hexagon", 1039, 157, 444, 1253, 1),
-        ("sf_hexagon_2holes", 842, 236, 631, 1172, 1),
-        ("sf_hexagon_hole", 945, 207, 533, 1214, 1),
-        ("sydney", 40, 28, 126, 92, 1),
+        ("null_island_box", 163, 325, 223, 440, 1),
+        ("sf_hexagon", 295, 1105, 313, 1253, 1),
+        ("sf_hexagon_2holes", 437, 947, 445, 1172, 1),
+        ("sf_hexagon_hole", 387, 1029, 375, 1214, 1),
+        ("sydney", 42, 54, 88, 92, 1),
     ]
 
 

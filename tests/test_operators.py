@@ -487,9 +487,7 @@ class TestPolyfillDistributed:
         want = sorted(regions.polyfill(ext, holes, 9).tolist())
         got = sorted(
             r[0]
-            for r in polyfill_distributed(
-                spark, ext, holes, 9, coarse_res=5
-            ).collect()
+            for r in polyfill_distributed(spark, ext, holes, 9).collect()
         )
         assert got == want and len(got) == 1253
 
@@ -535,7 +533,7 @@ def test_uncompact_staged_multilevel(spark):
 
 def test_uncompact_quoted_column_drops_finer_rows(spark):
     """A column name that needs quoting expands the same way, and a row
-    finer than `res` is dropped whether or not `max_res` is given."""
+    finer than `res` is dropped."""
     from h3_rs_spark.h3core import indexing as ix
     from h3_rs_spark.operators.hierarchy_ops import uncompact_cells_df
 
@@ -547,35 +545,35 @@ def test_uncompact_quoted_column_drops_finer_rows(spark):
     want = sorted(
         np.concatenate([ix.to_children(c, 5) for c in coarse]).tolist()
     )
-    for max_res in (None, 2):
-        got = sorted(
-            r[0]
-            for r in uncompact_cells_df(
-                df, 5, cell_col="my cell", max_res=max_res
-            ).collect()
-        )
-        assert got == want, max_res
+    got = sorted(
+        r[0] for r in uncompact_cells_df(df, 5, cell_col="my cell").collect()
+    )
+    assert got == want
 
 
 def test_polyfill_distributed_plan_shape(spark):
-    """r7: the distributed-polyfill candidate pipeline must stay a
-    single narrow pipeline — cover pre-split via parallelize (no
-    repartition Exchange), pass-through branch skipped (no Union),
-    children explode pure JVM (exactly one ArrowEvalPython: the
-    centroid filter)."""
+    """The distributed polyfill stays one narrow JVM pipeline: cells
+    pre-split via parallelize (no repartition Exchange for the input),
+    one explode path (no Union), no Python on the executors (no
+    ArrowEvalPython), and only the explode's own redistribution every
+    4 levels."""
+    from h3_rs_spark.h3core import indexing
     from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
 
-    # big enough that pick_coarse_res chooses coarse_res < res (the
-    # shape under test); plan-only, nothing executes
+    # big enough that the interior spans several levels; plan-only,
+    # nothing executes
     ext = [(0.0, 0.0), (0.0, 1.5), (1.5, 1.5), (1.5, 0.0)]
+    interior, _ = regions.polygon_cover(ext, [], 9)
+    levels = 9 - int(indexing.get_resolution(interior).min())
     df = polyfill_distributed(spark, ext, [], 9)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert "Exchange" not in plan
     # formatted explain names each node twice (tree + detail); count
-    # tree entries like "ArrowEvalPython (4)"
-    assert plan.count("ArrowEvalPython (") == 1
+    # tree entries like "Exchange (4)"
+    assert levels > 4
+    assert plan.count("Exchange (") == (levels - 1) // 4
+    assert plan.count("ArrowEvalPython (") == 0
     assert "Union" not in plan
 
 
