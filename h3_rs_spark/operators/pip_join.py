@@ -8,8 +8,8 @@ Plan shape (SURVEY.md §2.9/§4.2, designed for 10^12-row probe tables):
      descendant lies inside the polygon, and boundary cells at the
      target res.
   2. The interior comes out as a multi-res antichain, so the broadcast
-     build side is already compact (SF hexagon: 295 interior rows stand
-     for 1253 res-9 cells) with no compact pass.
+     build side is already compact with no compact pass (SF hexagon:
+     295 interior rows stand for 1105 of its 1253 res-9 cells).
   3. The probe side derives one parent key per distinct build res with
      pure JVM bit math (functions/native.h3_to_parent_col) and explodes —
      a BroadcastHashJoin with no probe-side shuffle. Because the build

@@ -479,8 +479,8 @@ class TestDistributedHierarchy:
 
 class TestPolyfillDistributed:
     def test_equals_driver_polyfill(self, spark):
-        """Distributed polyfill (coarse cover -> children explode ->
-        centroid PIP) must equal driver polyfill cell-for-cell."""
+        """Distributed polyfill (driver cover -> JVM children explode)
+        must equal driver polyfill cell-for-cell."""
         from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
 
         ext, holes, _ = datagen.POLYGONS["sf_hexagon"]
