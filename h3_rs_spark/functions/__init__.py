@@ -3,7 +3,7 @@ from .native import (  # noqa: F401
     h3_base_cell,
     h3_resolution,
     h3_to_parent_col,
-    haversine_m_col,
+    haversine_m_sql,
     hex_str_to_cell,
 )
 from .udfs import (  # noqa: F401

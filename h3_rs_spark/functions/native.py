@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..h3core.constants import EARTH_RADIUS_M
+
 
 def h3_resolution(cell: Column | str) -> Column:
     """(cell >> 52) & 0xF — parity: /root/reference/src/inspection.rs:52-54."""
@@ -69,13 +71,15 @@ def hex_str_to_cell(s: Column | str) -> Column:
     return F.conv(c, 16, 10).cast("long")
 
 
-EARTH_RADIUS_M = 6371007.180918475
-
-
-def haversine_m_col(lat1: Column, lng1: Column, lat2: Column, lng2: Column) -> Column:
-    """Great-circle meters, entirely JVM-side trig (kNN re-rank hot path)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1)
-    dlng = F.radians(lng2 - lng1)
-    a = F.sin(dlat / 2) ** 2 + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlng / 2) ** 2
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(a))
+def haversine_m_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> str:
+    """Great-circle meters between two degree points as one SQL
+    expression over the named columns, entirely JVM-side trig (the kNN
+    re-rank hot path). SQL text rather than a Column tree: it parses in
+    one py4j call. repr() round-trips the radius literal and the D
+    suffix keeps it DOUBLE, not DECIMAL."""
+    return (
+        f"({2.0 * EARTH_RADIUS_M!r}D * ASIN(SQRT("
+        f"POWER(SIN(RADIANS({lat2} - {lat1}) / 2), 2)"
+        f" + COS(RADIANS({lat1})) * COS(RADIANS({lat2}))"
+        f" * POWER(SIN(RADIANS({lng2} - {lng1}) / 2), 2))))"
+    )

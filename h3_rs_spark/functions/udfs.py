@@ -35,6 +35,15 @@ from pyspark.sql.types import (
 from ..h3core import faceijk, traversal
 
 
+def _lists_by_owner(owner: np.ndarray, cells: np.ndarray, n: int) -> list:
+    """Split a kernel's flat (owner row, cell) output into n per-row
+    int64 arrays, each row's cells in their output order: one stable
+    sort and one split, no per-element Python."""
+    order = np.argsort(owner, kind="stable")
+    bounds = np.cumsum(np.bincount(owner, minlength=n))
+    return np.split(np.asarray(cells, dtype=np.int64)[order], bounds)[:-1]
+
+
 @functools.lru_cache(maxsize=64)
 def geo_to_h3_udf(res: int):
     """(lat, lng) degrees -> cell int64 (0 for invalid input).
@@ -101,10 +110,7 @@ def k_ring_udf(k: int):
     def _f(cell: pd.Series) -> pd.Series:
         c = cell.to_numpy(dtype=np.int64)
         owner, cells = traversal.k_ring(c, k)
-        out = [[] for _ in range(len(c))]
-        for o, cc in zip(owner.tolist(), cells.tolist()):
-            out[o].append(cc)
-        return pd.Series(out)
+        return pd.Series(_lists_by_owner(owner, cells, len(c)), dtype=object)
 
     return _f
 
@@ -120,10 +126,7 @@ def edges_from_cell_udf():
 
         c = cell.to_numpy(dtype=np.int64)
         owner, e = ed.edges_from_cells(c)
-        out = [[] for _ in range(len(c))]
-        for o, ev in zip(owner.tolist(), e.tolist()):
-            out[o].append(ev)
-        return pd.Series(out)
+        return pd.Series(_lists_by_owner(owner, e, len(c)), dtype=object)
 
     return _f
 
@@ -173,9 +176,7 @@ def hex_ranges_udf(k: int):
             np.empty(0, np.int64), np.empty(0, np.int64),
             np.empty(0, bool),
         )
-        per_origin = [[] for _ in range(len(flat))]
-        for o, c in zip(owner.tolist(), cells.tolist()):
-            per_origin[o].append(c)
+        per_origin = _lists_by_owner(owner, cells, len(flat))
         starts = np.concatenate([[0], np.cumsum(lens)])
         for i in range(len(origins)):
             lo, hi = int(starts[i]), int(starts[i + 1])
@@ -204,18 +205,20 @@ def geo_disk_dyn_udf():
         ln = lng.to_numpy(dtype=np.float64)
         rs = res.to_numpy(dtype=np.int64)
         rg = ring.to_numpy(dtype=np.int64)
-        out = [None] * len(la)
+        owners, disks = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
         combos = np.unique(np.stack([rs, rg], axis=1), axis=0)
         for rv, gv in combos:
             idx = np.flatnonzero((rs == rv) & (rg == gv))
             cells = faceijk.geo_to_h3(la[idx], ln[idx], int(rv))
             owner, disk = traversal.k_ring(cells, int(gv))
-            lists = [[] for _ in range(len(idx))]
-            for o, cc in zip(owner.tolist(), disk.tolist()):
-                lists[o].append(cc)
-            for i, lst in zip(idx.tolist(), lists):
-                out[i] = lst
-        return pd.Series(out)
+            owners.append(idx[owner])
+            disks.append(disk)
+        return pd.Series(
+            _lists_by_owner(
+                np.concatenate(owners), np.concatenate(disks), len(la)
+            ),
+            dtype=object,
+        )
 
     # same optimizer-barrier rationale as geo_to_h3_udf
     return _f.asNondeterministic()

@@ -10,6 +10,7 @@ from __future__ import annotations
 import numpy as np
 
 from .constants import (
+    EARTH_RADIUS_M,
     EPSILON,
     FACE_AXES_AZ_RADS_CII,
     FACE_CENTER_GEO,
@@ -216,12 +217,13 @@ def hex2d_to_geo(v: np.ndarray, face: np.ndarray, res: int, substrate: bool):
     return geo_az_distance(flat, flng, az, r)
 
 
-def haversine_m(lat1, lng1, lat2, lng2, radius_m: float = 6371007.180918475):
-    """Great-circle distance in meters (vectorized)."""
+def haversine_m(lat1, lng1, lat2, lng2):
+    """Great-circle distance in meters between radian points
+    (vectorized)."""
     dlat = lat2 - lat1
     dlng = lng2 - lng1
     a = (
         np.sin(dlat / 2.0) ** 2
         + np.cos(lat1) * np.cos(lat2) * np.sin(dlng / 2.0) ** 2
     )
-    return 2.0 * radius_m * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
+    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))

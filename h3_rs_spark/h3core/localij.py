@@ -164,14 +164,14 @@ def local_frames(a: np.ndarray, b: np.ndarray):
     return ok, diff_res, res_a, (fa, ia, wb_in_fa, class3)
 
 
-def _bfs_fallback_batch(a, b, out, rem: np.ndarray, max_k: int = 64):
+def _bfs_fallback_batch(a, b, out, rem: np.ndarray):
     """Distances for the non-planar pairs: batched ring BFS with
     radius doubling — one vectorized k_ring_distances sweep per radius
     over the UNIQUE remaining origins, instead of a per-pair BFS."""
     from . import traversal as tv
 
     k = 4
-    while rem.size and k <= max_k:
+    while rem.size and k <= tv.MAX_BFS_K:
         ua, inv = np.unique(a[rem], return_inverse=True)
         o, cells, dist = tv.k_ring_distances(ua, k)
         lut = {}

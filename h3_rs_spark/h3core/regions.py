@@ -34,7 +34,7 @@ import numpy as np
 
 from . import faceijk as fk
 from . import indexing as ix
-from .constants import EDGE_LENGTH_M, EARTH_RADIUS_KM
+from .constants import EARTH_RADIUS_M, EDGE_LENGTH_M
 from .hierarchy import compact, uncompact
 
 
@@ -165,7 +165,7 @@ def points_in_polygon(
     return inside
 
 
-def ring_area_m2(ring, radius_m: float = EARTH_RADIUS_KM * 1000.0) -> float:
+def ring_area_m2(ring) -> float:
     """Spherical area of a (lng, lat)-degree ring (geodesic shoelace:
     area = R^2/2 * |sum (lng2-lng1)(2 + sin lat1 + sin lat2)| — the
     standard spherical-excess approximation for geographic polygons)."""
@@ -176,7 +176,7 @@ def ring_area_m2(ring, radius_m: float = EARTH_RADIUS_KM * 1000.0) -> float:
     lng = np.radians(r[:, 0])
     lat = np.radians(r[:, 1])
     s = np.sum((lng[1:] - lng[:-1]) * (2.0 + np.sin(lat[:-1]) + np.sin(lat[1:])))
-    return float(abs(s) * radius_m * radius_m / 2.0)
+    return float(abs(s) * EARTH_RADIUS_M * EARTH_RADIUS_M / 2.0)
 
 
 # driver cap on one level's candidate cells and on a polyfill's output
@@ -236,7 +236,7 @@ def _outline_distance(lat, lng, kx, seg) -> np.ndarray:
 
 def _split_level(cells, r: int, seg, exterior, holes):
     """(interior, undecided) among res-r cells; see polygon_cover."""
-    rho = np.degrees(REACH * EDGE_LENGTH_M[r] / (EARTH_RADIUS_KM * 1000.0))
+    rho = np.degrees(REACH * EDGE_LENGTH_M[r] / EARTH_RADIUS_M)
     lat, lng = fk.h3_to_geo(cells)
     top = np.abs(lat) + rho
     far = top < 90.0

@@ -24,6 +24,9 @@ from . import faceijk as fk
 from . import indexing as ix
 from .geom import geo_to_xyz
 
+MAX_BFS_K = 64  # ring radius at which a BFS grid distance gives up (-1)
+_MAX_LINE_STEPS = 10_000  # cap on the greedy line walk's steps
+
 
 def neighbors(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Neighbors of each cell.
@@ -223,7 +226,7 @@ def h3_distance(a: int, b: int) -> int:
     return int(h3_distance_batch(np.array([a]), np.array([b]))[0])
 
 
-def h3_distance_bfs(a: int, b: int, max_k: int = 64) -> int:
+def h3_distance_bfs(a: int, b: int) -> int:
     """Grid distance by frontier BFS (exact oracle for the local-frame
     path; also the fallback when the planar frame is untrustworthy)."""
     a, b = int(a), int(b)
@@ -233,7 +236,7 @@ def h3_distance_bfs(a: int, b: int, max_k: int = 64) -> int:
         return 0
     frontier = np.array([a], dtype=np.int64)
     seen = {a}
-    for step in range(1, max_k + 1):
+    for step in range(1, MAX_BFS_K + 1):
         _, nb = neighbors(frontier)
         nxt = []
         for c in np.unique(nb):
@@ -250,7 +253,7 @@ def h3_distance_bfs(a: int, b: int, max_k: int = 64) -> int:
     return -1
 
 
-def h3_line(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
+def h3_line(a: int, b: int) -> np.ndarray:
     """Cell path from a to b (H3 h3Line semantics, reference
     src/traversal.rs:103-123): cube-coordinate lerp with cube rounding
     in a's local face frame — length == h3_distance(a, b) + 1 and
@@ -262,10 +265,10 @@ def h3_line(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
     path = h3_line_local(int(a), int(b))
     if path is not None:
         return path
-    return _h3_line_greedy(int(a), int(b), max_steps)
+    return _h3_line_greedy(int(a), int(b))
 
 
-def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
+def h3_line_batch(a, b) -> list[np.ndarray]:
     """Per-pair h3_line for a BATCH of pairs (r7): local-frame pairs go
     through the per-pair cube-lerp (cheap, ~2 ms), and all
     greedy-fallback pairs advance TOGETHER — one batched neighbors()
@@ -291,15 +294,13 @@ def h3_line_batch(a, b, max_steps: int = 10_000) -> list[np.ndarray]:
             out[i] = p
     if greedy:
         gi = np.asarray(greedy)
-        for i, p in zip(
-            greedy, _h3_line_greedy_batch(a[gi], b[gi], max_steps)
-        ):
+        for i, p in zip(greedy, _h3_line_greedy_batch(a[gi], b[gi])):
             out[i] = p
     return out
 
 
 def _h3_line_greedy_batch(
-    a_arr: np.ndarray, b_arr: np.ndarray, max_steps: int = 10_000
+    a_arr: np.ndarray, b_arr: np.ndarray
 ) -> list[np.ndarray]:
     """Batched twin of _h3_line_greedy — same walk, same argmax, same
     stuck/exhaustion semantics, per-step kernel calls batched over all
@@ -309,7 +310,7 @@ def _h3_line_greedy_batch(
     paths = [[int(x)] for x in a_arr.tolist()]
     cur = a_arr.copy()
     done = cur == b_arr
-    for _ in range(max_steps):
+    for _ in range(_MAX_LINE_STEPS):
         act = np.flatnonzero(~done)
         if act.size == 0:
             break
@@ -331,7 +332,7 @@ def _h3_line_greedy_batch(
     return [np.array(p, dtype=np.int64) for p in paths]
 
 
-def _h3_line_greedy(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
+def _h3_line_greedy(a: int, b: int) -> np.ndarray:
     """Greedy great-circle walk fallback (connected, endpoints exact;
     not guaranteed minimal)."""
     a, b = int(a), int(b)
@@ -339,7 +340,7 @@ def _h3_line_greedy(a: int, b: int, max_steps: int = 10_000) -> np.ndarray:
     txyz = geo_to_xyz(np.radians(tlat), np.radians(tlng))[0]
     path = [a]
     cur = a
-    for _ in range(max_steps):
+    for _ in range(_MAX_LINE_STEPS):
         if cur == b:
             return np.array(path, dtype=np.int64)
         _, nb = neighbors(np.array([cur], dtype=np.int64))

@@ -23,18 +23,12 @@ from ..h3core.constants import PENTAGON_BASE_CELLS
 _PENT_IN_SQL = ", ".join(str(int(b)) for b in PENTAGON_BASE_CELLS)
 
 
-def _quote(cell_col: str) -> str:
-    """Backtick-quoted SQL identifier for a column name."""
-    return "`" + cell_col.replace("`", "``") + "`"
-
-
-def _is_pentagon_sql(cell_col: str) -> str:
+def _is_pentagon_sql(x: str) -> str:
     """Pentagon test as one SQL expression: a pentagon base cell and all
     digits 0 (each 3-bit digit up to the cell res equals 0; digits
     beyond res are 7), i.e. the cell equals its own base cell's
     'center child' pattern at its res (2^k is exact in doubles for
-    k <= 45, so pow-cast is lossless)."""
-    x = _quote(cell_col)
+    k <= 45, so pow-cast is lossless). x is a plain column name."""
     res = f"(shiftright({x}, 52) & 15)"
     fill = (
         f"(CAST(pow(2.0D, CAST((15 - {res}) * 3 AS DOUBLE)) AS BIGINT)"
@@ -60,16 +54,11 @@ for _d in range(1, 16):
     _PENT_DESC.append(_PENT_DESC[-1] + 5 * 7 ** (_d - 1))
 
 
-def compact_cells_df(
-    cells: DataFrame,
-    cell_col: str = "cell",
-    res: int | None = None,
-    assume_distinct: bool = False,
-) -> DataFrame:
+def compact_cells_df(cells: DataFrame) -> DataFrame:
     """Minimal multi-res covering set of a uniform-res cell relation.
 
-    Returns a DataFrame with the same cell_col holding the compacted
-    (mixed-res) set. Input must be distinct cells of one resolution.
+    Returns a DataFrame with one `cell` column holding the compacted
+    (mixed-res) set. Input cells must all have one resolution.
 
     Single-pass form (r7, guide §2.4 — replaces the r6 finest-to-
     coarsest round loop, which ran 2 sequential jobs per resolution
@@ -88,29 +77,17 @@ def compact_cells_df(
     shuffles instead of O(res) sequential rounds; output pinned by the
     reference's own 1253 -> 209 golden
     (tests/test_h3_surface.py::test_compact_distributed_sf_golden) and
-    tests/test_operators.py round-trip/idempotence tests.
-
-    res: optional caller-known uniform resolution — skips the one
-    derivation job (r7; callers holding a fresh polyfill know it).
-
-    assume_distinct: the contract above already REQUIRES distinct
-    input; True additionally skips the defensive distinct() exchange
-    (r7) — for callers whose relation is distinct by construction
-    (a polyfill output). Passing duplicate rows with True inflates
-    the ancestor counts and corrupts the result, so the safe default
-    stays False."""
-    if res is None:
-        res = cells.select(F.max(h3_resolution(cell_col))).first()[0]
+    tests/test_operators.py round-trip/idempotence tests. One job
+    derives the resolution; duplicate rows are removed first, since
+    they would inflate the ancestor counts."""
+    res = cells.select(F.max(h3_resolution("cell"))).first()[0]
     if res is None:
         return cells
     res = int(res)
-    if assume_distinct:
-        distinct = cells.select(cell_col)
-    else:
-        distinct = cells.select(cell_col).distinct()
+    distinct = cells.select("cell").distinct()
     if res == 0:
         return distinct
-    anc = distinct.select(F.explode(ancestors_col(cell_col)).alias("_anc"))
+    anc = distinct.select(F.explode(ancestors_col()).alias("_anc"))
     counts = anc.groupBy("_anc").agg(F.count("*").alias("_n"))
     depth = (F.lit(res) - h3_resolution(F.col("_anc")) + F.lit(1)).cast("int")
     expected = F.when(
@@ -125,42 +102,39 @@ def compact_cells_df(
     # worst compute it twice, which is waste, not wrongness)
     complete = (
         counts.where(F.col("_n") == expected)
-        .select(F.col("_anc").alias(cell_col))
+        .select(F.col("_anc").alias("cell"))
         .localCheckpoint(eager=False)
     )
     # a complete ancestor survives iff its own parent is not complete
     # (res-0 ancestors have no parent -> null key never anti-matches)
-    anc_res = h3_resolution(cell_col)
+    anc_res = h3_resolution("cell")
     anc_parent = F.when(
         anc_res > 0,
-        F.element_at(ancestors_col(cell_col), anc_res.cast("int")),
+        F.element_at(ancestors_col(), anc_res.cast("int")),
     )
+    complete_keys = complete.select(F.col("cell").alias("_pk"))
     kept_anc = (
         complete.withColumn("_pk", anc_parent)
-        .join(
-            complete.select(F.col(cell_col).alias("_pk")), "_pk", "left_anti"
-        )
-        .select(cell_col)
+        .join(complete_keys, "_pk", "left_anti")
+        .select("cell")
     )
     # a leaf survives iff its immediate parent is not complete (monotone
     # completeness: no coarser ancestor can be complete either)
     kept_leaves = (
-        distinct.withColumn("_pk", h3_to_parent_col(cell_col, res - 1))
-        .join(
-            complete.select(F.col(cell_col).alias("_pk")), "_pk", "left_anti"
-        )
-        .select(cell_col)
+        distinct.withColumn("_pk", h3_to_parent_col("cell", res - 1))
+        .join(complete_keys, "_pk", "left_anti")
+        .select("cell")
     )
     return kept_leaves.unionByName(kept_anc)
 
 
-def ancestors_col(cell_col: str = "cell"):
-    """array<long> of ALL coarser ancestors (res 0 .. res-1) of a cell,
-    as one codegen'd expression — the dynamic-res generalization of
-    h3_to_parent_col (2^k via pow-cast is exact for k <= 45, the
-    largest digit-fill shift)."""
-    c = F.col(cell_col)
-    res = h3_resolution(cell_col)
+def ancestors_col():
+    """array<long> of ALL coarser ancestors (res 0 .. res-1) of the
+    `cell` column, as one codegen'd expression — the dynamic-res
+    generalization of h3_to_parent_col (2^k via pow-cast is exact for
+    k <= 45, the largest digit-fill shift)."""
+    c = F.col("cell")
+    res = h3_resolution("cell")
 
     def parent_at(r):
         fill = F.pow(
@@ -177,24 +151,24 @@ def ancestors_col(cell_col: str = "cell"):
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def antichain_violations(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
+def antichain_violations(cells: DataFrame) -> DataFrame:
     """Rows of `cells` that have an ancestor ALSO in `cells` (empty ==
     the relation is an antichain, e.g. a valid compact output). Fully
     distributed: explode <= 15 ancestors per cell, one semi-join back —
     no driver collect, shuffle proportional to |cells| * avg_res."""
     anc = cells.select(
-        F.col(cell_col).alias("_child"),
-        F.explode(ancestors_col(cell_col)).alias(cell_col),
+        F.col("cell").alias("_child"),
+        F.explode(ancestors_col()).alias("cell"),
     )
     return anc.join(
-        cells.select(cell_col), cell_col, "left_semi"
-    ).select(F.col("_child").alias(cell_col), F.col(cell_col).alias("ancestor"))
+        cells.select("cell"), "cell", "left_semi"
+    ).select(F.col("_child").alias("cell"), F.col("cell").alias("ancestor"))
 
 
 _MAX_EXPLODE_LEVELS = 4  # resolution levels between redistributions
 
 
-def children_one_level_sql(cell_col: str) -> str:
+def children_one_level_sql(x: str) -> str:
     """array<long> of a cell's DIRECT children (res+1) as one SQL
     expression, the JVM form of the kernel's to_children_batch level
     step: child = cell + 2^52 (res nibble bump) - 7*2^off + d*2^off, d
@@ -204,13 +178,12 @@ def children_one_level_sql(cell_col: str) -> str:
     explode level.
     Pinned against the kernel by
     tests/test_operators.py::test_children_one_level_sql_parity.
-    cell_col is a column name; it is quoted here."""
-    x = _quote(cell_col)
+    x is a plain column name."""
     r1 = f"((shiftright({x}, 52) & 15) + 1)"
     off = f"CAST(pow(2.0D, CAST((15 - {r1}) * 3 AS DOUBLE)) AS BIGINT)"
     base = f"({x} + 4503599627370496 - 7 * {off})"
     digits = (
-        f"(CASE WHEN {_is_pentagon_sql(cell_col)}"
+        f"(CASE WHEN {_is_pentagon_sql(x)}"
         " THEN array(0, 2, 3, 4, 5, 6)"
         " ELSE array(0, 1, 2, 3, 4, 5, 6) END)"
     )
@@ -218,10 +191,7 @@ def children_one_level_sql(cell_col: str) -> str:
 
 
 def uncompact_cells_df(
-    cells: DataFrame,
-    res: int,
-    cell_col: str = "cell",
-    min_res: int | None = None,
+    cells: DataFrame, res: int, min_res: int | None = None
 ) -> DataFrame:
     """Expand a mixed-res cell relation to uniform `res` (children
     explode; cells already at `res` pass through, finer rows are
@@ -238,19 +208,18 @@ def uncompact_cells_df(
     derivation job. Understating it only adds pass-through explode
     levels (each row wraps in a 1-element array), never wrongness."""
     spark = cells.sparkSession
-    todo = cells.where(h3_resolution(cell_col) <= res).select(cell_col)
+    todo = cells.where(h3_resolution("cell") <= res).select("cell")
     if min_res is None:
-        min_res = todo.agg(F.min(h3_resolution(cell_col))).first()[0]
+        min_res = todo.agg(F.min(h3_resolution("cell"))).first()[0]
     if min_res is None:
         return todo
     levels = res - int(min_res)
     # one selectExpr SQL string per level: it parses JVM-side in one
     # call per level
-    q = _quote(cell_col)
     level_expr = (
-        f"explode(CASE WHEN (shiftright({q}, 52) & 15) < {res}"
-        f" THEN {children_one_level_sql(cell_col)}"
-        f" ELSE array({q}) END) AS {q}"
+        f"explode(CASE WHEN (shiftright(cell, 52) & 15) < {res}"
+        f" THEN {children_one_level_sql('cell')}"
+        " ELSE array(cell) END) AS cell"
     )
     for i in range(levels):
         todo = todo.selectExpr(level_expr)

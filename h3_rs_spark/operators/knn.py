@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StructField, StructType,
 )
 
-from ..functions.native import EARTH_RADIUS_M, h3_to_parent_col
+from ..functions.native import h3_to_parent_col, haversine_m_sql
 
 from ..h3core.constants import EDGE_LENGTH_M
 
@@ -44,6 +44,7 @@ _MIN_SPACING_FACTOR = 1.2
 
 _COARSEN_AT = 16  # ring size beyond which we escalate to a coarser res
 _INITIAL_RING = 2  # smallest starting ring the seeder hands out
+_MAX_RING = 1 << 20  # base-res rings after which a query stops widening
 
 # largest batch knn_join brings to the driver (~a few MB of narrow rows)
 _MAX_QUERIES = 100_000
@@ -55,16 +56,14 @@ def knn_join(
     queries: DataFrame,
     k: int,
     res: int,
-    cell_col: str = "cell",
-    max_ring: int = 1 << 20,
 ) -> DataFrame:
     """Exact k nearest images per query point.
 
-    images: fact table with `cell_col` (res `res`), lat, lng, image_id.
+    images: fact table with `cell` (res `res`), lat, lng, image_id.
     queries: query_id, lat, lng (k is the parameter, uniform per call).
     Returns (query_id, image_id, dist_m, rank), ties broken by image_id —
     matching knn_oracle row-for-row. A query whose ring reaches
-    `max_ring` base-res rings stops there with what it found.
+    _MAX_RING base-res rings stops there with what it found.
 
     Raises ValueError for a batch above _MAX_QUERIES rows (split it),
     a duplicate query_id, or a null/NaN lat or lng. The checks read the
@@ -96,7 +95,7 @@ def knn_join(
     if q_pdf.empty:
         return spark.createDataFrame([], out_schema)
 
-    res_eff, ring = _seed_plans(spark, images, q_pdf, k, res, cell_col)
+    res_eff, ring = _seed_plans(spark, images, q_pdf, k, res)
     state = q_pdf.assign(res_eff=res_eff, ring=ring)
     # the caller's dtypes, not pandas inference: an int32 query_id must
     # round-trip to the exact input schema (ADVICE r5)
@@ -110,9 +109,9 @@ def knn_join(
 
     def _key_at(level):
         return (
-            images[cell_col]
+            images["cell"]
             if level == res
-            else h3_to_parent_col(images[cell_col], level)
+            else h3_to_parent_col(images["cell"], level)
         )
 
     done_rows = []
@@ -146,7 +145,9 @@ def knn_join(
         topk = (
             probe.join(cand, F.col("probe_key") == cand["cand_cell"])
             .selectExpr(
-                "query_id", "image_id", f"{_HAVERSINE_SQL} AS dist_m"
+                "query_id",
+                "image_id",
+                f"{haversine_m_sql('q_lat', 'q_lng', 'lat', 'lng')} AS dist_m",
             )
             .selectExpr(
                 "*",
@@ -158,7 +159,7 @@ def knn_join(
         )
 
         # a ring at res_eff covers ring * 7^((res - res_eff) // 2)
-        # base-res rings; a query is exhausted at max_ring base rings or
+        # base-res rings; a query is exhausted at _MAX_RING base rings or
         # at a big ring at res 0. A query with no matched rows stays in
         # flight until it is exhausted, and then finishes empty.
         res_eff = state["res_eff"].to_numpy(dtype=np.int64)
@@ -166,7 +167,7 @@ def knn_join(
         per_q = topk.groupby("query_id")["dist_m"]
         n = state["query_id"].map(per_q.size()).fillna(0).to_numpy()
         mx = state["query_id"].map(per_q.max()).to_numpy(dtype=np.float64)
-        exhausted = (ring * 7 ** ((res - res_eff) // 2) >= max_ring) | (
+        exhausted = (ring * 7 ** ((res - res_eff) // 2) >= _MAX_RING) | (
             (res_eff == 0) & (ring >= 32)
         )
         done = ((n >= k) & (mx <= _safe_radius(ring, res_eff))) | exhausted
@@ -198,7 +199,7 @@ def _check_query_rows(q_pdf: pd.DataFrame) -> None:
         )
 
 
-def _seed_plans(spark, images, q_pdf, k, res, cell_col):
+def _seed_plans(spark, images, q_pdf, k, res):
     """Per-query starting (res_eff, ring) arrays, in q_pdf's row order,
     from a two-scale density estimate.
 
@@ -242,9 +243,9 @@ def _seed_plans(spark, images, q_pdf, k, res, cell_col):
                     F.struct(
                         F.lit(si).alias("stage"),
                         (
-                            images[cell_col]
+                            images["cell"]
                             if rp == res
-                            else h3_to_parent_col(images[cell_col], rp)
+                            else h3_to_parent_col(images["cell"], rp)
                         ).alias("key"),
                     )
                     for si, rp in enumerate(stages)
@@ -312,18 +313,6 @@ def _safe_radius(ring, res_eff):
     return np.maximum(
         0.0, ((ring + 1) * 0.866 - 1.16) * (_MIN_SPACING_FACTOR * edge)
     )
-
-
-# operation-for-operation mirror of haversine_m_col(q_lat, q_lng, lat,
-# lng) as one SQL string (repr() round-trips literals; the D suffix
-# keeps them DOUBLE, not DECIMAL), so every double is identical to the
-# Column form. Pinned by tests/test_operators.py::test_knn_sql_parity.
-_HAVERSINE_SQL = (
-    f"({2.0 * EARTH_RADIUS_M!r}D * ASIN(SQRT("
-    "POWER(SIN(RADIANS(lat - q_lat) / 2), 2)"
-    " + COS(RADIANS(q_lat)) * COS(RADIANS(lat))"
-    " * POWER(SIN(RADIANS(lng - q_lng) / 2), 2))))"
-)
 
 
 def knn_oracle(images_pdf: pd.DataFrame, queries_pdf: pd.DataFrame, k: int):

@@ -29,7 +29,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import (
+    BooleanType, StringType, StructField, StructType,
+)
 
 from ..functions.native import h3_to_parent_col
 from ..h3core import indexing as ix
@@ -54,16 +56,24 @@ def build_polygon_cells(polygons: dict) -> pd.DataFrame:
 
 
 def pip_join(
-    spark: SparkSession,
-    images: DataFrame,
-    polygons: dict,
-    cell_col: str = "cell",
+    spark: SparkSession, images: DataFrame, polygons: dict
 ) -> DataFrame:
-    """Join images (with a `cell_col` at each polygon's res and lat/lng
-    columns) against polygons; returns matched rows + polygon_id.
+    """Join images (with a `cell` column at each polygon's res and
+    lat/lng columns) against polygons; returns matched rows +
+    polygon_id.
 
     When `images` carries the `bc0` partition column, the build side's
-    distinct base cells are pushed as a partition filter."""
+    distinct base cells are pushed as a partition filter. An empty
+    polygon set returns the typed empty result (polygon_id string)
+    without a Spark job."""
+    if not polygons:
+        return spark.createDataFrame(
+            [],
+            StructType(
+                images.schema.fields
+                + [StructField("polygon_id", StringType())]
+            ),
+        )
     # cost-based build strategy: a compacted build keeps the broadcast
     # tiny but makes the PROBE side explode one parent key per distinct
     # build resolution — at 10^8+ probe rows that multiplies the join
@@ -97,10 +107,10 @@ def pip_join(
     # there is only one key (r4 narrowed-probe work)
     if len(build_res) == 1:
         probe = probe.withColumn(
-            "probe_key", h3_to_parent_col(cell_col, build_res[0])
+            "probe_key", h3_to_parent_col("cell", build_res[0])
         )
     else:
-        keys = F.array(*[h3_to_parent_col(cell_col, r) for r in build_res])
+        keys = F.array(*[h3_to_parent_col("cell", r) for r in build_res])
         probe = probe.withColumn("probe_key", F.explode(keys))
 
     joined = probe.join(build, probe["probe_key"] == build["poly_cell"], "inner")
@@ -179,9 +189,9 @@ def _refine_boundary(joined: DataFrame, polygons: dict) -> DataFrame:
     return joined.where(pip_udf("polygon_id", "lat", "lng", "is_boundary"))
 
 
-def pip_count(spark, images, polygons, **kw) -> DataFrame:
+def pip_count(spark, images, polygons) -> DataFrame:
     return (
-        pip_join(spark, images, polygons, **kw)
+        pip_join(spark, images, polygons)
         .groupBy("polygon_id")
         .agg(F.count("*").alias("n_images"))
     )

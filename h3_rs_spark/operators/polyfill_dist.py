@@ -35,10 +35,10 @@ def polyfill_distributed(
     exterior,
     holes,
     res: int,
-    cell_col: str = "cell",
 ) -> DataFrame:
     """All cells at `res` whose centroid is inside the polygon, as a
-    distributed relation. Result set equals driver polyfill exactly."""
+    distributed `cell` relation. Result set equals driver polyfill
+    exactly."""
     interior, boundary = regions.polygon_cover(exterior, holes, res)
     lat, lng = fk.h3_to_geo(boundary)
     inside = boundary[regions.points_in_polygon(lng, lat, exterior, holes)]
@@ -54,8 +54,8 @@ def polyfill_distributed(
         spark.sparkContext.parallelize(
             [(int(c),) for c in cells], min(n_slices, max(len(cells), 1))
         ),
-        f"{cell_col} long",
+        "cell long",
     )
     # the driver knows the coarsest res, so uncompact runs no job to find it
     min_res = int(ix.get_resolution(cells).min()) if cells.size else res
-    return uncompact_cells_df(cells_df, res, cell_col=cell_col, min_res=min_res)
+    return uncompact_cells_df(cells_df, res, min_res=min_res)

@@ -1,14 +1,9 @@
 """Explicit skew handling for dense cells (metros) — SURVEY.md §2.9.
 
-Two tools beyond AQE's skew-join splitting (which only helps shuffle
-joins, not broadcast joins or hot aggregation groups):
-
-- salted_aggregate: two-phase aggregation — partial agg on
-  (key, salt = pmod(hash(row_id), S)) then final agg on key. Bounds any
-  single reducer group to ~1/S of the hottest key.
-- salted_join: shuffle-join variant where the (moderate-size) build side
-  is replicated x S for hot keys and the probe side picks a deterministic
-  salt, so one hot cell fans out across S reducers instead of one.
+salted_aggregate goes beyond AQE's skew-join splitting (which only helps
+shuffle joins, not hot aggregation groups): two-phase aggregation —
+partial agg on (key, salt = pmod(hash(row_id), S)) then final agg on
+key. Bounds any single reducer group to ~1/S of the hottest key.
 
 Hot keys are found from a cheap sampled histogram — at 100 TB that's a
 sample-scan, not a full pass.
@@ -20,13 +15,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(
-    df: DataFrame,
-    key: str,
-    threshold: int,
-    fraction: float = 0.1,
-    max_keys: int = 10_000,
-):
+# driver collect cap of hot_keys; see its docstring
+_MAX_HOT_KEYS = 10_000
+
+
+def hot_keys(df: DataFrame, key: str, threshold: int, fraction: float = 0.1):
     """Sampled histogram -> keys whose estimated count exceeds threshold.
 
     Scale note (VERDICT r5): at 100 TB a fixed 10% sample is still
@@ -34,7 +27,7 @@ def hot_keys(
     (e.g. rows_estimate -> fraction = 10^7 / rows); the filtered
     histogram itself is tiny (only over-threshold keys survive the
     HAVING), and the driver collect is additionally capped at
-    `max_keys` — by construction at most total_rows/threshold keys can
+    _MAX_HOT_KEYS — by construction at most total_rows/threshold keys can
     exceed the threshold, so a sane threshold bounds this far below the
     cap and the cap is a guard against a caller passing threshold ~ 1.
     """
@@ -44,7 +37,7 @@ def hot_keys(
         .count()
         .where(F.col("count") * (1.0 / fraction) > threshold)
         .orderBy(F.col("count").desc())
-        .limit(max_keys)
+        .limit(_MAX_HOT_KEYS)
     )
     return [r[0] for r in hist.select(key).collect()]
 
@@ -84,27 +77,3 @@ def salted_aggregate(
     partial = salted.groupBy(key, "_salt").agg(*partial_exprs)
     return partial.groupBy(key).agg(*final_exprs)
 
-
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    probe_salt_source: str | None = None,
-) -> DataFrame:
-    """Skew-resistant shuffle equi-join (for when build is too large to
-    broadcast): build rows are replicated across all salt buckets; each
-    probe row joins exactly one replica, so results equal a plain join
-    (asserted in tests) while hot keys spread over `salt_buckets` tasks.
-    """
-    src = (
-        F.col(probe_salt_source)
-        if probe_salt_source
-        else F.monotonically_increasing_id()
-    )
-    p = probe.withColumn("_salt", F.pmod(F.hash(src), F.lit(salt_buckets)))
-    b = build.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    out = p.join(b, [key, "_salt"], "inner").drop("_salt")
-    return out

@@ -10,7 +10,7 @@ payload); decode is fmt-dispatched:
     signature) is identical and tested via 'rgb24'.
 
 Each image is anchored at its caption lat/lng; tiles map to geo via a
-per-pixel degree scale, so a w x h image covers a small geo footprint and
+per-pixel degree scale (DEG_PER_PX), so a w x h image covers a small geo footprint and
 each (tile_x, tile_y) gets the cell of its tile-center. Output is the
 exploded relation (image_id, tile_x, tile_y, cell, mean_r/g/b).
 """
@@ -32,6 +32,8 @@ from pyspark.sql.types import (
 )
 
 from ..h3core import faceijk
+
+DEG_PER_PX = 1e-6  # geo footprint of one pixel, degrees per pixel
 
 TILES_SCHEMA = StructType(
     [
@@ -56,12 +58,7 @@ def decode_image(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     )
 
 
-def tile_assign(
-    images: DataFrame,
-    tile_px: int = 8,
-    res: int = 15,
-    deg_per_px: float = 1e-6,
-) -> DataFrame:
+def tile_assign(images: DataFrame, tile_px: int = 8, res: int = 15) -> DataFrame:
     """Decode + tile + cell-assign. Input needs (image_id, bytes, w, h,
     fmt, lat, lng); Catalyst prunes everything else from the scan. A row
     with NULL lat has no location (sources/io.with_geo) and gets no
@@ -100,10 +97,10 @@ def tile_assign(
         cy = ((ty + 0.5) * tile_px - h / 2.0).ravel()
         n_t = ny * nx
         lats = (
-            grp["lat"].to_numpy()[:, None] - cy[None, :] * deg_per_px
+            grp["lat"].to_numpy()[:, None] - cy[None, :] * DEG_PER_PX
         ).ravel()
         lngs = (
-            grp["lng"].to_numpy()[:, None] + cx[None, :] * deg_per_px
+            grp["lng"].to_numpy()[:, None] + cx[None, :] * DEG_PER_PX
         ).ravel()
         cells = faceijk.geo_to_h3(lats, lngs, res)
         return pd.DataFrame(

@@ -102,37 +102,22 @@ def row_geography(i: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _make_images_pdf(
-    ids: np.ndarray, w: int, h: int, fast_bytes: bool = False
-) -> pd.DataFrame:
+def _make_images_pdf(ids: np.ndarray, w: int, h: int) -> pd.DataFrame:
     lat, lng = row_geography(ids)
     image_ids = [f"img{int(i):012d}" for i in ids]
     captions = [
         f"photo {iid} at {la:.6f},{ln:.6f}"
         for iid, la, ln in zip(image_ids, lat, lng)
     ]
-    if fast_bytes:
-        # vectorized deterministic pixels: splitmix64 counter stream per
-        # row (used for large bench tables; same schema/invariants)
-        n_bytes = w * h * 3
-        words = (n_bytes + 7) // 8
-        mat = np.empty((len(ids), words), dtype=np.uint64)
-        for c in range(words):
-            mat[:, c] = _splitmix64(ids.astype(np.uint64) * np.uint64(words) + np.uint64(c))
-        raw = mat.view(np.uint8)[:, :n_bytes]
-        payloads = [r.tobytes() for r in raw]
-        ph = _splitmix64(mat.sum(axis=1, dtype=np.uint64))
-        phashes = (ph & np.uint64(0x7FFFFFFFFFFFFFFF)).astype(np.int64).tolist()
-    else:
-        payloads = []
-        phashes = []
-        for i in ids:
-            rng = np.random.default_rng(SEED + int(i))
-            px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            b = px.tobytes()
-            payloads.append(b)
-            digest = hashlib.sha1(b).digest()[:8]
-            phashes.append(int.from_bytes(digest, "big") & 0x7FFFFFFFFFFFFFFF)
+    payloads = []
+    phashes = []
+    for i in ids:
+        rng = np.random.default_rng(SEED + int(i))
+        px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        b = px.tobytes()
+        payloads.append(b)
+        digest = hashlib.sha1(b).digest()[:8]
+        phashes.append(int.from_bytes(digest, "big") & 0x7FFFFFFFFFFFFFFF)
     return pd.DataFrame(
         {
             "image_id": image_ids,
@@ -147,20 +132,15 @@ def _make_images_pdf(
 
 
 def generate_images(
-    spark: SparkSession,
-    n: int,
-    w: int = 32,
-    h: int = 32,
-    parts: int | None = None,
-    fast_bytes: bool = False,
+    spark: SparkSession, n: int, w: int = 32, h: int = 32
 ) -> DataFrame:
     """Distributed deterministic images table (exact input_hint schema)."""
-    parts = parts or max(4, min(256, n // 5000 or 4))
+    parts = max(4, min(256, n // 5000 or 4))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
-                yield _make_images_pdf(pdf["id"].to_numpy(), w, h, fast_bytes)
+                yield _make_images_pdf(pdf["id"].to_numpy(), w, h)
 
     return (
         spark.range(0, n, 1, parts)

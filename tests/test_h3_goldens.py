@@ -267,6 +267,9 @@ class TestRegions:
         expanded = h3.uncompact(compacted, 9)
         assert len(expanded) == 1253
         assert set(expanded.tolist()) == set(cells.tolist())
+        # H6: the one-call form gives the same 209 cells
+        fused = h3.polyfill_compact(SF_POLYGON, [], 9)
+        assert sorted(fused.tolist()) == sorted(compacted.tolist())
 
     def test_polyfill_with_hole(self):
         # src/region.rs:126-147
@@ -410,6 +413,19 @@ class TestExtendedParity:
         assert ok[0]  # far from any pentagon
         _, _, ok = hex_range(np.array([0x821C07FFFFFFFFF]), 1)
         assert not ok[0]  # pentagon origin
+
+    def test_hex_range_distances(self):
+        # T7: the k_ring_distances disk plus the T6 pentagon flag
+        from h3_rs_spark.h3core.traversal import (
+            hex_range_distances,
+            k_ring_distances,
+        )
+
+        origins = np.array([0x8928308280FFFFF, 0x821C07FFFFFFFFF])
+        o, c, d, ok = hex_range_distances(origins, 2)
+        wo, wc, wd = k_ring_distances(origins, 2)
+        assert (o == wo).all() and (c == wc).all() and (d == wd).all()
+        assert ok.tolist() == [True, False]  # the pentagon's disk fails
 
     def test_icosahedron_faces(self):
         from h3_rs_spark.h3core.faceijk import icosahedron_faces, max_face_count

@@ -20,7 +20,7 @@ from h3_rs_spark.functions.native import (
     edge_origin_col,
     h3_resolution,
     h3_to_parent_col,
-    haversine_m_col,
+    haversine_m_sql,
 )
 from h3_rs_spark.functions.udfs import (
     edge_destination_udf,
@@ -161,9 +161,7 @@ def test_boundary_vertex_classes(fixture_cells):
     ).withColumn("c", h3_to_geo_udf("cell"))
     verts = verts.withColumn(
         "vdist_m",
-        haversine_m_col(
-            F.col("c.lat"), F.col("c.lng"), F.col("vert.lat"), F.col("vert.lng")
-        ),
+        F.expr(haversine_m_sql("c.lat", "c.lng", "vert.lat", "vert.lng")),
     )
     per_cell = verts.groupBy("cell").agg(
         F.count("*").alias("nv"), F.max("vdist_m").alias("max_d")
@@ -196,7 +194,7 @@ def test_compact_distributed_sf_golden(spark):
     uncompact round trip and an antichain output."""
     cells_np = regions.polyfill(SF_EXTERIOR, [], 9)
     cells = spark.createDataFrame([(int(c),) for c in cells_np], "cell long")
-    comp = compact_cells_df(cells, res=9, assume_distinct=True).persist()
+    comp = compact_cells_df(cells).persist()
     try:
         n_comp = comp.count()
         back = [r[0] for r in uncompact_cells_df(comp, 9).distinct().collect()]

@@ -40,23 +40,28 @@ class TestNativeColumns:
         assert out["back"] == 0x85283473FFFFFFF
 
     def test_haversine_matches_numpy(self, spark):
+        """The SQL haversine equals the numpy kernel on 500 random
+        pairs over the whole sphere."""
         from h3_rs_spark.h3core.geom import haversine_m
 
-        df = spark.createDataFrame(
-            [(37.76, -122.44, -33.87, 151.21)], "a double, b double, c double, d double"
+        rng = np.random.default_rng(7)
+        n = 500
+        pdf = pd.DataFrame(
+            {
+                "a": np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
+                "b": rng.uniform(-180, 180, n),
+                "c": np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
+                "d": rng.uniform(-180, 180, n),
+            }
         )
-        got = df.select(
-            native.haversine_m_col(
-                F.col("a"), F.col("b"), F.col("c"), F.col("d")
-            ).alias("d_m")
-        ).first()["d_m"]
-        exp = float(
-            haversine_m(
-                np.radians(37.76), np.radians(-122.44),
-                np.radians(-33.87), np.radians(151.21),
-            )
+        got = (
+            spark.createDataFrame(pdf)
+            .selectExpr(f"{native.haversine_m_sql('a', 'b', 'c', 'd')} AS d_m")
+            .toPandas()["d_m"]
+            .to_numpy()
         )
-        assert abs(got - exp) < 1e-6
+        exp = haversine_m(*(np.radians(pdf[c].to_numpy()) for c in "abcd"))
+        assert np.allclose(got, exp, rtol=1e-12, atol=1e-6)
 
 
 class TestStageRunner:
@@ -455,3 +460,21 @@ def test_package_zip_written_once_per_source_state(tmp_path):
     with zipfile.ZipFile(path) as zf:
         assert len(zf.comment) == 64
         assert "h3_rs_spark/session.py" in zf.namelist()
+
+
+# settable options under h3_rs_spark/ (tools/count_options.py); a new
+# option raises this in the same diff
+OPTION_BUDGET = 22
+
+
+def test_option_budget():
+    """The engine has at most OPTION_BUDGET settable options."""
+    import importlib.util
+    from pathlib import Path
+
+    tool = Path(__file__).resolve().parents[1] / "tools" / "count_options.py"
+    spec = importlib.util.spec_from_file_location("count_options", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    found = mod.options()
+    assert len(found) <= OPTION_BUDGET, "\n".join(found)

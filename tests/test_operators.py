@@ -218,6 +218,25 @@ class TestAdversarialPip:
         polys = {"sf_two_holes": ADVERSARIAL["sf_two_holes"][0]}
         assert pip_count(spark, empty, polys).collect() == []
 
+    def test_empty_polygon_set(self, spark, adversarial_table):
+        """No polygons: the typed empty result, built without a Spark
+        job (the build side has no rows to infer a schema from)."""
+        from h3_rs_spark.operators.pip_join import pip_count
+
+        sc = spark.sparkContext
+        sc.setJobGroup("pip_empty", "pip_empty")
+        try:
+            joined = pip_join(spark, adversarial_table, {})
+            counts = pip_count(spark, adversarial_table, {})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup("pip_empty") == []
+        assert joined.columns == adversarial_table.columns + ["polygon_id"]
+        assert joined.collect() == []
+        assert counts.columns == ["polygon_id", "n_images"]
+        assert counts.collect() == []
+
 
 class TestKnn:
     @pytest.mark.parametrize("n,k", [(24, 5), (8, 3)])
@@ -261,7 +280,7 @@ class TestKnn:
 
         monkeypatch.setattr(
             knn_mod, "_seed_plans",
-            lambda spark, images, q_pdf, k, res, cell_col: (
+            lambda spark, images, q_pdf, k, res: (
                 np.full(len(q_pdf), res),
                 np.full(len(q_pdf), knn_mod._INITIAL_RING),
             ),
@@ -413,14 +432,6 @@ class TestTiling:
 
 
 class TestSkew:
-    def test_salted_join_equals_plain(self, spark, images):
-        build = images.select("cell").distinct().withColumn(
-            "tag", F.lit("x")
-        )
-        plain = images.join(build, "cell").count()
-        salted = skew.salted_join(images, build, "cell", salt_buckets=8).count()
-        assert plain == salted
-
     def test_salted_agg_equals_plain(self, spark, images):
         plain = {
             r["cell"]: r["n"]
@@ -532,21 +543,21 @@ def test_uncompact_staged_multilevel(spark):
 
 
 def test_uncompact_quoted_column_drops_finer_rows(spark):
-    """A column name that needs quoting expands the same way, and a row
-    finer than `res` is dropped."""
+    """Coarser rows expand to `res`, and a row finer than `res` is
+    dropped."""
     from h3_rs_spark.h3core import indexing as ix
     from h3_rs_spark.operators.hierarchy_ops import uncompact_cells_df
 
     coarse = [0x824887FFFFFFFFF, 0x81083FFFFFFFFFF]
     finer = int(ix.to_children(coarse[0], 7)[0])
     df = spark.createDataFrame(
-        pd.DataFrame({"my cell": coarse + [finer]})
+        pd.DataFrame({"cell": coarse + [finer]})
     )
     want = sorted(
         np.concatenate([ix.to_children(c, 5) for c in coarse]).tolist()
     )
     got = sorted(
-        r[0] for r in uncompact_cells_df(df, 5, cell_col="my cell").collect()
+        r[0] for r in uncompact_cells_df(df, 5).collect()
     )
     assert got == want
 
@@ -575,36 +586,6 @@ def test_polyfill_distributed_plan_shape(spark):
     assert plan.count("Exchange (") == (levels - 1) // 4
     assert plan.count("ArrowEvalPython (") == 0
     assert "Union" not in plan
-
-
-def test_knn_sql_parity(spark):
-    """The kNN round loop's SQL-text haversine (r7 driver-latency fix)
-    must be BIT-identical to the Column form — rank ties and the
-    completion proof depend on exact doubles."""
-    from h3_rs_spark.functions.native import haversine_m_col
-    from h3_rs_spark.operators.knn import _HAVERSINE_SQL
-
-    rng = np.random.default_rng(7)
-    n = 500
-    pdf = pd.DataFrame(
-        {
-            "lat": np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
-            "lng": rng.uniform(-180, 180, n),
-            "q_lat": np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
-            "q_lng": rng.uniform(-180, 180, n),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    want = df.select(
-        haversine_m_col(
-            F.col("q_lat"), F.col("q_lng"), F.col("lat"), F.col("lng")
-        ).alias("h")
-    ).toPandas()
-    got = df.selectExpr(f"{_HAVERSINE_SQL} AS h").toPandas()
-    # bitwise equality, not approx: the trees must be identical
-    assert (
-        want["h"].to_numpy().tobytes() == got["h"].to_numpy().tobytes()
-    )
 
 
 def test_children_one_level_sql_parity(spark):
@@ -838,8 +819,7 @@ class TestKnnEdgeCases:
             )
         )
         out = knn_join(
-            spark, images=empty_imgs, queries=queries, k=3, res=9,
-            max_ring=64,
+            spark, images=empty_imgs, queries=queries, k=3, res=9
         )
         assert out.count() == 0
 
@@ -880,3 +860,20 @@ class TestGeoDiskDynUdf:
             cell = fk.geo_to_h3(np.array([lat]), np.array([lng]), res)
             _, disk = traversal.k_ring(cell, ring)
             assert got[i] == sorted(disk.tolist()), i
+
+
+def test_lists_by_owner_matches_append_loop():
+    """The list-valued UDFs' vectorized split equals the per-cell append
+    loop it replaced: each row's cells in output order, an empty list
+    for a row without cells, on unsorted owners and on no rows."""
+    from h3_rs_spark.functions.udfs import _lists_by_owner
+
+    rng = np.random.default_rng(3)
+    for n in (0, 1, 9):
+        owner = rng.integers(0, max(n - 1, 1), 40 if n else 0)
+        cells = rng.integers(0, 1 << 60, owner.size)
+        want = [[] for _ in range(n)]
+        for o, c in zip(owner.tolist(), cells.tolist()):
+            want[o].append(c)
+        got = _lists_by_owner(owner, cells, n)
+        assert [g.tolist() for g in got] == want
