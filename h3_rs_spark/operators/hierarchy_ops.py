@@ -82,7 +82,7 @@ def compact_cells_df(cells: DataFrame) -> DataFrame:
     they would inflate the ancestor counts."""
     res = cells.select(F.max(h3_resolution("cell"))).first()[0]
     if res is None:
-        return cells
+        return cells.select("cell")
     res = int(res)
     distinct = cells.select("cell").distinct()
     if res == 0:

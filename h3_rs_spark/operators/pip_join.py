@@ -16,7 +16,12 @@ Plan shape (SURVEY.md §2.9/§4.2, designed for 10^12-row probe tables):
      set is an antichain, each probe row matches at most one build row
      (no double counting; asserted in tests).
   4. Only rows matched to *boundary* cells pay the exact ray-casting PIP
-     refinement (Arrow-batched pandas UDF); interior matches are free.
+     refinement; interior matches are free. The refine is one JVM
+     expression: each boundary build row carries the few ring edges
+     that can cross its cell, and an `aggregate` over them runs the
+     kernel's own per-edge test (regions.points_in_polygon), so a
+     request starts no Python worker and decides every row as the
+     kernel does.
 
   At scale, partition pruning comes for free: the images table is
   partitioned by coarse cell (sources/io.write_images) and the build
@@ -27,15 +32,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType, StringType, StructField, StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.native import h3_to_parent_col
+from ..h3core import faceijk as fk
 from ..h3core import indexing as ix
 from ..h3core import regions
+from ..h3core.constants import EARTH_RADIUS_M, EDGE_LENGTH_M
 from ..h3core.hierarchy import uncompact
 
 
@@ -53,6 +59,180 @@ def build_polygon_cells(polygons: dict) -> pd.DataFrame:
         for c in boundary:
             rows.append((pid, int(c), True))
     return pd.DataFrame(rows, columns=["polygon_id", "cell", "is_boundary"])
+
+
+# one ring edge of a boundary build row, in the frame of
+# regions._framed_rings: `ring` is the row's own bit for the edge's
+# ring, `pole` +1/-1 for a pole-encircling ring (else 0), `shifted` a
+# planar ring moved into the [0, 360) longitude domain. dx and dy are
+# the deltas the kernel derives from the edge's ends: for a planar edge
+# x1 - x0 and its divisor (y1 - y0, or 1 for a level edge); for a polar
+# edge x1 - x0 wrapped the short way round and y1 - y0. Computed here
+# by the kernel's own operations, they are the same doubles, and the
+# Spark refine evaluates fewer interpreted nodes per edge.
+_EDGE = pa.struct(
+    [("ring", pa.int32()), ("pole", pa.int8()), ("shifted", pa.bool_())]
+    + [(k, pa.float64()) for k in ("x0", "y0", "y1", "dx", "dy")]
+)
+# slack on the longitude band, for the kernel's rounding of a point's
+# wrapped offset (a point 1e-15 deg short of an edge's span can count)
+_LNG_SLACK_DEG = 1e-9
+
+
+def _wrap(d):
+    return (d + 180.0) % 360.0 - 180.0
+
+
+def _polygon_edges(exterior, holes) -> dict:
+    """Every edge of the framed rings, as the _EDGE columns with the
+    ring index. A polar edge with no wrapped longitude span is left
+    out: the kernel divides by NaN there and counts no point."""
+    parts = []
+    for i, (ring, pole, shifted) in enumerate(regions._framed_rings(exterior, holes)):
+        x0, y0 = ring[:-1].T
+        x1, y1 = ring[1:].T
+        dx, dy = x1 - x0, y1 - y0
+        if pole is None:
+            keep = np.ones(len(dx), dtype=bool)
+            dy = np.where(dy == 0.0, 1.0, dy)
+        else:
+            dx = _wrap(dx)
+            keep = dx != 0.0
+        cols = {"x0": x0, "y0": y0, "y1": y1, "dx": dx, "dy": dy}
+        cols = {k: v[keep] for k, v in cols.items()}
+        n = int(keep.sum())
+        cols.update(ring=np.full(n, i), pole=np.full(n, pole or 0),
+                    shifted=np.full(n, shifted))
+        parts.append(cols)
+    return {k: np.concatenate([p[k] for p in parts]) for k in parts[0]}
+
+
+def _boundary_edges(build_pdf: pd.DataFrame, polygons: dict):
+    """(polar_bits, edges) for each build row: a boundary row's edges
+    are the framed ring edges that can cross a point of its cell, as a
+    list<struct> arrow column; an interior row has none.
+
+    A cell's points lie within rho = REACH * EDGE_LENGTH_M[res] of its
+    centre (regions.polygon_cover), so within rho degrees of latitude
+    and, unless that reach touches a pole, within rho / cos(top) of
+    longitude, top being the highest latitude the reach touches. A
+    planar edge whose latitude span misses the band straddles no point
+    of the cell, and a polar edge whose wrapped longitude span misses
+    the longitude band spans none; leaving them out keeps every
+    point's crossing parity as the kernel counts it.
+
+    Each row numbers its own rings, so a polygon may have any number
+    of holes: bit 0 is the exterior, then every ring that keeps an edge
+    or is polar. A polar ring holds its points on EVEN parity, so its
+    bit starts set in polar_bits."""
+    n = len(build_pdf)
+    polar_bits = np.zeros(n, dtype=np.int64)
+    counts = np.zeros(n, dtype=np.int64)
+    owner, bits, picked = [], [], []
+    boundary = build_pdf["is_boundary"].to_numpy(dtype=bool)
+    pids = build_pdf["polygon_id"].to_numpy()
+    all_cells = build_pdf["cell"].to_numpy(dtype=np.int64)
+    for pid, (ext, holes, _res) in polygons.items():
+        rows = np.flatnonzero(boundary & (pids == pid))
+        if not rows.size:
+            continue
+        e = _polygon_edges(ext, holes)
+        polar_edge = e["pole"] != 0
+        lo = np.minimum(e["y0"], e["y1"])
+        hi = np.maximum(e["y0"], e["y1"])
+        mid = e["x0"] + 0.5 * e["dx"]
+        half = 0.5 * np.abs(e["dx"]) + _LNG_SLACK_DEG
+        n_rings = int(e["ring"].max()) + 1
+        polar_ring = np.zeros(n_rings, dtype=bool)
+        polar_ring[e["ring"][polar_edge]] = True
+        cells = all_cells[rows]
+        lat, lng = fk.h3_to_geo(cells)
+        rho = np.degrees(
+            regions.REACH * EDGE_LENGTH_M[ix.get_resolution(cells)] / EARTH_RADIUS_M
+        )
+        top = np.abs(lat) + rho
+        with np.errstate(divide="ignore"):
+            dl = np.where(top < 90.0, rho / np.cos(np.radians(top)), np.inf)
+        step = max(1, regions._BLOCK // len(lo))
+        for s in range(0, rows.size, step):
+            b = slice(s, s + step)
+            la, r, ln = lat[b, None], rho[b, None], lng[b, None]
+            keep = np.where(
+                polar_edge,
+                np.abs(_wrap(ln - mid)) <= half + dl[b, None],
+                (lo <= la + r) & (hi >= la - r),
+            )
+            has = np.column_stack(
+                [keep[:, e["ring"] == k].any(axis=1) for k in range(n_rings)]
+            )
+            has[:, 0] = True
+            has |= polar_ring
+            bit = np.cumsum(has, axis=1) - 1
+            if bit[:, -1].max() > 63:
+                raise ValueError(
+                    f"pip_join: polygon {pid!r} has more than 63 holes "
+                    "crossing one boundary cell"
+                )
+            polar_bits[rows[b]] = np.bitwise_or.reduce(
+                np.where(polar_ring, np.left_shift(1, bit), 0), axis=1
+            )
+            counts[rows[b]] = keep.sum(axis=1)
+            i, j = np.nonzero(keep)
+            owner.append(rows[b][i])
+            bits.append(bit[i, e["ring"][j]])
+            picked.append({k: v[j] for k, v in e.items()})
+    if owner:
+        order = np.argsort(np.concatenate(owner), kind="stable")
+        cols = {k: np.concatenate([p[k] for p in picked])[order] for k in picked[0]}
+        cols["ring"] = np.concatenate(bits)[order]
+        values = pa.StructArray.from_arrays(
+            [pa.array(cols[f.name], type=f.type) for f in _EDGE], fields=list(_EDGE)
+        )
+    else:
+        values = pa.array([], type=_EDGE)
+    offsets = pa.array(np.concatenate([[0], np.cumsum(counts)]), type=pa.int32())
+    return polar_bits, pa.ListArray.from_arrays(offsets, values)
+
+
+def _wrap_sql(d: str) -> str:
+    """_wrap in Spark SQL. % truncates like C fmod there; numpy then adds
+    360 to a negative remainder. (pmod's (r + 360) % 360 differs: it
+    gives 0 where numpy gives 360, for r within 3e-14 below 0.)"""
+    r = f"(({d}) + 180D) % 360D"
+    return f"({r} + IF({r} < 0D, 360D, 0D) - 180D)"
+
+
+# the kernel's per-edge tests, operation for operation: the ray toward
+# +lng of regions.points_in_ring and the meridian toward the pole of
+# regions._points_in_polar_ring. The polar test's last comparison is
+# cross_lat > lat toward the north pole and cross_lat < lat toward the
+# south, written as the sign of (cross_lat - lat) * pole: for finite
+# doubles a - b > 0 exactly when a > b.
+_PLANAR_CROSS = (
+    "(e.y0 <= lat) != (e.y1 <= lat) AND "
+    "IF(e.shifted AND lng < 0D, lng + 360D, lng) "
+    "< e.x0 + (lat - e.y0) / e.dy * e.dx"
+)
+_T = f"{_wrap_sql('lng - e.x0')} / e.dx"
+_POLAR_CROSS = (
+    f"{_T} >= 0D AND {_T} < 1D AND (e.y0 + {_T} * e.dy - lat) * e.pole > 0D"
+)
+
+
+def _refine_sql(polar: bool) -> str:
+    """The refine predicate: a matched row is kept when its cell is
+    interior, or when the crossing parities leave exactly the
+    exterior's bit set (inside the exterior and inside no hole). The
+    polar test is left out unless a polygon has a polar ring: Spark
+    plans each request's expression tree afresh, and the polar one is
+    the larger part of it."""
+    cross = _PLANAR_CROSS
+    if polar:
+        cross = f"IF(e.pole = 0Y, {_PLANAR_CROSS}, {_POLAR_CROSS})"
+    return (
+        "NOT is_boundary OR aggregate(edges, polar_bits, (m, e) -> "
+        f"IF({cross}, m ^ shiftleft(1L, e.ring), m)) = 1"
+    )
 
 
 def pip_join(
@@ -86,8 +266,12 @@ def pip_join(
     build_res = sorted(
         int(r) for r in np.unique(ix.get_resolution(build_pdf["cell"].to_numpy()))
     )
+    polar_bits, edges = _boundary_edges(build_pdf, polygons)
+    build_table = pa.Table.from_pandas(build_pdf, preserve_index=False).append_column(
+        "polar_bits", pa.array(polar_bits)
+    ).append_column("edges", edges)
     build = F.broadcast(
-        spark.createDataFrame(build_pdf).withColumnsRenamed({"cell": "poly_cell"})
+        spark.createDataFrame(build_table).withColumnsRenamed({"cell": "poly_cell"})
     )
 
     probe = images
@@ -115,7 +299,9 @@ def pip_join(
 
     joined = probe.join(build, probe["probe_key"] == build["poly_cell"], "inner")
 
-    return _refine_boundary(joined, polygons).drop("probe_key", "poly_cell", "is_boundary")
+    return joined.where(F.expr(_refine_sql(bool(polar_bits.any())))).drop(
+        "probe_key", "poly_cell", "is_boundary", "polar_bits", "edges"
+    )
 
 
 _EXPAND_BUILD_MAX = 200_000  # uncompacted build cells worth broadcasting
@@ -146,47 +332,6 @@ def _maybe_expand_build(build_pdf: pd.DataFrame, polygons: dict) -> pd.DataFrame
             )
         )
     return pd.concat(frames, ignore_index=True)
-
-
-def _build_refine_udf(polygons: dict):
-    geoms = {pid: (ext, holes) for pid, (ext, holes, _res) in polygons.items()}
-
-    @F.pandas_udf(BooleanType())
-    def _pip(
-        polygon_id: pd.Series, lat: pd.Series, lng: pd.Series,
-        is_boundary: pd.Series,
-    ) -> pd.Series:
-        out = np.ones(len(polygon_id), dtype=bool)
-        mask = is_boundary.to_numpy(dtype=bool)
-        if mask.any():
-            la = lat.to_numpy(dtype=np.float64)
-            ln = lng.to_numpy(dtype=np.float64)
-            sub = polygon_id[mask]
-            res = np.zeros(int(mask.sum()), dtype=bool)
-            pos = np.flatnonzero(mask)
-            for pid, idx in sub.groupby(sub).groups.items():
-                ext, holes = geoms[pid]
-                ii = np.asarray(idx)
-                res_idx = np.searchsorted(pos, ii)
-                res[res_idx] = regions.points_in_polygon(
-                    ln[ii], la[ii], ext, holes
-                )
-            out[mask] = res
-        return pd.Series(out)
-
-    return _pip
-
-
-def _refine_boundary(joined: DataFrame, polygons: dict) -> DataFrame:
-    """Exact PIP for rows matched via boundary cells.
-
-    Single Arrow pass over the matched rows; the ray-casting kernel runs
-    only on the boundary-matched subset (interior matches short-circuit
-    to True inside the batch), so the plan keeps one probe scan and the
-    Python cost is proportional to boundary matches, not all matches.
-    """
-    pip_udf = _build_refine_udf(polygons)
-    return joined.where(pip_udf("polygon_id", "lat", "lng", "is_boundary"))
 
 
 def pip_count(spark, images, polygons) -> DataFrame:

@@ -341,8 +341,8 @@ class TestOptimizerBarrier:
         barrier, the join's isnotnull(f(cell)) constraint is pushed
         through the defining projection and the optimized plan carries
         a second ArrowEvalPython (measured 8.4M -> 4.7M rows/s on the
-        flagship). The refine UDF accounts for the one other allowed
-        python node."""
+        flagship). The PIP refine is a JVM expression, so the encode is
+        the plan's only python node."""
         import pandas as pd
 
         from h3_rs_spark.operators.pip_join import pip_count
@@ -364,7 +364,7 @@ class TestOptimizerBarrier:
         }
         out = pip_count(spark, io.with_geo(imgs, res=9), polys9)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ArrowEvalPython") == 2, plan
+        assert plan.count("ArrowEvalPython") == 1, plan
 
     def test_barrier_version_pin(self, spark):
         """VERDICT r4 #7: the asNondeterministic marking is a

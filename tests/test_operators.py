@@ -487,6 +487,18 @@ class TestDistributedHierarchy:
         out = [r[0] for r in compact_cells_df(df).collect()]
         assert out == [parent]
 
+    def test_compact_df_schema_is_one_cell_column(self, spark):
+        """An empty and a one-row (cell, polygon_id) relation both come
+        back with the single column `cell`."""
+        from h3_rs_spark.operators.hierarchy_ops import compact_cells_df
+
+        rel = spark.createDataFrame(
+            pd.DataFrame({"cell": [0x87283472BFFFFFF], "polygon_id": ["sf"]})
+        )
+        for df, n in ((rel.limit(0), 0), (rel, 1)):
+            out = compact_cells_df(df)
+            assert out.columns == ["cell"] and out.count() == n
+
 
 class TestPolyfillDistributed:
     def test_equals_driver_polyfill(self, spark):
@@ -653,6 +665,49 @@ class TestPipBuildStrategy:
         assert "Generate" not in plan_expanded, plan_expanded
         assert "Generate" in plan_compacted, plan_compacted
         assert compacted == expanded and len(expanded) > 0
+
+
+def test_wrap_sql_matches_numpy(spark):
+    """The refine's longitude wrap equals numpy's `(d + 180) % 360 - 180`
+    bit for bit, also where Spark's pmod would not: a remainder just
+    below 0 gives 360 in numpy (so +180) and 0 in pmod (so -180), which
+    flips the direction of a polar edge spanning 180 degrees."""
+    from h3_rs_spark.operators.pip_join import _wrap, _wrap_sql
+
+    below = np.nextafter(-180.0, -np.inf)
+    d = np.array([below, -180.0, 180.0, 0.0, -0.0, 540.0, -540.0,
+                  np.nextafter(180.0, np.inf), 1e-300, -1e-300])
+    d = np.concatenate([d, np.random.default_rng(3).uniform(-720, 720, 200)])
+    df = spark.createDataFrame(pd.DataFrame({"i": range(len(d)), "d": d}))
+    got = [
+        r["w"] for r in
+        df.selectExpr("i", f"{_wrap_sql('d')} AS w").orderBy("i").collect()
+    ]
+    assert got == _wrap(d).tolist()
+    assert _wrap(np.array([below]))[0] == 180.0
+
+
+def test_pip_count_over_parquet_plans_no_python(spark, tmp_path, monkeypatch):
+    """Over a table read from parquet, pip_count plans no python node
+    for the expanded build nor for the compacted multi-key build (whose
+    Generate node proves it ran): the boundary refine is a JVM
+    expression, so a pip request starts no python worker."""
+    from h3_rs_spark.operators import pip_join as pj
+
+    path = str(tmp_path / "images")
+    io.write_images(datagen.generate_images(spark, 2000, w=8, h=8), path)
+    images = io.read_images(spark, path)
+    polys = {k: v for k, v in datagen.POLYGONS.items() if v[2] == 9}
+    counts = []
+    for build_max, generate in ((pj._EXPAND_BUILD_MAX, False), (0, True)):
+        monkeypatch.setattr(pj, "_EXPAND_BUILD_MAX", build_max)
+        df = pj.pip_count(spark, images, polys)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert node not in plan, plan
+        assert ("Generate" in plan) == generate, plan
+        counts.append(sorted(tuple(r) for r in df.collect()))
+    assert counts[0] == counts[1] and counts[0]
 
 
 class TestHexRanges:

@@ -2,7 +2,8 @@
 for EVERY point/cell, not just the golden fixtures — roundtrip
 containment, hierarchy closure, neighbor symmetry, distance metric
 axioms, boundary sanity. Spark-free (pure numpy kernel), so hundreds of
-examples run in seconds.
+examples run in seconds; only the PIP refine test, whose subject is a
+Spark SQL expression, runs in the session's Spark.
 """
 
 import numpy as np
@@ -306,3 +307,174 @@ class TestVolumeFuzz:
             )
             n_checked += 1
         assert n_checked == 150
+
+
+# --- the JVM PIP refine ------------------------------------------------------
+
+
+def _star(rng, lat, lng, r_deg, n):
+    """A star ring around (lat, lng) of radius up to r_deg, longitudes
+    scaled by the latitude and wrapped to [-180, 180)."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, n))
+    rad = r_deg * rng.uniform(0.3, 1.0, n)
+    la = np.clip(lat + rad * np.sin(ang), -89.0, 89.0)
+    ln = lng + rad * np.cos(ang) / np.cos(np.radians(la))
+    return np.column_stack([(ln + 180.0) % 360.0 - 180.0, la])
+
+
+@st.composite
+def pip_polygons(draw):
+    """(exterior, holes, res) of one hard kind: a star with or without a
+    hole, a box with 72 holes (more rings than a 64-bit parity mask), a
+    polar cap of either pole in either winding (optionally with a hole,
+    which may cross the antimeridian), a star across the antimeridian,
+    or a box centred on a pentagon."""
+    from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
+
+    kind = draw(st.sampled_from([
+        "star", "star_holed", "many_holes", "cap", "cap_holed",
+        "transmeridian", "pentagon",
+    ]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    res = draw(st.integers(3, 8))
+    r_deg = draw(st.floats(4.0, 12.0)) * np.degrees(
+        h3.edge_length_m(res) / 6_371_007.18
+    )
+    holes = []
+    if kind in ("star", "star_holed", "transmeridian"):
+        lat = draw(st.floats(-80.0, 80.0))
+        lng = draw(st.floats(178.0, 182.0)) if kind == "transmeridian" else draw(LNG)
+        ext = _star(rng, lat, lng, r_deg, int(rng.integers(3, 12)))
+        if kind == "star_holed":
+            holes = [_star(rng, lat, lng, 0.3 * r_deg, 5)]
+    elif kind == "many_holes":
+        lat, lng = draw(st.floats(-70.0, 70.0)), draw(st.floats(-170.0, 170.0))
+        w = r_deg / np.cos(np.radians(lat))
+        ext = np.array([(lng - w, lat - r_deg), (lng + w, lat - r_deg),
+                        (lng + w, lat + r_deg), (lng - w, lat + r_deg)])
+        # a grid of 64 holes, then 8 that overlap the first 8, so ring
+        # 64 + k shares no bit with ring k only if rings are numbered
+        # per cell
+        g = np.linspace(-0.8, 0.8, 8)
+        at = [(x, y) for y in g for x in g] + [(x + 0.05, g[0] + 0.05) for x in g]
+        sq = 0.05 * np.array([(-1, -1), (1, -1), (1, 1), (-1, 1)])
+        holes = [
+            np.column_stack([lng + w * (x + sq[:, 0]), lat + r_deg * (y + sq[:, 1])])
+            for x, y in at
+        ]
+    elif kind.startswith("cap"):
+        res = draw(st.integers(2, 4))
+        sign = draw(st.sampled_from([1.0, -1.0]))
+        lat = sign * draw(st.floats(60.0, 84.0))
+        n = int(rng.integers(6, 40))
+        lngs = np.linspace(-180.0, 180.0, n, endpoint=False)
+        if draw(st.booleans()):
+            lngs = lngs[::-1]
+        ext = np.column_stack([lngs, lat + rng.uniform(-1.0, 1.0, n)])
+        if kind == "cap_holed":
+            hole_lng = draw(st.one_of(LNG, st.just(179.9)))
+            holes = [_star(rng, lat + sign * 3.0, hole_lng, 2.0, 6)]
+    else:
+        pent = ix.from_components(
+            PENTAGON_BASE_CELLS[rng.integers(0, 12, 1)].astype(np.int64),
+            0, np.full((1, 15), 7),
+        )
+        (lat,), (lng,) = h3.h3_to_geo(pent)
+        ext = np.array([(lng - 2.0, lat - 1.0), (lng + 2.0, lat - 1.0),
+                        (lng + 2.0, lat + 1.0), (lng - 2.0, lat + 1.0)])
+        ext[:, 0] = (ext[:, 0] + 180.0) % 360.0 - 180.0
+        res = draw(st.integers(3, 5))
+    return ext, holes, res
+
+
+def _cell_bands(cells):
+    """Each cell's latitude band (centre +- rho) and longitude half-width
+    (inf when its reach touches a pole): every point of the cell lies
+    within REACH of its centre."""
+    from h3_rs_spark.h3core import regions
+    from h3_rs_spark.h3core.constants import EARTH_RADIUS_M, EDGE_LENGTH_M
+
+    lat, lng = h3.h3_to_geo(cells)
+    rho = np.degrees(
+        regions.REACH * EDGE_LENGTH_M[ix.get_resolution(cells)] / EARTH_RADIUS_M
+    )
+    top = np.abs(lat) + rho
+    dl = np.full(len(cells), np.inf)
+    dl[top < 90.0] = rho[top < 90.0] / np.cos(np.radians(top[top < 90.0]))
+    return lat, lng, rho, dl
+
+
+@settings(max_examples=30, deadline=None)
+@given(poly=pip_polygons(), seed=st.integers(0, 2**32 - 1))
+def test_jvm_refine_matches_kernel(spark, poly, seed):
+    """The pip_join refine, evaluated in Spark on (point, boundary row)
+    pairs, decides every point within the row cell's band exactly as
+    regions.points_in_polygon does. Points: uniform in sampled cells'
+    bands, on the band edges, on every ring vertex and edge midpoint
+    (and 1e-12 deg off them)."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from h3_rs_spark.h3core import regions
+    from h3_rs_spark.operators import pip_join as pj
+
+    ext, holes, _res = poly
+    rng = np.random.default_rng(seed)
+    build = pj.build_polygon_cells({"p": poly})
+    polar_bits, edges = pj._boundary_edges(build, {"p": poly})
+    rows = np.flatnonzero(build["is_boundary"].to_numpy())
+    lat_c, lng_c, rho, dl = _cell_bands(build["cell"].to_numpy()[rows])
+
+    # points tied to sampled rows: uniform in the band and on its edges
+    pick = rng.choice(len(rows), min(len(rows), 40), replace=False)
+    k = 6
+    half_w = np.minimum(dl[pick], 180.0)
+    u = rng.uniform(-1.0, 1.0, (2, len(pick), k))
+    p_lat = np.clip(lat_c[pick, None] + rho[pick, None] * u[0], -90.0, 90.0)
+    p_lng = lng_c[pick, None] + half_w[:, None] * u[1]
+    p_lat[:, 0] = np.minimum(lat_c[pick] + rho[pick], 90.0)
+    p_lat[:, 1] = np.maximum(lat_c[pick] - rho[pick], -90.0)
+    p_lng[:, 2] = lng_c[pick] + half_w
+    p_lng[:, 3] = lng_c[pick] - half_w
+    # points on the outline: vertices and edge midpoints, on and just off
+    outline = []
+    for ring in [np.asarray(r, dtype=np.float64) for r in [ext, *holes]]:
+        nxt = np.roll(ring, -1, axis=0)
+        d = (nxt[:, 0] - ring[:, 0] + 180.0) % 360.0 - 180.0
+        outline += [ring, np.column_stack([ring[:, 0] + 0.5 * d,
+                                          0.5 * (ring[:, 1] + nxt[:, 1])])]
+    outline = np.concatenate(outline)
+    outline = np.concatenate([outline, outline + 1e-12, outline - 1e-12])
+    lat = np.concatenate([p_lat.ravel(), outline[:, 1]])
+    lng = np.concatenate([p_lng.ravel(), outline[:, 0]])
+    lng = (lng + 180.0) % 360.0 - 180.0
+    lat = np.clip(lat, -90.0, 90.0)
+
+    # every (point, boundary row) pair whose band holds the point
+    in_band = (np.abs(lat[:, None] - lat_c) <= rho) & (
+        np.abs((lng[:, None] - lng_c + 180.0) % 360.0 - 180.0) <= dl
+    )
+    pt, row = np.nonzero(in_band)
+    assert len(pt) > 0
+    table = pa.table({
+        "i": np.arange(len(pt)),
+        "lat": lat[pt], "lng": lng[pt],
+        "is_boundary": np.ones(len(pt), dtype=bool),
+        "polar_bits": polar_bits[rows[row]],
+        "edges": edges.take(pa.array(rows[row])),
+    })
+    want = regions.points_in_polygon(lng, lat, ext, holes)[pt]
+    assert want.any() and not want.all()
+    cells = build["cell"].to_numpy()[rows[row]]
+    # the form pip_join picks, and the one with the polar test
+    for polar in {bool(polar_bits.any()), True}:
+        got = np.array([
+            r["keep"] for r in spark.createDataFrame(table)
+            .select("i", F.expr(pj._refine_sql(polar)).alias("keep"))
+            .orderBy("i").collect()
+        ])
+        bad = np.flatnonzero(got != want)
+        assert not bad.size, [
+            (polar, lat[pt[b]], lng[pt[b]], int(cells[b]), want[b])
+            for b in bad[:5]
+        ]
