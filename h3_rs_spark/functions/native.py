@@ -2,7 +2,8 @@
 
 Everything here stays inside WholeStageCodegen: bit ops for index
 inspection/parent (SURVEY.md §2.3/§2.5 — H1/N4/N5/N7 need no UDF),
-haversine re-ranking for kNN (§2.9), and the hex string codec.
+haversine re-ranking for kNN (§2.9), the longitude wrap and the hex
+string codec.
 Keeping these native is a core scale decision: at 10^12 rows the
 per-row ops must not cross the JVM->Python boundary.
 """
@@ -42,21 +43,14 @@ def h3_to_parent_col(cell: Column | str, parent_res: int) -> Column:
     return res_cleared.bitwiseOR(F.lit(parent_res << 52)).bitwiseOR(F.lit(fill))
 
 
-def edge_origin_col(edge: Column | str) -> Column:
-    """Unidirectional edge -> origin cell as pure bit math (clear mode
-    + edge-number bits, set cell mode) — §2.8 surface, edges.py layout
-    (mode bits 59-62, edge number bits 56-58)."""
-    e = F.col(edge) if isinstance(edge, str) else edge
-    cleared = e.bitwiseAND(F.lit(~(0xF << 59))).bitwiseAND(
-        F.lit(~(0x7 << 56))
-    )
-    return cleared.bitwiseOR(F.lit(1 << 59))
-
-
-def edge_number_col(edge: Column | str) -> Column:
-    """Unidirectional edge -> 1-based edge number ((e >> 56) & 7)."""
-    e = F.col(edge) if isinstance(edge, str) else edge
-    return F.shiftright(e, 56).bitwiseAND(F.lit(0x7))
+def wrap_lng_sql(d: str) -> str:
+    """Longitude (or longitude difference) `d` wrapped into [-180, 180)
+    as SQL text, bit for bit numpy's `(d + 180) % 360 - 180`. % truncates
+    like C fmod in Spark SQL; numpy then adds 360 to a negative
+    remainder. (pmod's (r + 360) % 360 differs: it gives 0 where numpy
+    gives 360, for r within 3e-14 below 0.)"""
+    r = f"(({d}) + 180D) % 360D"
+    return f"({r} + IF({r} < 0D, 360D, 0D) - 180D)"
 
 
 def cell_to_hex_str(cell: Column | str) -> Column:

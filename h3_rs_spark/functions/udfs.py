@@ -116,78 +116,6 @@ def k_ring_udf(k: int):
 
 
 @functools.lru_cache(maxsize=64)
-def edges_from_cell_udf():
-    """cell -> array<long> of its unidirectional edges (6, 5 for
-    pentagons) — §2.8 surface (h3core/edges.py)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(cell: pd.Series) -> pd.Series:
-        from ..h3core import edges as ed
-
-        c = cell.to_numpy(dtype=np.int64)
-        owner, e = ed.edges_from_cells(c)
-        return pd.Series(_lists_by_owner(owner, e, len(c)), dtype=object)
-
-    return _f
-
-
-@functools.lru_cache(maxsize=64)
-def edge_destination_udf():
-    """edge -> destination cell (0 for invalid)."""
-
-    @F.pandas_udf(LongType())
-    def _f(edge: pd.Series) -> pd.Series:
-        from ..h3core import edges as ed
-
-        return pd.Series(ed.edge_destination(edge.to_numpy(dtype=np.int64)))
-
-    return _f
-
-
-_HEX_RANGES_TYPE = StructType(
-    [
-        StructField("ok", BooleanType()),
-        StructField("disks", ArrayType(ArrayType(LongType()))),
-    ]
-)
-
-
-@functools.lru_cache(maxsize=64)
-def hex_ranges_udf(k: int):
-    """array<origin cells> -> struct<ok, disks>: the reference's only
-    multi-origin traversal (hexRanges, h3-sys/src/ffi.rs:120-126) as a
-    single UDF call. disks[i] is origin i's full k-disk in k_ring
-    order; ok mirrors the C contract — FALSE when any disk touches a
-    pentagon (the C call fails wholesale), in which case disks still
-    carries the exact cell sets so callers can choose the lenient
-    reading. One vectorized traversal over the batch's concatenated
-    origins, not a per-origin loop."""
-
-    @F.pandas_udf(_HEX_RANGES_TYPE)
-    def _f(origins: pd.Series) -> pd.DataFrame:
-        oks, diskss = [], []
-        lens = np.array(
-            [0 if o is None else len(o) for o in origins], dtype=np.int64
-        )
-        flat = np.concatenate(
-            [np.asarray(o, dtype=np.int64) for o in origins if o is not None]
-        ) if lens.sum() else np.empty(0, dtype=np.int64)
-        owner, cells, ok = traversal.hex_range(flat, k) if len(flat) else (
-            np.empty(0, np.int64), np.empty(0, np.int64),
-            np.empty(0, bool),
-        )
-        per_origin = _lists_by_owner(owner, cells, len(flat))
-        starts = np.concatenate([[0], np.cumsum(lens)])
-        for i in range(len(origins)):
-            lo, hi = int(starts[i]), int(starts[i + 1])
-            oks.append(bool(ok[lo:hi].all()) if hi > lo else True)
-            diskss.append(per_origin[lo:hi])
-        return pd.DataFrame({"ok": oks, "disks": diskss})
-
-    return _f
-
-
-@functools.lru_cache(maxsize=64)
 def geo_disk_dyn_udf():
     """(lat, lng, res, ring) -> array<long>: the full k-ring disk of
     the point's cell at a per-ROW (res, ring). Fuses the dynamic-res

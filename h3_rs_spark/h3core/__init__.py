@@ -39,26 +39,3 @@ def edge_length_m(res: int) -> float:
 
 def hex_area_m2(res: int) -> float:
     return float(HEX_AREA_M2[res])
-
-
-def edge_length_km(res: int) -> float:
-    """km variant (§2.8 edgeLengthKm, h3-sys/src/ffi.rs:171-178)."""
-    return float(EDGE_LENGTH_M[res]) / 1000.0
-
-
-def hex_area_km2(res: int) -> float:
-    """km^2 variant (§2.8 hexAreaKm2)."""
-    return float(HEX_AREA_M2[res]) / 1_000_000.0
-
-
-def are_neighbors(a, b):
-    """h3IndexesAreNeighbors (§2.8, ffi.rs:251): vectorized — True
-    where a and b share an edge (grid distance exactly 1)."""
-    import numpy as np
-
-    from .edges import edge_from_cells
-
-    return edge_from_cells(
-        np.atleast_1d(np.asarray(a, dtype=np.int64)),
-        np.atleast_1d(np.asarray(b, dtype=np.int64)),
-    ) != 0

@@ -466,8 +466,8 @@ def h3_to_geo_boundary(h, distortion: bool = True) -> tuple[np.ndarray, np.ndarr
     matched exactly at 1e-9.
 
     distortion=False returns only the 6 true vertices, shape (N, 6) —
-    used internally where per-cell edge identity matters (geometric
-    neighbor reflection, dissolve stitching).
+    used internally where a cell's true edges matter (the geometric
+    neighbor reflection in traversal.neighbors, icosahedron_faces).
     """
     h = np.atleast_1d(np.asarray(h, dtype=np.int64))
 

@@ -44,12 +44,6 @@ def get_base_cell(h) -> np.ndarray:
     return (_i64(h) >> 45) & 0x7F
 
 
-def get_digit(h, r) -> np.ndarray:
-    """Digit for resolution r (1-based)."""
-    shift = 3 * (MAX_RES - _i64(r))
-    return (_i64(h) >> shift) & 0x7
-
-
 def get_digits(h) -> np.ndarray:
     """(N, 15) uint8 digits for res 1..15 (index 0 == res 1)."""
     h = np.atleast_1d(_i64(h))
@@ -122,16 +116,6 @@ def rotate_pent60_ccw_digits(digits, res):
     extra = lead == 1
     if extra.any():
         out2 = rotate60_ccw_digits(out, res)
-        out = np.where(extra[:, None], out2, out)
-    return out
-
-
-def rotate_pent60_cw_digits(digits, res):
-    out = rotate60_cw_digits(digits, res)
-    lead = leading_nonzero_digit(out, res)
-    extra = lead == 1
-    if extra.any():
-        out2 = rotate60_cw_digits(out, res)
         out = np.where(extra[:, None], out2, out)
     return out
 

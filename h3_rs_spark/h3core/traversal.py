@@ -35,6 +35,8 @@ def neighbors(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     contributes 6 (5 for pentagons) neighbor entries.
     """
     h = np.atleast_1d(np.asarray(h, dtype=np.int64))
+    if h.shape[0] == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     res = ix.get_resolution(h)
     if np.unique(res).size > 1:
         out_o, out_n = [], []
@@ -77,65 +79,6 @@ def neighbors(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     key = np.stack([owner, cell], axis=1)
     key = np.unique(key, axis=0)
     return key[:, 0], key[:, 1]
-
-
-def directed_neighbors(h: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(owner_row, direction, neighbor_cell) with direction = the
-    0-based boundary-edge index: direction v is the neighbor across the
-    edge between true vertices v and (v+1) % nv of the owner's
-    boundary. Unlike neighbors(), the per-direction ordering is KEPT
-    (no dedup/sort) — the unidirectional-edge surface needs a stable
-    direction <-> neighbor bijection. Self-hits (degenerate
-    reflections) are dropped."""
-    h = np.atleast_1d(np.asarray(h, dtype=np.int64))
-    if h.shape[0] == 0:
-        # empty Arrow batches reach here via the edge UDFs (ADVICE r4:
-        # res[0] below would raise IndexError)
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    res = ix.get_resolution(h)
-    if np.unique(res).size > 1:
-        out_o, out_d, out_n = [], [], []
-        for r in np.unique(res):
-            m = np.flatnonzero(res == r)
-            o, d, nb = directed_neighbors(h[m])
-            out_o.append(m[o])
-            out_d.append(d)
-            out_n.append(nb)
-        return (
-            np.concatenate(out_o),
-            np.concatenate(out_d),
-            np.concatenate(out_n),
-        )
-    r = int(res[0])
-    clat, clng = fk.h3_to_geo(h)
-    blat, blng = fk.h3_to_geo_boundary(h, distortion=False)
-    c = geo_to_xyz(np.radians(clat), np.radians(clng))
-    n = h.shape[0]
-    nv = np.where(np.isnan(blat).any(axis=1), 5, 6)
-    vx = geo_to_xyz(np.radians(blat), np.radians(blng))
-    owners, dirs, cells = [], [], []
-    for v in range(6):
-        live = nv > v
-        nxt = np.where(v + 1 >= nv, 0, v + 1)
-        m = vx[:, v, :] + vx[np.arange(n), nxt, :]
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        p = 2.0 * (c * m).sum(axis=1, keepdims=True) * m - c
-        lat = np.degrees(np.arcsin(np.clip(p[:, 2], -1, 1)))
-        lng = np.degrees(np.arctan2(p[:, 1], p[:, 0]))
-        nb = fk.geo_to_h3(lat, lng, r)
-        ok = live & (nb != h)
-        owners.append(np.flatnonzero(ok))
-        dirs.append(np.full(int(ok.sum()), v, dtype=np.int64))
-        cells.append(nb[ok])
-    order = np.argsort(
-        np.concatenate(owners) * 8 + np.concatenate(dirs), kind="stable"
-    )
-    return (
-        np.concatenate(owners)[order],
-        np.concatenate(dirs)[order],
-        np.concatenate(cells)[order],
-    )
 
 
 def k_ring_distances(h: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.native import h3_to_parent_col
+from ..functions.native import h3_to_parent_col, wrap_lng_sql
 from ..h3core import faceijk as fk
 from ..h3core import indexing as ix
 from ..h3core import regions
@@ -194,14 +194,6 @@ def _boundary_edges(build_pdf: pd.DataFrame, polygons: dict):
     return polar_bits, pa.ListArray.from_arrays(offsets, values)
 
 
-def _wrap_sql(d: str) -> str:
-    """_wrap in Spark SQL. % truncates like C fmod there; numpy then adds
-    360 to a negative remainder. (pmod's (r + 360) % 360 differs: it
-    gives 0 where numpy gives 360, for r within 3e-14 below 0.)"""
-    r = f"(({d}) + 180D) % 360D"
-    return f"({r} + IF({r} < 0D, 360D, 0D) - 180D)"
-
-
 # the kernel's per-edge tests, operation for operation: the ray toward
 # +lng of regions.points_in_ring and the meridian toward the pole of
 # regions._points_in_polar_ring. The polar test's last comparison is
@@ -213,7 +205,7 @@ _PLANAR_CROSS = (
     "IF(e.shifted AND lng < 0D, lng + 360D, lng) "
     "< e.x0 + (lat - e.y0) / e.dy * e.dx"
 )
-_T = f"{_wrap_sql('lng - e.x0')} / e.dx"
+_T = f"{wrap_lng_sql('lng - e.x0')} / e.dx"
 _POLAR_CROSS = (
     f"{_T} >= 0D AND {_T} < 1D AND (e.y0 + {_T} * e.dy - lat) * e.pole > 0D"
 )

@@ -8,7 +8,6 @@ true cell sets (SURVEY.md §2.4-2.6 hazards), we assert the *true* sets.
 """
 
 import numpy as np
-import pytest
 
 from h3_rs_spark import h3core as h3
 
@@ -181,6 +180,21 @@ class TestTraversal:
         path = h3.h3_line(a, b)
         assert path[0] == a and path[-1] == b
         assert len(path) == 3  # distance 2 -> 3 cells
+
+    def test_empty_batch(self):
+        """An empty batch (an empty Arrow batch reaches the UDFs) gives
+        empty arrays, not an IndexError."""
+        from h3_rs_spark.h3core import traversal as tv
+
+        empty = np.empty(0, dtype=np.int64)
+        outs = [tv.neighbors(empty)] + [
+            f(empty, 2)
+            for f in (tv.k_ring, tv.k_ring_distances, tv.hex_ring, tv.hex_range)
+        ]
+        for out in outs:
+            assert [a.shape for a in out] == [(0,)] * len(out)
+        for out in outs[:4]:
+            assert {a.dtype for a in out} == {np.dtype(np.int64)}
 
 
 class TestHierarchy:
@@ -437,7 +451,7 @@ class TestExtendedParity:
         assert int(max_face_count(np.array([0x821C07FFFFFFFFF]))[0]) == 5
 
     def test_cells_to_multipolygon_dissolve(self):
-        from h3_rs_spark.h3core.regions import cells_to_multipolygon
+        from tests.dissolve import cells_to_multipolygon
 
         cells = h3.polyfill(SF_POLYGON, [], 8)
         rings = cells_to_multipolygon(cells)
@@ -462,7 +476,7 @@ class TestExtendedParity:
         lies inside (r5 edge-case coverage for the dissolve operator)."""
         from h3_rs_spark.h3core import indexing
         from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-        from h3_rs_spark.h3core.regions import cells_to_multipolygon
+        from tests.dissolve import cells_to_multipolygon
 
         digits = np.full((1, 15), 7, dtype=np.int64)
         digits[:, :5] = 0
@@ -744,17 +758,17 @@ class TestTransmeridian:
 
 class TestDissolveShapes:
     def test_annulus_and_islands(self):
-        from h3_rs_spark.h3core import regions
         from h3_rs_spark.h3core import traversal as tv
+        from tests.dissolve import cells_to_multipolygon
 
         A = 0x8928308280FFFFF
         _, hollow = tv.hex_ring(np.array([A]), 1)
-        rings = regions.cells_to_multipolygon(hollow)
+        rings = cells_to_multipolygon(hollow)
         assert sorted(len(r) for r in rings) == [6, 18]  # hole + outer
         _, disk = tv.k_ring(np.array([A]), 2)
         far = h3.geo_to_h3(np.array([-33.87]), np.array([151.21]), 9)
         _, far_disk = tv.k_ring(far, 1)
-        rings = regions.cells_to_multipolygon(
+        rings = cells_to_multipolygon(
             np.concatenate([disk, far_disk])
         )
         assert sorted(len(r) for r in rings) == [18, 30]
@@ -900,170 +914,3 @@ class TestPolarPolyfill:
         from h3_rs_spark.sources.datagen import SF_EXTERIOR
 
         assert regions.polyfill(SF_EXTERIOR, [], 9).shape[0] == 1253
-
-
-class TestUnidirectionalEdges:
-    """§2.8 uni-edge surface (h3-sys/src/ffi.rs:251-273 — the reference
-    never wrapped these, so the contract is the public H3 semantics:
-    round-trips, counts, validity, shared-boundary geometry). Edge
-    numbering is this kernel's own deterministic convention
-    (documented in h3core/edges.py)."""
-
-    def _cells(self):
-        from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-        from h3_rs_spark.h3core import indexing
-
-        hexes = np.array(
-            [0x8928308280FFFFF, 0x89283082803FFFF], dtype=np.int64
-        )
-        digits = np.full((1, 15), 7, dtype=np.int64)
-        digits[:, :9] = 0
-        pent = indexing.from_components(
-            PENTAGON_BASE_CELLS[:1].astype(np.int64), 9, digits
-        )
-        return np.concatenate([hexes, pent])
-
-    def test_counts_and_roundtrip(self):
-        from h3_rs_spark.h3core import edges as ed
-
-        cells = self._cells()
-        owner, es = ed.edges_from_cells(cells)
-        counts = np.bincount(owner, minlength=len(cells))
-        assert counts.tolist() == [6, 6, 5]  # pentagon has 5 edges
-        # every edge is valid, round-trips its origin, and reaches a
-        # real neighbor of the origin
-        assert ed.edge_is_valid(es).all()
-        assert (ed.edge_origin(es) == cells[owner]).all()
-        dests = ed.edge_destination(es)
-        from h3_rs_spark.h3core import traversal
-
-        for i, c in enumerate(cells):
-            _, nbs = traversal.neighbors(np.array([c], dtype=np.int64))
-            got = set(dests[owner == i].tolist())
-            assert got == set(nbs.tolist()), i
-
-    def test_edge_from_cells_inverse(self):
-        from h3_rs_spark.h3core import edges as ed
-
-        cells = self._cells()
-        owner, es = ed.edges_from_cells(cells)
-        dests = ed.edge_destination(es)
-        rebuilt = ed.edge_from_cells(cells[owner], dests)
-        assert (rebuilt == es).all()
-        # the two adjacent hexes yield a real edge (ADVICE r4: the
-        # `or True` made this vacuous); non-neighbors yield 0 below
-        assert ed.edge_from_cells(cells[:1], cells[1:2])[0] != 0
-        far = ed.edge_from_cells(
-            np.array([0x8928308280FFFFF], dtype=np.int64),
-            np.array([int(cells[2])], dtype=np.int64),
-        )
-        assert far[0] == 0
-
-    def test_empty_and_mismatched_inputs(self):
-        # ADVICE r4: empty Arrow batches must not IndexError, and
-        # mismatched origin/destination lengths must raise clearly
-        from h3_rs_spark.h3core import edges as ed
-        from h3_rs_spark.h3core import traversal
-
-        empty = np.empty(0, dtype=np.int64)
-        o, d, nb = traversal.directed_neighbors(empty)
-        assert o.size == d.size == nb.size == 0
-        assert ed.edge_destination(empty).size == 0
-        owner, es = ed.edges_from_cells(empty)
-        assert owner.size == es.size == 0
-        cells = self._cells()
-        with pytest.raises(ValueError, match="length mismatch"):
-            ed.edge_from_cells(cells[:1], cells)
-        from h3_rs_spark.h3core import are_neighbors
-
-        with pytest.raises(ValueError, match="length mismatch"):
-            are_neighbors(cells[:2], cells)
-
-    def test_validity_rejects_cells_and_bad_numbers(self):
-        from h3_rs_spark.h3core import edges as ed
-
-        cells = self._cells()
-        assert not ed.edge_is_valid(cells).any()  # mode 1, not an edge
-        # pentagon edge number 6 does not exist
-        bad = ed._pack(cells[2:3], np.array([5]))
-        assert not ed.edge_is_valid(bad).any()
-
-    def test_boundary_shared_with_destination(self):
-        """Every edge-boundary vertex — the two true endpoints AND any
-        Class III distortion vertices between them (full H3 semantics
-        since r5) — must coincide (1e-9 deg) with a vertex of the
-        destination's distortion boundary: the segment is shared, so
-        both cells see the same icosa-edge crossing points (each
-        computed in its own face frame, hence the tolerance)."""
-        from h3_rs_spark.h3core import edges as ed
-        from h3_rs_spark.h3core import faceijk as fk
-
-        cells = self._cells()
-        owner, es = ed.edges_from_cells(cells)
-        lat, lng = ed.edge_boundary(es)
-        dests = ed.edge_destination(es)
-        dlat, dlng = fk.h3_to_geo_boundary(dests, distortion=True)
-        n_verts = 0
-        for i in range(es.shape[0]):
-            for v in range(lat.shape[1]):
-                if np.isnan(lat[i, v]):
-                    continue
-                n_verts += 1
-                d = np.nanmin(
-                    np.hypot(
-                        dlat[i] - lat[i, v],
-                        (dlng[i] - lng[i, v])
-                        * np.cos(np.radians(lat[i, v])),
-                    )
-                )
-                assert d < 1e-9, (i, v, d)
-        # the res-9 pentagon sits on an icosa vertex: its edges carry
-        # distortion vertices, so the total must exceed 2 per edge
-        assert n_verts > 2 * es.shape[0], n_verts
-
-    def test_spark_surface(self, spark):
-        """UDF + JVM-native exposure: edges explode per cell, origin
-        recovered by pure bit math, destination/boundary via UDFs."""
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from h3_rs_spark.functions.native import (
-            edge_number_col, edge_origin_col,
-        )
-        from h3_rs_spark.functions.udfs import (
-            edge_destination_udf, edges_from_cell_udf,
-        )
-
-        cells = self._cells()
-        df = spark.createDataFrame(
-            pd.DataFrame({"cell": cells.tolist()})
-        )
-        out = (
-            df.withColumn("edge", F.explode(edges_from_cell_udf()("cell")))
-            .withColumn("origin", edge_origin_col("edge"))
-            .withColumn("num", edge_number_col("edge"))
-            .withColumn("dest", edge_destination_udf()("edge"))
-            .collect()
-        )
-        assert len(out) == 17  # 6 + 6 + 5
-        for r in out:
-            assert r["origin"] == r["cell"]
-            assert 1 <= r["num"] <= 6
-            assert r["dest"] != 0 and r["dest"] != r["cell"]
-
-
-class TestSysOnlyCompleteness:
-    def test_km_variants(self):
-        # §2.8 edgeLengthKm / hexAreaKm2 (ffi.rs:171-178): Z1 golden
-        # in km units (resolution.rs:107-109 / 1000)
-        assert abs(h3.edge_length_km(1) - 418.6760055) < 1e-7
-        assert abs(h3.hex_area_km2(1) - 607221.0) / 607221.0 < 1e-6
-
-    def test_are_neighbors(self):
-        # §2.8 h3IndexesAreNeighbors (ffi.rs:251)
-        a = np.array([0x8928308280FFFFF], dtype=np.int64)
-        _, ring1 = h3.hex_ring(a, 1)
-        _, ring2 = h3.hex_ring(a, 2)
-        assert h3.are_neighbors(np.repeat(a, len(ring1)), ring1).all()
-        assert not h3.are_neighbors(np.repeat(a, len(ring2)), ring2).any()
-        assert not h3.are_neighbors(a, a).any()  # self is not a neighbor

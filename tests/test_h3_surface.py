@@ -16,26 +16,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from h3_rs_spark.functions.native import (
-    edge_number_col,
-    edge_origin_col,
     h3_resolution,
     h3_to_parent_col,
     haversine_m_sql,
 )
 from h3_rs_spark.functions.udfs import (
-    edge_destination_udf,
-    edges_from_cell_udf,
     geo_to_h3_udf,
     h3_boundary_udf,
     h3_distance_udf,
     h3_line_udf,
     h3_local_frame_ok_udf,
     h3_to_geo_udf,
-    hex_ranges_udf,
     k_ring_udf,
 )
 from h3_rs_spark.h3core import edge_length_m, hex_area_m2, hex_ring
-from h3_rs_spark.h3core import edges as ed
 from h3_rs_spark.h3core import faceijk as fk
 from h3_rs_spark.h3core import hierarchy, indexing, regions, traversal
 from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
@@ -46,6 +40,7 @@ from h3_rs_spark.operators.hierarchy_ops import (
 )
 from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
 from h3_rs_spark.sources.datagen import POLYGONS, SF_EXTERIOR
+from tests.dissolve import cells_to_multipolygon
 
 
 def _fixture_points_res7():
@@ -340,75 +335,6 @@ def test_polar_polyfill_matches_enumeration():
     ]
 
 
-def test_unidirectional_edges_over_fixture(fixture_cells):
-    """Every edge of the 2136 fixture cells: 2124 hexagons x 6 + 12
-    pentagons x 5 = 12804. Origins come back through JVM bit math,
-    destinations through the UDF, and origin+destination rebuild the
-    edge through the kernel."""
-
-    @F.pandas_udf("long")
-    def _rebuild(origin: pd.Series, dest: pd.Series) -> pd.Series:
-        return pd.Series(
-            ed.edge_from_cells(
-                origin.to_numpy(dtype=np.int64), dest.to_numpy(dtype=np.int64)
-            )
-        )
-
-    edges = (
-        fixture_cells.withColumn(
-            "edge", F.explode(edges_from_cell_udf()("cell"))
-        )
-        .withColumn("origin", edge_origin_col("edge"))
-        .withColumn("num", edge_number_col("edge"))
-        .withColumn("dest", edge_destination_udf()("edge"))
-        .withColumn("rebuilt", _rebuild("origin", "dest"))
-    )
-    row = edges.agg(
-        F.countDistinct("cell").alias("n_cells"),
-        F.count("*").alias("n_edges"),
-        F.sum((F.col("origin") == F.col("cell")).cast("long")),
-        F.sum(
-            ((F.col("dest") != 0) & (F.col("dest") != F.col("cell"))).cast("long")
-        ),
-        F.sum((F.col("rebuilt") == F.col("edge")).cast("long")),
-        F.sum(((F.col("num") >= 1) & (F.col("num") <= 6)).cast("long")),
-    ).first()
-    assert tuple(row) == (2136, 12804, 12804, 12804, 12804, 12804)
-
-
-def test_hex_ranges_pentagon_contract(spark):
-    """k=2 disks: a hexagon pair gives 19 + 19 cells; a batch touching a
-    pentagon fails as a whole (ok=0) and the pentagon disk holds 16."""
-    hex_a, hex_b = 0x8928308280FFFFF, 0x89283082803FFFF
-    pent = int(_first_pentagon(9)[0])
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "batch": ["hex_pair", "with_pentagon"],
-                "origins": [[hex_a, hex_b], [hex_a, pent]],
-            }
-        )
-    )
-    rows = (
-        df.withColumn("r", hex_ranges_udf(2)("origins"))
-        .select(
-            "batch",
-            F.col("r.ok").cast("long").alias("ok"),
-            F.aggregate(
-                F.transform(F.col("r.disks"), lambda d: F.size(d)),
-                F.lit(0),
-                lambda a, x: a + x,
-            ).alias("n_disk_cells"),
-        )
-        .orderBy("batch")
-        .collect()
-    )
-    assert [tuple(r) for r in rows] == [
-        ("hex_pair", 1, 38),
-        ("with_pentagon", 0, 35),
-    ]
-
-
 def test_dissolve_ring_structure():
     """Cells -> multipolygon over the SF polyfill@9 set and a two-island
     set with one hole (k<=3 annulus around a hexagon plus a far k<=2
@@ -418,7 +344,7 @@ def test_dissolve_ring_structure():
 
     def summarize(cells):
         cells = np.unique(np.asarray(cells, dtype=np.int64))
-        rings = regions.cells_to_multipolygon(cells)
+        rings = cells_to_multipolygon(cells)
         n_outer = n_holes = n_verts = 0
         for ring in rings:
             pts = np.asarray(ring, dtype=np.float64)

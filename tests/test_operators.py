@@ -401,6 +401,76 @@ class TestRowsWithoutLocation:
         assert roll == dict(zip(parents.tolist(), counts.tolist()))
         assert not {0, self.PARENT_OF_0} & ({r["cell"] for r in got} | set(roll))
 
+    # caption (lat, lng) off [-180, 180] -> the longitude it wraps to
+    OFF_RANGE = {(10.0, 200.0): -160.0, (-5.0, -200.0): 160.0,
+                 (20.0, 540.0): -180.0}
+
+    def test_longitude_off_range_is_wrapped(self, spark, tmp_path):
+        """A caption longitude off [-180, 180] is stored wrapped, and
+        every operator answers as over the wrapped point: the PIP
+        refine too, for a row whose cell is a boundary cell."""
+        from h3_rs_spark.operators.pip_join import pip_count
+        from h3_rs_spark.operators.tiling import DEG_PER_PX
+
+        n = 12
+        raw = datagen.images_oracle_pdf(n, 16, 16)
+        lat, wrapped = datagen.row_geography(np.arange(n, dtype=np.int64))
+        for i, ((la, ln), w) in enumerate(self.OFF_RANGE.items()):
+            lat[i], wrapped[i] = la, w
+            raw.loc[i, "caption"] = f"photo {i} at {la:.6f},{ln:.6f}"
+        path = str(tmp_path / "img")
+        io.write_images(spark.createDataFrame(raw, datagen.IMAGES_SCHEMA), path)
+        images = io.read_images(spark, path)
+
+        got = sorted(images.select("image_id", "lat", "lng", "cell").collect())
+        assert [tuple(r)[1:] for r in got] == list(
+            zip(lat, wrapped, faceijk.geo_to_h3(lat, wrapped, 9).tolist())
+        )
+
+        # each box holds one wrapped row just inside an edge, so that
+        # row's res-9 cell is a boundary cell and the refine decides it
+        polys = {
+            "east_of_-160": (_box(-160.0005, 9.99, -159.9, 10.01), [], 9),
+            "west_of_160": (_box(159.9, -5.01, 160.0005, -4.99), [], 9),
+            "seam_at_-180": (_box(179.9995, 19.99, -179.9, 20.01), [], 9),
+        }
+        cells = faceijk.geo_to_h3(lat[:3], wrapped[:3], 9)
+        for cell, (ext, holes, res) in zip(cells, polys.values()):
+            assert cell in regions.polygon_cover(ext, holes, res)[1]
+        pip = {
+            r["polygon_id"]: r["n_images"]
+            for r in pip_count(spark, images, polys).collect()
+        }
+        want = {
+            pid: int(regions.points_in_polygon(wrapped, lat, ext, holes).sum())
+            for pid, (ext, holes, _res) in polys.items()
+        }
+        assert pip == want == dict.fromkeys(polys, 1)
+
+        q = pd.DataFrame({"query_id": ["q0", "q1", "q2"],
+                          "lat": lat[:3], "lng": wrapped[:3] + 1e-3})
+        knn = knn_join(spark, images, spark.createDataFrame(q), k=1, res=9)
+        exp = knn_oracle(
+            pd.DataFrame({"image_id": raw["image_id"], "lat": lat,
+                          "lng": wrapped}), q, k=1,
+        )
+        got_knn = sorted(map(tuple, knn.select("query_id", "image_id").collect()))
+        assert got_knn == list(zip(exp["query_id"], exp["image_id"]))
+
+        tiles = tile_assign(images, tile_px=8, res=15).select(
+            "image_id", "tile_x", "tile_y", "cell"
+        )
+        # 16x16 images, 8 px tiles: centres at +-4 px from the anchor
+        tx, ty = (t.ravel() for t in np.meshgrid([0, 1], [0, 1]))
+        want_tiles = {
+            (iid, int(x), int(y), int(c))
+            for iid, la, ln in zip(raw["image_id"], lat, wrapped)
+            for x, y, c in zip(tx, ty, faceijk.geo_to_h3(
+                la - (ty * 8 - 4) * DEG_PER_PX, ln + (tx * 8 - 4) * DEG_PER_PX, 15
+            ))
+        }
+        assert set(map(tuple, tiles.collect())) == want_tiles
+
 
 class TestTiling:
     def test_tile_assignment_vs_oracle(self, spark, images):
@@ -672,7 +742,8 @@ def test_wrap_sql_matches_numpy(spark):
     bit for bit, also where Spark's pmod would not: a remainder just
     below 0 gives 360 in numpy (so +180) and 0 in pmod (so -180), which
     flips the direction of a polar edge spanning 180 degrees."""
-    from h3_rs_spark.operators.pip_join import _wrap, _wrap_sql
+    from h3_rs_spark.functions.native import wrap_lng_sql as _wrap_sql
+    from h3_rs_spark.operators.pip_join import _wrap
 
     below = np.nextafter(-180.0, -np.inf)
     d = np.array([below, -180.0, 180.0, 0.0, -0.0, 540.0, -540.0,
@@ -708,57 +779,6 @@ def test_pip_count_over_parquet_plans_no_python(spark, tmp_path, monkeypatch):
         assert ("Generate" in plan) == generate, plan
         counts.append(sorted(tuple(r) for r in df.collect()))
     assert counts[0] == counts[1] and counts[0]
-
-
-class TestHexRanges:
-    def test_multi_origin_disks_and_pentagon_contract(self, spark):
-        """hexRanges (the reference's only multi-origin traversal,
-        h3-sys/src/ffi.rs:120-126) as one UDF call: disks match
-        per-origin k_ring exactly; ok=False iff any disk touches a
-        pentagon (the C call fails wholesale)."""
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        from h3_rs_spark.functions.udfs import hex_ranges_udf
-        from h3_rs_spark.h3core import indexing, traversal
-        from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-
-        hex_a = 0x8928308280FFFFF
-        hex_b = 0x89283082803FFFF
-        digits = np.full((1, 15), 7, dtype=np.int64)
-        digits[:, :9] = 0
-        pent = int(
-            indexing.from_components(
-                PENTAGON_BASE_CELLS[:1].astype(np.int64), 9, digits
-            )[0]
-        )
-
-        df = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "row_id": [0, 1],
-                    "origins": [[hex_a, hex_b], [hex_a, pent]],
-                }
-            )
-        )
-        out = (
-            df.withColumn("r", hex_ranges_udf(2)("origins"))
-            .select("row_id", "r.ok", "r.disks")
-            .orderBy("row_id")
-            .collect()
-        )
-        # clean row: ok, each disk == that origin's exact k_ring set
-        assert out[0]["ok"] is True
-        for origin, disk in zip([hex_a, hex_b], out[0]["disks"]):
-            _, exp = traversal.k_ring(
-                np.array([origin], dtype=np.int64), 2
-            )
-            assert sorted(disk) == sorted(exp.tolist())
-            assert len(disk) == 19
-        # pentagon row: wholesale failure flag, disks still exact
-        assert out[1]["ok"] is False
-        assert len(out[1]["disks"][1]) == 16  # pentagon disk 1+5+10
 
 
 class TestKnnSeedFold:

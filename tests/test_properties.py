@@ -102,28 +102,6 @@ def test_boundary_sane(lat, lng, res):
     assert (inner == cell[0]).all()
 
 
-@settings(max_examples=100, deadline=None)
-@given(lat=LAT, lng=LNG, res=st.integers(1, 12))
-def test_edge_surface_roundtrip(lat, lng, res):
-    """For ANY cell: its unidirectional edges are valid, origin
-    round-trips, the destination set is exactly the neighbor set, and
-    (origin, destination) -> edge rebuilds the identical indexes (r5:
-    property-level generalization of the fixed-cell edge goldens)."""
-    from h3_rs_spark.h3core import edges as ed
-
-    cell = h3.geo_to_h3(np.array([lat]), np.array([lng]), res)
-    owner, es = ed.edges_from_cells(cell)
-    n = es.shape[0]
-    assert n in (5, 6)
-    assert ed.edge_is_valid(es).all()
-    assert (ed.edge_origin(es) == cell[0]).all()
-    dests = ed.edge_destination(es)
-    _, nbs = tv.neighbors(cell)
-    assert set(dests.tolist()) == set(nbs.tolist())
-    rebuilt = ed.edge_from_cells(np.full(n, cell[0]), dests)
-    assert set(rebuilt.tolist()) == set(es.tolist())
-
-
 @settings(max_examples=60, deadline=None)
 @given(lat=LAT, lng=LNG, res=st.integers(1, 10), k=st.integers(1, 2))
 def test_dissolve_disk_single_ring(lat, lng, res, k):
@@ -131,7 +109,7 @@ def test_dissolve_disk_single_ring(lat, lng, res, k):
     pentagon neighborhoods, icosa edges) must stitch into exactly one
     closed ring with the hex-disk vertex count 6(2k+1) — or fewer
     when a pentagon's deficit is inside the disk."""
-    from h3_rs_spark.h3core.regions import cells_to_multipolygon
+    from tests.dissolve import cells_to_multipolygon
 
     cell = h3.geo_to_h3(np.array([lat]), np.array([lng]), res)
     _, disk = tv.k_ring(cell, k)
@@ -284,9 +262,8 @@ class TestVolumeFuzz:
         back at the same res -> the EXACT original cell set (polyfill is
         centroid-in-polygon; every disk centroid is strictly inside the
         dissolved boundary, every outside-neighbor centroid outside)."""
-        from h3_rs_spark.h3core.regions import (
-            cells_to_multipolygon, polyfill,
-        )
+        from h3_rs_spark.h3core.regions import polyfill
+        from tests.dissolve import cells_to_multipolygon
 
         lat, lng = self._fuzz_points(150, seed=555)
         rng = np.random.default_rng(777)
