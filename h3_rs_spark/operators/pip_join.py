@@ -23,9 +23,11 @@ Plan shape (SURVEY.md §2.9/§4.2, designed for 10^12-row probe tables):
      request starts no Python worker and decides every row as the
      kernel does.
 
-  At scale, partition pruning comes for free: the images table is
-  partitioned by coarse cell (sources/io.write_images) and the build
-  side's distinct bc0 prefixes are pushed as a partition filter.
+  At scale, file pruning comes for free: the images table is sorted on
+  `cell` (sources/io.write_images), so each base cell's rows sit in a
+  contiguous run of files, and the build side's distinct bc0 prefixes
+  are pushed to the parquet scan as a data filter that skips files by
+  their min/max statistics.
 """
 
 from __future__ import annotations
@@ -234,8 +236,8 @@ def pip_join(
     lat/lng columns) against polygons; returns matched rows +
     polygon_id.
 
-    When `images` carries the `bc0` partition column, the build side's
-    distinct base cells are pushed as a partition filter. An empty
+    When `images` carries the `bc0` column, the build side's distinct
+    base cells are pushed to the scan as a filter on it. An empty
     polygon set returns the typed empty result (polygon_id string)
     without a Spark job."""
     if not polygons:

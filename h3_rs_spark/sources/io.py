@@ -1,19 +1,38 @@
-"""Warehouse IO: the `images` fact table as hive-partitioned parquet.
+"""Warehouse IO: the `images` fact table as one flat parquet directory
+sorted on `cell`.
 
-The table is partitioned by the coarse cell (base cell of the res-0
-ancestor), so polygon queries prune partitions from the compacted
-polyfill's coarse prefix (SURVEY.md §4.2). At design scale the same
-layout is an Iceberg partition spec; this pyspark bundles no Iceberg
-runtime jar, so the engine writes parquet.
+An H3 index orders its digits coarse to fine, so a table range-
+partitioned and sorted on `cell` keeps each base cell's rows in one
+contiguous run of files, and a filter on `cell` or on its coarse
+prefix `bc0` (an ordinary column) prunes files by their parquet
+min/max statistics (SURVEY.md §4.2). At design scale the same layout
+is an Iceberg sort order on `cell`; this pyspark bundles no Iceberg
+runtime jar, so the engine writes parquet. The table is read with its
+known schema, IMAGES_TABLE_SCHEMA, so a read runs no Spark job and an
+empty table reads back as 0 rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.native import h3_base_cell, h3_to_parent_col, wrap_lng_sql
 from ..functions.udfs import geo_to_h3_udf
+from .datagen import IMAGES_SCHEMA
+
+# the input fields, then what with_geo derives; every field nullable
+# (a row without a location has NULL lat, lng, cell and bc0)
+IMAGES_TABLE_SCHEMA = StructType(
+    [StructField(f.name, f.dataType) for f in IMAGES_SCHEMA]
+    + [
+        StructField("lat", DoubleType()),
+        StructField("lng", DoubleType()),
+        StructField("cell", LongType()),
+        StructField("bc0", LongType()),
+    ]
+)
 
 
 def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
@@ -40,8 +59,8 @@ def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
     df = df.withColumns({"lat": F.when(ok, F.col("lat")), "lng": F.when(ok, lng)})
     # geo_to_h3_udf is nondeterministic-marked at the source (optimizer
     # barrier against join-constraint pushdown duplicating the Arrow
-    # eval — see functions/udfs.py); bc0 partition pruning reads the
-    # on-disk partition column, not this expression. The NULL mask is a
+    # eval — see functions/udfs.py); a bc0 filter on the written table
+    # reads the stored column, not this expression. The NULL mask is a
     # second projection so the encode still runs once per row.
     df = df.withColumn("cell", geo_to_h3_udf(res)("lat", "lng"))
     df = df.withColumn("cell", F.when(F.col("lat").isNotNull(), F.col("cell")))
@@ -49,16 +68,20 @@ def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
 
 
 def write_images(df: DataFrame, path: str, res: int = 9) -> None:
-    """Write the images table partitioned by coarse cell for pruning."""
+    """Write the images table as IMAGES_TABLE_SCHEMA, range-partitioned
+    and sorted on `cell`: each part file holds one disjoint `cell` range.
+    The partition count is the session's spark.sql.shuffle.partitions,
+    coalesced by AQE."""
     (
         with_geo(df, res)
-        .repartition("bc0")
+        .select([F.col(f.name).cast(f.dataType) for f in IMAGES_TABLE_SCHEMA])
+        .repartitionByRange("cell")
+        .sortWithinPartitions("cell")
         .write.mode("overwrite")
-        .partitionBy("bc0")
         .parquet(path)
     )
 
 
 def read_images(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
+    """Read a table written by write_images; runs no Spark job."""
+    return spark.read.schema(IMAGES_TABLE_SCHEMA).parquet(path)

@@ -8,8 +8,8 @@ Usage:
       --n-images 200000 --res 9 --warehouse /tmp/h3_wh
 
 Stages (each a resume point keyed by an input fingerprint):
-  1. images      — deterministic synthetic fact table, partitioned by
-                   coarse cell
+  1. images      — deterministic synthetic fact table with its res-`res`
+                   cell (sources/io.with_geo)
   2. pip_matches — exact PIP join against the reference polygons
   3. cell_counts — per-cell density rollup of the matches
 """

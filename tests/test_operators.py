@@ -4,6 +4,8 @@ Strategy per SURVEY.md §5: every distributed operator must reproduce the
 brute-force single-process answer row-for-row on the deterministic
 synthetic tables (FIXTURES.md)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -95,12 +97,18 @@ class TestPipJoin:
         ).count()
         assert got.where(F.col("count") > 1).count() == 0
 
-    def test_partition_pruning_filter(self, spark, images):
+    def test_partition_pruning_filter(self, spark, tmp_path):
+        """The build side's base cells reach the parquet scan as a pushed
+        `bc0` In filter, so files prune by their min/max statistics."""
+        path = str(tmp_path / "images")
+        io.write_images(datagen.generate_images(spark, 500, w=8, h=8), path)
         polys = {"sf_hexagon": datagen.POLYGONS["sf_hexagon"]}
         plan = pip_join(
-            spark, images, polys
+            spark, io.read_images(spark, path), polys
         )._jdf.queryExecution().executedPlan().toString()
-        assert "bc0" in plan  # coarse-cell prefilter present
+        scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
+        pushed = re.search(r"PushedFilters: \[(.*?)\], ReadSchema", scan)
+        assert pushed and re.search(r"\bIn\(bc0, \[", pushed.group(1)), scan
 
 
 def _box(lng0, lat0, lng1, lat1):
@@ -343,11 +351,9 @@ class TestRowsWithoutLocation:
         schema = T.StructType(
             [T.StructField(f.name, f.dataType) for f in datagen.IMAGES_SCHEMA]
         )
-        df, path = spark.createDataFrame(raw, schema), str(tmp_path / "img")
-        if n_valid:
-            io.write_images(df, path)
-        # an empty write leaves no part file to read a schema back from
-        images = io.read_images(spark, path) if n_valid else io.with_geo(df)
+        path = str(tmp_path / "img")
+        io.write_images(spark.createDataFrame(raw, schema), path)
+        images = io.read_images(spark, path)
         valid = oracle_geo.iloc[:n_valid]
         lat, lng = valid["lat"].to_numpy(), valid["lng"].to_numpy()
 
@@ -779,6 +785,58 @@ def test_pip_count_over_parquet_plans_no_python(spark, tmp_path, monkeypatch):
         assert ("Generate" in plan) == generate, plan
         counts.append(sorted(tuple(r) for r in df.collect()))
     assert counts[0] == counts[1] and counts[0]
+
+
+def test_images_table_is_flat_and_cell_ordered(spark, tmp_path):
+    """write_images leaves flat part files, at most one per shuffle
+    partition, holding disjoint `cell` ranges sorted within each file;
+    read_images runs no Spark job, returns IMAGES_TABLE_SCHEMA and keeps
+    a row without a location."""
+    import pyarrow.parquet as pq
+
+    n = 3000
+    nowhere = spark.createDataFrame(
+        [("nowhere", b"", 8, 8, "rgb24", "a photo", 0)], datagen.IMAGES_SCHEMA
+    )
+    path = tmp_path / "images"
+    io.write_images(
+        datagen.generate_images(spark, n, w=8, h=8).unionByName(nowhere),
+        str(path),
+    )
+
+    assert not [p for p in path.iterdir() if p.is_dir()]
+    files = sorted(path.glob("*.parquet"))
+    assert 0 < len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ranges = []
+    for f in files:
+        meta = pq.read_metadata(f)
+        col = meta.schema.names.index("cell")
+        stats = [
+            meta.row_group(g).column(col).statistics
+            for g in range(meta.num_row_groups)
+        ]
+        stats = [s for s in stats if s.has_min_max]
+        if stats:
+            ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+        cells = pq.read_table(f, columns=["cell"])["cell"].to_pylist()
+        valid = [c for c in cells if c is not None]
+        assert cells == [None] * (len(cells) - len(valid)) + sorted(valid)
+    ranges.sort()
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+
+    sc = spark.sparkContext
+    sc.setJobGroup("read_images", "read_images")
+    try:
+        images = io.read_images(spark, str(path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert not sc.statusTracker().getJobIdsForGroup("read_images")
+    assert images.schema == io.IMAGES_TABLE_SCHEMA
+    assert images.count() == n + 1
+    assert [
+        r["image_id"] for r in images.where(F.col("cell").isNull()).collect()
+    ] == ["nowhere"]
 
 
 class TestKnnSeedFold:
