@@ -1,7 +1,8 @@
 """Pure-JVM column expressions (no Python worker round-trip).
 
 Everything here stays inside WholeStageCodegen: bit ops for index
-inspection/parent (SURVEY.md §2.3/§2.5 — H1/N4/N5/N7 need no UDF),
+inspection/parent and the multi-resolution parent probe key of the PIP
+and kNN joins (SURVEY.md §2.3/§2.5/§2.9 — H1/N4/N5/N7 need no UDF),
 haversine re-ranking for kNN (§2.9), the longitude wrap and the hex
 string codec.
 Keeping these native is a core scale decision: at 10^12 rows the
@@ -41,6 +42,16 @@ def h3_to_parent_col(cell: Column | str, parent_res: int) -> Column:
     fill = (1 << (3 * (15 - parent_res))) - 1
     res_cleared = c.bitwiseAND(F.lit(~(0xF << 52)))
     return res_cleared.bitwiseOR(F.lit(parent_res << 52)).bitwiseOR(F.lit(fill))
+
+
+def parent_keys(cell: Column | str, levels: list[int]) -> Column:
+    """The probe key of a multi-resolution parent join: the ancestor of
+    `cell` at each of `levels`, one row per level. Keys at different
+    resolutions are distinct int64s, so one equality on this column
+    matches a build set that mixes them. A single level is the plain
+    parent column, with no Generate node copying every probe row."""
+    keys = [h3_to_parent_col(cell, r) for r in levels]
+    return keys[0] if len(keys) == 1 else F.explode(F.array(*keys))
 
 
 def wrap_lng_sql(d: str) -> str:

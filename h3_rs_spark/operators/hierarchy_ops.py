@@ -190,9 +190,7 @@ def children_one_level_sql(x: str) -> str:
     return f"transform({digits}, d -> {base} + CAST(d AS BIGINT) * {off})"
 
 
-def uncompact_cells_df(
-    cells: DataFrame, res: int, min_res: int | None = None
-) -> DataFrame:
+def uncompact_cells_df(cells: DataFrame, res: int, min_res: int) -> DataFrame:
     """Expand a mixed-res cell relation to uniform `res` (children
     explode; cells already at `res` pass through, finer rows are
     dropped).
@@ -204,15 +202,12 @@ def uncompact_cells_df(
     relation is redistributed so a deep fan-out (7^4 per stage) spreads
     across the cluster instead of amplifying within one task.
 
-    min_res: optional caller-known coarsest input res — skips the one
-    derivation job. Understating it only adds pass-through explode
-    levels (each row wraps in a 1-element array), never wrongness."""
+    min_res: the coarsest input res, which the caller knows (deriving
+    it would cost a Spark job). Understating it only adds pass-through
+    explode levels (each row wraps in a 1-element array), never
+    wrongness."""
     spark = cells.sparkSession
     todo = cells.where(h3_resolution("cell") <= res).select("cell")
-    if min_res is None:
-        min_res = todo.agg(F.min(h3_resolution("cell"))).first()[0]
-    if min_res is None:
-        return todo
     levels = res - int(min_res)
     # one selectExpr SQL string per level: it parses JVM-side in one
     # call per level

@@ -8,19 +8,21 @@ Spark runs only the probe, the haversine and the top-k window. Per call:
 1. One bounded action, limit(N+1).toPandas(), checks the batch size and
    brings the batch to the driver, where bad rows raise ValueError.
 2. The driver seeds each query: numpy pre-cells at two coarse scales,
-   one broadcast-join count over the fact table, and a numpy fold of
-   the implied base-res ring to a bounded (res_eff, ring) pair.
+   one broadcast-join count over the fact table on the fact cell's
+   parent at both scales (native.parent_keys), and a numpy fold of the
+   implied base-res ring to a bounded (res_eff, ring) pair.
 3. Rounds: the remaining queries' state is a local relation whose geo
    disks at (res_eff, ring) explode on the executors to
    (query_id, cand_cell) and are *broadcast*; the probe is a single
    BroadcastHashJoin on one parent key of the fact cell per distinct
-   level (no shuffle of the fact table). The haversine re-rank is JVM
-   SQL, and a ROW_NUMBER window keeps at most k rows per query, which
-   one toPandas() brings back. The driver then decides in numpy: a
-   query is done when it holds k rows whose k-th distance is inside
-   the ring's guaranteed coverage radius, or when its ring is
-   exhausted; the rest widen the ring x4, fold to a coarser res when
-   it grows past _COARSEN_AT, and go round again.
+   level (native.parent_keys, as in pip_join; no shuffle of the fact
+   table). The haversine re-rank is JVM SQL, and a ROW_NUMBER window
+   keeps at most k rows per query, which one toPandas() brings back.
+   The driver then decides in numpy: a query is done when it holds k
+   rows whose k-th distance is inside the ring's guaranteed coverage
+   radius, or when its ring is exhausted; the rest widen the ring x4,
+   fold to a coarser res when it grows past _COARSEN_AT, and go round
+   again.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StructField, StructType,
 )
 
-from ..functions.native import h3_to_parent_col, haversine_m_sql
+from ..functions.native import haversine_m_sql, parent_keys
 
 from ..h3core.constants import EDGE_LENGTH_M
 
@@ -107,22 +109,13 @@ def knn_join(
         ]
     )
 
-    def _key_at(level):
-        return (
-            images["cell"]
-            if level == res
-            else h3_to_parent_col(images["cell"], level)
-        )
-
     done_rows = []
     while len(state):
         # ONE candidate relation for all levels: the fused dynamic-res
         # disk UDF builds every query's candidates in a single Arrow
         # stage and a single broadcast. The probe side derives one
-        # parent key per distinct level, the same multi-res probe design
-        # as pip_join; keys at different res are distinct int64s, so no
-        # cross-level collisions, and the single-level case keeps the
-        # direct key.
+        # parent key of the fact cell per distinct level with
+        # native.parent_keys, the multi-res probe of pip_join.
         cand = F.broadcast(
             spark.createDataFrame(state, state_schema).select(
                 "query_id",
@@ -135,13 +128,7 @@ def knn_join(
         )
 
         levels = np.unique(state["res_eff"]).tolist()
-        if len(levels) == 1:
-            probe = images.withColumn("probe_key", _key_at(levels[0]))
-        else:
-            probe = images.withColumn(
-                "probe_key",
-                F.explode(F.array(*[_key_at(L) for L in levels])),
-            )
+        probe = images.withColumn("probe_key", parent_keys("cell", levels))
         topk = (
             probe.join(cand, F.col("probe_key") == cand["cand_cell"])
             .selectExpr(
@@ -235,31 +222,12 @@ def _seed_plans(spark, images, q_pdf, k, res):
     pre = F.broadcast(
         spark.createDataFrame(pd.concat(pre_frames, ignore_index=True))
     )
-    keyed = images.withColumn(
-        "_pre",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(si).alias("stage"),
-                        (
-                            images["cell"]
-                            if rp == res
-                            else h3_to_parent_col(images["cell"], rp)
-                        ).alias("key"),
-                    )
-                    for si, rp in enumerate(stages)
-                ]
-            )
-        ),
-    )
+    # the stages are two resolutions, so a key's resolution names its
+    # stage and one key column is the whole join condition
     cnt = (
-        keyed.join(
-            pre,
-            (keyed["_pre.stage"] == pre["stage"])
-            & (keyed["_pre.key"] == pre["pre_cell"]),
-        )
-        .groupBy("query_id", pre["stage"])
+        images.select(parent_keys("cell", stages).alias("probe_key"))
+        .join(pre, F.col("probe_key") == pre["pre_cell"])
+        .groupBy("query_id", "stage")
         .agg(F.count("*").alias("n"))
         .toPandas()
         .set_index(["query_id", "stage"])["n"]

@@ -11,10 +11,11 @@ Plan shape (SURVEY.md §2.9/§4.2, designed for 10^12-row probe tables):
      build side is already compact with no compact pass (SF hexagon:
      295 interior rows stand for 1105 of its 1253 res-9 cells).
   3. The probe side derives one parent key per distinct build res with
-     pure JVM bit math (functions/native.h3_to_parent_col) and explodes —
-     a BroadcastHashJoin with no probe-side shuffle. Because the build
-     set is an antichain, each probe row matches at most one build row
-     (no double counting; asserted in tests).
+     pure JVM bit math (functions/native.parent_keys, which explodes
+     only when there are several) — a BroadcastHashJoin with no
+     probe-side shuffle. Because the build set is an antichain, each
+     probe row matches at most one build row (no double counting;
+     asserted in tests).
   4. Only rows matched to *boundary* cells pay the exact ray-casting PIP
      refinement; interior matches are free. The refine is one JVM
      expression: each boundary build row carries the few ring edges
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..functions.native import h3_to_parent_col, wrap_lng_sql
+from ..functions.native import parent_keys, wrap_lng_sql
 from ..h3core import faceijk as fk
 from ..h3core import indexing as ix
 from ..h3core import regions
@@ -278,18 +279,10 @@ def pip_join(
         )
         probe = probe.where(F.col("bc0").isin(bc0s))
 
-    # one JVM-side parent key per distinct build resolution; the
-    # single-res case (every expanded build, and any single-res
-    # compaction) skips the array+explode Generate node entirely — the
-    # generator copies every probe row, a pure bandwidth tax when
-    # there is only one key (r4 narrowed-probe work)
-    if len(build_res) == 1:
-        probe = probe.withColumn(
-            "probe_key", h3_to_parent_col("cell", build_res[0])
-        )
-    else:
-        keys = F.array(*[h3_to_parent_col("cell", r) for r in build_res])
-        probe = probe.withColumn("probe_key", F.explode(keys))
+    # one JVM-side parent key per distinct build resolution; a
+    # single-res build (every expanded build, and any single-res
+    # compaction) plans no Generate node
+    probe = probe.withColumn("probe_key", parent_keys("cell", build_res))
 
     joined = probe.join(build, probe["probe_key"] == build["poly_cell"], "inner")
 

@@ -56,6 +56,5 @@ def polyfill_distributed(
         ),
         "cell long",
     )
-    # the driver knows the coarsest res, so uncompact runs no job to find it
     min_res = int(ix.get_resolution(cells).min()) if cells.size else res
     return uncompact_cells_df(cells_df, res, min_res=min_res)

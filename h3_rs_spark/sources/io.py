@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..functions.native import h3_base_cell, h3_to_parent_col, wrap_lng_sql
+from ..functions.native import h3_base_cell, wrap_lng_sql
 from ..functions.udfs import geo_to_h3_udf
 from .datagen import IMAGES_SCHEMA
 
@@ -64,22 +64,26 @@ def with_geo(df: DataFrame, res: int = 9) -> DataFrame:
     # second projection so the encode still runs once per row.
     df = df.withColumn("cell", geo_to_h3_udf(res)("lat", "lng"))
     df = df.withColumn("cell", F.when(F.col("lat").isNotNull(), F.col("cell")))
-    return df.withColumn("bc0", h3_base_cell(h3_to_parent_col("cell", 0)))
+    return df.withColumn("bc0", h3_base_cell("cell"))
 
 
-def write_images(df: DataFrame, path: str, res: int = 9) -> None:
-    """Write the images table as IMAGES_TABLE_SCHEMA, range-partitioned
-    and sorted on `cell`: each part file holds one disjoint `cell` range.
-    The partition count is the session's spark.sql.shuffle.partitions,
+def images_table(df: DataFrame, res: int) -> DataFrame:
+    """The images table of raw image rows: with_geo's columns as
+    IMAGES_TABLE_SCHEMA, range-partitioned and sorted on `cell`, so
+    each written part file holds one disjoint `cell` range. The
+    partition count is the session's spark.sql.shuffle.partitions,
     coalesced by AQE."""
-    (
+    return (
         with_geo(df, res)
         .select([F.col(f.name).cast(f.dataType) for f in IMAGES_TABLE_SCHEMA])
         .repartitionByRange("cell")
         .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(path)
     )
+
+
+def write_images(df: DataFrame, path: str, res: int = 9) -> None:
+    """Write images_table(df, res) to `path`."""
+    images_table(df, res).write.mode("overwrite").parquet(path)
 
 
 def read_images(spark: SparkSession, path: str) -> DataFrame:

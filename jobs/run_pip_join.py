@@ -9,7 +9,8 @@ Usage:
 
 Stages (each a resume point keyed by an input fingerprint):
   1. images      — deterministic synthetic fact table with its res-`res`
-                   cell (sources/io.with_geo)
+                   cell, laid out as the images table
+                   (sources/io.images_table)
   2. pip_matches — exact PIP join against the reference polygons
   3. cell_counts — per-cell density rollup of the matches
 """
@@ -46,9 +47,9 @@ def main():
     images_fp = f"images:n={args.n_images}:res={args.res}:seed={datagen.SEED}"
 
     def build_images():
-        return io.with_geo(
+        return io.images_table(
             datagen.generate_images(spark, args.n_images, w=16, h=16),
-            res=args.res,
+            args.res,
         )
 
     images = runner.stage("images", images_fp, build_images)

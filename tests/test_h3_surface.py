@@ -192,7 +192,7 @@ def test_compact_distributed_sf_golden(spark):
     comp = compact_cells_df(cells).persist()
     try:
         n_comp = comp.count()
-        back = [r[0] for r in uncompact_cells_df(comp, 9).distinct().collect()]
+        back = [r[0] for r in uncompact_cells_df(comp, 9, 0).distinct().collect()]
         n_viol = antichain_violations(comp).count()
     finally:
         comp.unpersist()

@@ -546,7 +546,7 @@ class TestDistributedHierarchy:
         back = sorted(
             r[0]
             for r in uncompact_cells_df(
-                compact_cells_df(cells_df), 9
+                compact_cells_df(cells_df), 9, 0
             ).collect()
         )
         assert back == sorted(np.unique(cells_np).tolist())
@@ -623,7 +623,7 @@ def test_uncompact_staged_multilevel(spark):
 
     cells = [0x8029FFFFFFFFFFF, 0x824887FFFFFFFFF, 0x81083FFFFFFFFFF]
     df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-    got = sorted(r[0] for r in uncompact_cells_df(df, 6).collect())
+    got = sorted(r[0] for r in uncompact_cells_df(df, 6, 0).collect())
     want = sorted(
         np.concatenate([ix.to_children(c, 6) for c in cells]).tolist()
     )
@@ -645,7 +645,7 @@ def test_uncompact_quoted_column_drops_finer_rows(spark):
         np.concatenate([ix.to_children(c, 5) for c in coarse]).tolist()
     )
     got = sorted(
-        r[0] for r in uncompact_cells_df(df, 5).collect()
+        r[0] for r in uncompact_cells_df(df, 5, 1).collect()
     )
     assert got == want
 
@@ -895,6 +895,26 @@ class TestKnnSeedFold:
             assert list(zip(*(a.tolist() for a in got))) == [
                 pair for row in table for pair in row
             ]
+
+    # _seed_plans' starting (res_eff, ring) for the 24 default queries
+    # (k=5) over the images fixture, captured from the two-column
+    # (stage, key) seeding join that the one-key join replaced
+    SEED_RES_EFF = [1, 7, 7, 3, 7, 3, 9, 1, 7, 7, 9, 9,
+                    7, 7, 7, 7, 3, 9, 9, 9, 1, 1, 3, 3]
+    SEED_RING = [4, 4, 4, 16, 6, 16, 12, 4, 6, 4, 13, 12,
+                 4, 6, 4, 4, 16, 12, 12, 12, 4, 4, 14, 16]
+
+    def test_seed_plans_match_pinned_arrays(self, spark, images):
+        from h3_rs_spark.operators.knn import _seed_plans
+
+        q_pdf = (
+            datagen.generate_knn_queries(spark, n=24, k=5)
+            .select("query_id", "lat", "lng")
+            .toPandas()
+        )
+        res_eff, ring = _seed_plans(spark, images, q_pdf, 5, 9)
+        assert res_eff.tolist() == self.SEED_RES_EFF
+        assert ring.tolist() == self.SEED_RING
 
 
 class TestKnnEdgeCases:
