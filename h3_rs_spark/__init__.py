@@ -1,5 +1,1 @@
 """PySpark-native H3 spatial-join + tiling engine (see README.md)."""
-
-from . import workerenv as _workerenv
-
-_workerenv.optimize_worker()

@@ -22,6 +22,7 @@ Reference parity: polyfill is the reference's flagship region op
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..h3core import faceijk as fk
@@ -44,17 +45,9 @@ def polyfill_distributed(
     inside = boundary[regions.points_in_polygon(lng, lat, exterior, holes)]
     cells = np.concatenate([interior, inside])
 
-    # ship the cells PRE-SPLIT via parallelize slices instead of
-    # createDataFrame + repartition: the repartition was a whole
-    # shuffle whose only purpose was spreading the explode —
-    # round-robin slices achieve that with no exchange, so the explode
-    # fuses into the scan stage
-    n_slices = max(spark.sparkContext.defaultParallelism, 1)
-    cells_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(int(c),) for c in cells], min(n_slices, max(len(cells), 1))
-        ),
-        "cell long",
-    )
+    # an Arrow local relation: its scan splits into defaultParallelism
+    # slices, so the explode fuses into the scan stage with no exchange,
+    # and no Python runs on the executors
+    cells_df = spark.createDataFrame(pa.table({"cell": pa.array(cells, pa.int64())}))
     min_res = int(ix.get_resolution(cells).min()) if cells.size else res
     return uncompact_cells_df(cells_df, res, min_res=min_res)

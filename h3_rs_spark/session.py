@@ -6,6 +6,15 @@ Iceberg is the nominal table format at design scale (BASELINE.json); in
 this sandbox no Iceberg runtime jar is bundled with pyspark, so the
 warehouse transparently falls back to parquet paths (sources/io.py) —
 the table layout (partition spec, schema) is identical.
+
+Python boundary: executor Python workers fork from `h3_rs_spark.daemon`,
+which imports the worker-side modules once, so the workers share those
+pages instead of each paying ~100 MB of private imports; the daemon
+imports the package from the zip that `spark.executorEnv.PYTHONPATH`
+names. DataFrame debugging is off on the driver: with it on, every
+DataFrame and Column API call walks the stack for its call site, tries
+to import IPython and makes about 4 extra py4j calls. Spark errors then
+carry no Python `file:line` query context; they still raise.
 """
 
 from __future__ import annotations
@@ -145,6 +154,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        # fork every Python worker from the pre-imported engine daemon;
+        # its PYTHONPATH holds the zip ship_package keeps current before
+        # any Python task runs (the daemon starts with the first one)
+        .config("spark.python.daemon.module", "h3_rs_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", str(PACKAGE_ZIP))
+        # no per-call call-site capture on the driver (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))

@@ -445,6 +445,58 @@ class TestOptimizerBarrier:
         assert geo_disk_dyn_udf().deterministic is False
 
 
+class TestPythonBoundary:
+    def test_workers_fork_from_engine_daemon(self, spark):
+        """Every Python worker is a fork of h3_rs_spark.daemon and
+        inherits its two per-process fixes: the frozen import graph and
+        the zipimport mtime/size guard."""
+
+        @F.pandas_udf("string")
+        def probe(ids: pd.Series) -> pd.Series:
+            import gc
+            import os
+            import zipimport
+
+            with open(f"/proc/{os.getppid()}/cmdline", "rb") as fh:
+                parent = fh.read().replace(b"\0", b" ").decode()
+            fact = "|".join(
+                [
+                    parent,
+                    str(gc.get_freeze_count() > 0),
+                    str(getattr(zipimport.zipimporter, "_h3rs_mtime_guard", False)),
+                ]
+            )
+            return pd.Series([fact] * len(ids))
+
+        facts = {
+            r[0] for r in spark.range(0, 64, 1, 4).select(probe("id")).collect()
+        }
+        for fact in facts:
+            parent, frozen, guarded = fact.split("|")
+            assert "-m h3_rs_spark.daemon" in parent, parent
+            assert frozen == "True" and guarded == "True", fact
+
+    def test_driver_skips_call_site_capture(self, spark):
+        """DataFrame debugging is off, so building a plan captures no
+        Python call site and never imports IPython on the driver."""
+        import sys
+
+        from pyspark.errors.utils import is_debugging_enabled
+
+        from h3_rs_spark.operators.pip_join import pip_join
+        from h3_rs_spark.sources import datagen, io
+
+        assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+        assert not is_debugging_enabled()
+        imgs = spark.createDataFrame(
+            pd.DataFrame({"image_id": ["a"], "caption": ["img at 37.77,-122.42"]})
+        )
+        polys = {k: v for k, v in datagen.POLYGONS.items() if v[2] == 9}
+        out = pip_join(spark, io.with_geo(imgs, res=9), polys)
+        assert "cell" in out.columns
+        assert "IPython" not in sys.modules
+
+
 def test_every_engine_module_imports():
     """Every module under h3_rs_spark/ imports, so a kept module that
     still imports a deleted one fails here."""

@@ -601,6 +601,18 @@ class TestPolyfillDistributed:
         )
         assert got == want
 
+    def test_starts_no_python_worker(self, spark):
+        """The cells reach the executors as an Arrow local relation: the
+        RDD lineage has no PythonRDD (no schema-verify map), so the call
+        starts no Python worker, and the result is unchanged."""
+        from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
+
+        ext, holes, _ = datagen.POLYGONS["sf_hexagon"]
+        df = polyfill_distributed(spark, ext, holes, 8)
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "Python" not in lineage, lineage
+        assert df.count() == 180
+
 
 class TestChildrenBatch:
     def test_matches_scalar(self):
@@ -652,7 +664,7 @@ def test_uncompact_quoted_column_drops_finer_rows(spark):
 
 def test_polyfill_distributed_plan_shape(spark):
     """The distributed polyfill stays one narrow JVM pipeline: cells
-    pre-split via parallelize (no repartition Exchange for the input),
+    pre-split into scan slices (no repartition Exchange for the input),
     one explode path (no Union), no Python on the executors (no
     ArrowEvalPython), and only the explode's own redistribution every
     4 levels."""
