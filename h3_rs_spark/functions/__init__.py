@@ -9,7 +9,6 @@ from .native import (  # noqa: F401
 from .udfs import (  # noqa: F401
     geo_to_h3_udf,
     h3_boundary_udf,
-    h3_distance_udf,
     h3_to_geo_udf,
     k_ring_udf,
 )

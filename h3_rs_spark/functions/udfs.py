@@ -24,9 +24,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -150,40 +148,3 @@ def geo_disk_dyn_udf():
 
     # same optimizer-barrier rationale as geo_to_h3_udf
     return _f.asNondeterministic()
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def h3_line_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Minimal grid path per pair (H3 h3Line; local-frame cube lerp with
-    greedy fallback — see h3core.localij). Batched over the Arrow batch
-    (r7): greedy-fallback pairs walk together, one neighbors() kernel
-    call per step for the whole batch (path-identical to the scalar
-    loop, pinned by test_h3_line_batch_parity)."""
-    av = a.to_numpy(dtype=np.int64)
-    bv = b.to_numpy(dtype=np.int64)
-    return pd.Series(
-        [p.tolist() for p in traversal.h3_line_batch(av, bv)]
-    )
-
-
-@F.pandas_udf(BooleanType())
-def h3_local_frame_ok_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """True where the planar local-face frame applies to the pair (same
-    or adjacent icosa face, clear of pentagons) — exactly the rows where
-    h3_line returns the minimal cube-lerp path rather than the greedy
-    fallback."""
-    from ..h3core.localij import local_frames
-
-    ok, _, _, _ = local_frames(
-        a.to_numpy(dtype=np.int64), b.to_numpy(dtype=np.int64)
-    )
-    return pd.Series(ok)
-
-
-@F.pandas_udf(IntegerType())
-def h3_distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    from ..h3core.localij import h3_distance_batch
-
-    av = a.to_numpy(dtype=np.int64)
-    bv = b.to_numpy(dtype=np.int64)
-    return pd.Series(h3_distance_batch(av, bv), dtype="int32")

@@ -1,8 +1,9 @@
 """h3core: from-scratch vectorized (numpy) H3 v3.6 kernel.
 
 Public surface mirrors the reference crate's operator inventory
-(SURVEY.md §2) as batch array functions; the Spark engine wraps these in
-Arrow-vectorized pandas UDFs (h3_rs_spark.functions.udfs).
+(SURVEY.md §2) as batch array functions, less grid distance and grid
+line (T3/T4), which no engine query runs; the Spark engine wraps these
+in Arrow-vectorized pandas UDFs (h3_rs_spark.functions.udfs).
 """
 
 from .constants import EDGE_LENGTH_M, HEX_AREA_M2, MAX_RES, num_hexagons  # noqa: F401
@@ -24,8 +25,6 @@ from .regions import (  # noqa: F401
     polyfill_compact,
 )
 from .traversal import (  # noqa: F401
-    h3_distance,
-    h3_line,
     hex_ring,
     k_ring,
     k_ring_distances,

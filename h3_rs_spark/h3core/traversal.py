@@ -1,4 +1,4 @@
-"""Grid traversal: neighbors, k_ring, hex_ring, grid distance/line.
+"""Grid traversal: neighbors, k_ring, hex_ring, hex_range.
 
 Design note (Spark-first, not a port): instead of hand-carrying H3's
 base-cell neighbor tables, neighbors are computed *geometrically* — a
@@ -23,9 +23,6 @@ import numpy as np
 from . import faceijk as fk
 from . import indexing as ix
 from .geom import geo_to_xyz
-
-MAX_BFS_K = 64  # ring radius at which a BFS grid distance gives up (-1)
-_MAX_LINE_STEPS = 10_000  # cap on the greedy line walk's steps
 
 
 def neighbors(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -157,141 +154,3 @@ def hex_range_distances(h: np.ndarray, k: int):
     if pent.any():
         ok[np.unique(o[pent])] = False
     return o, c, d, ok
-
-
-def h3_distance(a: int, b: int) -> int:
-    """Grid distance between two cells (H3 h3Distance semantics,
-    reference src/traversal.rs:90-101): O(1) local-frame axial math on
-    the same or an adjacent icosa face, BFS fallback near pentagons or
-    across two face edges; -1 when resolutions differ / unreachable."""
-    from .localij import h3_distance_batch
-
-    return int(h3_distance_batch(np.array([a]), np.array([b]))[0])
-
-
-def h3_distance_bfs(a: int, b: int) -> int:
-    """Grid distance by frontier BFS (exact oracle for the local-frame
-    path; also the fallback when the planar frame is untrustworthy)."""
-    a, b = int(a), int(b)
-    if int(ix.get_resolution(a)) != int(ix.get_resolution(b)):
-        return -1
-    if a == b:
-        return 0
-    frontier = np.array([a], dtype=np.int64)
-    seen = {a}
-    for step in range(1, MAX_BFS_K + 1):
-        _, nb = neighbors(frontier)
-        nxt = []
-        for c in np.unique(nb):
-            ci = int(c)
-            if ci in seen:
-                continue
-            if ci == b:
-                return step
-            seen.add(ci)
-            nxt.append(ci)
-        if not nxt:
-            return -1
-        frontier = np.array(nxt, dtype=np.int64)
-    return -1
-
-
-def h3_line(a: int, b: int) -> np.ndarray:
-    """Cell path from a to b (H3 h3Line semantics, reference
-    src/traversal.rs:103-123): cube-coordinate lerp with cube rounding
-    in a's local face frame — length == h3_distance(a, b) + 1 and
-    consecutive cells are neighbors. Falls back to the greedy
-    great-circle walk where the planar frame is untrustworthy (pentagon
-    proximity, > 1 icosa edge — H3 itself errors there)."""
-    from .localij import h3_line_local
-
-    path = h3_line_local(int(a), int(b))
-    if path is not None:
-        return path
-    return _h3_line_greedy(int(a), int(b))
-
-
-def h3_line_batch(a, b) -> list[np.ndarray]:
-    """Per-pair h3_line for a BATCH of pairs (r7): local-frame pairs go
-    through the per-pair cube-lerp (cheap, ~2 ms), and all
-    greedy-fallback pairs advance TOGETHER — one batched neighbors()
-    kernel call per walk step for the whole batch instead of one per
-    step per pair (the 46 fallback pairs of the metro-pairs fixture in
-    tests/test_h3_surface.py: 475 single-cell kernel calls -> ~15
-    batched ones, 4.3 s -> ~0.2 s). Paths are identical
-    to per-pair h3_line: neighbors() orders each owner's candidates by
-    cell value in both the single and batched form (np.unique), so the
-    greedy argmax tie-breaks the same way — pinned by
-    tests/test_operators.py::test_h3_line_batch_parity."""
-    from .localij import h3_line_local
-
-    a = np.atleast_1d(np.asarray(a, dtype=np.int64))
-    b = np.atleast_1d(np.asarray(b, dtype=np.int64))
-    out: list = [None] * a.shape[0]
-    greedy = []
-    for i, (x, y) in enumerate(zip(a.tolist(), b.tolist())):
-        p = h3_line_local(int(x), int(y))
-        if p is None:
-            greedy.append(i)
-        else:
-            out[i] = p
-    if greedy:
-        gi = np.asarray(greedy)
-        for i, p in zip(greedy, _h3_line_greedy_batch(a[gi], b[gi])):
-            out[i] = p
-    return out
-
-
-def _h3_line_greedy_batch(
-    a_arr: np.ndarray, b_arr: np.ndarray
-) -> list[np.ndarray]:
-    """Batched twin of _h3_line_greedy — same walk, same argmax, same
-    stuck/exhaustion semantics, per-step kernel calls batched over all
-    unfinished pairs."""
-    tlat, tlng = fk.h3_to_geo(b_arr)
-    txyz = geo_to_xyz(np.radians(tlat), np.radians(tlng))  # (n, 3)
-    paths = [[int(x)] for x in a_arr.tolist()]
-    cur = a_arr.copy()
-    done = cur == b_arr
-    for _ in range(_MAX_LINE_STEPS):
-        act = np.flatnonzero(~done)
-        if act.size == 0:
-            break
-        owner, nb = neighbors(cur[act])
-        lat, lng = fk.h3_to_geo(nb)
-        xyz = geo_to_xyz(np.radians(lat), np.radians(lng))
-        dots = np.einsum("ij,ij->i", xyz, txyz[act[owner]])
-        for local_i, g in enumerate(act.tolist()):
-            m = owner == local_i
-            cand = nb[m]
-            nxt = int(cand[int(np.argmax(dots[m]))])
-            if nxt in paths[g][-3:]:
-                done[g] = True  # stuck (matches the scalar walk: the
-                continue  # repeated cell is NOT appended)
-            paths[g].append(nxt)
-            cur[g] = nxt
-            if nxt == int(b_arr[g]):
-                done[g] = True
-    return [np.array(p, dtype=np.int64) for p in paths]
-
-
-def _h3_line_greedy(a: int, b: int) -> np.ndarray:
-    """Greedy great-circle walk fallback (connected, endpoints exact;
-    not guaranteed minimal)."""
-    a, b = int(a), int(b)
-    tlat, tlng = fk.h3_to_geo(np.array([b], dtype=np.int64))
-    txyz = geo_to_xyz(np.radians(tlat), np.radians(tlng))[0]
-    path = [a]
-    cur = a
-    for _ in range(_MAX_LINE_STEPS):
-        if cur == b:
-            return np.array(path, dtype=np.int64)
-        _, nb = neighbors(np.array([cur], dtype=np.int64))
-        lat, lng = fk.h3_to_geo(nb)
-        xyz = geo_to_xyz(np.radians(lat), np.radians(lng))
-        best = int(np.argmax(xyz @ txyz))
-        cur = int(nb[best])
-        if cur in path[-3:]:
-            break  # stuck (shouldn't happen)
-        path.append(cur)
-    return np.array(path, dtype=np.int64)

@@ -167,20 +167,6 @@ class TestTraversal:
         assert got == expected
         assert len(got) == 12
 
-    def test_h3_distance(self):
-        origin = 0x8928308280FFFFF
-        _, cells, dist = h3.k_ring_distances(np.array([origin]), 2)
-        for c, d in zip(cells, dist):
-            assert h3.h3_distance(origin, int(c)) == int(d)
-
-    def test_h3_line_endpoints(self):
-        a = 0x8928308280FFFFF
-        _, cells = h3.hex_ring(np.array([a]), 2)
-        b = int(cells[0])
-        path = h3.h3_line(a, b)
-        assert path[0] == a and path[-1] == b
-        assert len(path) == 3  # distance 2 -> 3 cells
-
     def test_empty_batch(self):
         """An empty batch (an empty Arrow batch reaches the UDFs) gives
         empty arrays, not an IndexError."""
@@ -601,118 +587,6 @@ class TestClassIIIDistortionVertices:
             assert extra == 5
 
 
-class TestLocalFrame:
-    """Local-face-frame distance and line (H3 localIJ analogue;
-    reference src/traversal.rs:90-123). The BFS oracle is ground truth."""
-
-    def test_distance_matches_bfs_including_cross_face(self):
-        from h3_rs_spark.h3core import traversal as tv
-        from h3_rs_spark.h3core.localij import h3_distance_batch
-
-        rng = np.random.default_rng(3)
-        lats = rng.uniform(-85, 85, 80)
-        lngs = rng.uniform(-180, 180, 80)
-        n = 0
-        for res in (2, 5, 8):
-            for o in np.unique(h3.geo_to_h3(lats, lngs, res))[:12]:
-                _, ring = tv.k_ring(np.array([o]), 4)
-                for p in rng.choice(ring, size=4, replace=False):
-                    want = tv.h3_distance_bfs(int(o), int(p))
-                    got = int(
-                        h3_distance_batch(np.array([o]), np.array([p]))[0]
-                    )
-                    assert got == want, (hex(int(o)), hex(int(p)), got, want)
-                    n += 1
-        assert n > 100
-
-    def test_distance_pentagon_adjacent(self):
-        from h3_rs_spark.h3core import traversal as tv
-        from h3_rs_spark.h3core.localij import h3_distance_batch
-
-        _, cells, dist = tv.k_ring_distances(np.array([0x870800003FFFFFF]), 3)
-        got = h3_distance_batch(np.full(len(cells), 0x870800003FFFFFF), cells)
-        assert (got == dist).all()
-
-    def test_line_properties(self):
-        """gridPathCells contract: length == distance+1, consecutive
-        cells are neighbors, endpoints exact, no duplicates."""
-        from h3_rs_spark.h3core import indexing as ix
-        from h3_rs_spark.h3core import traversal as tv
-        from h3_rs_spark.h3core.localij import h3_distance_batch, h3_line_local
-
-        rng = np.random.default_rng(4)
-        lats = rng.uniform(-85, 85, 60)
-        lngs = rng.uniform(-180, 180, 60)
-        checked = 0
-        for res in (3, 7):
-            for o in np.unique(h3.geo_to_h3(lats, lngs, res))[:10]:
-                _, ring = tv.k_ring(np.array([o]), 5)
-                for p in rng.choice(ring, size=3, replace=False):
-                    path = h3_line_local(int(o), int(p))
-                    if path is None:
-                        continue
-                    d = int(h3_distance_batch(np.array([o]), np.array([p]))[0])
-                    assert len(path) == d + 1
-                    assert path[0] == o and path[-1] == p
-                    assert ix.is_valid(path).all()
-                    assert len(set(path.tolist())) == len(path)
-                    for i in range(len(path) - 1):
-                        _, nb = tv.neighbors(np.array([path[i]]))
-                        assert path[i + 1] in nb
-                    checked += 1
-        assert checked > 30
-
-    def test_h3_line_public_api_minimal(self):
-        """h3_line now returns a minimal path wherever the local frame
-        applies (old greedy walk was only connected, not minimal)."""
-        from h3_rs_spark.h3core import traversal as tv
-
-        a = 0x8928308280FFFFF
-        _, ring = tv.hex_ring(np.array([a]), 4)
-        for b in ring[:6]:
-            path = tv.h3_line(a, int(b))
-            assert len(path) == tv.h3_distance(a, int(b)) + 1
-
-    def test_h3_line_batch_parity(self):
-        """h3_line_batch (r7: greedy-fallback pairs walk together, one
-        batched neighbors() call per step) must return bit-identical
-        paths to the scalar h3_line — including pentagon-neighborhood
-        pairs that force the greedy fallback (the
-        test_h3_surface.py::test_line_and_distance_metro_pairs fixture shape)."""
-        from h3_rs_spark.h3core import indexing as ix
-        from h3_rs_spark.h3core import traversal as tv
-        from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-
-        digits = np.full((1, 15), 7, dtype=np.int64)
-        digits[:, :7] = 0
-        pent = ix.from_components(
-            PENTAGON_BASE_CELLS[:1].astype(np.int64), 7, digits
-        )
-        plat, plng = h3.h3_to_geo(pent)
-        metros = [
-            (37.76, -122.44), (-33.87, 151.21),
-            (float(plat[0]), float(plng[0])),  # pentagon neighborhood
-        ]
-        a_list, b_list = [], []
-        for m, (mlat, mlng) in enumerate(metros):
-            lats = mlat + 0.11 * np.sin(2.7 * np.arange(16) + m)
-            lngs = mlng + 0.11 * np.cos(1.9 * np.arange(16) + 3.0 * m)
-            cells = h3.geo_to_h3(lats, lngs, 7)
-            for x, y in zip(cells[:-1], cells[1:]):
-                if x != y:
-                    a_list.append(int(x))
-                    b_list.append(int(y))
-        batch = tv.h3_line_batch(np.array(a_list), np.array(b_list))
-        n_fallback = 0
-        from h3_rs_spark.h3core.localij import h3_line_local
-
-        for x, y, got in zip(a_list, b_list, batch):
-            if h3_line_local(x, y) is None:
-                n_fallback += 1
-            assert (got == tv.h3_line(x, y)).all()
-        assert n_fallback > 0  # the pentagon metro must exercise greedy
-
-
 class TestTransmeridian:
     """Antimeridian-crossing polygons (beyond the reference's fixtures —
     H3's own polyfill handles these; round 1 documented them as a bbox
@@ -772,39 +646,6 @@ class TestDissolveShapes:
             np.concatenate([disk, far_disk])
         )
         assert sorted(len(r) for r in rings) == [18, 30]
-
-
-class TestLocalFramePentagonRegion:
-    def test_distance_near_pentagons_matches_bfs(self):
-        """Exhaustive BFS comparison for pairs AROUND pentagon homes —
-        the region where a misplaced corner guard (the round-2 unfold
-        ordering bug: rotate-then-translate instead of translate-then-
-        rotate) would let wrong planar distances through."""
-        from h3_rs_spark.h3core import indexing, traversal as tv
-        from h3_rs_spark.h3core.constants import BASE_CELL_IS_PENTAGON
-        from h3_rs_spark.h3core.localij import h3_distance_batch
-
-        pent_bc = np.flatnonzero(BASE_CELL_IS_PENTAGON)[:4]
-        rng = np.random.default_rng(9)
-        checked = 0
-        for bc in pent_bc:
-            pent = int(
-                indexing.from_components(
-                    np.array([bc]), np.array([3]),
-                    np.zeros((1, 15), dtype=np.int64),
-                )[0]
-            )
-            _, disk = tv.k_ring(np.array([pent]), 3)
-            picks = rng.choice(disk, size=min(12, len(disk)), replace=False)
-            for i, a in enumerate(picks):
-                for b in picks[i + 1 :][:4]:
-                    want = tv.h3_distance_bfs(int(a), int(b))
-                    got = int(
-                        h3_distance_batch(np.array([a]), np.array([b]))[0]
-                    )
-                    assert got == want, (hex(int(a)), hex(int(b)), got, want)
-                    checked += 1
-        assert checked > 100
 
 
 class TestPolarPolyfill:

@@ -23,9 +23,6 @@ from h3_rs_spark.functions.native import (
 from h3_rs_spark.functions.udfs import (
     geo_to_h3_udf,
     h3_boundary_udf,
-    h3_distance_udf,
-    h3_line_udf,
-    h3_local_frame_ok_udf,
     h3_to_geo_udf,
     k_ring_udf,
 )
@@ -33,11 +30,6 @@ from h3_rs_spark.h3core import edge_length_m, hex_area_m2, hex_ring
 from h3_rs_spark.h3core import faceijk as fk
 from h3_rs_spark.h3core import hierarchy, indexing, regions, traversal
 from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-from h3_rs_spark.operators.hierarchy_ops import (
-    antichain_violations,
-    compact_cells_df,
-    uncompact_cells_df,
-)
 from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
 from h3_rs_spark.sources.datagen import POLYGONS, SF_EXTERIOR
 from tests.dissolve import cells_to_multipolygon
@@ -183,25 +175,6 @@ def test_ring_sizes_hexagon_and_pentagon():
             assert hex_ring(origin, k)[1].shape[0] == per_k * k
 
 
-def test_compact_distributed_sf_golden(spark):
-    """Distributed compact of the SF polyfill@9 relation against the
-    reference golden (1253 cells compact to 209), with an exact
-    uncompact round trip and an antichain output."""
-    cells_np = regions.polyfill(SF_EXTERIOR, [], 9)
-    cells = spark.createDataFrame([(int(c),) for c in cells_np], "cell long")
-    comp = compact_cells_df(cells).persist()
-    try:
-        n_comp = comp.count()
-        back = [r[0] for r in uncompact_cells_df(comp, 9, 0).distinct().collect()]
-        n_viol = antichain_violations(comp).count()
-    finally:
-        comp.unpersist()
-    n_sym = len(set(back) ^ set(cells_np.tolist()))
-    assert (len(cells_np), n_comp, len(back), n_sym, n_viol) == (
-        1253, 209, 1253, 0, 0
-    )
-
-
 def test_polyfill_distributed_over_driver_cap(spark):
     """An octagon (centre 30N 20E, r=8 deg, hole r=1.5 deg) at res 8
     exceeds the driver polyfill cap, so the driver refuses and the
@@ -227,72 +200,6 @@ def test_polyfill_distributed_over_driver_cap(spark):
     assert (driver_refuses, n, n_coarse, scale_x1000, area_x100) == (
         1, 2424845, 7078, 999, 88
     )
-
-
-def test_line_and_distance_metro_pairs(spark):
-    """Grid distance and line over consecutive jittered points around six
-    metros plus one res-7 pentagon (which forces the BFS fallback the
-    local frame refuses). Local-frame lines hold exactly distance+1
-    cells; every line keeps its endpoints."""
-    from pyspark.sql import Window
-
-    pent = _first_pentagon(7)
-    plat, plng = fk.h3_to_geo(pent)
-    metros = [
-        (37.76, -122.44),
-        (40.71, -74.01),
-        (-33.87, 151.21),
-        (51.5, -0.12),
-        (35.68, 139.69),
-        (0.1, 0.1),
-        (float(plat[0]), float(plng[0])),
-    ]
-    rows = []
-    pid = 0
-    for m, (mlat, mlng) in enumerate(metros):
-        for i in range(24):
-            rows.append(
-                (
-                    pid,
-                    m,
-                    mlat + 0.11 * np.sin(2.7 * i + m),
-                    mlng + 0.11 * np.cos(1.9 * i + 3.0 * m),
-                )
-            )
-            pid += 1
-    pts = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["point_id", "metro", "lat", "lng"])
-    )
-    cells = pts.withColumn("cell", geo_to_h3_udf(7)("lat", "lng"))
-    w = Window.partitionBy("metro").orderBy("point_id")
-    pairs = (
-        cells.withColumn("cell_b", F.lag("cell").over(w))
-        .where(F.col("cell_b").isNotNull() & (F.col("cell") != F.col("cell_b")))
-        .select("point_id", "cell", "cell_b")
-    )
-    checked = (
-        pairs.withColumn("d", h3_distance_udf("cell", "cell_b"))
-        .withColumn("line", h3_line_udf("cell", "cell_b"))
-        .withColumn("local_ok", h3_local_frame_ok_udf("cell", "cell_b"))
-        .withColumn(
-            "line_ok",
-            F.when(
-                F.col("local_ok"), F.size("line") == F.col("d") + 1
-            ).otherwise(F.size("line") >= F.col("d") + 1)
-            & (F.element_at("line", 1) == F.col("cell"))
-            & (F.element_at("line", -1) == F.col("cell_b")),
-        )
-    )
-    row = checked.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum(
-            (F.col("local_ok") & (F.size("line") == F.col("d") + 1)).cast("long")
-        ).alias("n_minimal"),
-        F.sum((~F.col("local_ok")).cast("long")).alias("n_fallback"),
-        F.sum(F.col("line_ok").cast("long")).alias("n_line_ok"),
-        F.sum("d").cast("long").alias("sum_dist"),
-    ).first()
-    assert tuple(row) == (161, 115, 46, 161, 1447)
 
 
 def test_polar_polyfill_matches_enumeration():

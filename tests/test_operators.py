@@ -526,56 +526,6 @@ class TestSkew:
         assert len(hot) >= 1  # SF base cell is ~30% of data
 
 
-class TestDistributedHierarchy:
-    def test_compact_df_matches_kernel(self, spark, images):
-        from h3_rs_spark.h3core import compact as kernel_compact
-        from h3_rs_spark.operators.hierarchy_ops import (
-            compact_cells_df,
-            uncompact_cells_df,
-        )
-
-        cells_df = images.select("cell").distinct()
-        cells_np = np.array([r[0] for r in cells_df.collect()], dtype=np.int64)
-
-        got = sorted(
-            r[0] for r in compact_cells_df(cells_df).collect()
-        )
-        exp = sorted(kernel_compact(cells_np).tolist())
-        assert got == exp
-
-        back = sorted(
-            r[0]
-            for r in uncompact_cells_df(
-                compact_cells_df(cells_df), 9, 0
-            ).collect()
-        )
-        assert back == sorted(np.unique(cells_np).tolist())
-
-    def test_compact_df_promotes_full_family(self, spark):
-        import pandas as pd
-
-        from h3_rs_spark.h3core import to_children
-        from h3_rs_spark.operators.hierarchy_ops import compact_cells_df
-
-        parent = 0x87283472BFFFFFF
-        ch = to_children(parent, 9)
-        df = spark.createDataFrame(pd.DataFrame({"cell": ch}))
-        out = [r[0] for r in compact_cells_df(df).collect()]
-        assert out == [parent]
-
-    def test_compact_df_schema_is_one_cell_column(self, spark):
-        """An empty and a one-row (cell, polygon_id) relation both come
-        back with the single column `cell`."""
-        from h3_rs_spark.operators.hierarchy_ops import compact_cells_df
-
-        rel = spark.createDataFrame(
-            pd.DataFrame({"cell": [0x87283472BFFFFFF], "polygon_id": ["sf"]})
-        )
-        for df, n in ((rel.limit(0), 0), (rel, 1)):
-            out = compact_cells_df(df)
-            assert out.columns == ["cell"] and out.count() == n
-
-
 class TestPolyfillDistributed:
     def test_equals_driver_polyfill(self, spark):
         """Distributed polyfill (driver cover -> JVM children explode)

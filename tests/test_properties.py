@@ -1,9 +1,9 @@
 """Property-based kernel tests (hypothesis): invariants that must hold
 for EVERY point/cell, not just the golden fixtures — roundtrip
-containment, hierarchy closure, neighbor symmetry, distance metric
-axioms, boundary sanity. Spark-free (pure numpy kernel), so hundreds of
-examples run in seconds; only the PIP refine test, whose subject is a
-Spark SQL expression, runs in the session's Spark.
+containment, hierarchy closure, neighbor symmetry, boundary sanity.
+Spark-free (pure numpy kernel), so hundreds of examples run in seconds;
+only the PIP refine test, whose subject is a Spark SQL expression, runs
+in the session's Spark.
 """
 
 import numpy as np
@@ -12,7 +12,6 @@ from hypothesis import given, settings, strategies as st
 from h3_rs_spark import h3core as h3
 from h3_rs_spark.h3core import indexing as ix
 from h3_rs_spark.h3core import traversal as tv
-from h3_rs_spark.h3core.localij import h3_distance_batch
 
 LAT = st.floats(-89.9, 89.9, allow_nan=False)
 LNG = st.floats(-179.999, 179.999, allow_nan=False)
@@ -57,19 +56,6 @@ def test_neighbor_symmetry(lat, lng, res):
     for b in nbs:
         _, back = tv.neighbors(np.array([b]))
         assert int(a[0]) in set(back.tolist())
-
-
-@settings(max_examples=40, deadline=None)
-@given(lat=LAT, lng=LNG, res=st.integers(1, 10), k=st.integers(1, 3))
-def test_distance_matches_ring_index(lat, lng, res, k):
-    """h3_distance(origin, c) must equal the BFS ring index for every
-    cell of k_ring_distances, and be symmetric."""
-    a = h3.geo_to_h3(np.array([lat]), np.array([lng]), res)
-    _, cells, dist = tv.k_ring_distances(a, k)
-    got = h3_distance_batch(np.full(len(cells), int(a[0])), cells)
-    assert (got == dist).all()
-    back = h3_distance_batch(cells, np.full(len(cells), int(a[0])))
-    assert (back == dist).all()
 
 
 @settings(max_examples=60, deadline=None)
