@@ -8,7 +8,7 @@ in Arrow-vectorized pandas UDFs (h3_rs_spark.functions.udfs).
 
 from .constants import EDGE_LENGTH_M, HEX_AREA_M2, MAX_RES, num_hexagons  # noqa: F401
 from .faceijk import geo_to_h3, h3_to_geo, h3_to_geo_boundary  # noqa: F401
-from .hierarchy import compact, to_children, to_parent, uncompact  # noqa: F401
+from .hierarchy import compact, uncompact  # noqa: F401
 from .indexing import (  # noqa: F401
     get_base_cell,
     get_resolution,
@@ -18,6 +18,8 @@ from .indexing import (  # noqa: F401
     is_res_class3,
     is_valid,
     max_children,
+    to_children,
+    to_parent,
 )
 from .regions import (  # noqa: F401
     points_in_polygon,

@@ -1,29 +1,20 @@
-"""Hierarchy ops: parent / children / compact / uncompact (exact sets).
+"""Hierarchy ops: compact / uncompact (exact sets).
 
 Parity targets: /root/reference/src/hierarchy.rs tests (children counts,
 SF polygon compact 209 / uncompact 1253). Unlike the reference (which
 returns zero-padded buffers from the C FFI, src/hierarchy.rs:102), these
 return exact minimal sets.
 
-`compact` here is the in-memory kernel used inside UDFs for per-polygon
-cell sets; the distributed relational variant for huge sets lives in
-operators/ (groupBy-parent loop).
+Both run on the driver, over one polygon's cells (regions.polyfill, the
+PIP build); parent and children are indexing.to_parent / to_children.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .constants import BASE_CELL_IS_PENTAGON, MAX_RES
+from .constants import BASE_CELL_IS_PENTAGON
 from . import indexing as ix
-
-
-def to_parent(h, parent_res) -> np.ndarray:
-    return ix.to_parent(h, parent_res)
-
-
-def to_children(h, child_res: int) -> np.ndarray:
-    return ix.to_children(h, child_res)
 
 
 def uncompact(cells: np.ndarray, res: int) -> np.ndarray:

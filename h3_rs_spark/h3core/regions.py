@@ -5,7 +5,7 @@ lies inside the polygon (exterior minus holes). It is built on
 polygon_cover, one coarse-to-fine walk from the 122 res-0 cells that
 decides a cell from the distance between its centre and the polygon
 outline, so its cost grows with the perimeter, not the bounding box.
-The PIP join and the distributed polyfill use the same cover.
+The PIP join uses the same cover.
 
 Parity targets: the reference's src/region.rs polyfill tests (SF
 hexagon @Z9 == 1253 cells — the count implied by the reference's own
@@ -295,14 +295,13 @@ def polyfill(exterior, holes, res: int) -> np.ndarray:
     """All cells at `res` whose centroid is inside the polygon: the
     polygon_cover interior expanded to `res`, plus the boundary cells
     whose centroid is inside. Raises when that is more than
-    MAX_POLYFILL_CELLS cells; fill those with
-    operators.polyfill_dist.polyfill_distributed instead."""
+    MAX_POLYFILL_CELLS cells."""
     interior, boundary = polygon_cover(exterior, holes, res)
     n = int(np.sum(7 ** (res - ix.get_resolution(interior)))) + len(boundary)
     if n > MAX_POLYFILL_CELLS:
         raise ValueError(
             f"polyfill: ~{n:.2e} cells at res {res} (> "
-            f"{MAX_POLYFILL_CELLS}); use polyfill_distributed"
+            f"{MAX_POLYFILL_CELLS}); fill at a coarser res"
         )
     lat, lng = fk.h3_to_geo(boundary)
     inside = boundary[points_in_polygon(lng, lat, exterior, holes)]

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 from ..functions.native import haversine_m_sql, parent_keys
 
 from ..h3core.constants import EDGE_LENGTH_M
+from ..session import local_frame
 
 # conservative minimum center-to-center spacing between adjacent cells,
 # accounting for icosahedron distortion (avg spacing ~= 1.73 * edge; the
@@ -95,7 +96,7 @@ def knn_join(
         ]
     )
     if q_pdf.empty:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     res_eff, ring = _seed_plans(spark, images, q_pdf, k, res)
     state = q_pdf.assign(res_eff=res_eff, ring=ring)
@@ -163,9 +164,7 @@ def knn_join(
         )
         res_eff, ring = _fold(res_eff[~done], ring[~done] * 4)
         state = state[~done].assign(res_eff=res_eff, ring=ring)
-    return spark.createDataFrame(
-        pd.concat(done_rows, ignore_index=True), out_schema
-    )
+    return local_frame(spark, pd.concat(done_rows, ignore_index=True), out_schema)
 
 
 def _check_query_rows(q_pdf: pd.DataFrame) -> None:

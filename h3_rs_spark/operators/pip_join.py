@@ -46,6 +46,7 @@ from ..h3core import indexing as ix
 from ..h3core import regions
 from ..h3core.constants import EARTH_RADIUS_M, EDGE_LENGTH_M
 from ..h3core.hierarchy import uncompact
+from ..session import local_frame
 
 
 def build_polygon_cells(polygons: dict) -> pd.DataFrame:
@@ -242,13 +243,8 @@ def pip_join(
     polygon set returns the typed empty result (polygon_id string)
     without a Spark job."""
     if not polygons:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                images.schema.fields
-                + [StructField("polygon_id", StringType())]
-            ),
-        )
+        fields = images.schema.fields + [StructField("polygon_id", StringType())]
+        return local_frame(spark, [], StructType(fields))
     # cost-based build strategy: a compacted build keeps the broadcast
     # tiny but makes the PROBE side explode one parent key per distinct
     # build resolution — at 10^8+ probe rows that multiplies the join

@@ -34,6 +34,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 
 def _walk(root: str) -> Iterator[tuple[str, os.stat_result]]:
     """(relpath, stat) of every file under root, hidden files (leading
@@ -180,7 +182,8 @@ class StageRunner:
 
     def metrics(self) -> DataFrame:
         """One row per write task of every recorded stage (local, no job)."""
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [
                 (m["stage"], m.get("run_id"), m["fingerprint"], m["wall_s"], p, n)
                 for m in self._records()
@@ -193,7 +196,8 @@ class StageRunner:
     def lineage(self) -> DataFrame:
         """One row per recorded stage (local, no job)."""
         keys = ("stage", "run_id", "fingerprint", "inputs", "wall_s", "rows_total")
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [tuple(m.get(k) for k in keys) for m in self._records()],
             "stage string, run_id string, fingerprint string,"
             " inputs array<string>, wall_s double, rows_total long",

@@ -25,7 +25,10 @@ import shutil
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _REPO = Path(__file__).resolve().parents[1]
 PACKAGE_ZIP = _REPO / "dist" / "h3_rs_spark.zip"
@@ -66,6 +69,19 @@ def ship_package(spark: SparkSession) -> None:
     if not getattr(spark.sparkContext, marker, False):
         spark.sparkContext.addPyFile(str(PACKAGE_ZIP))
         setattr(spark.sparkContext, marker, True)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """`rows` (a pandas frame, or tuples in schema order) as a local
+    relation built from Arrow. createDataFrame of Python rows, or of an
+    empty pandas frame, checks the rows in a PythonRDD, so collecting it
+    starts a Python worker; this plan holds none."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pd.DataFrame):
+        rows = pd.DataFrame(rows, columns=schema.names)
+    table = pa.Table.from_pandas(rows, preserve_index=False)
+    return spark.createDataFrame(table, schema)
 
 
 # below this much free tmpfs the shuffle dir goes to disk: a spill into

@@ -26,11 +26,10 @@ from h3_rs_spark.functions.udfs import (
     h3_to_geo_udf,
     k_ring_udf,
 )
-from h3_rs_spark.h3core import edge_length_m, hex_area_m2, hex_ring
+from h3_rs_spark.h3core import edge_length_m, hex_ring
 from h3_rs_spark.h3core import faceijk as fk
 from h3_rs_spark.h3core import hierarchy, indexing, regions, traversal
 from h3_rs_spark.h3core.constants import PENTAGON_BASE_CELLS
-from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
 from h3_rs_spark.sources.datagen import POLYGONS, SF_EXTERIOR
 from tests.dissolve import cells_to_multipolygon
 
@@ -175,31 +174,19 @@ def test_ring_sizes_hexagon_and_pentagon():
             assert hex_ring(origin, k)[1].shape[0] == per_k * k
 
 
-def test_polyfill_distributed_over_driver_cap(spark):
-    """An octagon (centre 30N 20E, r=8 deg, hole r=1.5 deg) at res 8
-    exceeds the driver polyfill cap, so the driver refuses and the
-    distributed fill runs. The fine count is pinned together with the
-    x7-per-level law against a coarse driver fill (x1000) and the
-    fine-count x mean-hex-area vs spherical area ratio (x100)."""
-    res, coarse = 8, 5
+def test_polyfill_refuses_above_driver_cap():
+    """An octagon (centre 30N 20E, r=8 deg, hole r=1.5 deg) fills to
+    more than MAX_POLYFILL_CELLS cells at res 8, so the driver polyfill
+    refuses it and names a coarser res."""
     ang = np.linspace(0.0, 2.0 * np.pi, 9)[:-1]
     ext = tuple((30.0 + 8.0 * np.cos(a), 20.0 + 8.0 * np.sin(a)) for a in ang)
     hole = tuple((30.0 + 1.5 * np.cos(a), 20.0 + 1.5 * np.sin(a)) for a in ang)
-    try:
-        regions.polyfill(ext, [hole], res)
-        driver_refuses = 0
-    except ValueError:
-        driver_refuses = 1
-    n_coarse = int(regions.polyfill(ext, [hole], coarse).shape[0])
-    area = regions.ring_area_m2(ext) - regions.ring_area_m2(hole)
-
-    n = polyfill_distributed(spark, ext, [hole], res).count()
-
-    scale_x1000 = round(n / (n_coarse * 7 ** (res - coarse)) * 1000.0)
-    area_x100 = round(n * hex_area_m2(res) / area * 100.0)
-    assert (driver_refuses, n, n_coarse, scale_x1000, area_x100) == (
-        1, 2424845, 7078, 999, 88
-    )
+    with pytest.raises(
+        ValueError,
+        match=r"polyfill: ~2\.43e\+06 cells at res 8 \(> 2000000\); "
+        "fill at a coarser res",
+    ):
+        regions.polyfill(ext, [hole], 8)
 
 
 def test_polar_polyfill_matches_enumeration():

@@ -233,6 +233,9 @@ class TestStageRunner:
     def test_metrics_and_lineage(self, spark, tmp_path):
         runner = StageRunner(spark, str(tmp_path), run_id="t2")
         runner.stage("s1", "f", lambda: spark.range(10))
+        for df in (runner.metrics(), runner.lineage()):
+            rdd = df._jdf.queryExecution().toRdd().toDebugString()
+            assert "Python" not in rdd, rdd
         m = runner.metrics().toPandas()
         assert m["rows_out"].sum() == 10
         assert set(m.columns) >= {

@@ -241,6 +241,8 @@ class TestAdversarialPip:
         tracker = sc.statusTracker()
         assert tracker.getJobIdsForGroup("pip_empty") == []
         assert joined.columns == adversarial_table.columns + ["polygon_id"]
+        rdd = joined._jdf.queryExecution().toRdd().toDebugString()
+        assert "Python" not in rdd, rdd
         assert joined.collect() == []
         assert counts.columns == ["polygon_id", "n_images"]
         assert counts.collect() == []
@@ -526,44 +528,6 @@ class TestSkew:
         assert len(hot) >= 1  # SF base cell is ~30% of data
 
 
-class TestPolyfillDistributed:
-    def test_equals_driver_polyfill(self, spark):
-        """Distributed polyfill (driver cover -> JVM children explode)
-        must equal driver polyfill cell-for-cell."""
-        from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
-
-        ext, holes, _ = datagen.POLYGONS["sf_hexagon"]
-        want = sorted(regions.polyfill(ext, holes, 9).tolist())
-        got = sorted(
-            r[0]
-            for r in polyfill_distributed(spark, ext, holes, 9).collect()
-        )
-        assert got == want and len(got) == 1253
-
-    def test_with_holes_and_auto_coarse(self, spark):
-        from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
-
-        ext, holes, _ = datagen.POLYGONS["sf_hexagon_2holes"]
-        want = sorted(regions.polyfill(ext, holes, 8).tolist())
-        got = sorted(
-            r[0]
-            for r in polyfill_distributed(spark, ext, holes, 8).collect()
-        )
-        assert got == want
-
-    def test_starts_no_python_worker(self, spark):
-        """The cells reach the executors as an Arrow local relation: the
-        RDD lineage has no PythonRDD (no schema-verify map), so the call
-        starts no Python worker, and the result is unchanged."""
-        from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
-
-        ext, holes, _ = datagen.POLYGONS["sf_hexagon"]
-        df = polyfill_distributed(spark, ext, holes, 8)
-        lineage = df._jdf.queryExecution().toRdd().toDebugString()
-        assert "Python" not in lineage, lineage
-        assert df.count() == 180
-
-
 class TestChildrenBatch:
     def test_matches_scalar(self):
         from h3_rs_spark.h3core import indexing as ix
@@ -574,104 +538,6 @@ class TestChildrenBatch:
             assert sorted(got[o == i].tolist()) == sorted(
                 ix.to_children(c, 9).tolist()
             )
-
-
-def test_uncompact_staged_multilevel(spark):
-    """Staged uncompact (explode <= 4 levels per stage) equals the kernel
-    children set exactly, including mixed input resolutions and a
-    pentagon lineage."""
-    from h3_rs_spark.h3core import indexing as ix
-    from h3_rs_spark.operators.hierarchy_ops import uncompact_cells_df
-
-    cells = [0x8029FFFFFFFFFFF, 0x824887FFFFFFFFF, 0x81083FFFFFFFFFF]
-    df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-    got = sorted(r[0] for r in uncompact_cells_df(df, 6, 0).collect())
-    want = sorted(
-        np.concatenate([ix.to_children(c, 6) for c in cells]).tolist()
-    )
-    assert got == want
-
-
-def test_uncompact_quoted_column_drops_finer_rows(spark):
-    """Coarser rows expand to `res`, and a row finer than `res` is
-    dropped."""
-    from h3_rs_spark.h3core import indexing as ix
-    from h3_rs_spark.operators.hierarchy_ops import uncompact_cells_df
-
-    coarse = [0x824887FFFFFFFFF, 0x81083FFFFFFFFFF]
-    finer = int(ix.to_children(coarse[0], 7)[0])
-    df = spark.createDataFrame(
-        pd.DataFrame({"cell": coarse + [finer]})
-    )
-    want = sorted(
-        np.concatenate([ix.to_children(c, 5) for c in coarse]).tolist()
-    )
-    got = sorted(
-        r[0] for r in uncompact_cells_df(df, 5, 1).collect()
-    )
-    assert got == want
-
-
-def test_polyfill_distributed_plan_shape(spark):
-    """The distributed polyfill stays one narrow JVM pipeline: cells
-    pre-split into scan slices (no repartition Exchange for the input),
-    one explode path (no Union), no Python on the executors (no
-    ArrowEvalPython), and only the explode's own redistribution every
-    4 levels."""
-    from h3_rs_spark.h3core import indexing
-    from h3_rs_spark.operators.polyfill_dist import polyfill_distributed
-
-    # big enough that the interior spans several levels; plan-only,
-    # nothing executes
-    ext = [(0.0, 0.0), (0.0, 1.5), (1.5, 1.5), (1.5, 0.0)]
-    interior, _ = regions.polygon_cover(ext, [], 9)
-    levels = 9 - int(indexing.get_resolution(interior).min())
-    df = polyfill_distributed(spark, ext, [], 9)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    # formatted explain names each node twice (tree + detail); count
-    # tree entries like "Exchange (4)"
-    assert levels > 4
-    assert plan.count("Exchange (") == (levels - 1) // 4
-    assert plan.count("ArrowEvalPython (") == 0
-    assert "Union" not in plan
-
-
-def test_children_one_level_sql_parity(spark):
-    """The JVM children expression must produce the kernel's
-    to_children_batch children, including the pentagon digit skip and
-    across resolutions."""
-    from h3_rs_spark.h3core import indexing
-    from h3_rs_spark.operators.hierarchy_ops import children_one_level_sql
-
-    # res-0 pentagon, a res-2 hexagon, a res-8 hexagon, res-1 pentagon
-    cells = [
-        0x8031FFFFFFFFFFF,
-        0x824887FFFFFFFFF,
-        0x8828309769FFFFF,
-        0x81083FFFFFFFFFF,
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"cell": cells}))
-    sql_form = {
-        r["cell"]: sorted(r["kids"])
-        for r in df.selectExpr(
-            "cell", f"{children_one_level_sql('cell')} AS kids"
-        ).collect()
-    }
-    kernel = {
-        c: sorted(
-            indexing.to_children_batch(
-                np.array([c], dtype=np.int64),
-                int(indexing.get_resolution(np.array([c]))[0]) + 1,
-            )[1].tolist()
-        )
-        for c in cells
-    }
-    assert sql_form == kernel
-    # pentagons skip the K digit: 6 children, hexagons 7
-    assert len(sql_form[0x8031FFFFFFFFFFF]) == 6
-    assert len(sql_form[0x824887FFFFFFFFF]) == 7
 
 
 class TestPipBuildStrategy:
@@ -889,6 +755,8 @@ class TestKnnEdgeCases:
             [], "query_id string, lat double, lng double"
         )
         out = knn_join(spark, images, empty_q, k=3, res=9)
+        rdd = out._jdf.queryExecution().toRdd().toDebugString()
+        assert "Python" not in rdd, rdd
         assert out.count() == 0
         assert set(out.columns) >= {"query_id", "image_id", "dist_m", "rank"}
 
