@@ -2,11 +2,17 @@
 
 `session.get_spark` sets `spark.python.daemon.module` to this module, so
 Spark starts `python -m h3_rs_spark.daemon` in place of `pyspark.daemon`.
-It imports numpy, pandas, pyarrow, `pyspark.worker` and the engine's
+It imports numpy, pyarrow, pandas, `pyspark.worker` and the engine's
 worker-side modules once, applies two per-process fixes once, then runs
 `pyspark.daemon.manager()`. Every worker is a fork of this process, so it
 starts with those imports done and shares their pages copy-on-write;
 imported per worker, they cost each one about 100 MB of private memory.
+
+The engine's UDFs and tiling take and return Arrow data and import no
+pandas, but pandas stays pre-imported here: pyarrow imports it lazily
+on the first `pa.array` or `Array.to_numpy` of a worker, so a daemon
+without it leaves every worker to import a private copy (ingest-tiles
+`python_pss_mb` 473-474 MB without it, 378-387 MB with it, 4 vCPU).
 
 Why the two fixes (measured in round 3): on Python 3.11 a reused
 pyspark worker pays ~150-500 ms of python CPU for EVERY task before the
@@ -43,10 +49,15 @@ import zipimport
 
 from pyspark import daemon
 
-# with pyspark.daemon these pull in numpy, pandas, pyarrow,
-# pyspark.worker and the h3core kernel
+# with pyspark.daemon these pull in numpy, pyarrow, pyspark.worker and
+# the h3core kernel
 from .functions import udfs  # noqa: F401
 from .operators import tiling  # noqa: F401
+
+# nothing above needs pandas, but pyarrow imports it lazily inside every
+# worker (pa.array, Array.to_numpy), so import it once here to share its
+# pages; imported before pyspark.daemon it read ~35 MB more (415 MB)
+import pandas  # noqa: E402, F401  isort: skip
 
 
 def _patch_zipimport_invalidate() -> None:

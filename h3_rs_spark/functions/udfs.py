@@ -1,14 +1,18 @@
-"""Arrow-vectorized pandas UDFs over the numpy H3 kernel.
+"""Arrow UDFs over the numpy H3 kernel.
 
-Every UDF is Series->Series over whole Arrow batches (no per-row Python,
-per BASELINE.json input_hint); the heavy math is the same numpy kernel
+Every UDF is an Arrow UDF (`F.arrow_udf`): pyarrow Arrays in, one
+pyarrow Array out, over whole Arrow batches, with no pandas object and
+no per-row Python on the worker (BASELINE.json input_hint). Inputs are
+read as numpy views, and list and struct results are assembled from
+offsets and child arrays, so the rows cross the JVM->Python boundary
+only as Arrow buffers. The heavy math is the same numpy kernel
 validated against the reference goldens (tests/test_h3_goldens.py).
 
 Resolution/k parameters are Python literals captured in closures so only
 the data columns cross the JVM->Python boundary.
 
 The factory functions are lru_cached (r7): every call used to rebuild
-the pandas UDF — a cloudpickle of the closure plus py4j registration
+the UDF — a cloudpickle of the closure plus py4j registration
 chatter per call — measurable driver-side latency in the kNN round loop
 and every query that re-derives cells. The returned UDF objects are
 session-independent (registration happens at use), so caching by the
@@ -20,7 +24,7 @@ from __future__ import annotations
 import functools
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -33,13 +37,28 @@ from pyspark.sql.types import (
 from ..h3core import faceijk, traversal
 
 
-def _lists_by_owner(owner: np.ndarray, cells: np.ndarray, n: int) -> list:
-    """Split a kernel's flat (owner row, cell) output into n per-row
-    int64 arrays, each row's cells in their output order: one stable
-    sort and one split, no per-element Python."""
+def _np(arr: pa.Array, dtype) -> np.ndarray:
+    """An Arrow column as a numpy array of `dtype` (a null reads as NaN
+    for floats)."""
+    return arr.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+
+
+def _list_array(counts: np.ndarray, values: pa.Array) -> pa.ListArray:
+    """A list array whose row i holds the next counts[i] of `values`."""
+    offsets = np.zeros(len(counts) + 1, dtype=np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.ListArray.from_arrays(offsets, values)
+
+
+def _lists_by_owner(owner: np.ndarray, cells: np.ndarray, n: int) -> pa.ListArray:
+    """Split a kernel's flat (owner row, cell) output into an n-row
+    list<int64> array, each row's cells in their output order: one
+    stable sort and one offsets cumsum, no per-element Python."""
     order = np.argsort(owner, kind="stable")
-    bounds = np.cumsum(np.bincount(owner, minlength=n))
-    return np.split(np.asarray(cells, dtype=np.int64)[order], bounds)[:-1]
+    return _list_array(
+        np.bincount(owner, minlength=n),
+        pa.array(np.asarray(cells, dtype=np.int64)[order]),
+    )
 
 
 @functools.lru_cache(maxsize=64)
@@ -57,14 +76,11 @@ def geo_to_h3_udf(res: int):
     nothing; it just forbids the optimizer from duplicating or
     relocating the eval."""
 
-    @F.pandas_udf(LongType())
-    def _f(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        h = faceijk.geo_to_h3(
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            lng.to_numpy(dtype=np.float64, na_value=np.nan),
-            res,
+    @F.arrow_udf(LongType())
+    def _f(lat: pa.Array, lng: pa.Array) -> pa.Array:
+        return pa.array(
+            faceijk.geo_to_h3(_np(lat, np.float64), _np(lng, np.float64), res)
         )
-        return pd.Series(h)
 
     return _f.asNondeterministic()
 
@@ -74,10 +90,12 @@ _GEO_STRUCT = StructType(
 )
 
 
-@F.pandas_udf(_GEO_STRUCT)
-def h3_to_geo_udf(cell: pd.Series) -> pd.DataFrame:
-    lat, lng = faceijk.h3_to_geo(cell.to_numpy(dtype=np.int64))
-    return pd.DataFrame({"lat": lat, "lng": lng})
+@F.arrow_udf(_GEO_STRUCT)
+def h3_to_geo_udf(cell: pa.Array) -> pa.Array:
+    lat, lng = faceijk.h3_to_geo(_np(cell, np.int64))
+    return pa.StructArray.from_arrays(
+        [pa.array(lat), pa.array(lng)], names=["lat", "lng"]
+    )
 
 
 _BOUNDARY_TYPE = ArrayType(
@@ -85,30 +103,27 @@ _BOUNDARY_TYPE = ArrayType(
 )
 
 
-@F.pandas_udf(_BOUNDARY_TYPE)
-def h3_boundary_udf(cell: pd.Series) -> pd.Series:
-    blat, blng = faceijk.h3_to_geo_boundary(cell.to_numpy(dtype=np.int64))
-    out = []
-    for i in range(blat.shape[0]):
-        keep = ~np.isnan(blat[i])
-        out.append(
-            [
-                {"lng": float(blng[i, v]), "lat": float(blat[i, v])}
-                for v in np.flatnonzero(keep)
-            ]
-        )
-    return pd.Series(out)
+@F.arrow_udf(_BOUNDARY_TYPE)
+def h3_boundary_udf(cell: pa.Array) -> pa.Array:
+    """cell -> its boundary vertices, (lng, lat) structs in order; the
+    kernel's NaN padding (a hexagon has fewer vertices than the widest
+    cell) marks the vertices each row does not have."""
+    blat, blng = faceijk.h3_to_geo_boundary(_np(cell, np.int64))
+    keep = ~np.isnan(blat)
+    vertices = pa.StructArray.from_arrays(
+        [pa.array(blng[keep]), pa.array(blat[keep])], names=["lng", "lat"]
+    )
+    return _list_array(keep.sum(axis=1), vertices)
 
 
 @functools.lru_cache(maxsize=64)
 def k_ring_udf(k: int):
     """cell -> array<long> of all cells within grid distance k."""
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(dtype=np.int64)
-        owner, cells = traversal.k_ring(c, k)
-        return pd.Series(_lists_by_owner(owner, cells, len(c)), dtype=object)
+    @F.arrow_udf(ArrayType(LongType()))
+    def _f(cell: pa.Array) -> pa.Array:
+        owner, cells = traversal.k_ring(_np(cell, np.int64), k)
+        return _lists_by_owner(owner, cells, len(cell))
 
     return _f
 
@@ -123,14 +138,12 @@ def geo_disk_dyn_udf():
     distinct resolution. Each batch groups by distinct (res, ring) so
     every group is one vectorized encode + traversal call."""
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def _f(
-        lat: pd.Series, lng: pd.Series, res: pd.Series, ring: pd.Series
-    ) -> pd.Series:
-        la = lat.to_numpy(dtype=np.float64)
-        ln = lng.to_numpy(dtype=np.float64)
-        rs = res.to_numpy(dtype=np.int64)
-        rg = ring.to_numpy(dtype=np.int64)
+    @F.arrow_udf(ArrayType(LongType()))
+    def _f(lat: pa.Array, lng: pa.Array, res: pa.Array, ring: pa.Array) -> pa.Array:
+        la = _np(lat, np.float64)
+        ln = _np(lng, np.float64)
+        rs = _np(res, np.int64)
+        rg = _np(ring, np.int64)
         owners, disks = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
         combos = np.unique(np.stack([rs, rg], axis=1), axis=0)
         for rv, gv in combos:
@@ -139,11 +152,8 @@ def geo_disk_dyn_udf():
             owner, disk = traversal.k_ring(cells, int(gv))
             owners.append(idx[owner])
             disks.append(disk)
-        return pd.Series(
-            _lists_by_owner(
-                np.concatenate(owners), np.concatenate(disks), len(la)
-            ),
-            dtype=object,
+        return _lists_by_owner(
+            np.concatenate(owners), np.concatenate(disks), len(la)
         )
 
     # same optimizer-barrier rationale as geo_to_h3_udf

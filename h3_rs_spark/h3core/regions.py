@@ -164,20 +164,6 @@ def points_in_polygon(
     return inside
 
 
-def ring_area_m2(ring) -> float:
-    """Spherical area of a (lng, lat)-degree ring (geodesic shoelace:
-    area = R^2/2 * |sum (lng2-lng1)(2 + sin lat1 + sin lat2)| — the
-    standard spherical-excess approximation for geographic polygons)."""
-    r = _close_ring(np.asarray(ring, dtype=np.float64))
-    if _is_transmeridian(r):
-        r = r.copy()
-        r[:, 0] = _shift_lng(r[:, 0])
-    lng = np.radians(r[:, 0])
-    lat = np.radians(r[:, 1])
-    s = np.sum((lng[1:] - lng[:-1]) * (2.0 + np.sin(lat[:-1]) + np.sin(lat[1:])))
-    return float(abs(s) * EARTH_RADIUS_M * EARTH_RADIUS_M / 2.0)
-
-
 # driver cap on one level's candidate cells and on a polyfill's output
 MAX_POLYFILL_CELLS = 2_000_000
 

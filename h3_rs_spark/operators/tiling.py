@@ -1,10 +1,13 @@
 """Raster <-> vector tiling: decode image tiles and assign each tile to an
 H3 cell (SURVEY.md §2.9, BASELINE.json north_star).
 
-Runs as mapInPandas (Arrow batches of whole rows including the binary
-payload); decode is fmt-dispatched:
-  - 'rgb24': raw (h, w, 3) uint8 -> numpy frombuffer (lossless; the
-    PSNR >= 40 dB invariant is trivially infinite — asserted in tests)
+Runs as mapInArrow (Arrow batches of whole rows including the binary
+payload), with no pandas object and no per-image Python object: each
+same-(w, h, fmt) group's pixels are read straight from the `bytes`
+column's value buffer. Decode is fmt-dispatched:
+  - 'rgb24': raw (h, w, 3) uint8 rows -> one (n, h, w, 3) numpy view
+    of the buffer (lossless; the PSNR >= 40 dB invariant is trivially
+    infinite — asserted in tests)
   - 'png'/'jpeg': stubbed behind NotImplementedError (no imaging libs in
     this container); the Spark-side plumbing (schema, batching, UDF
     signature) is identical and tested via 'rgb24'.
@@ -18,9 +21,10 @@ exploded relation (image_id, tile_x, tile_y, cell, mean_r/g/b).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -48,14 +52,129 @@ TILES_SCHEMA = StructType(
 )
 
 
+# images per output batch, and the stacked-pixel working set per group
+# slice: a full 20k-row Arrow batch of large images stacked at once
+# would dwarf executor memory (ADVICE r2), so same-shape groups split
+# into <= 64 MB sub-stacks — still thousands of small images per
+# vectorized call
+_BATCH_IMAGES = 4096
+_STACK_BUDGET = 64 << 20
+
+
+def _decode_rows(
+    payloads: pa.Array, rows: np.ndarray, w: int, h: int, fmt: str
+) -> np.ndarray:
+    """Rows `rows` (ascending) of a binary column, each one w x h image
+    in `fmt` -> (n, h, w, 3) uint8. Every row's payload length is checked
+    first, so a short or long row can never shift a neighbour's pixels
+    into the stack. Rows adjacent in the buffer come back as a zero-copy
+    view of it; others in one numpy gather through the offsets. Only
+    'rgb24' is decodable in-container."""
+    if fmt != "rgb24":
+        raise NotImplementedError(
+            f"decode for fmt={fmt!r} requires an imaging library not present "
+            "in this environment (plumbing is fmt-dispatched; add a decoder here)"
+        )
+    if payloads.null_count:
+        raise ValueError("image payload is null")
+    _, off_buf, data_buf = payloads.buffers()
+    wide = pa.types.is_large_binary(payloads.type)
+    offsets = np.frombuffer(off_buf, np.int64 if wide else np.int32)[
+        payloads.offset: payloads.offset + len(payloads) + 1
+    ]
+    size = w * h * 3
+    starts = offsets[rows]
+    if (offsets[rows + 1] - starts != size).any():
+        raise ValueError(f"image payload is not {size} bytes ({w}x{h} {fmt})")
+    data = np.frombuffer(data_buf, np.uint8) if size else np.empty(0, np.uint8)
+    n = len(rows)
+    if rows[-1] - rows[0] + 1 == n:
+        px = data[starts[0]: starts[0] + n * size]
+    else:
+        px = np.lib.stride_tricks.sliding_window_view(data, size)[starts]
+    return px.reshape(n, h, w, 3)
+
+
 def decode_image(payload: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     """bytes -> (h, w, 3) uint8. Only 'rgb24' is decodable in-container."""
-    if fmt == "rgb24":
-        return np.frombuffer(payload, dtype=np.uint8).reshape(h, w, 3)
-    raise NotImplementedError(
-        f"decode for fmt={fmt!r} requires an imaging library not present "
-        "in this environment (plumbing is fmt-dispatched; add a decoder here)"
+    return _decode_rows(
+        pa.array([payload], pa.binary()), np.zeros(1, np.int64), w, h, fmt
+    )[0]
+
+
+def _tile_stack(
+    batch: pa.RecordBatch,
+    rows: np.ndarray,
+    w: int,
+    h: int,
+    fmt: str,
+    tile_px: int,
+    res: int,
+) -> pa.RecordBatch:
+    """Tiles of one same-(w, h, fmt) stack of rows: tile means + geo
+    offsets computed across the stack at once, over one stacked uint8
+    (n, h, w, 3) array (1x the raw bytes — NOT a float64 copy; the means
+    accumulate in float64 during the reduction)."""
+    n_img = len(rows)
+    px = _decode_rows(batch.column("bytes"), rows, w, h, fmt)
+    ny, nx = h // tile_px, w // tile_px
+    trimmed = px[:, : ny * tile_px, : nx * tile_px, :]
+    means = trimmed.reshape(n_img, ny, tile_px, nx, tile_px, 3).mean(
+        axis=(2, 4), dtype=np.float64
+    )  # (n, ny, nx, 3)
+    ty, tx = np.mgrid[0:ny, 0:nx]
+    cx = ((tx + 0.5) * tile_px - w / 2.0).ravel()
+    cy = ((ty + 0.5) * tile_px - h / 2.0).ravel()
+    n_t = ny * nx
+    lat = batch.column("lat").to_numpy(zero_copy_only=False)[rows]
+    lng = batch.column("lng").to_numpy(zero_copy_only=False)[rows]
+    lats = (lat[:, None] - cy[None, :] * DEG_PER_PX).ravel()
+    lngs = (lng[:, None] + cx[None, :] * DEG_PER_PX).ravel()
+    cells = faceijk.geo_to_h3(lats, lngs, res)
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("image_id").take(pa.array(np.repeat(rows, n_t))),
+            pa.array(np.tile(tx.ravel().astype(np.int32), n_img)),
+            pa.array(np.tile(ty.ravel().astype(np.int32), n_img)),
+            pa.array(cells),
+            pa.array(means[..., 0].reshape(-1)),
+            pa.array(means[..., 1].reshape(-1)),
+            pa.array(means[..., 2].reshape(-1)),
+        ],
+        names=TILES_SCHEMA.fieldNames(),
     )
+
+
+def _tile_batches(
+    batches: Iterator[pa.RecordBatch], tile_px: int, res: int
+) -> Iterator[pa.RecordBatch]:
+    """The mapInArrow body of tile_assign: each batch splits into
+    same-(w, h, fmt) groups, found in numpy over w, h and the
+    dictionary-encoded fmt (pa.Table.group_by would import pyarrow's
+    acero engine in every worker), and each group into stacks of at most
+    _BATCH_IMAGES images and _STACK_BUDGET pixel bytes, one output batch
+    per stack."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        shape = [batch.column(c) for c in ("w", "h", "fmt")]
+        if any(c.null_count for c in shape):
+            # a row with null w/h/fmt must fail loudly, not silently
+            # vanish from the output
+            raise ValueError("image row with null w, h or fmt")
+        fmt = shape[2].dictionary_encode()
+        keys = np.stack(
+            [c.to_numpy() for c in (shape[0], shape[1], fmt.indices)], axis=1
+        )
+        groups, group_of = np.unique(keys, axis=0, return_inverse=True)
+        for g, (w, h, f) in enumerate(groups.tolist()):
+            rows = np.flatnonzero(group_of == g)
+            name = fmt.dictionary[f].as_py()
+            chunk = max(1, min(_BATCH_IMAGES, _STACK_BUDGET // max(w * h * 3, 1)))
+            for i in range(0, len(rows), chunk):
+                yield _tile_stack(
+                    batch, rows[i:i + chunk], w, h, name, tile_px, res
+                )
 
 
 def tile_assign(images: DataFrame, tile_px: int = 8, res: int = 15) -> DataFrame:
@@ -64,75 +183,12 @@ def tile_assign(images: DataFrame, tile_px: int = 8, res: int = 15) -> DataFrame
     with NULL lat has no location (sources/io.with_geo) and gets no
     tiles."""
     cols = ["image_id", "bytes", "w", "h", "fmt", "lat", "lng"]
-    # bound the stacked-pixel working set per task: a full 20k-row Arrow
-    # batch of large images stacked at once would dwarf executor memory
-    # (ADVICE r2), so same-shape groups split into <= 64 MB sub-stacks —
-    # still thousands of small images per vectorized call
-    stack_budget = 64 << 20
-
-    def _group_frame(grp: pd.DataFrame, w: int, h: int, fmt: str) -> pd.DataFrame:
-        """Vectorized path for a same-(w, h, fmt) group: one stacked
-        uint8 (n, h, w, 3) array (1x the raw bytes — NOT a float64 copy;
-        the means accumulate in float64 during the reduction), tile
-        means + geo offsets computed across the sub-stack at once —
-        per-image Python is one frombuffer call."""
-        chunk = max(1, stack_budget // max(w * h * 3, 1))
-        if len(grp) > chunk:
-            return pd.concat(
-                [
-                    _group_frame(grp.iloc[i:i + chunk], w, h, fmt)
-                    for i in range(0, len(grp), chunk)
-                ],
-                ignore_index=True,
-            )
-        n_img = len(grp)
-        px = np.stack([decode_image(b, w, h, fmt) for b in grp["bytes"]])
-        ny, nx = h // tile_px, w // tile_px
-        trimmed = px[:, : ny * tile_px, : nx * tile_px, :]
-        means = trimmed.reshape(n_img, ny, tile_px, nx, tile_px, 3).mean(
-            axis=(2, 4), dtype=np.float64
-        )  # (n, ny, nx, 3)
-        ty, tx = np.mgrid[0:ny, 0:nx]
-        cx = ((tx + 0.5) * tile_px - w / 2.0).ravel()
-        cy = ((ty + 0.5) * tile_px - h / 2.0).ravel()
-        n_t = ny * nx
-        lats = (
-            grp["lat"].to_numpy()[:, None] - cy[None, :] * DEG_PER_PX
-        ).ravel()
-        lngs = (
-            grp["lng"].to_numpy()[:, None] + cx[None, :] * DEG_PER_PX
-        ).ravel()
-        cells = faceijk.geo_to_h3(lats, lngs, res)
-        return pd.DataFrame(
-            {
-                "image_id": np.repeat(grp["image_id"].to_numpy(), n_t),
-                "tile_x": np.tile(tx.ravel().astype(np.int32), n_img),
-                "tile_y": np.tile(ty.ravel().astype(np.int32), n_img),
-                "cell": cells,
-                "mean_r": means[..., 0].reshape(-1),
-                "mean_g": means[..., 1].reshape(-1),
-                "mean_b": means[..., 2].reshape(-1),
-            }
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = [
-                _group_frame(grp, int(w), int(h), fmt)
-                # dropna=False: a row with null w/h/fmt must fail loudly
-                # in decode_image, not silently vanish from the output
-                for (w, h, fmt), grp in pdf.groupby(
-                    ["w", "h", "fmt"], dropna=False
-                )
-            ]
-            yield pd.concat(outs, ignore_index=True)
-
     return (
         images.select(*cols)
         .where("lat IS NOT NULL")
-        .mapInPandas(run, schema=TILES_SCHEMA)
+        .mapInArrow(
+            partial(_tile_batches, tile_px=tile_px, res=res), schema=TILES_SCHEMA
+        )
     )
 
 

@@ -134,7 +134,11 @@ def _make_images_pdf(ids: np.ndarray, w: int, h: int) -> pd.DataFrame:
 def generate_images(
     spark: SparkSession, n: int, w: int = 32, h: int = 32
 ) -> DataFrame:
-    """Distributed deterministic images table (exact input_hint schema)."""
+    """Distributed deterministic images table (exact input_hint schema).
+
+    The one mapInPandas left in the engine: it is the fixture
+    generator, with one RNG and one payload per image, and runs on no
+    benchmark path (perfbench reads its inputs from parquet)."""
     parts = max(4, min(256, n // 5000 or 4))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

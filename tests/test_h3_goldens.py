@@ -620,15 +620,6 @@ class TestTransmeridian:
         assert ((lngs >= 179.0) & (lngs <= 181.0)).all()
         assert ((clat >= -1.0) & (clat <= 1.0)).all()
 
-    def test_ring_area_transmeridian(self):
-        from h3_rs_spark.h3core import regions
-
-        a = regions.ring_area_m2(self.BOX)
-        b = regions.ring_area_m2(
-            [(-1.0, -1.0), (1.0, -1.0), (1.0, 1.0), (-1.0, 1.0)]
-        )
-        assert abs(a - b) / b < 1e-9
-
 
 class TestDissolveShapes:
     def test_annulus_and_islands(self):

@@ -479,6 +479,83 @@ class TestPythonBoundary:
             assert "-m h3_rs_spark.daemon" in parent, parent
             assert frozen == "True" and guarded == "True", fact
 
+    @staticmethod
+    def _rgb_images(spark, n=6):
+        """n located 16x16 rgb24 images as an Arrow local relation, so
+        the plan holds no Python node of its own."""
+        from h3_rs_spark.session import local_frame
+
+        px = np.arange(16 * 16 * 3)
+        rows = [
+            (
+                f"img{i}",
+                (px * (i + 1) % 256).astype(np.uint8).tobytes(),
+                16,
+                16,
+                "rgb24",
+                37.7 + i * 1e-3,
+                -122.4,
+            )
+            for i in range(n)
+        ]
+        return local_frame(
+            spark,
+            rows,
+            "image_id string, bytes binary, w int, h int, fmt string, "
+            "lat double, lng double",
+        )
+
+    def test_tiling_and_udfs_cross_in_arrow(self, spark):
+        """tile_assign runs as MapInArrow and every engine UDF is an
+        Arrow UDF, so no batch is converted to pandas at the boundary."""
+        from pyspark.util import PythonEvalType
+
+        from h3_rs_spark.functions import udfs
+        from h3_rs_spark.operators.tiling import tile_assign
+
+        out = tile_assign(self._rgb_images(spark))
+        assert out.count() == 6 * 4
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+        for f in (
+            udfs.geo_to_h3_udf(9),
+            udfs.h3_to_geo_udf,
+            udfs.h3_boundary_udf,
+            udfs.k_ring_udf(1),
+            udfs.geo_disk_dyn_udf(),
+        ):
+            assert f.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF, f
+
+    def test_tiling_worker_keeps_shared_imports(self, spark):
+        """A worker runs tile_assign's batch function with the daemon's
+        pandas (pyarrow imports it lazily, so the daemon pre-imports it
+        to share its pages), and the pass imports no pyarrow acero
+        engine of its own. pandas counts as the daemon's when its module
+        dict is in the graph the daemon froze before forking, which
+        gc.get_objects() does not list."""
+        import pyarrow as pa
+
+        from h3_rs_spark.operators.tiling import _tile_batches
+
+        def probe(batches):
+            import gc
+            import sys
+
+            tiles = sum(b.num_rows for b in _tile_batches(batches, 8, 15))
+            pd_dict = vars(sys.modules["pandas"])
+            from_daemon = all(o is not pd_dict for o in gc.get_objects())
+            fact = f"{from_daemon}|{'pyarrow._acero' in sys.modules}|{tiles}"
+            yield pa.RecordBatch.from_arrays([pa.array([fact])], ["fact"])
+
+        facts = [
+            r[0]
+            for r in self._rgb_images(spark)
+            .coalesce(1)
+            .mapInArrow(probe, "fact string")
+            .collect()
+        ]
+        assert facts == ["True|False|24"], facts
+
     def test_driver_skips_call_site_capture(self, spark):
         """DataFrame debugging is off, so building a plan captures no
         Python call site and never imports IPython on the driver."""

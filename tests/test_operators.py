@@ -508,6 +508,48 @@ class TestTiling:
         with pytest.raises(NotImplementedError):
             decode_image(b"", 1, 1, "png")
 
+    @pytest.mark.parametrize(
+        "case", ["short", "long", "short_then_long", "png", "null"]
+    )
+    def test_malformed_rows_raise(self, spark, case):
+        """A payload one byte short or too long, a fmt without a decoder
+        and a null payload each fail the tile stage. A short row next to
+        a long one in the same batch (the right length together) must
+        fail too: no row may borrow its neighbour's pixels."""
+        from pyspark.errors import PythonException
+
+        size = 4 * 4 * 3
+        bad = {
+            "short": [(bytes(size - 1), "rgb24")],
+            "long": [(bytes(size + 1), "rgb24")],
+            "short_then_long": [
+                (bytes(size - 1), "rgb24"),
+                (bytes(size + 1), "rgb24"),
+            ],
+            "png": [(bytes(size), "png")],
+            "null": [(None, "rgb24")],
+        }[case]
+        good = [(bytes(size), "rgb24")]
+        schema = T.StructType(
+            [
+                T.StructField("image_id", T.StringType()),
+                T.StructField("bytes", T.BinaryType(), True),
+                T.StructField("w", T.IntegerType()),
+                T.StructField("h", T.IntegerType()),
+                T.StructField("fmt", T.StringType()),
+                T.StructField("lat", T.DoubleType()),
+                T.StructField("lng", T.DoubleType()),
+            ]
+        )
+        rows = [
+            (f"img{i}", payload, 4, 4, fmt, 10.0, 20.0)
+            for i, (payload, fmt) in enumerate(good + bad + good)
+        ]
+        df = spark.createDataFrame(rows, schema).coalesce(1)
+        error = {"png": "NotImplementedError", "null": "ValueError|TypeError"}
+        with pytest.raises(PythonException, match=error.get(case, "ValueError")):
+            tile_assign(df, tile_px=2, res=15).collect()
+
 
 class TestSkew:
     def test_salted_agg_equals_plain(self, spark, images):
@@ -859,4 +901,4 @@ def test_lists_by_owner_matches_append_loop():
         for o, c in zip(owner.tolist(), cells.tolist()):
             want[o].append(c)
         got = _lists_by_owner(owner, cells, n)
-        assert [g.tolist() for g in got] == want
+        assert got.to_pylist() == want
