@@ -25,6 +25,7 @@ import functools
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -41,6 +42,25 @@ def _np(arr: pa.Array, dtype) -> np.ndarray:
     """An Arrow column as a numpy array of `dtype` (a null reads as NaN
     for floats)."""
     return arr.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+
+
+# a valid cell (res 0, base cell 0) the kernel decodes in place of a
+# NULL input cell; _with_input_nulls makes that output row NULL again
+_FILL_CELL = 0x8001FFFFFFFFFFF
+
+
+def _cells(cell: pa.Array) -> np.ndarray:
+    """A `cell` column as int64 for the kernel, each NULL replaced by
+    _FILL_CELL (read through float64, a NULL would decode as INT64_MIN
+    and every other cell would lose its low bits)."""
+    return _np(cell.fill_null(_FILL_CELL) if cell.null_count else cell, np.int64)
+
+
+def _with_input_nulls(cell: pa.Array, out: pa.Array) -> pa.Array:
+    """`out` with NULL in each row whose input `cell` is NULL."""
+    if not cell.null_count:
+        return out
+    return pc.if_else(cell.is_null(), pa.nulls(len(out), out.type), out)
 
 
 def _list_array(counts: np.ndarray, values: pa.Array) -> pa.ListArray:
@@ -92,10 +112,12 @@ _GEO_STRUCT = StructType(
 
 @F.arrow_udf(_GEO_STRUCT)
 def h3_to_geo_udf(cell: pa.Array) -> pa.Array:
-    lat, lng = faceijk.h3_to_geo(_np(cell, np.int64))
-    return pa.StructArray.from_arrays(
+    """cell -> its centre (lat, lng) in degrees; NULL for a NULL cell."""
+    lat, lng = faceijk.h3_to_geo(_cells(cell))
+    geo = pa.StructArray.from_arrays(
         [pa.array(lat), pa.array(lng)], names=["lat", "lng"]
     )
+    return _with_input_nulls(cell, geo)
 
 
 _BOUNDARY_TYPE = ArrayType(
@@ -107,23 +129,25 @@ _BOUNDARY_TYPE = ArrayType(
 def h3_boundary_udf(cell: pa.Array) -> pa.Array:
     """cell -> its boundary vertices, (lng, lat) structs in order; the
     kernel's NaN padding (a hexagon has fewer vertices than the widest
-    cell) marks the vertices each row does not have."""
-    blat, blng = faceijk.h3_to_geo_boundary(_np(cell, np.int64))
+    cell) marks the vertices each row does not have; NULL for a NULL
+    cell."""
+    blat, blng = faceijk.h3_to_geo_boundary(_cells(cell))
     keep = ~np.isnan(blat)
     vertices = pa.StructArray.from_arrays(
         [pa.array(blng[keep]), pa.array(blat[keep])], names=["lng", "lat"]
     )
-    return _list_array(keep.sum(axis=1), vertices)
+    return _with_input_nulls(cell, _list_array(keep.sum(axis=1), vertices))
 
 
 @functools.lru_cache(maxsize=64)
 def k_ring_udf(k: int):
-    """cell -> array<long> of all cells within grid distance k."""
+    """cell -> array<long> of all cells within grid distance k; NULL for
+    a NULL cell."""
 
     @F.arrow_udf(ArrayType(LongType()))
     def _f(cell: pa.Array) -> pa.Array:
-        owner, cells = traversal.k_ring(_np(cell, np.int64), k)
-        return _lists_by_owner(owner, cells, len(cell))
+        owner, cells = traversal.k_ring(_cells(cell), k)
+        return _with_input_nulls(cell, _lists_by_owner(owner, cells, len(cell)))
 
     return _f
 

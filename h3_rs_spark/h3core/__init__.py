@@ -2,8 +2,8 @@
 
 Public surface mirrors the reference crate's operator inventory
 (SURVEY.md §2) as batch array functions, less grid distance and grid
-line (T3/T4), which no engine query runs; the Spark engine wraps these
-in Arrow-vectorized pandas UDFs (h3_rs_spark.functions.udfs).
+line (T3/T4) and icosahedron faces (N6), which no engine query runs;
+the Spark engine wraps these in Arrow UDFs (h3_rs_spark.functions.udfs).
 """
 
 from .constants import EDGE_LENGTH_M, HEX_AREA_M2, MAX_RES, num_hexagons  # noqa: F401

@@ -385,53 +385,6 @@ def _h3_to_geo_impl(h) -> tuple[np.ndarray, np.ndarray]:
 # boundary: H3 -> cell polygon vertices
 # --------------------------------------------------------------------------
 
-def icosahedron_faces(h) -> list[list[int]]:
-    """Icosahedron faces each cell intersects (N6, src/inspection.rs:58-72).
-
-    Geometric semantics: the union of nearest faces over the cell's
-    centroid, boundary vertices, and boundary-edge midpoints (pentagon
-    vertices sit exactly on the rays where faces meet, so vertex
-    attribution alone under-counts — edge midpoints lie strictly inside
-    a face and recover the full set)."""
-    h = np.atleast_1d(np.asarray(h, dtype=np.int64))
-    clat, clng = h3_to_geo(h)
-    # true 6 vertices only: the face walk pairs consecutive TRUE
-    # vertices for edge midpoints; interleaved Class-III distortion
-    # vertices (distortion=True) would displace slots past range(6)
-    blat, blng = h3_to_geo_boundary(h, distortion=False)
-    out = []
-    for i in range(h.shape[0]):
-        pts_lat = [clat[i]]
-        pts_lng = [clng[i]]
-        verts = [
-            (blat[i, v], blng[i, v])
-            for v in range(6)
-            if not np.isnan(blat[i, v])
-        ]
-        for v, (la, ln) in enumerate(verts):
-            pts_lat.append(la)
-            pts_lng.append(ln)
-            la2, ln2 = verts[(v + 1) % len(verts)]
-            # spherical edge midpoint
-            a = geom.geo_to_xyz(np.radians(la), np.radians(ln))
-            b = geom.geo_to_xyz(np.radians(la2), np.radians(ln2))
-            m = a + b
-            m = m / np.linalg.norm(m)
-            pts_lat.append(np.degrees(np.arcsin(np.clip(m[2], -1, 1))))
-            pts_lng.append(np.degrees(np.arctan2(m[1], m[0])))
-        faces, _ = geom.nearest_face(
-            np.radians(np.array(pts_lat)), np.radians(np.array(pts_lng))
-        )
-        out.append(sorted({int(f) for f in faces}))
-    return out
-
-
-def max_face_count(h) -> np.ndarray:
-    """Upper bound on icosahedron_faces size (2 for hexagons, 5 for
-    pentagons — H3 maxFaceCount semantics)."""
-    return np.where(ix.is_pentagon(h), 5, 2)
-
-
 MAX_BNDRY_VERTS = 10  # reference h3-sys/src/ffi.rs:3 MAX_CELL_BNDRY_VERTS
 
 # adjacent-face direction table: _ADJ_DIR[f1, f2] = quadrant (Q_IJ/Q_KI/
@@ -467,7 +420,7 @@ def h3_to_geo_boundary(h, distortion: bool = True) -> tuple[np.ndarray, np.ndarr
 
     distortion=False returns only the 6 true vertices, shape (N, 6) —
     used internally where a cell's true edges matter (the geometric
-    neighbor reflection in traversal.neighbors, icosahedron_faces).
+    neighbor reflection in traversal.neighbors).
     """
     h = np.atleast_1d(np.asarray(h, dtype=np.int64))
 

@@ -22,10 +22,6 @@ from .constants import BASE_CELL_IS_PENTAGON, MAX_RES, NUM_BASE_CELLS
 from .coordijk import ROTATE60_CCW_DIGIT, ROTATE60_CW_DIGIT
 
 H3_MODE_CELL = 1
-_DIGIT_MASK = np.int64((1 << 45) - 1)
-
-# mode 1, res 0, base cell 0, all digits 7
-H3_INIT = np.int64((1 << 59) | ((1 << 45) - 1))
 
 
 def _i64(x) -> np.ndarray:

@@ -234,9 +234,9 @@ def _refine_sql(polar: bool) -> str:
 def pip_join(
     spark: SparkSession, images: DataFrame, polygons: dict
 ) -> DataFrame:
-    """Join images (with a `cell` column at each polygon's res and
-    lat/lng columns) against polygons; returns matched rows +
-    polygon_id.
+    """Join images (with a `cell` column at or finer than every
+    polygon's res, and lat/lng columns) against polygons; returns
+    matched rows + polygon_id.
 
     When `images` carries the `bc0` column, the build side's distinct
     base cells are pushed to the scan as a filter on it. An empty

@@ -427,15 +427,6 @@ class TestExtendedParity:
         assert (o == wo).all() and (c == wc).all() and (d == wd).all()
         assert ok.tolist() == [True, False]  # the pentagon's disk fails
 
-    def test_icosahedron_faces(self):
-        from h3_rs_spark.h3core.faceijk import icosahedron_faces, max_face_count
-
-        faces = icosahedron_faces(np.array([0x85283473FFFFFFF]))[0]
-        assert faces == [7]  # mid-face cell touches one face
-        pent_faces = icosahedron_faces(np.array([0x821C07FFFFFFFFF]))[0]
-        assert len(pent_faces) == 5  # pentagons sit on icosa vertices
-        assert int(max_face_count(np.array([0x821C07FFFFFFFFF]))[0]) == 5
-
     def test_cells_to_multipolygon_dissolve(self):
         from tests.dissolve import cells_to_multipolygon
 

@@ -596,37 +596,41 @@ def test_every_engine_module_imports():
         importlib.import_module(name)
 
 
-def test_local_dir_falls_back_when_tmpfs_is_small(monkeypatch, tmp_path):
-    """The shuffle dir takes tmpfs only with enough free space there;
-    below the bound it goes to TMPDIR on disk."""
-    import collections
-    import shutil
+def test_get_spark_honours_submitted_master():
+    """With no master argument the session runs on the master that was
+    submitted, and the shuffle partition default follows its
+    parallelism (2 x 2 cores)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
 
-    from h3_rs_spark import session
-
-    shm = tmp_path / "shm"
-    shm.mkdir()
-    monkeypatch.setattr(session, "_SHM", shm)
-    monkeypatch.delenv("SPARK_LOCAL_DIRS", raising=False)
-    monkeypatch.setenv("TMPDIR", str(tmp_path / "disk"))
-    usage = collections.namedtuple("usage", "total used free")
-    seen = []
-
-    def disk_usage_with(free):
-        def fake(path):
-            seen.append(str(path))
-            return usage(free, 0, free)
-        return fake
-
-    monkeypatch.setattr(
-        shutil, "disk_usage", disk_usage_with(session._SHM_MIN_FREE - 1)
+    probe = (
+        "from h3_rs_spark.session import get_spark\n"
+        "s = get_spark(app='master-probe')\n"
+        "print(s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
     )
-    assert session._default_local_dir() == str(tmp_path / "disk")
-    monkeypatch.setattr(
-        shutil, "disk_usage", disk_usage_with(session._SHM_MIN_FREE)
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=Path(__file__).resolve().parents[1],
+        env=dict(os.environ, PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell"),
+        capture_output=True,
+        text=True,
+        timeout=600,
     )
-    assert session._default_local_dir() == str(shm / "spark-local")
-    assert seen == [str(shm)] * 2
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split()[-2:] == ["local[2]", "4"], out.stdout
+
+
+def test_local_frame_keeps_nullable_bigint_exact(spark):
+    """A bigint column holding a NULL goes to Arrow as int64, not
+    through float64, so a cell above 2^53 keeps its low bits."""
+    from h3_rs_spark.session import local_frame
+
+    cell = 617700169958293503
+    rows = local_frame(spark, [(cell,), (None,)], "cell bigint").collect()
+    assert [r["cell"] for r in rows] == [cell, None]
 
 
 def test_package_zip_written_once_per_source_state(tmp_path):

@@ -887,6 +887,36 @@ class TestGeoDiskDynUdf:
             assert got[i] == sorted(disk.tolist()), i
 
 
+def test_cell_udfs_return_null_for_null_cell(spark):
+    """A NULL cell gives a NULL centre, boundary and ring; the valid row
+    in the same batch is what the kernel gives for it alone."""
+    from h3_rs_spark.functions.udfs import h3_boundary_udf, h3_to_geo_udf, k_ring_udf
+    from h3_rs_spark.h3core import traversal
+    from h3_rs_spark.session import local_frame
+
+    cell = 0x8928308280FFFFF
+    df = local_frame(spark, [(0, cell), (1, None)], "i int, cell bigint")
+    got = {
+        r["i"]: r
+        for r in df.select(
+            "i",
+            h3_to_geo_udf("cell").alias("geo"),
+            h3_boundary_udf("cell").alias("boundary"),
+            k_ring_udf(1)("cell").alias("ring"),
+        ).collect()
+    }
+    assert got[1]["geo"] is None
+    assert got[1]["boundary"] is None and got[1]["ring"] is None
+    lat, lng = faceijk.h3_to_geo(np.array([cell]))
+    assert (got[0]["geo"]["lat"], got[0]["geo"]["lng"]) == (lat[0], lng[0])
+    blat, blng = faceijk.h3_to_geo_boundary(np.array([cell]))
+    keep = ~np.isnan(blat[0])
+    assert [(v["lng"], v["lat"]) for v in got[0]["boundary"]] == list(
+        zip(blng[0][keep], blat[0][keep])
+    )
+    assert got[0]["ring"] == traversal.k_ring(np.array([cell]), 1)[1].tolist()
+
+
 def test_lists_by_owner_matches_append_loop():
     """The list-valued UDFs' vectorized split equals the per-cell append
     loop it replaced: each row's cells in output order, an empty list

@@ -1,7 +1,8 @@
 """Build dist/h3_rs_spark.zip for spark-submit --py-files.
 
 Writes the same zip, content-hash comment included, that
-session.get_spark ships, so the next session start finds it current.
+session.get_spark writes for the workers' PYTHONPATH, so the next
+session start finds it current.
 """
 
 from __future__ import annotations
